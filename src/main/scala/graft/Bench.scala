@@ -47,13 +47,20 @@ object Bench {
     * `sqlgen`; `total − lower` is the Spark analyzer's per-query floor, a
     * cost class the reference never pays (and the reason `total` is not
     * the number to compare against bench.rs). Returns (parseUs, lowerUs,
-    * sqlgenUs, totalUs). */
-  def measureCompileLatency(spark: org.apache.spark.sql.SparkSession,
-                            warm: Int = 400, n: Int = 400): (Double, Double, Double, Double) = {
+    * sqlgenUs, totalUs) after `compileSrc`, which names the query timed:
+    * `reference` (variables-0.prql) or `fallback` — a 4-line stand-in used
+    * when the reference checkout is absent, announced on stderr and NOT
+    * comparable to a `reference` number. */
+  def measureCompileLatency(spark: org.apache.spark.sql.SparkSession, warm: Int = 400,
+                            n: Int = 400): (String, Double, Double, Double, Double) = {
+    var compileSrc = "reference"
     val src = try {
       new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
         "/root/reference/book/tests/prql/examples/variables-0.prql")), "UTF-8")
-    } catch { case _: Throwable =>
+    } catch { case _: java.io.IOException =>
+      compileSrc = "fallback"
+      System.err.println("[bench] compile latency: variables-0.prql absent, " +
+        "timing the 4-line fallback query (compile_src=fallback)")
       "from employees\nfilter country == \"USA\"\nderive [gross_salary = salary + payroll_tax]\ntake 20"
     }
     val employees = spark.range(1).selectExpr("CAST(1 AS DOUBLE) salary",
@@ -77,7 +84,7 @@ object Bench {
     t0 = System.nanoTime()
     (1 to n).foreach(_ => Graft.compile(src, spark, cat))
     val totalUs = (System.nanoTime() - t0) / 1e3 / n
-    (parseUs, lowerUs, sqlgenUs, totalUs)
+    (compileSrc, parseUs, lowerUs, sqlgenUs, totalUs)
   }
 
   /** Machine-drift calibration canary (VERDICT r4 #2, rebuilt per r5 #1):
@@ -338,10 +345,17 @@ object Bench {
     out
   }
 
-  def main(args: Array[String]): Unit = {
+  /** (scale dir, local[N] session) from SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS
+    * (defaults: sf0.1, N = 4) — shared by Bench, PlanDump and Sampler so
+    * their defaults cannot drift. */
+  private[graft] def envSession(): (String, org.apache.spark.sql.SparkSession) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Graft.localSession(cpus)
+    (sfDir, Graft.localSession(cpus))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, spark) = envSession()
 
     val benchEpochMs = System.currentTimeMillis()
     val benchT0 = System.nanoTime()
@@ -1140,9 +1154,10 @@ object Bench {
     var parseUs: Double = -1.0
     var lowerUs: Double = -1.0
     var sqlgenUs: Double = -1.0
+    var compileSrc = "unmeasured"
     val compileUs: Double = try {
-      val (p, l, s, t) = measureCompileLatency(spark)
-      parseUs = p; lowerUs = l; sqlgenUs = s; t
+      val (src, p, l, s, t) = measureCompileLatency(spark)
+      compileSrc = src; parseUs = p; lowerUs = l; sqlgenUs = s; t
     } catch { case e: Throwable =>
       System.err.println(s"[bench] compile-latency measure failed: ${e.getMessage}")
       -1.0
@@ -1319,7 +1334,7 @@ object Bench {
     val errJson = errors
       .map { case (k, v) => s"${util.Json.quote(k)}:${util.Json.quote(v.take(200))}" }
       .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"value_min_envelope":${f3(totalMinEnvelope)},"drift":$driftBlock,"unit":"sec","queries":$qs,"query_detail":$qDetail,"errors":$errJson,"compile_us_per_query":${compileUs.round},"parse_us_per_query":${parseUs.round},"lower_us_per_query":${lowerUs.round},"sqlgen_us_per_query":${sqlgenUs.round},"calib_s":$calibS,"calib_samples":$calibJson,"calib_stats":$calibStats,"host_contended":$hostContended,"contended_record":$contendedRecord,"unstable_queries":${unstableQueries.map(util.Json.quote).mkString("[", ",", "]")},"unstable_spikes":${unstableSpikes.map(util.Json.quote).mkString("[", ",", "]")},"regressed_queries":${regressedQueries.map(util.Json.quote).mkString("[", ",", "]")},"hash_family_bench":$hashFamilyJson,"scale_probe":$scaleProbeJson,"p79_fidelity":$p79FidelityJson,"p79_graded":$p79GradedJson,"recall_probe":$recallProbeJson,"epoch_ms":$benchEpochMs,"runs_per_query":$TimedRuns,"fast_runs":$FastTimedRuns,"fast_threshold_s":$FastQueryThresholdSec,"runs_policy":"median over runs_per_query timed runs; promoted to fast_runs when any timed run < fast_threshold_s; unstable queries re-timed once post-suite (query_detail.retry)","aggregation":"median","sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"value_min_envelope":${f3(totalMinEnvelope)},"drift":$driftBlock,"unit":"sec","queries":$qs,"query_detail":$qDetail,"errors":$errJson,"compile_us_per_query":${compileUs.round},"compile_src":"$compileSrc","parse_us_per_query":${parseUs.round},"lower_us_per_query":${lowerUs.round},"sqlgen_us_per_query":${sqlgenUs.round},"calib_s":$calibS,"calib_samples":$calibJson,"calib_stats":$calibStats,"host_contended":$hostContended,"contended_record":$contendedRecord,"unstable_queries":${unstableQueries.map(util.Json.quote).mkString("[", ",", "]")},"unstable_spikes":${unstableSpikes.map(util.Json.quote).mkString("[", ",", "]")},"regressed_queries":${regressedQueries.map(util.Json.quote).mkString("[", ",", "]")},"hash_family_bench":$hashFamilyJson,"scale_probe":$scaleProbeJson,"p79_fidelity":$p79FidelityJson,"p79_graded":$p79GradedJson,"recall_probe":$recallProbeJson,"epoch_ms":$benchEpochMs,"runs_per_query":$TimedRuns,"fast_runs":$FastTimedRuns,"fast_threshold_s":$FastQueryThresholdSec,"runs_policy":"median over runs_per_query timed runs; promoted to fast_runs when any timed run < fast_threshold_s; unstable queries re-timed once post-suite (query_detail.retry)","aggregation":"median","sf":"$sfDir"}"""
     // stdout carries a COMPACT summary line (~3.4 KB: suite value +
     // per-query medians + window flags) — the driver's capture window is
     // finite and the full line had grown to ~19 KB (query_detail +

@@ -15,9 +15,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PlanDump <outDir> [key=value ...] [query ...]")
     val outDir = args.head
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.localSession(cpus)
+    val (sfDir, spark) = Bench.envSession()
     new java.io.File(outDir).mkdirs()
     val (confs, queryArgs) = args.tail.partition(_.contains("="))
     confs.foreach { kv =>

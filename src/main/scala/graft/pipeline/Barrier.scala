@@ -28,12 +28,11 @@ import org.apache.spark.storage.StorageLevel
   *     when the cluster FS is slow, at the cost of recompute storms under
   *     heavy executor churn.
   *
-  * A fourth value, `none`, is MEASUREMENT-ONLY (identity, no barrier):
-  * it exists so [[graft.HazardProbe]] can put a reproducible number on the
-  * multi-consumer re-execution hazard each barrier prevents. It is not a
-  * deployment mode — iterative loops rely on the barrier to break lineage.
+  * There is no "no barrier" mode: iterative loops rely on the barrier to
+  * break lineage, and the multi-consumer re-execution hazard it prevents
+  * was measured once (README "Barrier hazard, measured end-to-end").
   *
-  * All three real modes hold the barrier property (asserted per-mode in
+  * All three modes hold the barrier property (asserted per-mode in
   * PlanAuditSpec): the consumer plan starts from materialized data — `Scan
   * ExistingRDD` for the checkpoint modes, `InMemoryTableScan` for persist —
   * and the producing plan is never re-inlined into consumers.
@@ -53,13 +52,6 @@ object Barrier {
     val spark = df.sparkSession
     spark.conf.get(ModeKey, "localCheckpoint") match {
       case "localCheckpoint" => df.localCheckpoint()
-      // MEASUREMENT-ONLY: identity — every consumer re-executes the
-      // producing plan. Exists so the multi-consumer re-execution hazard
-      // the exclusion reasons cite is a reproducible number
-      // (graft.HazardProbe), not an anecdote. Never set it on a cluster:
-      // iterative loops (p16/p50) rely on the barrier to break lineage,
-      // so `none` turns their round plans exponential.
-      case "none" => df
       case "checkpoint" =>
         val sc = spark.sparkContext
         spark.conf.getOption(DirKey).foreach { d =>
@@ -84,8 +76,7 @@ object Barrier {
         }
       case other =>
         throw new IllegalArgumentException(
-          s"$ModeKey='$other' — expected localCheckpoint | checkpoint | persistDisk" +
-            " (or none, measurement-only)")
+          s"$ModeKey='$other' — expected localCheckpoint | checkpoint | persistDisk")
     }
   }
 

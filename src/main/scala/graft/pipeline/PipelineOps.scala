@@ -1541,42 +1541,17 @@ object PipelineOps {
     * — fine for the single-driver bench/test paths that consume it. */
   @volatile private[graft] var lastLabelRounds: Int = -1
 
-  /** Shuffle-partition count for an iterative loop's rounds, derived from
-    * the loop relation's measured size (optimization r15, re-tuned r16 —
-    * VERDICT r15 #2 showed the floor-1 version was a net regression vs the
-    * r14 quiet record: one partition serializes each round's joins, and a
-    * ~KB relation still carries 2-8 rounds x ~3 stages of work that 32
-    * cores CAN overlap). `spark.graft.loopParts`:
-    *   - "off"  — None: keep the session/AQE setting and skip the sizing
-    *     count() job entirely (the r14 behavior);
-    *   - "auto" (default) — clamp(rows / 64Ki, [floor, session]) with
-    *     floor = `spark.graft.loopPartsFloor` (default [[LoopPartsFloor]],
-    *     chosen by the r16 A/B sweep); identity at deployment sizes;
-    *   - N — pinned (the A/B probe's lever).
-    * `rows` is by-name so "off"/pinned never pay the count() job.
-    *
-    * r16 sweep result (KnobProbe, off/1/4/8/16 then off/1/4 at 8 runs/arm,
-    * alternating, sf0.1 local[32]): floor 1 — the r15 setting — won the
-    * median on 5/6 loop ops (sum-of-medians off 12.22 s, 1 11.00 s,
-    * 4 11.82 s; 8/16 clearly worse). The r15→r14 suite regression VERDICT
-    * r15 #2 flagged did not reproduce as an arm difference in-session, so
-    * it was window drift, not the mechanism; the floor stays 1 and `off`
-    * remains available for measurement. */
-  private val LoopPartsFloor = 1L
-  private[graft] def loopPartsFor(spark: SparkSession, rows: => Long): Option[String] =
-    spark.conf.getOption("spark.graft.loopParts").getOrElse("auto") match {
-      case "off"  => None
-      case "auto" =>
-        val session = spark.conf.get("spark.sql.shuffle.partitions").toLong
-        val floor = spark.conf.getOption("spark.graft.loopPartsFloor")
-          .map(_.toLong).getOrElse(LoopPartsFloor)
-        require(floor >= 1, s"spark.graft.loopPartsFloor must be >= 1, got $floor")
-        Some(math.min(session, math.max(floor, rows / 65536L)).toString)
-      case n      =>
-        require(scala.util.Try(n.toLong).toOption.exists(_ >= 1),
-          s"spark.graft.loopParts: off | auto | positive int, got $n")
-        Some(n)
-    }
+  /** Shuffle-partition count for an iterative loop's rounds:
+    * clamp(rows / 64Ki, 1, session), derived from the materialized loop
+    * relation's size (optimization r15) — identity at deployment sizes.
+    * The floor 1 is a constant, not a knob: the r16 A/B sweep (off/1/4/8/16
+    * then off/1/4 at 8 runs/arm, alternating, sf0.1 local[32]) kept it as
+    * the median winner on 5/6 loop ops (sum-of-medians off 12.22 s,
+    * 1 11.00 s, 4 11.82 s; 8/16 clearly worse). */
+  private[graft] def loopPartsFor(spark: SparkSession, rows: Long): String = {
+    val session = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    math.min(session, math.max(1L, rows / 65536L)).toString
+  }
 
   private[graft] def labelPropagate(init: DataFrame, edges: DataFrame,
                                     maxRounds: Int = LabelMaxRounds): DataFrame = {
@@ -1600,26 +1575,20 @@ object PipelineOps {
     //     flooding only ever lowers labels, so "no label changed" is
     //     exactly the old "label sum unchanged" fixpoint, round for round.
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
-    // r16 re-tune (VERDICT r15 #2: the r15 floor-1 scoping was a net
-    // regression vs the r14 quiet record — p42 1.51→2.46 s, p16 1.63→2.12).
-    // `spark.graft.loopParts` = off | auto (default) | N; `off` restores
-    // the session/AQE behavior (and skips the sizing count() job), `auto`
-    // derives from relation size with a floor of `spark.graft.loopPartsFloor`.
-    val loopPartsOpt = loopPartsFor(spark, edges.count())
+    val loopParts = loopPartsFor(spark, edges.count())
     // The fused probe reads CollectMetrics ACCUMULATORS off the round plan
     // the barrier executed — valid only for the two checkpoint modes, which
     // execute exactly that plan. persistDisk materializes through a
-    // separate count() execution (cache substitution) and `none` executes
-    // nothing at the barrier, so both keep the explicit per-round sum job
-    // (sum is the pre-r15 probe: labels only decrease, so sum-stable ==
-    // zero-changed, round for round).
+    // separate count() execution (cache substitution), so it keeps the
+    // explicit per-round sum job (sum is the pre-r15 probe: labels only
+    // decrease, so sum-stable == zero-changed, round for round).
     val barrierMode = spark.conf.get(Barrier.ModeKey, "localCheckpoint")
     val fused = barrierMode == "localCheckpoint" || barrierMode == "checkpoint"
     def labelSum(df: DataFrame): Long =
       df.agg(coalesce(sum("lbl"), lit(0L))).head.getLong(0)
     var prevSum = if (fused) 0L else labelSum(labels)
     try {
-      loopPartsOpt.foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
+      spark.conf.set("spark.sql.shuffle.partitions", loopParts)
       while (!converged && round < maxRounds) {
         round += 1
         val neighbors = labels.select(col("doc_id").as("n_id"), col("lbl").as("n_lbl"))
@@ -1647,10 +1616,7 @@ object PipelineOps {
           prevSum = s
         }
       }
-    } finally {
-      if (loopPartsOpt.isDefined)
-        spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
-    }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
     lastLabelRounds = if (converged) round else -round
     if (!converged) {
       System.err.println(s"[graft] labelPropagate: label sum still changing after " +
@@ -3502,35 +3468,9 @@ object PipelineOps {
       CAST(floor(aes_key * 1e6 + 0.5) AS BIGINT) AS key_u
     FROM g WHERE rk <= $kSel ORDER BY lang, rk"""
 
-  /** Alternative execution (`spark.graft.weightedImpl = agg`): the same
-    * selection through the mergeable [[graft.functions.GraftAesTopK]]
-    * reservoir — map-side partial top-k, ONE lang shuffle, no sort of any
-    * stratum at all (the plan a 1000-executor deployment wants; the window
-    * path stays the default because it is the shape the oracle mirrors).
-    * Result-identity across both impls is spec-proven. */
-  private def p46AggSpark(hf: String, kSel: Int) = s"""
-    WITH a AS (
-      SELECT lang, graft_aes_topk(
-        -ln((${hSpark("CAST(doc_id AS STRING)", hf)} + 1) / 4294967296.0)
-          / CAST(n_chars AS DOUBLE),
-        doc_id, CAST(n_chars AS BIGINT), $kSel) AS picks
-      FROM documents WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL
-      GROUP BY lang)
-    SELECT lang, CAST(p.pos + 1 AS BIGINT) AS rk, p.col.doc_id AS doc_id,
-      p.col.weight AS weight, p.col.key_u AS key_u
-    FROM a LATERAL VIEW posexplode(picks) p AS pos, col
-    ORDER BY lang, rk"""
-
   private def p46Run(spark: SparkSession, dir: String): DataFrame = {
     readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    val impl = spark.conf.getOption("spark.graft.weightedImpl").getOrElse("window")
-    require(impl == "window" || impl == "agg",
-      s"spark.graft.weightedImpl: window|agg, got $impl")
-    if (impl == "agg") {
-      graft.functions.GraftFunctions.registerAesTopK(spark, weightedK(spark))
-      spark.sql(p46AggSpark(hashFamily(spark), weightedK(spark)))
-    } else
-      spark.sql(p46Spark(hashFamily(spark), weightedK(spark), weightedSaltBuckets(spark)))
+    spark.sql(p46Spark(hashFamily(spark), weightedK(spark), weightedSaltBuckets(spark)))
   }
 
   private val p46Duck = s"""
@@ -3886,9 +3826,9 @@ object PipelineOps {
     // table are partitioning-independent (exact integer counts, total
     // ORDER BY c DESC, pair).
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val loopPartsOpt = loopPartsFor(spark, w.count()) // r16 knob — see loopPartsFor
+    val loopParts = loopPartsFor(spark, w.count())
     try {
-      loopPartsOpt.foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
+      spark.conf.set("spark.sql.shuffle.partitions", loopParts)
       for (r <- 1 to m) {
         w.createOrReplaceTempView("bpe_w")
         val best = spark.sql(p50PairSql).collect()
@@ -3906,10 +3846,7 @@ object PipelineOps {
              | ' $esc ', ' ${esc.replace(" ", "")} ')) AS repr FROM bpe_w""".stripMargin))
         Barrier.release(prev)
       }
-    } finally {
-      if (loopPartsOpt.isDefined)
-        spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
-    }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
     (merges.toSeq, w)
   }
 
@@ -6247,6 +6184,21 @@ object PipelineOps {
     k
   }
 
+  /** Margin-tail window ordering for p77/p79: `grouped` (the Spark path
+    * since r16) evaluates the six tail windows with same-partition-key
+    * specs adjacent — tgt rank, tgt k-mass, src rank, src k-mass, tgt
+    * argmax, src argmax — so each consecutive same-key window reuses the
+    * child's hash partitioning AND sort (Spark elides the Exchange+Sort when
+    * the child already satisfies them: 6 full-relation exchanges drop to 3),
+    * and the final `ra = 1` filter sits directly above its own window, which
+    * lets InferWindowGroupLimit prune each task to top-1 per src BEFORE the
+    * last exchange (r16 A/B: 1.42x on p77, 1.18x on p79). `grouped = false`
+    * is the r10 ordering (rank pair, sum pair, argmax pair), kept only as
+    * the DuckDB oracle's text. Value-identical by construction: a window
+    * function reads its full partition regardless of stage order, cosines
+    * are micro-unit BIGINTs before any sum, and every rank has a
+    * deterministic tiebreak — proven through the legacy-order oracle's hash
+    * gate. */
   private def p77Text(k: Int, dot: (String, String) => String, norm2: String => String,
                       r6: String => String, toDouble: String => String,
                       grouped: Boolean): String = {
@@ -6286,7 +6238,7 @@ object PipelineOps {
       (rb = 1) AS mutual
     FROM p4 WHERE ra = 1 ORDER BY src_id"""
     // same six windows, same values, partition-adjacent order (see
-    // [[marginTailGrouped]]): tgt rank -> tgt sum (no exchange) -> src rank
+    // [[p77Text]]): tgt rank -> tgt sum (no exchange) -> src rank
     // -> src sum (no exchange) -> tgt argmax -> src argmax directly under
     // the ra = 1 filter (InferWindowGroupLimit prunes to top-1 per src
     // before the last exchange)
@@ -6327,10 +6279,10 @@ object PipelineOps {
     head + (if (grouped) groupedTail else legacyTail)
   }
 
-  private def p77Spark(k: Int, grouped: Boolean): String = p77Text(
+  private def p77Spark(k: Int): String = p77Text(
     k, dotSpark, norm2Spark,
     m => s"CAST(floor($m * 1e6 + 0.5) AS DOUBLE) / 1e6",
-    c => s"CAST($c AS DOUBLE)", grouped)
+    c => s"CAST($c AS DOUBLE)", grouped = true)
   // the oracle keeps the legacy order — the hash gate then PROVES the
   // grouped reordering value-identical on every compared corpus
   private val p77Duck: String = p77Text(
@@ -6338,26 +6290,6 @@ object PipelineOps {
     m => s"floor($m * 1e6 + 0.5) / 1e6",
     c => s"CAST($c AS DOUBLE)", grouped = false)
 
-  /** Margin-tail window ordering for p77/p79 (`spark.graft.marginTail`):
-    * `grouped` (default, r16) evaluates the six tail windows with
-    * same-partition-key specs adjacent — tgt rank, tgt k-mass, src rank,
-    * src k-mass, tgt argmax, src argmax — so each consecutive same-key
-    * window reuses the child's hash partitioning AND sort (Spark elides
-    * the Exchange+Sort when the child already satisfies them: 6
-    * full-relation exchanges drop to 3), and the final `ra = 1` filter
-    * sits directly above its own window, which lets InferWindowGroupLimit
-    * prune each task to top-1 per src BEFORE the last exchange. `legacy`
-    * keeps the r10 ordering (rank pair, sum pair, argmax pair).
-    * Value-identical by construction: a window function reads its full
-    * partition regardless of stage order, cosines are micro-unit BIGINTs
-    * before any sum, and every rank has a deterministic tiebreak — proven
-    * through the unchanged-oracle hash gate. */
-  private[graft] def marginTailGrouped(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.marginTail").map { v =>
-      require(v == "grouped" || v == "legacy",
-        s"spark.graft.marginTail must be grouped|legacy, got $v")
-      v == "grouped"
-    }.getOrElse(true)
 
   // ---- p79: bitext mining at scale (SRP-candidate-fronted margin) -------------
   // The deployment path for p77 (VERDICT r10 #1): instead of the exact
@@ -6387,8 +6319,8 @@ object PipelineOps {
 
   /** Margin tail shared by both engines (candidate-count-aware k-mass):
     * reads a relation `p0(src_id, tgt_id, cosu)`. `grouped` selects the
-    * partition-adjacent window order (see [[marginTailGrouped]]) — same
-    * six windows, same values; the oracle stays on the legacy order. */
+    * partition-adjacent window order (see [[p77Text]]) — same six windows,
+    * same values; the oracle stays on the legacy order. */
   private def p79Tail(k: Int, r6: String => String, toDouble: String => String,
                       grouped: Boolean): String = if (!grouped) s"""
     p1 AS (
@@ -6457,7 +6389,7 @@ object PipelineOps {
     * shared schema with p08/p22): band ranks are computed PER HALF so the
     * cap bounds cross pairs at cap², and the verify re-join reads
     * embedding/n2 from the same view. */
-  private def p79Spark(k: Int, grouped: Boolean): String = s"""
+  private def p79Spark(k: Int): String = s"""
     WITH bx AS (
       SELECT vec_id, label, explode(bkeys) AS bkey FROM $SrpEView),
     sb AS (
@@ -6480,13 +6412,13 @@ object PipelineOps {
       JOIN $SrpEView et ON et.vec_id = c.tgt_id),
     ${p79Tail(k,
       m => s"CAST(floor($m * 1e6 + 0.5) AS DOUBLE) / 1e6",
-      c => s"CAST($c AS DOUBLE)", grouped)}"""
+      c => s"CAST($c AS DOUBLE)", grouped = true)}"""
 
   private[graft] def p79Run(spark: SparkSession, dir: String): DataFrame = {
     val hasLabel = srpSetup(spark, dir, -1)
     require(hasLabel, "p79_bitext_ann needs a `label` column on embeddings " +
       "(source half = label < 5, target half = label >= 5)")
-    spark.sql(p79Spark(bitextKnnK(spark), marginTailGrouped(spark)))
+    spark.sql(p79Spark(bitextKnnK(spark)))
   }
 
   /** DuckDB oracle at the static gate geometry (the p08 oracle rule):
@@ -6802,8 +6734,7 @@ object PipelineOps {
     }),
     "p76_stitch_merge" -> onDocsHfP(p76Spark, spread = true),
     "p77_bitext_margin" -> ((spark, dir) =>
-      onEmb(p77Spark(bitextKnnK(spark), marginTailGrouped(spark)),
-        spread = true)(spark, dir)),
+      onEmb(p77Spark(bitextKnnK(spark)), spread = true)(spark, dir)),
     "p78_calibration_bins" -> onDocsHf(p78Spark),
     "p79_bitext_ann" -> ((spark, dir) => p79Run(spark, dir)),
     "p80_quality_auc" -> onDocsHf(p80Spark),

@@ -52,7 +52,6 @@ class KnobSweepSpec extends AnyFunSuite {
     "spark.graft.semDupThreshold" -> Knob("p67_semantic_dedup", Seq("1.5", "-1.0")),
     "spark.graft.mixtureAlpha" -> Knob("p75_mixture_weights", Seq("0.0", "1.5")),
     "spark.graft.bitextKnnK" -> Knob("p77_bitext_margin", Seq("0", "65")),
-    "spark.graft.marginTail" -> Knob("p77_bitext_margin", Seq("zigzag")),
     "spark.graft.boundaryResidentCap" -> Knob("", Seq("0")), // streaming: direct call below
     "spark.graft.packChunkDocs" -> Knob("p23_pack_sequences", Seq("0")),
     "spark.graft.shuffleSeed" -> Knob("", Nil,
@@ -66,7 +65,6 @@ class KnobSweepSpec extends AnyFunSuite {
     "spark.graft.tokenBudget" -> Knob("p44_token_budget", Seq("0")),
     "spark.graft.weightedK" -> Knob("p46_weighted_sample", Seq("0")),
     "spark.graft.weightedSaltBuckets" -> Knob("p46_weighted_sample", Seq("0")),
-    "spark.graft.weightedImpl" -> Knob("p46_weighted_sample", Seq("sorted")),
     "spark.graft.boilerplateDf" -> Knob("p47_boilerplate_lines", Seq("1")),
     "spark.graft.bloomFpp" -> Knob("p48_bloom_dedup", Seq("0.0", "0.5")),
     "spark.graft.bpeMerges" -> Knob("p50_bpe_learn", Seq("0", "65")),
@@ -84,9 +82,6 @@ class KnobSweepSpec extends AnyFunSuite {
     "spark.graft.scanSpread" -> Knob("p21_decontam", Seq("0")),
     "spark.graft.scanSpreadMinBytes" -> Knob("p21_decontam", Seq("-1")),
     "spark.graft.scanSpreadTaskBytes" -> Knob("p21_decontam", Seq("0")),
-    // r16 loop scoping: p50 is the cheapest operator through loopPartsFor
-    "spark.graft.loopParts" -> Knob("p50_bpe_learn", Seq("0")),
-    "spark.graft.loopPartsFloor" -> Knob("p50_bpe_learn", Seq("0")),
   )
 
   test("README knob table == the spark.graft.* keys the source reads == this registry") {

@@ -1429,29 +1429,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(runWith(16) == out, "S=16 must select the same sample")
     // rerun-stability: the hash uniform, not rand()
     assert(runWith(8) == out)
-    // the mergeable-aggregate execution (spark.graft.weightedImpl=agg — the
-    // single-shuffle no-sort deployment plan) selects the identical sample
-    spark.conf.set("spark.graft.weightedImpl", "agg")
-    try {
-      val agg = run("p46_weighted_sample")
-      assert(agg.collect().toSeq.map(r =>
-        (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))) == out,
-        "agg impl must select the same sample")
-      // plan shape: the reservoir aggregate replaces BOTH windows — no
-      // Window node (no stratum sort), and the only hash exchange keys on
-      // lang (AQE prints final+initial sections, so count distinct ids)
-      val plan = agg.queryExecution.executedPlan.toString
-      assert(!plan.contains("Window"),
-        s"agg impl must not sort any stratum through a window:\n$plan")
-      val hashIds = "Exchange hashpartitioning\\(lang[^\\n]*plan_id=(\\d+)".r
-        .findAllMatchIn(plan).map(_.group(1)).toSet
-      val allHashIds = "Exchange hashpartitioning[^\\n]*plan_id=(\\d+)".r
-        .findAllMatchIn(plan).map(_.group(1)).toSet
-      assert(hashIds.nonEmpty && hashIds == allHashIds,
-        s"agg impl must ride one lang-keyed shuffle:\n$plan")
-      assert(plan.contains("graft_aes_topk"),
-        "agg impl must run the native reservoir")
-    } finally spark.conf.unset("spark.graft.weightedImpl")
     // A-ES must oversample heavy documents: selected mean weight above the
     // corpus mean (inclusion odds scale with w)
     val corpusMean = docs.selectExpr("avg(CAST(n_chars AS DOUBLE))").head.getDouble(0)
