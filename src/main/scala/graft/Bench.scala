@@ -127,64 +127,6 @@ object Bench {
     times.sorted.apply(1)
   }
 
-  /** Measured scaling point for the five heaviest operator families
-    * (VERDICT r8 #3, widened per r9 #3): every 100 TB argument in the docs
-    * is plan-shape reasoning; this grounds one point per shape family with
-    * a REAL wall-time ratio. A ×K corpus (default 10 — sf0.1 → ≈sf1) is
-    * materialized under target/scaleprobe by replicating documents and
-    * embeddings with remapped ids: texts get a per-replica suffix token
-    * (so replicas are near-dups, not exact dups — the duplicate-cluster
-    * size distribution stays ~flat instead of every cluster growing ×K);
-    * embeddings get a per-replica Walsh ±1 sign pattern (a diagonal
-    * orthogonal transform: intra-replica geometry is preserved EXACTLY,
-    * while cross-replica dot products — including a vector against its
-    * own other replicas — decorrelate, because the relative pattern
-    * between replicas r1≠r2 is the balanced Walsh function of r1⊕r2; a
-    * circular rotation fails this — smooth vectors autocorrelate under
-    * shift, so every vector's K copies formed a near-dup CLIQUE and true
-    * pair count grew ×K², which read as super-linear operator scaling
-    * when it was a data artifact).
-    *
-    * VERDICT r9 #2: the r9 artifact measured p16 at 2.14×/× and p22 at
-    * 6.69×/× where this comment used to ASSERT ≈1 and ≈2.5 — a
-    * model-vs-measurement contradiction on a host_contended run. The probe
-    * therefore no longer asserts exponents; it EMITS the evidence needed
-    * to read them: a calibration sample taken immediately before each
-    * op's scaled runs (`calib_s` + `calib_ratio` vs the suite's median —
-    * a ratio ≫1 means that op's scaled reading ran in a contended window
-    * and its ratio is inflated by that much), and for p16 the
-    * label-propagation round counts at base and at ×K (`rounds_base` /
-    * `rounds_scaled`, negative = escalated to star contraction): p16's
-    * per-× cost is rounds × per-round joins, so extra rounds at 10× —
-    * the dup-graph's diameter grows with corpus structure — are measured
-    * superlinearity with a named cause, not an unexplained defect.
-    * Per-op models and the r10 QUIET-WINDOW measurements that adjudicated
-    * the r9 contradiction (bench_1786783140182, every probe calib_ratio
-    * ≤ 0.84 — i.e. these ran in windows QUIETER than the suite median):
-    *  - p54 ~ n: measured 1.14/× (linear; r9's 0.67 was a contention-
-    *    inflated BASE median deflating the ratio);
-    *  - p16 ~ rounds(n) · n: measured 0.70/× with rounds 2→3 — sublinear
-    *    wall-time even with one extra round (per-round join cost
-    *    amortizes); r9's 2.14/× was the contended window, not the
-    *    operator;
-    *  - p22 ~ n · r(n) · b(n): measured 4.04/× — the recall-holding SRP
-    *    trade (chooseSrpGeometry (6,8) at base → (10,15) at 10× is
-    *    150/48 ≈ 3.1×/× plane work alone, plus banded-verify density);
-    *    the documented O(n log n) LSH shape, not a defect;
-    *  - p21 ~ n (broadcast eval-grams, one bucketed shuffle): measured
-    *    0.80/× — sublinear, broadcast confirmed;
-    *  - p67 ~ n·√n worst-case (within-cluster pairs Σ|c|² with K ≈ √N
-    *    clusters, the r10 count-derived chooseIvfMod path): measured
-    *    0.54/× at 10× — the N^1.5 term is not yet dominant at this
-    *    operating point (base is overhead-dominated); the model is the
-    *    CEILING the docs claim, and the derived-K geometry held.
-    * Each probe op runs once untimed (plan + footer warm) then twice
-    * timed; the artifact reports min alongside the suite's base median
-    * and the ratio/K. */
-  private val ScaleProbeOps =
-    Seq("p54_substring_dedup", "p22_embed_dedup", "p16_dedup_clusters",
-      "p21_decontam", "p67_semantic_dedup")
-
   /** p79-vs-p77 fidelity floors (VERDICT r11 #2). Floors apply to coverage
     * and to the SHIPPED HEAD (top decile by margin — the pairs a miner
     * actually emits); the full-set organic top-1/Spearman are recorded but
@@ -276,9 +218,24 @@ object Bench {
       "(acc, e) -> acc + (CASE WHEN pmod(bit_count(i & e.j) + (shiftright(-7046029254386353131, e.j) & 1), 2) = 0 THEN e.x ELSE -e.x END)" +
       ") / 8.0 AS FLOAT)) AS embedding"
 
+  /** Writes an ≈×`k` copy of documents and embeddings under `out` and
+    * returns `out` (GenScale, the p79 fidelity blocks, the recall probe and
+    * perfbench build their corpora here). Replicas get remapped ids
+    * (`id·k + r`) and stay artifact-free:
+    *  - texts get a per-replica suffix token, so replicas are near-dups,
+    *    not exact dups — the duplicate-cluster size distribution stays
+    *    ~flat instead of every cluster growing ×k;
+    *  - embeddings get a per-replica Walsh ±1 sign pattern (a diagonal
+    *    orthogonal transform): intra-replica geometry is preserved EXACTLY,
+    *    while cross-replica dot products — including a vector against its
+    *    own other replicas — decorrelate, because the relative pattern
+    *    between replicas r1≠r2 is the balanced Walsh function of r1⊕r2. A
+    *    circular rotation fails this: smooth vectors autocorrelate under
+    *    shift, so every vector's k copies formed a near-dup CLIQUE and the
+    *    true pair count grew ×k², which reads as super-linear operator
+    *    scaling when it is a data artifact. */
   private[graft] def buildScaledDir(spark: org.apache.spark.sql.SparkSession,
-                                    sfDir: String, k: Int,
-                                    out: String = "target/scaleprobe"): String = {
+                                    sfDir: String, k: Int, out: String): String = {
     // The Walsh patterns live on the 6 index bits of a 64-dim embedding —
     // 64 mutually-balanced sign patterns, so replicas r and r+64 would get
     // IDENTICAL signs (exact duplicate vectors, the clique artifact all
@@ -297,7 +254,7 @@ object Bench {
     // runs there so its planted-partner cosines stay predictable on
     // energy-flat vectors without paying a ×K corpus per round.
     require(k >= 1 && k <= 128,
-      s"SPARK_GRAFT_SCALE_K must be in [1, 128] (64 Walsh patterns x 2 bent groups), got $k")
+      s"buildScaledDir: k must be in [1, 128] (64 Walsh patterns x 2 bent groups), got $k")
     // Diagonal ±1 bias bounds hold exactly for FLAT vectors only; for real
     // coordinates the same-vector cross-replica cosine is the energy-
     // fluctuation quadratic form |Σ q_i y_i²|/Σ y_i² — mean ≈ cv/8 ≈ 0.16
@@ -345,13 +302,15 @@ object Bench {
     out
   }
 
-  /** (scale dir, local[N] session) from SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS
-    * (defaults: sf0.1, N = 4) — shared by Bench, PlanDump and Sampler so
-    * their defaults cannot drift. */
+  /** local[N] width of every main's session: SPARK_GRAFT_CPUS, default 4. */
+  private[graft] def envCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** (scale dir, local[N] session) from SPARK_GRAFT_SF_DIR (default sf0.1)
+    * and [[envCpus]] — shared by Bench, PlanDump and Sampler so their
+    * defaults cannot drift. */
   private[graft] def envSession(): (String, org.apache.spark.sql.SparkSession) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    (sfDir, Graft.localSession(cpus))
+    (sfDir, Graft.localSession(envCpus))
   }
 
   def main(args: Array[String]): Unit = {
@@ -567,163 +526,6 @@ object Bench {
     takeCalib("post-suite")
 
     def f3(d: Double): String = if (d < 0) "-1" else f"$d%.3f"
-
-    // Hash-family micro-bench (VERDICT r6 #6): the claim that the xxhash64
-    // production family beats the md5 oracle family gets a MEASURED number
-    // in the artifact instead of an asserted one. p01 (hash-groupBy dedup)
-    // and p18 (hash checksum over cleaned text) are the two operators whose
-    // cost is dominated by the row-level hash; each family's plans are
-    // warmed once, then the pair is timed 3x and the median reported.
-    var hashFamilyJson = "null"
-    try {
-      def timeFamily(fam: String): Double = {
-        spark.conf.set("spark.graft.hashFamily", fam)
-        try {
-          val fns = Seq("p01_dedup_exact", "p18_text_clean").map(SparkEntry.queries)
-          fns.foreach(fn => execute(fn(spark, sfDir)))
-          val times = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            fns.foreach(fn => execute(fn(spark, sfDir)))
-            (System.nanoTime() - t0) / 1e9
-          }
-          times.sorted.apply(1)
-        } finally spark.conf.unset("spark.graft.hashFamily")
-      }
-      val md5S = timeFamily("md5")
-      val xxS = timeFamily("xxhash64")
-      hashFamilyJson = f"""{"md5_s":$md5S%.3f,"xxhash64_s":$xxS%.3f,"speedup":${md5S / xxS}%.2f,"queries":["p01_dedup_exact","p18_text_clean"],"runs":3,"aggregation":"median"}"""
-      System.err.println(f"[bench:hash-family] md5=$md5S%.3fs xxhash64=$xxS%.3fs speedup=${md5S / xxS}%.2fx")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] hash-family bench failed: ${e.getMessage}")
-    }
-
-    // ---- scale probe (VERDICT r8 #3): measured sf0.1→≈sf1 scaling for the
-    // shuffle-heaviest operators. Skipped in hotspot mode (explicit query
-    // args) unless SPARK_GRAFT_SCALE_PROBE=force (VERDICT r11 #1: the ×100
-    // run measures only the heavy family — a forced hotspot probe reuses
-    // this run's own base medians, so ratios stay internally consistent),
-    // and via SPARK_GRAFT_SCALE_PROBE=0. SPARK_GRAFT_SCALE_OPS overrides
-    // the op list; SPARK_GRAFT_SCALE_TIMEOUT_S bounds each op (the job
-    // group is cancelled and the entry records the timeout instead of
-    // wedging the whole probe).
-    var scaleProbeJson = "null"
-    val probeForced = sys.env.get("SPARK_GRAFT_SCALE_PROBE").contains("force")
-    if ((args.isEmpty || probeForced) &&
-        sys.env.getOrElse("SPARK_GRAFT_SCALE_PROBE", "1") != "0") {
-      try {
-        val k = sys.env.getOrElse("SPARK_GRAFT_SCALE_K", "10").toInt
-        val probeOps = sys.env.get("SPARK_GRAFT_SCALE_OPS")
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-          .getOrElse(ScaleProbeOps)
-        val timeoutS = sys.env.getOrElse("SPARK_GRAFT_SCALE_TIMEOUT_S", "0").toLong
-        // second-decade runs (k >= 32): scaled runs cost minutes, so one
-        // timed run and no untimed warm — footer/plan warmth is a rounding
-        // error at that magnitude and three multi-minute runs would burn
-        // the quiet window the reading needs
-        val bigK = k >= 32
-        // run `body` under a cancellable job group; None = timed out
-        def withOpTimeout[T](tag: String)(body: => T): Option[T] =
-          if (timeoutS <= 0) Some(body)
-          else {
-            import scala.concurrent.{Await, Future, ExecutionContext, TimeoutException}
-            import scala.concurrent.duration._
-            implicit val ec: ExecutionContext = ExecutionContext.global
-            val group = s"scaleprobe-$tag"
-            val fut = Future {
-              spark.sparkContext.setJobGroup(group, tag, interruptOnCancel = true)
-              try body finally spark.sparkContext.clearJobGroup()
-            }
-            try Some(Await.result(fut, timeoutS.seconds))
-            catch {
-              case _: TimeoutException =>
-                System.err.println(s"[bench:scale] $tag exceeded ${timeoutS}s — cancelling job group")
-                spark.sparkContext.cancelJobGroup(group)
-                try Await.ready(fut, 120.seconds) catch { case _: Throwable => }
-                None
-            }
-          }
-        val tGen0 = System.nanoTime()
-        val scaledDir = buildScaledDir(spark, sfDir, k)
-        val genS = (System.nanoTime() - tGen0) / 1e9
-        val baseMed = results.toMap
-        // the suite's own calibration median is the reference point for the
-        // per-op contention ratio below
-        val suiteCalib = {
-          // ADVICE r10: median over the 'interleave'-tagged samples only —
-          // the edge samples (JIT-cold 'pre', idle 'post') run without the
-          // suite's own 32-thread load, the same contamination the
-          // in_suite_spread flag already excludes; fall back to all
-          // samples when too few in-suite ones exist (hotspot runs)
-          val inter = calibSamples.collect { case ("interleave", _, d) => d }.toSeq
-          val ds = if (inter.size >= 2) inter else calibSamples.map(_._3).toSeq
-          if (ds.isEmpty) -1.0 else ds.sorted.apply(ds.length / 2)
-        }
-        val entries = probeOps.flatMap { name =>
-          SparkEntry.queries.get(name).map { fn =>
-            // one calibration sample immediately before this op's scaled
-            // runs: a judge reads calib_ratio ≫ 1 as "this op's window was
-            // contended by that factor" (VERDICT r9 #2)
-            var opCalib = try calibSample(spark, sfDir) catch { case _: Throwable => -1.0 }
-            var calibRatio = if (opCalib > 0 && suiteCalib > 0) opCalib / suiteCalib else -1.0
-            val isP16 = name == "p16_dedup_clusters"
-            // p16: re-run base once (untimed) to capture its round count —
-            // the suite ran it long ago and other ops have since overwritten
-            // the observability var
-            val roundsBase = if (isP16) {
-              try { execute(fn(spark, sfDir)); graft.pipeline.PipelineOps.lastLabelRounds }
-              catch { case _: Throwable => 0 }
-            } else 0
-            def timedScaled(): Double = (1 to (if (bigK) 1 else 2)).map { _ =>
-              val t0 = System.nanoTime()
-              execute(fn(spark, scaledDir))
-              (System.nanoTime() - t0) / 1e9
-            }.min
-            val scaledOpt = withOpTimeout(name) {
-              if (!bigK) execute(fn(spark, scaledDir)) // untimed: plan + footer warm
-              var scaled = timedScaled()
-              // VERDICT r10 #2 (self-heal): a calib_ratio far from 1 means
-              // THIS op's window was contended and its scaled reading is
-              // misleading — the committed BENCH_r10 carried a p54 2.33/x
-              // that three quiet runs refuted. Instead of asking the reader
-              // to apply the discount rule, settle and re-run once: take the
-              // min (contention only inflates) and re-sample the calibration
-              // so the artifact carries the retried window's ratio.
-              // At bigK the retry contradicts the one-timed-run policy: a
-              // scaled run costs minutes (p22's ×100 alone can near the
-              // per-op timeout), a 20%-level window wobble is a rounding
-              // error at that magnitude, and the artifact still carries
-              // calib_ratio for the reader to discount. Second-decade runs
-              // keep the single reading.
-              var calibRetried = false
-              if (!bigK && calibRatio > 0 && (calibRatio < 0.6 || calibRatio > 1.5)) {
-                calibRetried = true
-                System.err.println(f"[bench:scale] $name calib_ratio=${f3(calibRatio)} outside [0.6, 1.5] — settling and retrying scaled runs")
-                Thread.sleep(5000)
-                opCalib = try calibSample(spark, sfDir) catch { case _: Throwable => -1.0 }
-                calibRatio = if (opCalib > 0 && suiteCalib > 0) opCalib / suiteCalib else -1.0
-                scaled = math.min(scaled, timedScaled())
-              }
-              (scaled, calibRetried)
-            }
-            val (scaled, calibRetried) = scaledOpt.getOrElse((-1.0, false))
-            val timedOut = scaledOpt.isEmpty
-            val roundsScaled = if (isP16 && !timedOut) graft.pipeline.PipelineOps.lastLabelRounds else 0
-            val base = baseMed.get(name).map(_.median).getOrElse(-1.0)
-            val ratio = if (base > 0 && scaled > 0) scaled / base else -1.0
-            val perX = if (ratio > 0) ratio / k else -1.0
-            val roundsJson = if (isP16)
-              s""","rounds_base":$roundsBase,"rounds_scaled":$roundsScaled""" else ""
-            System.err.println(f"[bench:scale] $name base=${f3(base)}s x$k=${f3(scaled)}s ratio=${f3(ratio)} per_x=${f3(perX)} calib_ratio=${f3(calibRatio)}" +
-              (if (timedOut) " TIMEOUT" else "") +
-              (if (isP16) s" rounds=$roundsBase->$roundsScaled" else ""))
-            s"""\"$name\":{\"base_med_s\":${f3(base)},\"scaled_min_s\":${f3(scaled)},\"ratio\":${f3(ratio)},\"ratio_per_x\":${f3(perX)},\"calib_s\":${f3(opCalib)},\"calib_ratio\":${f3(calibRatio)},\"calib_retry\":$calibRetried,\"timeout\":$timedOut$roundsJson}"""
-          }
-        }
-        scaleProbeJson = s"""{"k":$k,"gen_s":${f3(genS)},"runs":${if (bigK) 1 else 2},"aggregation":"min","timeout_s":$timeoutS,"ops":${entries.mkString("{", ",", "}")}}"""
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] scale probe failed: ${e.getMessage}")
-      }
-    }
 
     // ---- p79 shipped-set fidelity vs exact p77 (VERDICT r11 #2): the
     // gate-scale spec measures agreement at the GATE geometry; what a
@@ -1091,27 +893,6 @@ object Bench {
         val jacTruth = trueJac.filter(_._2 >= jacCut)
         val jacBins = Seq((jacCut, 0.6), (0.6, 0.75), (0.75, 1.01))
         val (jacBinsJson, p04Top) = binJson(jacTruth, p04Found, jacBins, lshLaw)
-        // LshBucketCap recall-cost sweep (VERDICT r13 #4): p04's ×100 mid/
-        // low bins under-run the banding law by ~5% and the cap is the
-        // named cause — measure the curve instead of the single operating
-        // point. Env SPARK_GRAFT_LSH_CAP_SWEEP="1024,2048,4096,0" (0 =
-        // uncapped); record-only (the floor check stays on the production
-        // cap's run above).
-        val capSweepJson = sys.env.get("SPARK_GRAFT_LSH_CAP_SWEEP") match {
-          case Some(spec) if spec.nonEmpty =>
-            val entries = spec.split(",").map(_.trim.toLong).toSeq.map { cap =>
-              val t0 = System.nanoTime()
-              val found = graft.pipeline.PipelineOps.p04WithCap(spark, rdir, cap)
-                .where(s"idb = ida + ${PlantOffset}L")
-                .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-              val capS = (System.nanoTime() - t0) / 1e9
-              val (bj, top) = binJson(jacTruth, found, jacBins, lshLaw)
-              System.err.println(f"[bench:recall-probe] cap_sweep cap=$cap top_bin=${f3(top)} runtime=${f3(capS)}s")
-              s"""{"cap":$cap,"runtime_s":${f3(capS)},"top_bin_recall":${f3(top)},"bins_by_true_jaccard":$bj}"""
-            }
-            entries.mkString("[", ",", "]")
-          case _ => "null"
-        }
         // p22 same-component law over the same candidate machinery
         val t22 = System.nanoTime()
         val p22Reps = SparkEntry.queries("p22_embed_dedup")(spark, rdir)
@@ -1136,7 +917,7 @@ object Bench {
           s"""{"k":$rk,"mod":$rmod,"gen_s":${f3(genS)},"emb_n":$embN,"geometry":{"r":$srpR,"b":$srpB},""" +
           s""""planted_emb":${trueCos.size},"planted_doc_ge_cut":${jacTruth.size},""" +
           s""""p08":{"runtime_s":${f3(p08S)},"bins_by_true_cos":$cosBinsJson},""" +
-          s""""p04":{"runtime_s":${f3(p04S)},"jaccard_cut":$jacCut,"bins_by_true_jaccard":$jacBinsJson,"cap_sweep":$capSweepJson},""" +
+          s""""p04":{"runtime_s":${f3(p04S)},"jaccard_cut":$jacCut,"bins_by_true_jaccard":$jacBinsJson},""" +
           s""""p22":{"runtime_s":${f3(p22S)},"threshold":$p22Thresh,"planted_ge_threshold":${p22Eligible.size},"same_rep":${f3(sameRep)}},""" +
           s""""floors":{"p08_top_bin":$RecallP08TopBinFloor,"p04_top_bin":$RecallP04TopBinFloor,"p22_same_rep":$RecallP22SameRepFloor},""" +
           s""""passed":$rPassed}"""
@@ -1334,7 +1115,7 @@ object Bench {
     val errJson = errors
       .map { case (k, v) => s"${util.Json.quote(k)}:${util.Json.quote(v.take(200))}" }
       .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"value_min_envelope":${f3(totalMinEnvelope)},"drift":$driftBlock,"unit":"sec","queries":$qs,"query_detail":$qDetail,"errors":$errJson,"compile_us_per_query":${compileUs.round},"compile_src":"$compileSrc","parse_us_per_query":${parseUs.round},"lower_us_per_query":${lowerUs.round},"sqlgen_us_per_query":${sqlgenUs.round},"calib_s":$calibS,"calib_samples":$calibJson,"calib_stats":$calibStats,"host_contended":$hostContended,"contended_record":$contendedRecord,"unstable_queries":${unstableQueries.map(util.Json.quote).mkString("[", ",", "]")},"unstable_spikes":${unstableSpikes.map(util.Json.quote).mkString("[", ",", "]")},"regressed_queries":${regressedQueries.map(util.Json.quote).mkString("[", ",", "]")},"hash_family_bench":$hashFamilyJson,"scale_probe":$scaleProbeJson,"p79_fidelity":$p79FidelityJson,"p79_graded":$p79GradedJson,"recall_probe":$recallProbeJson,"epoch_ms":$benchEpochMs,"runs_per_query":$TimedRuns,"fast_runs":$FastTimedRuns,"fast_threshold_s":$FastQueryThresholdSec,"runs_policy":"median over runs_per_query timed runs; promoted to fast_runs when any timed run < fast_threshold_s; unstable queries re-timed once post-suite (query_detail.retry)","aggregation":"median","sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"value_min_envelope":${f3(totalMinEnvelope)},"drift":$driftBlock,"unit":"sec","queries":$qs,"query_detail":$qDetail,"errors":$errJson,"compile_us_per_query":${compileUs.round},"compile_src":"$compileSrc","parse_us_per_query":${parseUs.round},"lower_us_per_query":${lowerUs.round},"sqlgen_us_per_query":${sqlgenUs.round},"calib_s":$calibS,"calib_samples":$calibJson,"calib_stats":$calibStats,"host_contended":$hostContended,"contended_record":$contendedRecord,"unstable_queries":${unstableQueries.map(util.Json.quote).mkString("[", ",", "]")},"unstable_spikes":${unstableSpikes.map(util.Json.quote).mkString("[", ",", "]")},"regressed_queries":${regressedQueries.map(util.Json.quote).mkString("[", ",", "]")},"p79_fidelity":$p79FidelityJson,"p79_graded":$p79GradedJson,"recall_probe":$recallProbeJson,"epoch_ms":$benchEpochMs,"runs_per_query":$TimedRuns,"fast_runs":$FastTimedRuns,"fast_threshold_s":$FastQueryThresholdSec,"runs_policy":"median over runs_per_query timed runs; promoted to fast_runs when any timed run < fast_threshold_s; unstable queries re-timed once post-suite (query_detail.retry)","aggregation":"median","sf":"$sfDir"}"""
     // stdout carries a COMPACT summary line (~3.4 KB: suite value +
     // per-query medians + window flags) — the driver's capture window is
     // finite and the full line had grown to ~19 KB (query_detail +
@@ -1360,16 +1141,15 @@ object Bench {
     // analysis to a clipped tail string. bench_history/ is committed, one
     // file per run keyed by epoch, so per-query med/min/max/retry for every
     // round survives. Hotspot-mode runs (explicit query args) skip it — only
-    // full-suite runs are round artifacts worth keeping.
-    // Forced hotspot probes (the ×100 scale runs) are durable too, under a
-    // `_probe` suffix the regression-baseline regex (`bench_\d+\.json`)
-    // deliberately does NOT match — a 6-query artifact must never become
-    // the previous-medians baseline for a full-suite run.
-    // Fidelity-measuring hotspot runs are durable for the same reason the
-    // forced ×K probes are: the measured block IS the round artifact.
+    // full-suite runs are round artifacts worth keeping — unless they ran a
+    // fidelity or recall block: the measured block IS the artifact. Those
+    // land under a `_probe` suffix the regression-baseline regex
+    // (`bench_\d+\.json`) deliberately does NOT match — a few-query
+    // artifact must never become the previous-medians baseline for a
+    // full-suite run.
     val fidelityRan = p79FidelityJson != "null" || p79GradedJson != "null" ||
       recallProbeJson != "null"
-    if (args.isEmpty || probeForced || fidelityRan) try {
+    if (args.isEmpty || fidelityRan) try {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get("bench_history"))
       val fname = if (args.isEmpty) s"bench_$benchEpochMs.json"
                   else s"bench_${benchEpochMs}_probe.json"

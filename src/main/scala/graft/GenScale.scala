@@ -1,12 +1,12 @@
 package graft
 
 /** One-off ×K test-data generator (VERDICT r9 #9): materializes an
-  * ≈sf(K×src) copy of EVERY table under an output dir, so the full bench
-  * suite — not just the probe's three-to-five operators — can run at a
-  * larger scale point (`SPARK_GRAFT_SF_DIR=<outDir> runMain graft.Bench`).
+  * ≈sf(K×src) copy of EVERY table under an output dir, so the bench suite
+  * can run at a larger scale point
+  * (`SPARK_GRAFT_SF_DIR=<outDir> runMain graft.Bench`).
   *
-  * documents/embeddings reuse the scale probe's artifact-free replication
-  * ([[Bench.buildScaledDir]]: near-dup text suffix tokens, Walsh ±1
+  * documents/embeddings use the artifact-free replication of
+  * [[Bench.buildScaledDir]] (near-dup text suffix tokens, Walsh ±1
   * decorrelated embeddings — see its doc for why naive copies read as
   * super-linear operator scaling). The relational tables replicate with a
   * consistent key remap `key → key·K + r`, so per-replica join integrity
@@ -39,7 +39,7 @@ object GenScale {
     }
     val Array(srcDir, outDir, kStr) = args
     val k = kStr.toInt
-    val spark = Graft.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
+    val spark = Graft.localSession(Bench.envCpus)
     Bench.buildScaledDir(spark, srcDir, k, outDir) // documents + embeddings
     keyCols.foreach { case (table, keys) =>
       val src = spark.read.parquet(s"$srcDir/$table.parquet")

@@ -100,19 +100,16 @@ object Graft {
   def parquetCatalog(spark: SparkSession, dir: String): String => DataFrame =
     name => {
       def p(ext: String) = s"$dir/$name.$ext"
-      // PRQL-path default measured OFF (r15 A/B probe: the relational
-      // corpus' per-row work is columnar-cheap, so one round-robin
-      // exchange of the rows costs more than the 1-task scan it fixes;
-      // q04/q05/q28/q33 all read worse under the spread). The conf can
-      // still force it for payload-heavy user tables.
+      // The PRQL path reads unspread (r15 A/B: the relational corpus'
+      // per-row work is columnar-cheap, so one round-robin exchange of the
+      // rows costs more than the 1-task scan it fixes; q04/q05/q28/q33 all
+      // read worse under the spread).
       if (new java.io.File(p("parquet")).exists)
-        scanSpreadIf(normalizeEventTime(spark.read.parquet(p("parquet"))),
-          p("parquet"), default = false)
+        normalizeEventTime(spark.read.parquet(p("parquet")))
       else if (new java.io.File(p("orc")).exists)
         // ORC ships in Spark's core jars (no extra dependency) and keeps
         // the full typed schema like parquet — same event-time treatment
-        scanSpreadIf(normalizeEventTime(spark.read.orc(p("orc"))),
-          p("orc"), default = false)
+        normalizeEventTime(spark.read.orc(p("orc")))
       else if (new java.io.File(p("csv")).exists)
         spark.read.option("header", "true").option("inferSchema", "true")
           .csv(p("csv"))
@@ -143,58 +140,48 @@ object Graft {
     }
   }
 
+  /** Compressed bytes per spread partition. */
+  private val SpreadTaskBytes = 64L * 1024
+
   /** Scale-adaptive scan spread (optimization r15; guide §2.2/§2.4/§6.1).
     *
     * Parquet scans split only at row-group boundaries, and the driver's
     * testdata ships every table as ONE file with ONE row group — so every
     * scan stage is exactly 1 task, and all pre-Exchange work (tokenize /
     * shingle / hash HOFs, SRP plane products, filters, partial aggregation)
-    * serializes on one core of local[N]. When the FILE LAYOUT proves the
-    * scan cannot fill the machine (estimated scan tasks < cores), insert
-    * one round-robin repartition to `defaultParallelism` directly above the
-    * scan. Catalyst pushes filters and column pruning THROUGH `Repartition`
-    * (`PushDownPredicates`/`ColumnPruning` both list it), so PushedFilters/
-    * ReadSchema at the scan are unchanged and the exchange carries only the
-    * pruned, filtered rows.
+    * serializes on one core of local[N]. The spread inserts one round-robin
+    * repartition directly above the scan. Catalyst pushes filters and
+    * column pruning THROUGH `Repartition` (`PushDownPredicates`/
+    * `ColumnPruning` both list it), so PushedFilters/ReadSchema at the scan
+    * are unchanged and the exchange carries only the pruned, filtered rows.
     *
-    * Scale behavior: this is the IDENTITY whenever estimated scan tasks
-    * (Σ ceil(file/maxPartitionBytes), min one task per file) reach the core
-    * count — any table past ~cores×128 MB, i.e. every real deployment —
-    * so a 100 TB scan never pays an extra shuffle; the trigger is the file
-    * layout, not a constant tuned to local mode. Knobs:
-    * `spark.graft.scanSpread` = auto (default) | off | <target partitions>;
-    * `spark.graft.scanSpreadMinBytes` (default 32 KiB) exempts dictionary
-    * tables (nation/region) where an exchange costs more than it buys.
+    * Sizing: target = clamp(total bytes / [[SpreadTaskBytes]] (64 KiB), 1,
+    * cores), so tiny relations keep few partitions (a many-task stage on
+    * kilobytes pays pure scheduling overhead, multiplied by every round of
+    * an iterative op) and big ones fill the machine. Any table under
+    * 128 KiB sizes to one partition and is never spread — dictionary
+    * tables (nation/region) among them, where an exchange costs more than
+    * the 1-task scan. The result is the IDENTITY whenever target <= 1 or
+    * the estimated scan tasks (Σ ceil(file/maxPartitionBytes), min one
+    * task per file) already reach the target — any table past
+    * ~cores×128 MB, i.e. every real deployment — so a 100 TB scan never
+    * pays an extra shuffle; the trigger is the file layout, not a constant
+    * tuned to local mode.
+    *
+    * Whether to spread is the caller's choice, fixed per operator in code
+    * (`PipelineOps.readSpread`).
     *
     * Results are unaffected: spread only changes row-to-partition
     * assignment. The corpus' own determinism rules (exact/decimal sums,
     * rounded AVG/STDDEV, total-order output sorts, tie-broken windows,
     * array-internal left folds — SparkEntry/PipelineOps headers) make every
-    * declared query order-independent, and the driver gate re-proves it:
-    * sf0.01/sf0.001 files are above the threshold, so the gates exercise
-    * the spread path. */
-  /** Conditional spread: the per-CALL default comes from this round's
-    * per-operator measurements (each operator's entry names its choice);
-    * the session conf `spark.graft.scanSpread` overrides globally —
-    * `off` forces identity, any other value forces the spread at that
-    * setting (the A/B probe flips one conf instead of recompiling). */
-  private[graft] def scanSpreadIf(df: DataFrame, path: String,
-                                  default: Boolean): DataFrame =
-    df.sparkSession.conf.getOption("spark.graft.scanSpread") match {
-      case Some("off")          => df
-      case Some(_)              => scanSpread(df, path)
-      case None if default      => scanSpread(df, path)
-      case None                 => df
-    }
-
+    * declared query order-independent. At gate scale the spread rarely
+    * fires: documents.parquet is 65 KB at sf0.01 and sf0.001, so its target
+    * is 1 (identity) and only embeddings (193 KB, p77) spread there;
+    * PlanAuditSpec asserts the spread itself on sized fixtures and at
+    * sf0.1. */
   private[graft] def scanSpread(df: DataFrame, path: String): DataFrame = {
-    val spark = df.sparkSession
-    val mode = spark.conf.getOption("spark.graft.scanSpread").getOrElse("auto")
-    if (mode == "off") return df
-    val cores = spark.sparkContext.defaultParallelism
-    if (mode != "auto")
-      require(scala.util.Try(mode.toInt).toOption.exists(_ >= 1),
-        s"spark.graft.scanSpread: auto | off | positive int, got $mode")
+    val cores = df.sparkSession.sparkContext.defaultParallelism
     val f = new java.io.File(path)
     val sizes: Array[Long] =
       if (f.isDirectory)
@@ -203,27 +190,9 @@ object Graft {
             !x.getName.startsWith("."))
           .map(_.length())
       else Array(f.length())
-    val total = sizes.sum
-    val minBytes = spark.conf.getOption("spark.graft.scanSpreadMinBytes")
-      .map(_.toLong).getOrElse(32768L)
-    require(minBytes >= 0,
-      s"spark.graft.scanSpreadMinBytes must be >= 0, got $minBytes")
-    if (total < minBytes) return df
-    // `auto` scales the target with DATA SIZE (compressed bytes /
-    // taskBytes, capped at the core count): tiny relations keep few
-    // partitions (a 32-task stage on kilobytes pays pure scheduling
-    // overhead, multiplied by every round of an iterative op), big ones
-    // fill the machine. An explicit integer pins the target.
-    val taskBytes = spark.conf.getOption("spark.graft.scanSpreadTaskBytes")
-      .map(_.toLong).getOrElse(65536L)
-    require(taskBytes >= 1,
-      s"spark.graft.scanSpreadTaskBytes must be >= 1, got $taskBytes")
-    val target =
-      if (mode == "auto")
-        math.min(cores.toLong, math.max(1L, total / taskBytes)).toInt
-      else mode.toInt
+    val target = math.min(cores.toLong, math.max(1L, sizes.sum / SpreadTaskBytes)).toInt
     if (target <= 1) return df
-    val maxPB = spark.sessionState.conf.filesMaxPartitionBytes
+    val maxPB = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
     val estTasks = sizes.map(s => math.max(1L, (s + maxPB - 1) / maxPB)).sum
     if (estTasks >= target) df else df.repartition(target)
   }

@@ -74,7 +74,7 @@ object Main {
             s"unknown pipeline operator '$file' (run `graft.Main pipeline list`)")
           sys.exit(2)
         } else {
-          val spark = Graft.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+          val spark = Graft.localSession(Bench.envCpus)
           spark.sparkContext.setLogLevel("ERROR")
           pipeline.PipelineOps.queries(file)(spark, dataDir).show(show, truncate = false)
           spark.stop()
@@ -92,7 +92,7 @@ object Main {
       case "sql" =>
         println(Graft.toSparkSql(src))
       case "plan" | "compile" =>
-        val spark = Graft.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+        val spark = Graft.localSession(Bench.envCpus)
         spark.sparkContext.setLogLevel("ERROR")
         val (df, diags) = Graft.compileWithDiagnostics(src, spark,
           Graft.parquetCatalog(spark, dataDir))
@@ -103,7 +103,7 @@ object Main {
       case "frames" | "refs" =>
         // the reference CLI's prql-frames / prql-refs annotate modes
         // (cli.rs:20-36); ours resolve against real parquet schemas
-        val spark = Graft.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+        val spark = Graft.localSession(Bench.envCpus)
         spark.sparkContext.setLogLevel("ERROR")
         val cat = Graft.parquetCatalog(spark, dataDir)
         println(if (cmd == "frames") Annotate.frames(src, spark, cat)

@@ -406,8 +406,7 @@ object MediaOps {
                            tag: String): Dataset[(Long, String)] = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.Graft.scanSpreadIf(spark.read.parquet(s"$dir/documents.parquet"),
-        s"$dir/documents.parquet", default = false)
+    spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
       .observe(s"graft_null_media_$tag",
         count(when(col("text").isNull, 1)).as("null_payload_drops"),

@@ -136,23 +136,25 @@ object PipelineOps {
   private def planesDuckLit(nPlanes: Int): String =
     planes.take(nPlanes).map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
 
-  /** Read `path` parquet, optionally with the scale-adaptive scan spread
-    * ([[graft.Graft.scanSpread]], optimization r15): identity whenever the
-    * file layout already yields >= cores scan tasks; on the single-row-group
-    * test files it round-robins to a size-proportional partition count so
-    * per-row HOF work (and everything behind a [[Barrier]], which preserves
-    * partitioning) uses the whole machine instead of one core.
+  /** Read `path` parquet, with the scale-adaptive scan spread
+    * ([[graft.Graft.scanSpread]]) when `spread` is set: identity whenever
+    * the file layout already yields the size-derived target of scan tasks;
+    * on the single-row-group test files it round-robins to a
+    * size-proportional partition count so per-row HOF work (and everything
+    * behind a [[Barrier]], which preserves partitioning) uses the whole
+    * machine instead of one core.
     *
-    * `spread` is PER-OPERATOR, from this round's A/B measurements
-    * (alternating-arm medians/mins, graft.SpreadProbe): operators whose
-    * cost is one heavy map pass win 1.5-2x; operators dominated by an
-    * iterative loop over tiny relations (p50/p51 BPE merges, p22/p16 label
-    * rounds) LOSE — more partitions multiply per-round task-scheduling and
-    * checkpoint overhead — and stay unspread. The session conf
-    * `spark.graft.scanSpread` force-overrides both ways. */
+    * `spread` is PER-OPERATOR, fixed in code from the r15 A/B measurements
+    * (alternating-arm medians/mins): operators whose cost is one heavy map
+    * pass win 1.5-2x; operators dominated by an iterative loop over tiny
+    * relations (p50/p51 BPE merges, p22/p16 label rounds) LOSE — more
+    * partitions multiply per-round task-scheduling and checkpoint
+    * overhead — and stay unspread. */
   private def readSpread(spark: SparkSession, path: String,
-                         spread: Boolean = false): DataFrame =
-    graft.Graft.scanSpreadIf(spark.read.parquet(path), path, default = spread)
+                         spread: Boolean = false): DataFrame = {
+    val df = spark.read.parquet(path)
+    if (spread) graft.Graft.scanSpread(df, path) else df
+  }
 
   // Spark-side fragments ----------------------------------------------------
 
@@ -167,11 +169,12 @@ object PipelineOps {
     * measured ~2x on the per-token lambda call sites: p55 2.6s -> 1.2s at
     * sf0.1); at deployment `spark.graft.hashFamily = xxhash64` flips every
     * operator's row-level hash to Spark's codegen'd xxhash64, which still
-    * beats md5's digest cost itself. MEASURED (r6 #6, the bench artifact's
-    * `hash_family_bench` entry: p01+p18 median-of-3 at sf0.1): 1.04x
-    * end-to-end pre-kernel — the per-row hash is real but a small share of
-    * those operators' wall time, which tokenization and the shuffle
-    * dominate. The correctness gate pins md5 (default); HashFamilySpec
+    * beats md5's digest cost itself. MEASURED (r6 #6, p01+p18 median-of-3
+    * at sf0.1): 1.04x end-to-end pre-kernel — the per-row hash is real but
+    * a small share of those operators' wall time, which tokenization and
+    * the shuffle dominate. Re-measure with `runMain graft.Sampler 5
+    * spark.graft.hashFamily md5,xxhash64 p01_dedup_exact p18_text_clean`.
+    * The correctness gate pins md5 (default); HashFamilySpec
     * proves the xxhash64 path yields identical p04/p08 results
     * (collision-free hashes preserve set Jaccard) and identical plan
     * shapes. */
@@ -413,13 +416,11 @@ object PipelineOps {
     * moves all three (ADVICE r12: the restatement hardcoded it). */
   private[graft] val LshJaccardCut = 0.5
 
-  /** The band-join CTE chain at an explicit bucket cap. The production
-    * chain is [[lshPairCtesSpark]] = this at [[LshBucketCap]] (byte-
-    * identical SQL text, so the frozen oracles are untouched); Bench's
-    * recall probe sweeps other caps through [[p04WithCap]] to measure the
-    * cap's recall-vs-runtime curve (VERDICT r13 #4) instead of trusting
-    * the single operating point. */
-  private def lshPairCtes(cap: Long): String = s"""
+  /** The minhash band-join CTE chain (`bands0` → `bands` → `cands` →
+    * `verified`) over [[LshSigsView]], shared by p04 and every consumer of
+    * `verified`. Hot buckets are cut at [[LshBucketCap]], mirrored in the
+    * DuckDB chain [[lshCtesDuck]], so the oracle hashes hold. */
+  private val lshPairCtes = s"""
     bands0 AS (
       SELECT doc_id, explode(transform(sequence(0, ${Bands - 1}),
         j -> concat(j, '|', element_at(sig, 2 * j + 1), '|', element_at(sig, 2 * j + 2)))) AS bkey
@@ -431,7 +432,7 @@ object PipelineOps {
     cands AS (
       SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
       FROM bands a JOIN bands b ON a.bkey = b.bkey AND a.doc_id < b.doc_id
-      WHERE a.rnk <= $cap AND b.rnk <= $cap),
+      WHERE a.rnk <= $LshBucketCap AND b.rnk <= $LshBucketCap),
     verified AS (
       -- re-join the shingle sets for candidates only: cheaper than carrying
       -- the arrays through the 8x band-key shuffle (measured 2x faster at
@@ -443,25 +444,16 @@ object PipelineOps {
       JOIN $LshSigsView sa ON sa.doc_id = c.ida
       JOIN $LshSigsView sb ON sb.doc_id = c.idb)"""
 
-  private val lshPairCtesSpark = lshPairCtes(LshBucketCap)
-
-  /** p04 at an explicit bucket cap (cap <= 0 = uncapped). Probe-only entry
-    * point for Bench's LshBucketCap recall/runtime sweep; the production
-    * path below stays pinned at [[LshBucketCap]] so oracle hashes and the
-    * frozen DuckDB chain are untouched. */
-  private[graft] def p04WithCap(spark: SparkSession, dir: String, cap: Long): DataFrame = {
+  private def p04Run(spark: SparkSession, dir: String): DataFrame = {
     readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
     graft.functions.GraftFunctions.registerMinhash(spark,
       hashA.toArray, hashB.toArray, MinhashP)
     materialized(spark, LshSigsView, lshSigsSql(hashFamily(spark)))
     spark.sql(s"""
-      WITH ${lshPairCtes(if (cap <= 0) Long.MaxValue else cap)}
+      WITH $lshPairCtes
       SELECT ida, idb, CAST(floor((jac) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS jaccard
       FROM verified WHERE jac >= $LshJaccardCut ORDER BY ida, idb""")
   }
-
-  private def p04Run(spark: SparkSession, dir: String): DataFrame =
-    p04WithCap(spark, dir, LshBucketCap)
 
   private val lshCtesDuck = s"""
     w AS (
@@ -1517,6 +1509,18 @@ object PipelineOps {
     r
   }
 
+  /** Shuffle-partition count for an iterative loop's rounds:
+    * clamp(rows / 64Ki, 1, session), derived from the materialized loop
+    * relation's size (optimization r15) — identity at deployment sizes.
+    * The floor 1 is a constant, not a knob: the r16 A/B sweep (off/1/4/8/16
+    * then off/1/4 at 8 runs/arm, alternating, sf0.1 local[32]) kept it as
+    * the median winner on 5/6 loop ops (sum-of-medians off 12.22 s,
+    * 1 11.00 s, 4 11.82 s; 8/16 clearly worse). */
+  private[graft] def loopPartsFor(spark: SparkSession, rows: Long): String = {
+    val session = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    math.min(session, math.max(1L, rows / 65536L)).toString
+  }
+
   /** Min-label propagation over an undirected edge list until fixpoint.
     * `init` must have columns (doc_id, lbl); `edges` columns (a, b) with
     * both directions present. Exposed for direct topology tests
@@ -1531,28 +1535,6 @@ object PipelineOps {
     * component, and min over a component of partially-min'd labels equals
     * min over the original labels. The escalation is loud (stderr) so a
     * production run knows flooding's diameter assumption was violated. */
-  /** Rounds the LAST [[labelPropagate]] call executed (−1 before any call;
-    * negated when it escalated to star contraction). Observability only —
-    * Bench's scale probe reads it to explain p16's measured scaling (the
-    * round count grows with component structure, so wall-time per corpus-x
-    * is rounds × per-round cost, not a fixed multiple — VERDICT r9 #1/#2
-    * asked the probe to EMIT the round count instead of asserting a
-    * model). A plain volatile, not thread-safe across concurrent p16 runs
-    * — fine for the single-driver bench/test paths that consume it. */
-  @volatile private[graft] var lastLabelRounds: Int = -1
-
-  /** Shuffle-partition count for an iterative loop's rounds:
-    * clamp(rows / 64Ki, 1, session), derived from the materialized loop
-    * relation's size (optimization r15) — identity at deployment sizes.
-    * The floor 1 is a constant, not a knob: the r16 A/B sweep (off/1/4/8/16
-    * then off/1/4 at 8 runs/arm, alternating, sf0.1 local[32]) kept it as
-    * the median winner on 5/6 loop ops (sum-of-medians off 12.22 s,
-    * 1 11.00 s, 4 11.82 s; 8/16 clearly worse). */
-  private[graft] def loopPartsFor(spark: SparkSession, rows: Long): String = {
-    val session = spark.conf.get("spark.sql.shuffle.partitions").toLong
-    math.min(session, math.max(1L, rows / 65536L)).toString
-  }
-
   private[graft] def labelPropagate(init: DataFrame, edges: DataFrame,
                                     maxRounds: Int = LabelMaxRounds): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -1617,7 +1599,6 @@ object PipelineOps {
         }
       }
     } finally spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
-    lastLabelRounds = if (converged) round else -round
     if (!converged) {
       System.err.println(s"[graft] labelPropagate: label sum still changing after " +
         s"$maxRounds rounds — escalating to star contraction (O(log n) rounds)")
@@ -1637,7 +1618,7 @@ object PipelineOps {
       hashA.toArray, hashB.toArray, MinhashP)
     materialized(spark, LshSigsView, lshSigsSql(hashFamily(spark)))
     val pairs = Barrier.materialize(spark.sql(
-      s"WITH $lshPairCtesSpark SELECT ida, idb FROM verified WHERE jac >= $LshJaccardCut"))
+      s"WITH $lshPairCtes SELECT ida, idb FROM verified WHERE jac >= $LshJaccardCut"))
     val edges = pairs.select(col("ida").as("a"), col("idb").as("b"))
       .union(pairs.select(col("idb").as("a"), col("ida").as("b")))
     // The label loop runs over EDGE-INCIDENT nodes only: a doc with no
@@ -2539,7 +2520,7 @@ object PipelineOps {
       hashA.toArray, hashB.toArray, MinhashP)
     materialized(spark, LshSigsView, lshSigsSql(hashFamily(spark)))
     spark.sql(s"""
-      WITH $lshPairCtesSpark,
+      WITH $lshPairCtes,
       dup AS (SELECT ida, idb FROM verified WHERE jac >= $LshJaccardCut),
       lbl AS (
         SELECT least(da.source, db.source) AS source_a,

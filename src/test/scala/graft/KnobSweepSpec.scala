@@ -77,11 +77,6 @@ class KnobSweepSpec extends AnyFunSuite {
     "spark.graft.dsirSelectMicro" -> Knob("", Nil,
       "threshold on the integer micro-nat scale; every value is a legal cut"),
     "spark.graft.plantFixtures" -> Knob("p43_unicode_nfc", Seq("maybe")),
-    // r15 scan spread: p21 reads documents (65 KB at sf0.001 — above the
-    // min-bytes floor, so all three knob reads are reached)
-    "spark.graft.scanSpread" -> Knob("p21_decontam", Seq("0")),
-    "spark.graft.scanSpreadMinBytes" -> Knob("p21_decontam", Seq("-1")),
-    "spark.graft.scanSpreadTaskBytes" -> Knob("p21_decontam", Seq("0")),
   )
 
   test("README knob table == the spark.graft.* keys the source reads == this registry") {

@@ -100,7 +100,10 @@ class PlanAuditSpec extends AnyFunSuite {
     // the array once per lambda reference (measured 28.5 s vs ~2 s on p21
     // at sf0.1 — see the materialized() doc). Also: no round-robin exchange
     // may sneak in (a literal REPARTITION(32) would cap any cluster at 32
-    // tasks), and the barrier itself must not add one.
+    // tasks), and the barrier itself must not add one. p21/p28 read with
+    // the scan spread on, but documents.parquet (65 KB here) sizes to one
+    // partition, where the spread is the identity; the spread's own
+    // exchange is audited by the scan-spread tests below.
     Seq("p04_minhash_lsh", "p08_ann_srp_lsh", "p12_lang_id",
         "p21_decontam", "p28_contamination_matrix").foreach { q =>
       val p = pipeline.PipelineOps.queries(q)(spark, dir)
@@ -110,6 +113,74 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(!p.contains("RoundRobinPartitioning"),
         s"$q: fixed-width round-robin exchange survives in:\n$p")
     }
+  }
+
+  /** Round-robin exchanges of the (unexecuted) physical plan, each with
+    * its width and the file names its subtree scans. */
+  private def spreads(df: org.apache.spark.sql.DataFrame): Seq[(Int, Seq[String])] = {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    df.queryExecution.sparkPlan.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] =>
+        e.outputPartitioning.numPartitions ->
+          e.collect { case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName) }.flatten
+    }
+  }
+
+  /** `rows` rows of (id, 64-hex-char payload) written as `files` parquet
+    * files; returns (path, total file bytes, file count). */
+  private def sizedTable(rows: Int, files: Int): (String, Long, Int) = {
+    val path = java.nio.file.Files.createTempDirectory("graft_spread")
+      .resolve("t.parquet").toString
+    spark.range(rows).selectExpr("id", "sha2(CAST(id AS STRING), 256) AS h")
+      .repartition(files).write.parquet(path)
+    val parts = new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet"))
+    (path, parts.map(_.length).sum, parts.length)
+  }
+
+  private lazy val cores = spark.sparkContext.defaultParallelism
+
+  test("scan spread: a single-file table >= 128 KiB round-robins to min(cores, bytes/64 KiB)") {
+    val (path, bytes, nFiles) = sizedTable(3000, 1)
+    assert(nFiles == 1 && bytes >= 2 * 65536, s"fixture: $nFiles files, $bytes bytes")
+    val plain = spark.read.parquet(path)
+    val spread = Graft.scanSpread(plain, path)
+    val width = math.min(cores.toLong, bytes / 65536).toInt
+    assert(spreads(spread) == Seq(width -> Seq("t.parquet")),
+      s"expected one RoundRobinPartitioning($width) above the scan:\n" +
+        spread.queryExecution.sparkPlan)
+    assert(spread.collect().sortBy(_.getLong(0)).toSeq ==
+      plain.collect().sortBy(_.getLong(0)).toSeq, "the spread must not change rows")
+  }
+
+  test("scan spread: a table under 32 KiB is left unchanged") {
+    val (path, bytes, _) = sizedTable(100, 1)
+    assert(bytes < 32768, s"fixture: $bytes bytes")
+    val plain = spark.read.parquet(path)
+    assert(Graft.scanSpread(plain, path) eq plain)
+  }
+
+  test("scan spread: a table whose file count reaches the target is left unchanged") {
+    val (path, bytes, nFiles) = sizedTable(12000, 2 * cores)
+    val target = math.min(cores.toLong, bytes / 65536)
+    assert(target >= 2 && nFiles >= target, s"fixture: $nFiles files, $bytes bytes")
+    val plain = spark.read.parquet(path)
+    assert(Graft.scanSpread(plain, path) eq plain)
+  }
+
+  test("scan spread at sf0.1: spread-on p18 exchanges above the documents scan, spread-off p01 does not") {
+    val sf = s"${new java.io.File(dir).getParent}/sf0.1" // next to the gate-scale data
+    val width = math.min(cores.toLong,
+      new java.io.File(s"$sf/documents.parquet").length / 65536).toInt
+    try {
+      val p18 = spreads(pipeline.PipelineOps.queries("p18_text_clean")(spark, sf))
+      assert(p18 == Seq(width -> Seq("documents.parquet")),
+        s"p18: expected one RoundRobinPartitioning($width) above the documents scan, got $p18")
+      val p01 = spreads(pipeline.PipelineOps.queries("p01_dedup_exact")(spark, sf))
+      assert(p01.isEmpty, s"p01 reads unspread, got $p01")
+    } finally
+      spark.read.parquet(s"$dir/documents.parquet").createOrReplaceTempView("documents")
   }
 
   test("the barrier property holds under every spark.graft.barrier mode") {
