@@ -3,6 +3,14 @@ import org.apache.spark.sql.DataFrame
 
 /** Per-round benchmark: one JSON line with per-query wall seconds.
   *
+  * Bench times the suite, records per-query med/min/max (plus one
+  * settle-retry for a query whose runs disagree wildly), runs the p79
+  * fidelity and recall gates and writes its artifact. It does not judge its
+  * own window or compare itself with earlier runs: window noise is
+  * perfbench's job (seeded repeats, IQR bounds, loadavg and [[calibrate]]
+  * around each run), cross-run comparison is `tools/trend.py`'s (same sf
+  * and same `cpus` only), and an interleaved A/B is [[Sampler]]'s.
+  *
   * Methodology (VERDICT r1 #2, r2 #6):
   *  - execution sink is a noop write, not `.count()` — count() lets Catalyst
   *    prune unreferenced projections, so expression-heavy queries would never
@@ -22,6 +30,42 @@ object Bench {
   private val TimedRuns = 3
   private val FastTimedRuns = 5
   private val FastQueryThresholdSec = 2.0
+
+  /** One query's timed runs: median/min/max seconds over `runs` (all -1
+    * when a run failed, with the first failure's message in `error`). */
+  final case class QStat(median: Double, min: Double, max: Double, runs: Int,
+                         error: Option[String] = None)
+
+  /** The runs policy, free of Spark: `run()` times one run in seconds, or
+    * throws. [[TimedRuns]] runs, promoted to [[FastTimedRuns]] when ANY
+    * completed run is under [[FastQueryThresholdSec]] (ADVICE r6:
+    * classifying on the first run alone let one contention spike lock a
+    * sub-second query into 3-run mode). The first failure stops the query
+    * and records -1: a median of the surviving runs would report a
+    * healthy-looking time for a flaky query. */
+  def timeRuns(run: () => Double): QStat = {
+    val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+    var target = TimedRuns
+    var error: Option[String] = None
+    while (error.isEmpty && times.length < target) {
+      try {
+        times += run()
+        if (times.last < FastQueryThresholdSec) target = FastTimedRuns
+      } catch { case e: Throwable =>
+        error = Some(Option(e.getMessage).getOrElse(e.getClass.getName))
+      }
+    }
+    if (error.nonEmpty) QStat(-1.0, -1.0, -1.0, target, error)
+    else {
+      val s = times.sorted
+      QStat(s(s.length / 2), s.head, s.last, target)
+    }
+  }
+
+  /** Settle-retry rule: the query's own runs disagree wildly (max/min > 3)
+    * and the slow run is material (max > 0.5 s), so 20 ms-scale jitter on
+    * a fast query never qualifies. */
+  def unstable(s: QStat): Boolean = s.min > 0 && s.max > 0.5 && s.max / s.min > 3.0
 
   private def execute(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
@@ -87,27 +131,14 @@ object Bench {
     (compileSrc, parseUs, lowerUs, sqlgenUs, totalUs)
   }
 
-  /** Machine-drift calibration canary (VERDICT r4 #2, rebuilt per r5 #1):
-    * a fixed, pure-Spark, engine-independent workload timed ALONGSIDE the
-    * query suite. The r5 artifact proved a single end-of-run sample is
-    * worthless — the driver's host was contended for ~35 of the bench's 38
-    * minutes, the contention passed before the suite ended, and the lone
-    * final calib read healthy while q13 had recorded 76 s (same code reruns
-    * at 0.50 s). So calibration is now INTERLEAVED: one sample before the
-    * warm-up, one after every [[CalibEveryN]] timed queries, one after the
-    * suite. The artifact carries every sample with its tag + timestamp,
-    * plus min/median/max, and self-flags `host_contended` when the
-    * IN-SUITE sample spread exceeds 2x (r10: edge samples — JIT-cold
-    * pre-warmup, idle post-suite — run without the suite's own 32-thread
-    * load, so the old all-samples spread flagged self-load as contention
-    * on every steady run) — a judge can detect (and discount) a
-    * contended window without re-running anything.
-    *
-    * Workload (unchanged): a CPU-bound range-sum (2e8 rows through
-    * whole-stage codegen) + one fixed parquet scan-agg over lineitem
-    * (I/O + decode + hash-agg); independent of graft code paths. */
-  private val CalibEveryN = 15
-
+  /** Host-speed calibration canary: a fixed, pure-Spark workload
+    * independent of graft code paths — a CPU-bound range-sum (2e8 rows
+    * through whole-stage codegen) + one fixed parquet scan-agg over
+    * lineitem (I/O + decode + hash-agg). Bench records one sample before
+    * its warm-up and one after the suite (tag + timestamp + duration, plus
+    * min/median/max) so a reader can see the host's speed in that window;
+    * it draws no conclusion from them. perfbench's `Runner` calls
+    * [[calibrate]] before and after each run for the same purpose. */
   private def calibWork(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
     execute(spark.range(200000000L).selectExpr("sum(id) AS s"))
     execute(spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -334,7 +365,7 @@ object Bench {
       }
     }
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // (t_rel_s at sample start, duration_s) — interleaved drift samples
+    // (tag, t_rel_s at sample start, duration_s)
     val calibSamples = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double)]
     def takeCalib(tag: String): Unit =
       try {
@@ -345,81 +376,6 @@ object Bench {
         System.err.println(s"[bench] calibration ($tag) failed: ${e.getMessage}")
       }
 
-    // ---- previous QUIET same-sf artifact (VERDICT r12 #3): one scan of
-    // bench_history serves two consumers — the regression flags' baseline
-    // medians (formerly computed post-suite) and the quiet-gate floor
-    // below. Eligibility: full-suite artifact (bench_\d+.json — the _probe
-    // suffix is excluded by the regex), same sf, and NOT self-flagged
-    // contended (host_contended from the in-suite calib spread, or
-    // contended_record from a failed pre-suite quiet gate): a contended
-    // baseline deflates every next-round ratio and hides real drift.
-    // Falls back to the latest same-sf artifact regardless of flags when
-    // no quiet one exists (a noisy baseline beats no baseline, loudly).
-    case class PrevArtifact(file: String, medians: Map[String, Double],
-                            quietFloor: Double, calibMedian: Double)
-    def parseArtifact(f: java.nio.file.Path, txt: String): PrevArtifact = {
-      // ADVICE r10: a silent regex miss would disable regression
-      // detection without any signal — warn loudly on format drift
-      val m = "\"queries\":\\{(.*?)\\}".r.findFirstMatchIn(txt)
-      if (m.isEmpty)
-        System.err.println(s"[bench] WARNING: no \"queries\":{...} block in $f — artifact format drifted; regression detection disabled this run")
-      val parsed = m.map { mm =>
-        "\"([^\"]+)\":(-?[0-9][0-9eE.+-]*)".r.findAllMatchIn(mm.group(1))
-          .map(q => q.group(1) -> q.group(2).toDouble).toMap
-      }.getOrElse(Map.empty[String, Double])
-      if (m.nonEmpty && parsed.isEmpty)
-        System.err.println(s"[bench] WARNING: queries block in $f parsed to an empty map — artifact format drifted; regression detection disabled this run")
-      // quiet-gate floor: the prior artifact's own PRE-WARMUP sample —
-      // the like-for-like comparison point (post-JIT in-suite samples
-      // run ~1.3-1.5x faster than the pre-warmup one, so gating a
-      // fresh pre-warmup sample against calib_stats.min would flag
-      // genuinely quiet runs); fall back to 2x the in-suite min when
-      // an old artifact carries no pre-warmup tag
-      val preWarm = "\"tag\":\"pre-warmup\",\"t_s\":[^,]*,\"dur_s\":(-?[0-9.]+)".r
-        .findFirstMatchIn(txt).map(_.group(1).toDouble)
-      val calibMin = "\"calib_stats\":\\{\"min\":(-?[0-9.]+)".r
-        .findFirstMatchIn(txt).map(_.group(1).toDouble).getOrElse(-1.0)
-      val calibMed = "\"calib_stats\":\\{\"min\":-?[0-9.]+,\"median\":(-?[0-9.]+)".r
-        .findFirstMatchIn(txt).map(_.group(1).toDouble).getOrElse(-1.0)
-      PrevArtifact(f.getFileName.toString, parsed,
-        preWarm.getOrElse(if (calibMin > 0) calibMin * 2.0 else -1.0), calibMed)
-    }
-    // One scan yields three baselines: the newest quiet same-sf artifact
-    // (regression flags + quiet-gate floor; contended fallback when no
-    // quiet one exists), and — for the drift-attribution block (VERDICT
-    // r13 #2) — the newest and OLDEST quiet artifacts, no fallback: a
-    // contended endpoint would bake the very noise the normalization is
-    // meant to remove into the chain.
-    val (prevArtifact, oldestQuietArtifact): (Option[PrevArtifact], Option[PrevArtifact]) = try {
-      val dir = java.nio.file.Paths.get("bench_history")
-      if (!java.nio.file.Files.isDirectory(dir)) (None, None)
-      else {
-        import scala.jdk.CollectionConverters._
-        val files = java.nio.file.Files.list(dir).iterator().asScala
-          .filter(_.getFileName.toString.matches("bench_\\d+\\.json"))
-          .toSeq.sortBy(_.getFileName.toString)
-        def sameSf(txt: String) =
-          "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(txt).exists(_.group(1) == sfDir)
-        def isQuiet(txt: String) =
-          !txt.contains("\"host_contended\":true") &&
-            !txt.contains("\"contended_record\":true")
-        val candidates = files.reverseIterator
-          .map(f => (f, java.nio.file.Files.readString(f))).filter(t => sameSf(t._2)).toSeq
-        val chosen = candidates.find(t => isQuiet(t._2)).orElse {
-          candidates.headOption.map { t =>
-            System.err.println(s"[bench] WARNING: no quiet same-sf baseline in bench_history — " +
-              s"falling back to contended ${t._1.getFileName} (regression ratios will read deflated)")
-            t
-          }
-        }
-        val oldestQuiet = candidates.reverseIterator.find(t => isQuiet(t._2))
-        (chosen.map((parseArtifact _).tupled), oldestQuiet.map((parseArtifact _).tupled))
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_history read failed: ${e.getMessage}")
-      (None, None)
-    }
-
     // calibration warm (JIT + parquet footer cache), then sample #0 BEFORE
     // the warm-up pass — the suite's whole window must be bracketed
     try calibWork(spark, sfDir)
@@ -427,51 +383,6 @@ object Bench {
       System.err.println(s"[bench] calibration warm failed: ${e.getMessage}")
     }
     takeCalib("pre-warmup")
-
-    // ---- quiet gate (VERDICT r12 #3): both r12 round artifacts shipped
-    // host_contended with spurious regression flags the judge had to
-    // adjudicate by hand. The harness can often see contention BEFORE
-    // burning the suite: compare the pre-warmup calibration sample to the
-    // last quiet round's calibration floor at this sf. Above the band →
-    // settle and re-sample (twice); still above → proceed, but mark the
-    // artifact contended_record:true so trend tooling (tools/trend.py,
-    // Bench's own baseline pick) excludes it from baselines the way it
-    // excludes _probe files. The end-of-run host_contended flag also
-    // raises contended_record — a run that TURNED noisy mid-suite is just
-    // as ineligible as one that started noisy. Gate is advisory only at
-    // the start (r12's sf0.1 record read a healthy 0.583 pre-warmup and
-    // went contended later); its job is catching start-contended windows
-    // like r12's sf1 record (pre-warmup 0.943 vs quiet floor 0.382).
-    var contendedRecord = false
-    if (sys.env.getOrElse("SPARK_GRAFT_QUIET_GATE", "1") != "0") {
-      prevArtifact.filter(_.quietFloor > 0) match {
-        case Some(prev) =>
-          val thresh = prev.quietFloor * 1.5
-          // VERDICT r13 #1: at sf1 an ~11-min suite is worth more patience
-          // than two 60 s settles — the retry budget and settle window are
-          // env knobs so a long-suite launcher can wait out a noisy host
-          // (e.g. QUIET_RETRIES=8 QUIET_SETTLE_S=90 = up to 12 min) while
-          // the default per-round sf0.1 behavior is unchanged.
-          val maxTries = sys.env.getOrElse("SPARK_GRAFT_QUIET_RETRIES", "2").toInt
-          val settleS = sys.env.getOrElse("SPARK_GRAFT_QUIET_SETTLE_S", "60").toInt
-          var tries = 0
-          def lastSample = calibSamples.lastOption.map(_._3).getOrElse(-1.0)
-          while (lastSample > thresh && tries < maxTries) {
-            System.err.println(f"[bench:quiet-gate] calib ${lastSample}%.3fs > ${thresh}%.3fs " +
-              f"(1.5x the last quiet run's pre-warmup sample ${prev.quietFloor}%.3fs, ${prev.file}) — settling ${settleS}s (retry ${tries + 1}/$maxTries)")
-            Thread.sleep(settleS * 1000L)
-            takeCalib("quiet-gate-retry")
-            tries += 1
-          }
-          if (lastSample > thresh) {
-            contendedRecord = true
-            System.err.println("[bench:quiet-gate] still above the quiet band — proceeding, " +
-              "but this artifact is contended_record:true (excluded from trend baselines)")
-          }
-        case None =>
-          System.err.println("[bench:quiet-gate] no quiet-floor baseline at this sf — gate skipped")
-      }
-    }
 
     // warm-up pass: JIT + parquet footer caches + codegen, untimed
     queries.foreach { case (name, fn) =>
@@ -482,46 +393,22 @@ object Bench {
       }
     }
 
-    // timed suite, with a calibration sample every CalibEveryN queries.
-    // Run count adapts on the timed runs (not the warm-up, which absorbs
-    // plan compile and first-touch cost and would misclassify sub-second
-    // queries as slow): ANY completed timed run under 2 s promotes the
-    // query to 5 runs (ADVICE r6: classifying on the first run alone let
-    // one contention spike on that run lock a sub-second query into
-    // 3-run mode — the exact coarse-median problem FastTimedRuns fixes).
-    case class QStat(median: Double, min: Double, max: Double, runs: Int, tStartS: Double)
-    var sinceCalib = 0
-    val results: Seq[(String, QStat)] = queries.map { case (name, fn) =>
-      if (sinceCalib >= CalibEveryN) { takeCalib("interleave"); sinceCalib = 0 }
-      sinceCalib += 1
+    // timed suite under the runs policy (see timeRuns); the run count adapts
+    // on the timed runs, not the warm-up, which absorbs plan compile and
+    // first-touch cost and would misclassify sub-second queries as slow
+    def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => DataFrame): Double = {
+      val t0 = System.nanoTime()
+      execute(fn(spark, sfDir))
+      (System.nanoTime() - t0) / 1e9
+    }
+    val results: Seq[(String, QStat, Double)] = queries.map { case (name, fn) =>
       val tStart = nowS
-      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var failed = false
-      var target = TimedRuns
-      var i = 0
-      while (i < target && !failed) {
-        val t0 = System.nanoTime()
-        try {
-          execute(fn(spark, sfDir))
-          times += (System.nanoTime() - t0) / 1e9
-          if (times.last < FastQueryThresholdSec) target = FastTimedRuns
-        } catch { case e: Throwable =>
-          errors.getOrElseUpdate(name,
-            Option(e.getMessage).getOrElse(e.getClass.getName))
-          System.err.println(s"[bench] $name failed: ${errors(name)}")
-          failed = true
-        }
-        i += 1
+      val stat = timeRuns(() => timeOnce(fn))
+      stat.error.foreach { e =>
+        errors.getOrElseUpdate(name, e)
+        System.err.println(s"[bench] $name failed: ${errors(name)}")
       }
-      // contract: ANY failed run records -1 (a median of the surviving runs
-      // would report a healthy-looking time for a flaky query)
-      val stat =
-        if (failed || times.length < target) QStat(-1.0, -1.0, -1.0, target, tStart)
-        else {
-          val s = times.sorted
-          QStat(s(s.length / 2), s.head, s.last, target, tStart)
-        }
-      name -> stat
+      (name, stat, tStart)
     }
     takeCalib("post-suite")
 
@@ -549,8 +436,8 @@ object Bench {
     var p79FidelityJson = "null"
     // VERDICT r12 #6: the block is RECURRING — default-on for every
     // full-suite sf0.1 run (the per-round artifact), not just env-gated
-    // probe runs, so shipped-set fidelity is regression-flagged every
-    // round the way runtime is. Default ×K is 1 there (spread-only corpus;
+    // probe runs, so shipped-set fidelity is floor-gated every round.
+    // Default ×K is 1 there (spread-only corpus;
     // exact p77 costs ~3 s at sf0.1, so the block adds ~10 s to the round
     // bench); the ×10 deep probe remains env-driven
     // (SPARK_GRAFT_P79_FIDELITY=1 with SPARK_GRAFT_P79_FIDELITY_K=10).
@@ -944,189 +831,63 @@ object Bench {
       -1.0
     }
 
-    // ---- self-validation (r5 #1): the artifact must certify its own window
     val calibDurs = calibSamples.map(_._3).toSeq
     val calibS = // backwards-compatible scalar: median over ALL samples
       if (calibDurs.isEmpty) -1.0
       else calibDurs.sorted.apply(calibDurs.length / 2)
     val calibSpread =
       if (calibDurs.size >= 2 && calibDurs.min > 0) calibDurs.max / calibDurs.min else 1.0
-    // r10: the contended flag keys on the IN-SUITE (interleave) samples
-    // only. The edge samples (pre-warmup = JIT-cold caches, post-suite =
-    // idle machine) measure the host WITHOUT the suite's own 32-thread
-    // load, so the all-samples spread flagged the bench's SELF-load as
-    // contention on every steady run (r9: in-suite spread 1.24, flagged
-    // anyway off a fast idle tail sample; r10 quiet run: 1.23, same).
-    // In-suite samples share the suite's ambient load, so their spread
-    // isolates EXTERNAL drift — the thing the flag is for. All samples
-    // still land in the artifact; `spread` stays the all-samples number.
-    val inSuiteDurs = calibSamples.collect { case ("interleave", _, d) => d }.toSeq
-    val inSuiteSpread =
-      if (inSuiteDurs.size >= 2 && inSuiteDurs.min > 0) inSuiteDurs.max / inSuiteDurs.min
-      else calibSpread // too few in-suite samples (hotspot runs): old rule
-    // r14 refinement, same lineage as the r10 in-suite-only fix: max/min
-    // is the most outlier-sensitive dispersion statistic there is — with
-    // 8 in-suite samples, ONE ~1.0 s blip plus one fast tail sample read
-    // as 2.33x and flagged an otherwise-steady 0.43-0.63 band (second r14
-    // sf0.1 run; the first was killed the same way by a single query-run
-    // spike). Contention — the claim the flag makes — inflates a
-    // SUSTAINED stretch of samples (r12's sf1 record: a 0.9-1.5 s band;
-    // r13: an all-day 0.70-0.86 band), so the flag now counts samples
-    // elevated >1.5x the in-suite MEDIAN and fires on two or more. An
-    // all-samples-inflated window shifts the median itself and is the
-    // PRE-SUITE quiet gate's job (absolute, vs the last quiet round's
-    // floor). The raw spread and every sample stay in the artifact, so
-    // the old reading remains computable.
-    val inSuiteMedian =
-      if (inSuiteDurs.nonEmpty) inSuiteDurs.sorted.apply(inSuiteDurs.size / 2) else -1.0
-    val inSuiteElevated =
-      if (inSuiteMedian > 0) inSuiteDurs.count(_ > 1.5 * inSuiteMedian) else 0
-    val windowDrifted =
-      if (inSuiteDurs.size >= 2) inSuiteElevated >= 2
-      else calibSpread > 2.0 // hotspot runs: too few samples for the count rule
-    // queries whose own runs disagree wildly also flag contention — but only
-    // when the slow run is material (>0.5 s), else 20ms-scale jitter would
-    // trip the flag on every shared host.
-    // r14 refinement (measured false-positive mode): the old max/min > 3
-    // rule let ONE transient spike among 5 runs mark the whole record
-    // contended — r13's official artifact flagged 44 sub-second queries
-    // this way, and the first r14 sf0.1 run was killed by a single 0.81 s
-    // outlier on p41 (runs 0.208/0.220/0.811; median untouched). A single
-    // spike is exactly what median-of-5 exists to absorb; CONTENTION —
-    // the thing this flag asserts — means the window was slow for a
-    // sustained stretch. The rule is now median-based: flag when the
-    // MEDIAN itself is both material and >3x the query's own best run
-    // (i.e. most runs were inflated, not one). Single spikes remain fully
-    // visible in query_detail (min/max/retry land in the artifact
-    // unchanged), the in-suite calib spread still catches window-level
-    // drift, and unstable_spikes below records the old rule's hits so
-    // the evidence trail survives the refinement.
-    val unstableSpikes = results.collect {
-      case (name, s) if s.min > 0 && s.max > 0.5 && s.max / s.min > 3.0 => name
-    }
-    val unstableQueries = results.collect {
-      case (name, s) if s.min > 0 && s.median > 0.5 && s.median / s.min > 3.0 => name
-    }
-    val hostContended = windowDrifted || unstableQueries.nonEmpty
-    // a run that turned noisy mid-suite is as ineligible for baselines as
-    // one the pre-suite gate caught (VERDICT r12 #3)
-    contendedRecord = contendedRecord || hostContended
-    if (hostContended)
-      System.err.println(s"[bench] HOST_CONTENDED: $inSuiteElevated in-suite samples >1.5x median " +
-        f"(spread $inSuiteSpread%.2fx), unstable queries: ${unstableQueries.mkString(",")} — " +
-        "treat absolute times with suspicion")
-
-    // regression-retry (VERDICT r9 #7): compare against the PREVIOUS
-    // full-suite run's per-query medians (latest bench_history file at the
-    // same sf); on a contended host every >1.5x-regressed query joins the
-    // settle-retry list below, so the artifact carries a quiet-window
-    // reading for exactly the rows a cross-round trend (tools/trend.py)
-    // would flag — r9's triage of p57/p23/p24-style contention outliers
-    // needed this and had to be done by hand.
-    val prevMedians: Map[String, Double] =
-      prevArtifact.map(_.medians).getOrElse(Map.empty)
-    val regressedQueries = results.collect {
-      case (name, s) if s.median > 0 &&
-        prevMedians.get(name).exists(p => p > 0 && s.median > 1.5 * p) => name
-    }
-    if (regressedQueries.nonEmpty)
-      System.err.println(s"[bench] >1.5x vs previous run: ${regressedQueries.mkString(",")}" +
-        (if (hostContended) " (contended host — scheduling settle retries)" else ""))
 
     // settle-retry (VERDICT r6 #2): each unstable query gets ONE more timed
     // run after the suite (and after the post-suite calib sample), so the
-    // artifact carries a reading from the quietest available window — if
-    // the contention passed, `retry` shows what the query actually costs
-    // and a judge can discount the inflated in-suite median without
-    // re-running anything. Contended-host regressions (above) join the list.
-    val retryTargets =
-      (unstableQueries ++ unstableSpikes ++
-        (if (hostContended) regressedQueries else Seq.empty)).distinct
+    // artifact carries a reading from a later window — if a spike passed,
+    // `retry` shows what the query actually costs without re-running
+    // anything. Every run's min/max stays in query_detail either way.
+    val unstableSpikes = results.collect { case (name, s, _) if unstable(s) => name }
     val queryByName = queries.toMap
-    val retries: Map[String, Double] = retryTargets.flatMap { name =>
-      queryByName.get(name).flatMap { fn =>
-        try {
-          val t0 = System.nanoTime()
-          execute(fn(spark, sfDir))
-          val d = (System.nanoTime() - t0) / 1e9
-          System.err.println(f"[bench:retry] $name dur=$d%.3fs")
-          Some(name -> d)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] settle-retry $name failed: ${e.getMessage}")
-          None
-        }
+    val retries: Map[String, Double] = unstableSpikes.flatMap { name =>
+      try {
+        val d = timeOnce(queryByName(name))
+        System.err.println(f"[bench:retry] $name dur=$d%.3fs")
+        Some(name -> d)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] settle-retry $name failed: ${e.getMessage}")
+        None
       }
     }.toMap
 
-    // ---- drift attribution (VERDICT r13 #2): three quiet sf0.1 records
-    // drifted +11% across rounds with no operator-plan change to blame.
-    // Separate host-baseline shift from code accretion IN the artifact:
-    // per-query median ratio vs the newest AND the oldest quiet same-sf
-    // artifact, each alongside the calib-median ratio of the two windows
-    // and the calib-normalized query ratio — a 5% slower host reads as
-    // ~1.00 normalized, code accretion stays visible after normalization.
-    def driftJson(base: Option[PrevArtifact]): String = base match {
-      case Some(b) if b.medians.nonEmpty =>
-        val ratios = results.toSeq.collect {
-          case (n, s) if s.median > 0 && b.medians.get(n).exists(_ > 0) =>
-            s.median / b.medians(n)
-        }.sorted
-        if (ratios.isEmpty) "null" else {
-          val mr = ratios(ratios.size / 2)
-          val cr = if (b.calibMedian > 0 && calibS > 0) calibS / b.calibMedian else -1.0
-          val norm = if (cr > 0) mr / cr else -1.0
-          s"""{"file":${util.Json.quote(b.file)},"n_shared":${ratios.size},""" +
-            s""""median_query_ratio":${f3(mr)},"calib_median_ratio":${f3(cr)},""" +
-            s""""median_query_ratio_normalized":${f3(norm)}}"""
-        }
-      case _ => "null"
-    }
-    val driftBlock = try {
-      // prevArtifact is the newest QUIET artifact whenever any quiet one
-      // exists (the contended fallback only fires when none do — and then
-      // oldestQuietArtifact is None too, so gate on that)
-      val newestQuiet = if (oldestQuietArtifact.isEmpty) None else prevArtifact
-      s"""{"vs_prev_quiet":${driftJson(newestQuiet)},"vs_oldest_quiet":${driftJson(oldestQuietArtifact)}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] drift block failed: ${e.getMessage}"); "null"
-    }
     // lower-envelope total (VERDICT r13 #1 fallback): the sum of per-query
     // MINIMA — on a host that never goes quiet, the min over runs (plus
     // query_detail.retry) is the documented best-available reading, since
     // contention only ever inflates
-    val totalMinEnvelope = results.collect { case (_, s) if s.min >= 0 => s.min }.sum
+    val totalMinEnvelope = results.collect { case (_, s, _) if s.min >= 0 => s.min }.sum
 
     // stdout gets millisecond precision: full doubles (~13 chars each) were
     // half the reason the one-line JSON outgrew the driver's tail capture
     // (VERDICT r15 #1) — the full-precision values stay in the persisted
     // artifact's query_detail
-    val qs = results.map { case (k, v) => s"\"$k\":${f3(v.median)}" }.mkString("{", ",", "}")
-    val qDetail = results.map { case (k, s) =>
+    val qs = results.map { case (k, v, _) => s"\"$k\":${f3(v.median)}" }.mkString("{", ",", "}")
+    val qDetail = results.map { case (k, s, tStart) =>
       val retry = retries.get(k).map(d => s",\"retry\":${f3(d)}").getOrElse("")
-      s"\"$k\":{\"med\":${f3(s.median)},\"min\":${f3(s.min)},\"max\":${f3(s.max)},\"runs\":${s.runs},\"t_s\":${f3(s.tStartS)}$retry}"
+      s"\"$k\":{\"med\":${f3(s.median)},\"min\":${f3(s.min)},\"max\":${f3(s.max)},\"runs\":${s.runs},\"t_s\":${f3(tStart)}$retry}"
     }.mkString("{", ",", "}")
     val calibJson = calibSamples
       .map { case (tag, t, d) => s"{\"tag\":${util.Json.quote(tag)},\"t_s\":${f3(t)},\"dur_s\":${f3(d)}}" }
       .mkString("[", ",", "]")
     val calibStats =
       if (calibDurs.isEmpty) "null"
-      else s"{\"min\":${f3(calibDurs.min)},\"median\":${f3(calibS)},\"max\":${f3(calibDurs.max)},\"spread\":${f3(calibSpread)},\"in_suite_spread\":${f3(inSuiteSpread)},\"in_suite_median\":${f3(inSuiteMedian)},\"in_suite_elevated\":$inSuiteElevated}"
-    val total = results.collect { case (_, s) if s.median >= 0 => s.median }.sum
+      else s"{\"min\":${f3(calibDurs.min)},\"median\":${f3(calibS)},\"max\":${f3(calibDurs.max)},\"spread\":${f3(calibSpread)}}"
+    val total = results.collect { case (_, s, _) if s.median >= 0 => s.median }.sum
     val errJson = errors
       .map { case (k, v) => s"${util.Json.quote(k)}:${util.Json.quote(v.take(200))}" }
       .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"value_min_envelope":${f3(totalMinEnvelope)},"drift":$driftBlock,"unit":"sec","queries":$qs,"query_detail":$qDetail,"errors":$errJson,"compile_us_per_query":${compileUs.round},"compile_src":"$compileSrc","parse_us_per_query":${parseUs.round},"lower_us_per_query":${lowerUs.round},"sqlgen_us_per_query":${sqlgenUs.round},"calib_s":$calibS,"calib_samples":$calibJson,"calib_stats":$calibStats,"host_contended":$hostContended,"contended_record":$contendedRecord,"unstable_queries":${unstableQueries.map(util.Json.quote).mkString("[", ",", "]")},"unstable_spikes":${unstableSpikes.map(util.Json.quote).mkString("[", ",", "]")},"regressed_queries":${regressedQueries.map(util.Json.quote).mkString("[", ",", "]")},"p79_fidelity":$p79FidelityJson,"p79_graded":$p79GradedJson,"recall_probe":$recallProbeJson,"epoch_ms":$benchEpochMs,"runs_per_query":$TimedRuns,"fast_runs":$FastTimedRuns,"fast_threshold_s":$FastQueryThresholdSec,"runs_policy":"median over runs_per_query timed runs; promoted to fast_runs when any timed run < fast_threshold_s; unstable queries re-timed once post-suite (query_detail.retry)","aggregation":"median","sf":"$sfDir"}"""
-    // stdout carries a COMPACT summary line (~3.4 KB: suite value +
-    // per-query medians + window flags) — the driver's capture window is
-    // finite and the full line had grown to ~19 KB (query_detail +
-    // p79_fidelity/p79_graded/scale_probe inline), overflowing it
-    // (VERDICT r15 #1: BENCH_r14/r15 both parsed:null, tail starts
-    // mid-line). Every diagnostic block still lands in the self-persisted
-    // artifacts below (target/bench.json + bench_history/), same format as
-    // all previous rounds, so trend tooling and the in-bench baseline
-    // regexes are unaffected. Same metric, same value, same queries —
-    // only the stdout VERBOSITY changed, not the measurement.
-    val compactLine = s"""{"metric":"total","value":$total,"value_min_envelope":${f3(totalMinEnvelope)},"unit":"sec","queries":$qs,"errors":$errJson,"calib_s":$calibS,"host_contended":$hostContended,"contended_record":$contendedRecord,"epoch_ms":$benchEpochMs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"value_min_envelope":${f3(totalMinEnvelope)},"unit":"sec","queries":$qs,"query_detail":$qDetail,"errors":$errJson,"compile_us_per_query":${compileUs.round},"compile_src":"$compileSrc","parse_us_per_query":${parseUs.round},"lower_us_per_query":${lowerUs.round},"sqlgen_us_per_query":${sqlgenUs.round},"calib_s":$calibS,"calib_samples":$calibJson,"calib_stats":$calibStats,"unstable_spikes":${unstableSpikes.map(util.Json.quote).mkString("[", ",", "]")},"p79_fidelity":$p79FidelityJson,"p79_graded":$p79GradedJson,"recall_probe":$recallProbeJson,"epoch_ms":$benchEpochMs,"runs_per_query":$TimedRuns,"fast_runs":$FastTimedRuns,"fast_threshold_s":$FastQueryThresholdSec,"runs_policy":"median over runs_per_query timed runs; promoted to fast_runs when any timed run < fast_threshold_s; unstable queries re-timed once post-suite (query_detail.retry)","aggregation":"median","sf":"$sfDir","cpus":${util.Json.quote(envCpus)}}"""
+    // stdout carries a COMPACT summary line (suite value + per-query
+    // medians) — a log tail that captures stdout is finite and the full line
+    // had grown to ~19 KB (VERDICT r15 #1: BENCH_r14/r15 both parsed:null,
+    // tail starts mid-line). Every diagnostic block still lands in the
+    // self-persisted artifacts below (target/bench.json + bench_history/).
+    val compactLine = s"""{"metric":"total","value":$total,"value_min_envelope":${f3(totalMinEnvelope)},"unit":"sec","queries":$qs,"errors":$errJson,"calib_s":$calibS,"epoch_ms":$benchEpochMs,"sf":"$sfDir"}"""
     println(compactLine)
     // the full per-query record also lands on disk: the r3 driver artifact
     // lost its tail to log truncation, and a file survives that
@@ -1137,16 +898,13 @@ object Bench {
       System.err.println(s"[bench] could not write target/bench.json: ${e.getMessage}")
     }
     // ...and a DURABLE copy outside target/ (VERDICT r8 #1): target/bench.json
-    // is overwritten by the next run, which limited the r8 cross-round trend
-    // analysis to a clipped tail string. bench_history/ is committed, one
-    // file per run keyed by epoch, so per-query med/min/max/retry for every
-    // round survives. Hotspot-mode runs (explicit query args) skip it — only
-    // full-suite runs are round artifacts worth keeping — unless they ran a
-    // fidelity or recall block: the measured block IS the artifact. Those
-    // land under a `_probe` suffix the regression-baseline regex
-    // (`bench_\d+\.json`) deliberately does NOT match — a few-query
-    // artifact must never become the previous-medians baseline for a
-    // full-suite run.
+    // is overwritten by the next run. bench_history/ is committed, one file
+    // per run keyed by epoch, so per-query med/min/max/retry for every round
+    // survives for tools/trend.py. Hotspot-mode runs (explicit query args)
+    // skip it — only full-suite runs are round artifacts worth keeping —
+    // unless they ran a fidelity or recall block: the measured block IS the
+    // artifact. Those land under a `_probe` suffix that tools/trend.py skips,
+    // so a few-query artifact never becomes a full-suite run's baseline.
     val fidelityRan = p79FidelityJson != "null" || p79GradedJson != "null" ||
       recallProbeJson != "null"
     if (args.isEmpty || fidelityRan) try {

@@ -6,10 +6,14 @@ previous run at the same sf, the per-query median ratio — flagging
 (pipeline suite) median ratios that the per-round verdict's
 Performance section wants.
 
+Two runs are compared only when they ran on the same scale dir (`sf`)
+AND the same local[N] width (`cpus`, recorded by Bench since the 4-core
+host); the older artifacts carry no `cpus` and pair only with each other.
+
 Usage:
-  python3 tools/trend.py                 # latest vs previous, same sf
+  python3 tools/trend.py                 # latest vs previous, same sf + cpus
   python3 tools/trend.py A.json B.json   # explicit pair (A = older)
-  python3 tools/trend.py --all           # every consecutive same-sf pair
+  python3 tools/trend.py --all           # every consecutive same-host pair
   python3 tools/trend.py --sf1           # latest vs previous x10 (sf1) run
                                          # (VERDICT r10 #5: the sf1 point is
                                          # the most load-bearing scale
@@ -31,6 +35,8 @@ def quiet(d):
     # host_contended (in-suite calib spread) — must never be the
     # previous-medians baseline: its inflated medians make the next quiet
     # run look like an across-the-board improvement and hide real drift.
+    # Bench no longer writes these flags (perfbench judges window noise);
+    # the historical artifacts still carry them.
     return not (d.get("contended_record", False) or d.get("host_contended", False))
 
 
@@ -55,10 +61,13 @@ def noise_marks(d):
     return marks
 
 
+def same_host(a, b):
+    return a.get("sf") == b.get("sf") and a.get("cpus") == b.get("cpus")
+
+
 def history():
     # full-suite artifacts only: _probe files hold forced hotspot/fidelity
-    # runs (2-7 queries) and would make a useless trend baseline — the same
-    # exclusion Bench's own regression-baseline regex applies
+    # runs (2-7 queries) and would make a useless trend baseline
     files = sorted(f for f in glob.glob("bench_history/bench_*.json")
                    if not f.endswith("_probe.json"))
     return [(f, load(f)) for f in files]
@@ -76,8 +85,12 @@ def compare(prev_name, prev, cur_name, cur):
     retries = {k: v.get("retry") for k, v in cur.get("query_detail", {}).items()
                if isinstance(v, dict) and "retry" in v}
     print(f"\n== {os.path.basename(prev_name)} -> {os.path.basename(cur_name)} "
-          f"(sf={cur.get('sf')}, {len(shared)} shared queries, "
-          f"host_contended={contended})")
+          f"(sf={cur.get('sf')}, cpus={cur.get('cpus')}, {len(shared)} shared "
+          f"queries, host_contended={contended})")
+    if not same_host(prev, cur):
+        print(f"   WARNING: different hosts (sf {prev.get('sf')} vs {cur.get('sf')}, "
+              f"cpus {prev.get('cpus')} vs {cur.get('cpus')}) — ratios compare "
+              f"machines, not code")
     pm, cm = noise_marks(prev), noise_marks(cur)
     if pm:
         print(f"   NOTE: baseline {os.path.basename(prev_name)} is quiet but "
@@ -112,6 +125,32 @@ def compare(prev_name, prev, cur_name, cur):
           f"(shared-only cur={shared_c:.1f}s)")
 
 
+def pick_pairs(runs, mode):
+    """(prev, cur) pairs of (file, artifact) for `mode` ("latest", "all" or
+    "sf1"); every pair is same_host. A contended run is never the baseline
+    while a quiet one exists."""
+    if mode == "all":
+        return [(a, b) for a, b in zip(runs, runs[1:]) if same_host(a[1], b[1])]
+    if mode == "sf1":
+        runs = [r for r in runs
+                if os.path.basename(str(r[1].get("sf", ""))) == "sf1"]
+        if not runs:
+            print("no sf1 run in bench_history")
+            return []
+    cur = runs[-1]
+    prevs = [r for r in runs[:-1] if same_host(r[1], cur[1])]
+    quiet_prevs = [r for r in prevs if quiet(r[1])]
+    if quiet_prevs:
+        prevs = quiet_prevs
+    elif prevs:
+        print("WARNING: no quiet baseline on this host — comparing against "
+              "a contended run; ratios are deflated")
+    if not prevs:
+        print(f"no previous run at sf={cur[1].get('sf')} cpus={cur[1].get('cpus')}")
+        return []
+    return [(prevs[-1], cur)]
+
+
 def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     if len(args) == 2:
@@ -121,37 +160,9 @@ def main():
     if len(runs) < 2:
         print("need at least two bench_history files")
         return
-    pairs = []
-    if "--sf1" in sys.argv:
-        sf1 = [r for r in runs
-               if os.path.basename(str(r[1].get("sf", ""))) == "sf1"]
-        if len(sf1) < 2:
-            print(f"need at least two sf1 runs in bench_history (have {len(sf1)})")
-            return
-        sf1_prevs = [r for r in sf1[:-1] if quiet(r[1])]
-        if not sf1_prevs:
-            sf1_prevs = sf1[:-1]
-            print("WARNING: no quiet sf1 baseline — comparing against a "
-                  "contended run; ratios are deflated")
-        pairs.append((sf1_prevs[-1], sf1[-1]))
-    elif "--all" in sys.argv:
-        for a, b in zip(runs, runs[1:]):
-            if a[1].get("sf") == b[1].get("sf"):
-                pairs.append((a, b))
-    else:
-        cur = runs[-1]
-        prevs = [r for r in runs[:-1] if r[1].get("sf") == cur[1].get("sf")]
-        quiet_prevs = [r for r in prevs if quiet(r[1])]
-        if quiet_prevs:
-            prevs = quiet_prevs
-        elif prevs:
-            print("WARNING: no quiet baseline at this sf — comparing against "
-                  "a contended run; ratios are deflated")
-        if not prevs:
-            print(f"no previous run at sf={cur[1].get('sf')}")
-            return
-        pairs.append((prevs[-1], cur))
-    for (pn, p), (cn, c) in pairs:
+    mode = ("sf1" if "--sf1" in sys.argv
+            else "all" if "--all" in sys.argv else "latest")
+    for (pn, p), (cn, c) in pick_pairs(runs, mode):
         compare(pn, p, cn, c)
 
 
