@@ -406,7 +406,7 @@ object MediaOps {
                            tag: String): Dataset[(Long, String)] = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.Graft.readParquet(spark, s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
       .observe(s"graft_null_media_$tag",
         count(when(col("text").isNull, 1)).as("null_payload_drops"),

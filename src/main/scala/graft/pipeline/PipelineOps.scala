@@ -136,7 +136,9 @@ object PipelineOps {
   private def planesDuckLit(nPlanes: Int): String =
     planes.take(nPlanes).map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
 
-  /** Read `path` parquet, with the scale-adaptive scan spread
+  /** Read `path` parquet through [[graft.Graft.readParquet]] (schema from
+    * the footer on the driver, so building an operator submits no schema
+    * inference job), with the scale-adaptive scan spread
     * ([[graft.Graft.scanSpread]]) when `spread` is set: identity whenever
     * the file layout already yields the size-derived target of scan tasks;
     * on the single-row-group test files it round-robins to a
@@ -152,7 +154,7 @@ object PipelineOps {
     * overhead — and stay unspread. */
   private def readSpread(spark: SparkSession, path: String,
                          spread: Boolean = false): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = graft.Graft.readParquet(spark, path)
     if (spread) graft.Graft.scanSpread(df, path) else df
   }
 
@@ -701,7 +703,7 @@ object PipelineOps {
   private def srpSetup(spark: SparkSession, dir: String, bandsArg: Int): Boolean = {
     // count from the RAW scan (zero-column parquet count — no spread
     // exchange in the way); the registered view gets the spread
-    val n = spark.read.parquet(s"$dir/embeddings.parquet").count()
+    val n = graft.Graft.readParquet(spark, s"$dir/embeddings.parquet").count()
     val emb = readSpread(spark, s"$dir/embeddings.parquet")
     val (srpBits, derivedBands) = chooseSrpGeometry(n)
     val bands = if (bandsArg > 0) bandsArg else derivedBands
@@ -1145,7 +1147,7 @@ object PipelineOps {
     * srpSetup precedent. */
   private[graft] def ivfCentroidMod(spark: SparkSession, dir: String): Int = {
     val m = spark.conf.getOption("spark.graft.ivfCentroidMod").map(_.toInt).getOrElse(
-      chooseIvfMod(spark.read.parquet(s"$dir/embeddings.parquet").count()))
+      chooseIvfMod(graft.Graft.readParquet(spark, s"$dir/embeddings.parquet").count()))
     require(m >= 1, s"spark.graft.ivfCentroidMod must be >= 1, got $m")
     m
   }

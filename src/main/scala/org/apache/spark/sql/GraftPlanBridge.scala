@@ -1,14 +1,23 @@
 package org.apache.spark.sql
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.spark.sql.catalyst.expressions.{Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.HadoopFSUtils
 
 /** Bridge into Spark's `private[sql]` classic API, used by graft's planner
   * to assemble ONE unresolved LogicalPlan per query and analyze it exactly
   * once (the compile-latency contract — Planner's class doc). Spark scopes
   * `classic.Dataset.ofRows` and the Column→Expression converter to the sql
-  * package; this object lives there to re-export the two entry points.
-  * No Spark internals are modified. */
+  * package; this object lives there to re-export the two entry points. It
+  * also reaches the session's Hadoop and SQL confs for the driver-side
+  * parquet footer read. No Spark internals are modified. */
 object GraftPlanBridge {
   /** Eagerly convert a Column to its Catalyst Expression through the
     * session's ColumnNode converter (ExpressionUtils.expression alone
@@ -63,4 +72,60 @@ object GraftPlanBridge {
     session.sharedState.cacheManager.lookupCachedData(classicDf)
       .map(cd => classic.Dataset.ofRows(session, cd.cachedRepresentation))
   }
+
+  /** Whether `path` exists on its own Hadoop FileSystem (`file:`, `hdfs:`,
+    * `s3a:` URIs and bare local paths alike), under the session's Hadoop
+    * conf. */
+  def pathExists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(hadoopConf(spark)).exists(p)
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver from
+    * ONE footer with no Spark job. Spark's own inference
+    * (`ParquetUtils.inferSchema` with `mergeSchema` off) submits a job that
+    * reads exactly one footer and converts it with
+    * `ParquetFileFormat.readSchemaFromFooter`; this is the same conversion
+    * with the same session-conf converter (nanosAsLong, INT96, NTZ), on the
+    * file Spark would pick: `_common_metadata`, then `_metadata`, then the
+    * first data file by sorted path, hidden `_`/`.` names skipped the way
+    * `InMemoryFileIndex` skips them.
+    *
+    * None — the caller reads with plain `spark.read.parquet`, so Spark's
+    * behaviour and errors apply unchanged — when the layout needs Spark's
+    * own inference: the path is missing (or a glob), the directory has a
+    * visible subdirectory (a partitioned layout, whose partition columns
+    * Spark infers), the directory has no data file, or the session merges
+    * schemas (`spark.sql.parquet.mergeSchema`, which touches every file). */
+  def parquetFooterSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) return None
+    val hconf = hadoopConf(spark)
+    val p = new Path(path)
+    val fs = p.getFileSystem(hconf)
+    val root =
+      try fs.getFileStatus(p)
+      catch { case _: FileNotFoundException => return None }
+    val file: Option[FileStatus] =
+      if (!root.isDirectory) Some(root)
+      else {
+        val visible = fs.listStatus(p)
+          .filterNot(f => HadoopFSUtils.shouldFilterOutPathName(f.getPath.getName))
+          .sortBy(_.getPath.toString)
+        if (visible.exists(_.isDirectory)) None
+        else {
+          val summaries = Seq("_common_metadata", "_metadata")
+          summaries.flatMap(n => visible.find(_.getPath.getName == n)).headOption
+            .orElse(visible.find(f => !summaries.contains(f.getPath.getName)))
+        }
+      }
+    file.map { f =>
+      val footer = ParquetFileReader.readFooter(hconf, f, SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+        new ParquetToSparkSchemaConverter(conf))
+    }
+  }
+
+  private def hadoopConf(spark: SparkSession) =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
 }
