@@ -197,17 +197,11 @@ object Graft {
     * fires: documents.parquet is 65 KB at sf0.01 and sf0.001, so its target
     * is 1 (identity) and only embeddings (193 KB, p77) spread there;
     * PlanAuditSpec asserts the spread itself on sized fixtures and at
-    * sf0.1. */
-  private[graft] def scanSpread(df: DataFrame, path: String): DataFrame = {
+    * sf0.1. File sizes come from the scan's own file index
+    * ([[GraftPlanBridge.scanFileSizes]]), so any Hadoop URI sizes. */
+  private[graft] def scanSpread(df: DataFrame): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    val f = new java.io.File(path)
-    val sizes: Array[Long] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty)
-          .filter(x => x.isFile && !x.getName.startsWith("_") &&
-            !x.getName.startsWith("."))
-          .map(_.length())
-      else Array(f.length())
+    val sizes = GraftPlanBridge.scanFileSizes(df)
     val target = math.min(cores.toLong, math.max(1L, sizes.sum / SpreadTaskBytes)).toInt
     if (target <= 1) return df
     val maxPB = df.sparkSession.sessionState.conf.filesMaxPartitionBytes

@@ -61,8 +61,7 @@ object GraftMd5Util {
 
 /** `graft_md5h32(string) -> BIGINT` — the md5-family row hash as ONE
   * native expression (codegen'd like [[GraftNfc]]). Exists purely as the
-  * fast evaluation of the oracle-portable hash; the xxhash64 family
-  * remains the production path (`spark.graft.hashFamily`). */
+  * fast evaluation of the oracle-portable hash. */
 case class GraftMd5H32(child: Expression) extends UnaryExpression {
   override def dataType: DataType = org.apache.spark.sql.types.LongType
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =

@@ -155,7 +155,7 @@ object PipelineOps {
   private def readSpread(spark: SparkSession, path: String,
                          spread: Boolean = false): DataFrame = {
     val df = graft.Graft.readParquet(spark, path)
-    if (spread) graft.Graft.scanSpread(df, path) else df
+    if (spread) graft.Graft.scanSpread(df) else df
   }
 
   // Spark-side fragments ----------------------------------------------------
@@ -163,33 +163,6 @@ object PipelineOps {
   /** words array from the raw text (shared tokenization). */
   private val wordsSpark = """split(trim(text), '\\s+')"""
   private val wordsDuck = """regexp_split_to_array(trim(text), '\s+')"""
-
-  /** Production hash-family switch (VERDICT r5 #5). The md5 fragments exist
-    * ONLY for DuckDB-oracle determinism (both engines agree bit-for-bit on
-    * md5 of UTF-8) and run through the native [[graft.functions.GraftMd5H32]]
-    * digest-prefix kernel (no hex-string materialization, no conv() parse —
-    * measured ~2x on the per-token lambda call sites: p55 2.6s -> 1.2s at
-    * sf0.1); at deployment `spark.graft.hashFamily = xxhash64` flips every
-    * operator's row-level hash to Spark's codegen'd xxhash64, which still
-    * beats md5's digest cost itself. MEASURED (r6 #6, p01+p18 median-of-3
-    * at sf0.1): 1.04x end-to-end pre-kernel — the per-row hash is real but
-    * a small share of those operators' wall time, which tokenization and
-    * the shuffle dominate. Re-measure with `runMain graft.Sampler 5
-    * spark.graft.hashFamily md5,xxhash64 p01_dedup_exact p18_text_clean`.
-    * The correctness gate pins md5 (default); HashFamilySpec
-    * proves the xxhash64 path yields identical p04/p08 results
-    * (collision-free hashes preserve set Jaccard) and identical plan
-    * shapes. */
-  private[graft] def hashFamily(spark: SparkSession): String = {
-    val f = spark.conf.getOption("spark.graft.hashFamily").getOrElse("md5")
-    require(f == "md5" || f == "xxhash64", s"spark.graft.hashFamily: md5|xxhash64, got $f")
-    // every md5-family SQL text renders through a caller holding this
-    // result, so this is the one choke point where the native kernel the
-    // texts reference is guaranteed registered before spark.sql sees them
-    if (f == "md5") graft.functions.GraftFunctions.registerMd5(spark)
-    f
-  }
-  private val Md5 = "md5"
 
   /** Gate-fixture planting switch (`spark.graft.plantFixtures`, VERDICT r8
     * #2). The oracle gate plants deterministic fixtures INSIDE some
@@ -221,24 +194,18 @@ object PipelineOps {
   }
 
   /** 64-bit hash of a string, < 2^32 (the folds' overflow-safety contract:
-    * acc*b + h stays < 2^37). md5: the native [[graft.functions.GraftMd5H32]]
+    * acc*b + h stays < 2^37): the native [[graft.functions.GraftMd5H32]]
     * kernel — value-identical to `conv(substr(md5(e),1,8),16,10)` (what the
     * DuckDB oracles compute) without the per-call hex-string detour, which
-    * the per-token lambda call sites pay dearly for; xxhash64: pmod to the
-    * same 32-bit range. */
-  // no default for hf: every caller must thread hashFamily(spark)'s result,
-  // which is the one choke point that registers the graft_md5h32 kernel —
-  // a defaulted md5 here could render SQL referencing an unregistered
-  // function on sessions without GraftExtensions (ADVICE r8)
-  private[graft] def hSpark(e: String, hf: String) =
-    if (hf == "xxhash64") s"pmod(xxhash64($e), 4294967296)"
-    else s"graft_md5h32($e)"
+    * the per-token lambda call sites pay dearly for. The kernels are not
+    * built-ins: a caller that renders one calls
+    * [[graft.functions.GraftFunctions.registerMd5]] on its session first. */
+  private[graft] def hSpark(e: String) = s"graft_md5h32($e)"
   private def hDuck(e: String) = s"CAST(('0x'||substr(md5($e),1,8)) AS BIGINT)"
 
   /** Full-width hash as a STRING (checksum OUTPUT columns, where the full
     * digest is the value the user keeps). */
-  private[graft] def hStrSpark(e: String, hf: String) =
-    if (hf == "xxhash64") s"CAST(xxhash64($e) AS STRING)" else s"md5($e)"
+  private[graft] def hStrSpark(e: String) = s"md5($e)"
 
   /** 60-bit hash as a BIGINT — for hash JOIN/SHUFFLE KEYS over corpus-sized
     * relations (p54 grams, p39 fingerprints, p47 lines): 8-byte integer
@@ -250,8 +217,7 @@ object PipelineOps {
     * line (under-keep — content loss). Both at ~n^2/2^61 expected —
     * negligible at the gate, an accepted-and-stated rate at corpus
     * scale. */
-  private[graft] def hKeySpark(e: String, hf: String) =
-    if (hf == "xxhash64") s"xxhash64($e)" else s"graft_md5h60($e)"
+  private[graft] def hKeySpark(e: String) = s"graft_md5h60($e)"
   private def hKeyDuck(e: String) = s"CAST(('0x'||substr(md5($e),1,15)) AS BIGINT)"
 
   /** Left-fold double dot product of two float arrays (bit-identical on both
@@ -273,9 +239,9 @@ object PipelineOps {
   // ---- p01: exact dedup ---------------------------------------------------
   // One hash shuffle; partial count map-side. Representative = min doc_id.
 
-  private def p01Spark(hf: String) = s"""
+  private def p01Spark = s"""
     SELECT min(doc_id) AS doc_id, CAST(count(*) AS BIGINT) AS n_copies
-    FROM documents GROUP BY ${hStrSpark("lower(trim(text))", hf)}
+    FROM documents GROUP BY ${hStrSpark("lower(trim(text))")}
     ORDER BY doc_id"""
   private val p01Duck = """
     SELECT min(doc_id) AS doc_id, CAST(count(*) AS BIGINT) AS n_copies
@@ -382,8 +348,7 @@ object PipelineOps {
   /** The sig-producing SQL, exposed so PlanAuditSpec can assert the native
     * minhash kernel is in the PRODUCER plan (the consumer plans start from
     * the materialization barrier and never show it). */
-  private[graft] def lshSigsSqlForAudit: String = lshSigsSql(Md5)
-  private def lshSigsSql(hf: String) = s"""
+  private[graft] def lshSigsSql = s"""
     WITH w AS (
       SELECT doc_id, $wordsSpark AS words FROM documents),
     sh AS (
@@ -393,7 +358,7 @@ object PipelineOps {
       FROM w WHERE size(words) >= 3),
     hashed AS (
       SELECT doc_id, shingles,
-        transform(shingles, s -> pmod(${hSpark("s", hf)}, $MinhashP)) AS hs
+        transform(shingles, s -> pmod(${hSpark("s")}, $MinhashP)) AS hs
       FROM sh)
     SELECT doc_id, shingles,
       -- all k minhash values in one codegen pass over the shingle hashes
@@ -450,7 +415,8 @@ object PipelineOps {
     readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
     graft.functions.GraftFunctions.registerMinhash(spark,
       hashA.toArray, hashB.toArray, MinhashP)
-    materialized(spark, LshSigsView, lshSigsSql(hashFamily(spark)))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    materialized(spark, LshSigsView, lshSigsSql)
     spark.sql(s"""
       WITH $lshPairCtes
       SELECT ida, idb, CAST(floor((jac) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS jaccard
@@ -549,9 +515,9 @@ object PipelineOps {
   // 32-bit simhash from word hashes; map-side HOFs only; n_same shows the
   // dedup-bucket usage. Exact integer arithmetic end to end.
 
-  private def p05Spark(hf: String) = s"""
+  private def p05Spark = s"""
     WITH t AS (
-      SELECT doc_id, transform($wordsSpark, w -> ${hSpark("w", hf)}) AS hw
+      SELECT doc_id, transform($wordsSpark, w -> ${hSpark("w")}) AS hw
       FROM documents),
     s AS (
       -- single pass over the word hashes with a 32-counter array accumulator:
@@ -589,9 +555,9 @@ object PipelineOps {
   // Order-sensitive (complements the set-based simhash): left fold
   // acc = (acc*31 + h(word)) mod 1e9+7; acc*31 + h < 2^63.
 
-  private def p06Spark(hf: String) = s"""
+  private def p06Spark = s"""
     WITH t AS (
-      SELECT doc_id, transform($wordsSpark, w -> ${hSpark("w", hf)}) AS hw
+      SELECT doc_id, transform($wordsSpark, w -> ${hSpark("w")}) AS hw
       FROM documents)
     SELECT doc_id,
       aggregate(hw, CAST(7 AS BIGINT), (acc, h) -> pmod(acc * 31 + h, 1000000007)) AS fingerprint
@@ -948,12 +914,12 @@ object PipelineOps {
   // Opaque binary payloads (here: utf-8 of text, standing in for image/audio
   // bytes) + typed metadata extraction, all SQL-expressible and map-side.
 
-  private def p09Spark(hf: String) = s"""
+  private def p09Spark = s"""
     WITH m AS (SELECT doc_id, text, encode(text, 'UTF-8') AS bin FROM documents)
     SELECT doc_id,
       CAST(length(bin) AS BIGINT) AS n_bytes,
       lower(substr(hex(bin), 1, 16)) AS header_hex,
-      ${hStrSpark("text", hf)} AS checksum,
+      ${hStrSpark("text")} AS checksum,
       CAST(length(bin) % 640 AS BIGINT) AS fake_width,
       CAST((length(bin) div 1000) + 1 AS BIGINT) AS fake_frames
     FROM m ORDER BY doc_id"""
@@ -1218,7 +1184,7 @@ object PipelineOps {
     FROM ranked WHERE rn <= $TopK ORDER BY q_id, rank"""
   }
 
-  private def ivfSpark(lloyd: Boolean = true, hf: String = Md5,
+  private def ivfSpark(lloyd: Boolean = true,
                        mod: Int = OracleIvfMod,
                        nprobe: Int = IvfNProbe): String = {
     def cos(ae: String, an: String, be: String, bn: String) = ivfCos(ae, an, be, bn)
@@ -1252,7 +1218,7 @@ object PipelineOps {
       SELECT vec_id, embedding, ${norm2Spark("embedding")} AS n2 FROM embeddings),
     cents0 AS (
       SELECT vec_id AS c_id, embedding AS ce, n2 AS cn2 FROM e
-      WHERE pmod(${hSpark("CAST(vec_id AS STRING)", hf)}, $mod) = 0),$centsFinal${ivfTailSql(nprobe)}"""
+      WHERE pmod(${hSpark("CAST(vec_id AS STRING)")}, $mod) = 0),$centsFinal${ivfTailSql(nprobe)}"""
   }
 
   // ---- p19 multi-round Lloyd (VERDICT r6 #5) -------------------------------
@@ -1315,7 +1281,6 @@ object PipelineOps {
     * callers log it or assert on it; the spec checks it reaches 0 and that
     * recall holds or improves on the seed codebook). */
   private[graft] def ivfIterative(spark: SparkSession, rounds: Int,
-                                  hf: String = Md5,
                                   mod: Int = OracleIvfMod,
                                   nprobe: Int = IvfNProbe): (DataFrame, Seq[Double]) = {
     require(rounds >= 1, s"ivfLloydRounds must be >= 1, got $rounds")
@@ -1323,7 +1288,7 @@ object PipelineOps {
       s"SELECT vec_id, embedding, ${norm2Spark("embedding")} AS n2 FROM embeddings")
     var cur = Barrier.materialize(spark.sql(
       s"""SELECT vec_id AS c_id, embedding AS ce, n2 AS cn2 FROM $IvfEView
-          WHERE pmod(${hSpark("CAST(vec_id AS STRING)", hf)}, $mod) = 0"""))
+          WHERE pmod(${hSpark("CAST(vec_id AS STRING)")}, $mod) = 0"""))
     cur.createOrReplaceTempView(IvfCentsView)
     val drifts = scala.collection.mutable.ArrayBuffer.empty[Double]
     var r = 0
@@ -1352,12 +1317,12 @@ object PipelineOps {
     // loop-flavored). Re-A/B'd this round in-session, 8 runs/arm: spread
     // 2.079/1.920 vs off 1.773/1.599 med/min — off wins by ~15%.
     readSpread(spark, s"$dir/embeddings.parquet").createOrReplaceTempView("embeddings")
-    val hf = hashFamily(spark)
+    graft.functions.GraftFunctions.registerMd5(spark)
     val mod = ivfCentroidMod(spark, dir)
     val r = ivfLloydRounds(spark)
     val np = ivfNProbe(spark)
-    if (r <= 1) spark.sql(p19Spark(hf, mod, np))
-    else ivfIterative(spark, r, hf, mod, np)._1
+    if (r <= 1) spark.sql(p19Spark(mod, np))
+    else ivfIterative(spark, r, mod, np)._1
   }
 
   private def ivfDuck(lloyd: Boolean = true, mod: Int = OracleIvfMod): String = {
@@ -1428,14 +1393,15 @@ object PipelineOps {
     FROM ranked WHERE rn <= $TopK ORDER BY q_id, rank"""
   }
 
-  private def p19Spark(hf: String, mod: Int, nprobe: Int) =
-    ivfSpark(hf = hf, mod = mod, nprobe = nprobe)
+  private def p19Spark(mod: Int, nprobe: Int) =
+    ivfSpark(mod = mod, nprobe = nprobe)
   private val p19Duck = ivfDuck()
 
   /** The seed-codebook variant (no Lloyd round), for the refinement test:
     * recall with the refined codebook must hold or improve on this. */
   private[graft] def ivfSeedOnly(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.registerDot(spark)
+    graft.functions.GraftFunctions.registerMd5(spark)
     readSpread(spark, s"$dir/embeddings.parquet").createOrReplaceTempView("embeddings")
     spark.sql(ivfSpark(lloyd = false, mod = ivfCentroidMod(spark, dir),
       nprobe = ivfNProbe(spark)))
@@ -1450,10 +1416,10 @@ object PipelineOps {
 
   private val SampleRatePerMille = 100 // 10%
 
-  private def p15Spark(hf: String) = s"""
+  private def p15Spark = s"""
     WITH h AS (
       SELECT lang, doc_id,
-        pmod(${hSpark("CAST(doc_id AS STRING)", hf)}, 1000) AS bucket
+        pmod(${hSpark("CAST(doc_id AS STRING)")}, 1000) AS bucket
       FROM documents)
     SELECT lang,
       CAST(count(*) AS BIGINT) AS n_docs,
@@ -1618,7 +1584,8 @@ object PipelineOps {
     readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
     graft.functions.GraftFunctions.registerMinhash(spark,
       hashA.toArray, hashB.toArray, MinhashP)
-    materialized(spark, LshSigsView, lshSigsSql(hashFamily(spark)))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    materialized(spark, LshSigsView, lshSigsSql)
     val pairs = Barrier.materialize(spark.sql(
       s"WITH $lshPairCtes SELECT ida, idb FROM verified WHERE jac >= $LshJaccardCut"))
     val edges = pairs.select(col("ida").as("a"), col("idb").as("b"))
@@ -1720,11 +1687,11 @@ object PipelineOps {
   // checksum of the cleaned text — the idempotent "canonical form" step that
   // feeds exact dedup. Map-side HOFs only.
 
-  private def p18Spark(hf: String) = s"""
+  private def p18Spark = s"""
     WITH t AS (SELECT doc_id, $wordsSpark AS words FROM documents)
     SELECT doc_id,
       CAST(size(filter(words, w -> w IN ('a','the'))) AS BIGINT) AS n_removed,
-      ${hSpark("array_join(filter(words, w -> NOT w IN ('a','the')), ' ')", hf)} AS clean_checksum
+      ${hSpark("array_join(filter(words, w -> NOT w IN ('a','the')), ' ')")} AS clean_checksum
     FROM t ORDER BY doc_id"""
   private val p18Duck = s"""
     WITH t AS (SELECT doc_id, $wordsDuck AS words FROM documents)
@@ -1753,10 +1720,7 @@ object PipelineOps {
   // count (a single 31-bit polynomial would expect ~n_train·n_eval/2^31
   // false flags — material even at test SF). Collisions only ever
   // over-flag — the safe direction for a contamination screen — and the
-  // whole scheme is bit-deterministic on both engines. A production
-  // deployment (no DuckDB gate) swaps the word hash for xxhash64, which is
-  // codegen-native, cheaper still, and widens the per-word hash to 64 bits
-  // with the identical plan shape.
+  // whole scheme is bit-deterministic on both engines.
 
   private val DecontamN = 8 // gram width
   private val EvalDocs = 20
@@ -1774,8 +1738,8 @@ object PipelineOps {
     * front half of the p21 gram scheme, shared with
     * [[graft.streaming.DecontamStream]] so gram semantics cannot drift
     * between the batch operator and its streaming counterpart. */
-  private[graft] def decontamWordHashExpr(textCol: String, hf: String): String =
-    s"transform(split(trim($textCol), '\\\\s+'), w -> ${hSpark("w", hf)})"
+  private[graft] def decontamWordHashExpr(textCol: String): String =
+    s"transform(split(trim($textCol), '\\\\s+'), w -> ${hSpark("w")})"
 
   /** DISTINCT paired-polynomial gram-key array over a word-hash ARRAY
     * column (see the scheme note above); the shared back half. */
@@ -1798,8 +1762,8 @@ object PipelineOps {
   // the barrier helper's doc); with the barrier, md5 count is O(words) and
   // gram combining is pure arithmetic (~2 s)
   private val P21HwView = "graft_p21_hw"
-  private def p21HwSql(hf: String) =
-    s"SELECT doc_id, ${decontamWordHashExpr("text", hf)} AS hw FROM documents"
+  private def p21HwSql =
+    s"SELECT doc_id, ${decontamWordHashExpr("text")} AS hw FROM documents"
   // The training side never materializes per-gram rows (the r3/r4 form was
   // explode → DISTINCT → broadcast join → groupBy — O(total grams) row
   // churn just to rediscover per-doc counts). Instead the tiny fixed-size
@@ -1888,7 +1852,8 @@ object PipelineOps {
     * Standalone-safe: callers that only want the derived B get a correct
     * count for the CURRENT `documents` view, never a stale barrier. */
   private[graft] def deriveDecontamBuckets(spark: SparkSession): Int = {
-    materialized(spark, P21HwView, p21HwSql(hashFamily(spark)))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    materialized(spark, P21HwView, p21HwSql)
     chooseDecontamBuckets(spark.sql(p21EvalGramCountSql).head.getLong(0))
   }
 
@@ -1943,7 +1908,8 @@ object PipelineOps {
     // reuses that barrier); an explicit override materializes here instead
     val b = decontamBuckets(spark) match {
       case n if n >= 1 =>
-        materialized(spark, P21HwView, p21HwSql(hashFamily(spark)))
+        graft.functions.GraftFunctions.registerMd5(spark)
+        materialized(spark, P21HwView, p21HwSql)
         n
       case _ => deriveDecontamBuckets(spark)
     }
@@ -1993,7 +1959,7 @@ object PipelineOps {
   private[graft] val QualityPredSql =
     "(n_tokens BETWEEN 30 AND 300 AND stop_ratio >= 0.02 AND distinct_ratio >= 0.3)"
 
-  private def p20SparkTail(hf: String) = s"""
+  private def p20SparkTail = s"""
     WITH w AS (
       SELECT d.doc_id, d.lang, $wordsSpark AS words,
         (r.doc_id IS NOT NULL) AS is_rep
@@ -2001,8 +1967,8 @@ object PipelineOps {
     m AS (
       SELECT doc_id, lang, is_rep,
         ${QualityMetricsSql.mkString(",\n        ")},
-        pmod(${hSpark("CAST(doc_id AS STRING)", hf)}, 1000) AS bucket,
-        ${hSpark("array_join(filter(words, w -> NOT w IN ('a','the')), ' ')", hf)} AS ck
+        pmod(${hSpark("CAST(doc_id AS STRING)")}, 1000) AS bucket,
+        ${hSpark("array_join(filter(words, w -> NOT w IN ('a','the')), ' ')")} AS ck
       FROM w WHERE size(words) > 0),
     f AS (
       SELECT *, $QualityPredSql AS q
@@ -2020,7 +1986,8 @@ object PipelineOps {
     p16Labels(spark, dir)
       .filter(col("doc_id") === col("lbl")).select("doc_id")
       .createOrReplaceTempView("dedup_reps")
-    spark.sql(p20SparkTail(hashFamily(spark)))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    spark.sql(p20SparkTail)
   }
 
   private val p20Duck = s"""
@@ -2198,7 +2165,7 @@ object PipelineOps {
 
   private val MixtureBudgetPpm = 400000L // 40% of the corpus
 
-  private def p24Spark(hf: String) = s"""
+  private def p24Spark = s"""
     WITH c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_g FROM documents GROUP BY lang),
     tot AS (SELECT CAST(sum(n_g) AS BIGINT) AS n_total, CAST(count(*) AS BIGINT) AS n_grp FROM c),
     rates AS (
@@ -2208,7 +2175,7 @@ object PipelineOps {
       FROM c CROSS JOIN tot t),
     k AS (
       SELECT d.lang, d.doc_id, r.n_g, r.keep_ppm,
-        (pmod(${hSpark("CAST(d.doc_id AS STRING)", hf)}, 1000000) < r.keep_ppm) AS kept
+        (pmod(${hSpark("CAST(d.doc_id AS STRING)")}, 1000000) < r.keep_ppm) AS kept
       FROM documents d JOIN rates r ON r.lang = d.lang)
     SELECT lang,
       CAST(max(n_g) AS BIGINT) AS n_docs,
@@ -2466,10 +2433,10 @@ object PipelineOps {
     s
   }
 
-  private def p27Spark(hf: String, seed: Long, shards: Int = ShuffleShards) = s"""
+  private def p27Spark(seed: Long, shards: Int = ShuffleShards) = s"""
     WITH h AS (
       SELECT doc_id,
-        pmod(${hSpark(s"concat(CAST(doc_id AS STRING), ':', '$seed')", hf)}, 1000000007) AS hv
+        pmod(${hSpark(s"concat(CAST(doc_id AS STRING), ':', '$seed')")}, 1000000007) AS hv
       FROM documents),
     s AS (SELECT doc_id, hv, pmod(hv, $shards) AS shard FROM h),
     p AS (
@@ -2484,7 +2451,8 @@ object PipelineOps {
 
   private def p27Run(spark: SparkSession, dir: String): DataFrame = {
     readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    spark.sql(p27Spark(hashFamily(spark), shuffleSeed(spark), shuffleShards(spark)))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    spark.sql(p27Spark(shuffleSeed(spark), shuffleShards(spark)))
   }
 
   private val p27Duck = s"""
@@ -2520,7 +2488,8 @@ object PipelineOps {
     readSpread(spark, s"$dir/documents.parquet", spread = true).createOrReplaceTempView("documents")
     graft.functions.GraftFunctions.registerMinhash(spark,
       hashA.toArray, hashB.toArray, MinhashP)
-    materialized(spark, LshSigsView, lshSigsSql(hashFamily(spark)))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    materialized(spark, LshSigsView, lshSigsSql)
     spark.sql(s"""
       WITH $lshPairCtes,
       dup AS (SELECT ida, idb FROM verified WHERE jac >= $LshJaccardCut),
@@ -2777,7 +2746,7 @@ object PipelineOps {
   // ([[graft.functions.GraftKmv]]) — O(k) state per group, partial
   // sketches merge in the exchange like any built-in agg. Unlike
   // approx_count_distinct's HLL (engine-specific buckets, no oracle),
-  // KMV over the shared md5-prefix hash family is DETERMINISTIC: the k
+  // KMV over the shared md5-prefix hash is DETERMINISTIC: the k
   // smallest distinct hashes are a set both engines compute exactly, so
   // an approximate algorithm gets an exact cross-engine gate. The exact
   // distinct count rides along (count(DISTINCT h) — engine-exact) so the
@@ -2787,9 +2756,9 @@ object PipelineOps {
 
   private[graft] val KmvK = 64
 
-  private def p35Spark(hf: String) = s"""
+  private def p35Spark = s"""
     WITH h AS (
-      SELECT lang, ${hSpark("text", hf)} AS h FROM documents)
+      SELECT lang, ${hSpark("text")} AS h FROM documents)
     SELECT lang,
       CAST(count(DISTINCT h) AS BIGINT) AS n_exact,
       graft_kmv(h) AS kmv_est
@@ -2798,7 +2767,8 @@ object PipelineOps {
   private def p35Run(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.registerKmv(spark, KmvK)
     readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    spark.sql(p35Spark(hashFamily(spark)))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    spark.sql(p35Spark)
   }
 
   private val p35Duck = s"""
@@ -2824,9 +2794,8 @@ object PipelineOps {
   // exists for the oracle gate only; production callers drop it and the
   // plan is a single narrow stage over the parquet scan — at 100 TB the
   // chunker is embarrassingly parallel and scales with input splits).
-  // Each chunk carries its token count and a content checksum in the
-  // session hash family, so downstream exact dedup (p01) composes directly
-  // on chunks.
+  // Each chunk carries its token count and a content checksum, so
+  // downstream exact dedup (p01) composes directly on chunks.
 
   private val ChunkTokens = 32
   private val ChunkStride = 16
@@ -2848,7 +2817,7 @@ object PipelineOps {
     s
   }
 
-  private[graft] def p36Spark(hf: String, w: Int, st: Int) = s"""
+  private[graft] def p36Spark(w: Int, st: Int) = s"""
     WITH toks AS (
       SELECT doc_id, $wordsSpark AS t FROM documents),
     st AS (
@@ -2856,14 +2825,15 @@ object PipelineOps {
       FROM toks LATERAL VIEW explode(sequence(0, greatest(size(t) - 1, 0), $st)) s AS st)
     SELECT doc_id, CAST(st div $st AS BIGINT) AS chunk_idx,
       CAST(size(slice(t, st + 1, $w)) AS BIGINT) AS n_tok,
-      ${hStrSpark(s"concat_ws(' ', slice(t, st + 1, $w))", hf)} AS chunk_hash
+      ${hStrSpark(s"concat_ws(' ', slice(t, st + 1, $w))")} AS chunk_hash
     FROM st ORDER BY doc_id, chunk_idx"""
 
   private def p36Run(spark: SparkSession, dir: String): DataFrame = {
     val (w, st) = (chunkTokens(spark), chunkStride(spark))
     require(st <= w, s"chunkStride $st must be <= chunkTokens $w (windows must tile)")
     readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    spark.sql(p36Spark(hashFamily(spark), w, st))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    spark.sql(p36Spark(w, st))
   }
 
   private val p36Duck = s"""
@@ -2903,11 +2873,11 @@ object PipelineOps {
     q
   }
 
-  private def p37Spark(hf: String, q: Int) = s"""
+  private def p37Spark(q: Int) = s"""
     WITH r AS (
       SELECT source, doc_id,
         row_number() OVER (PARTITION BY source
-          ORDER BY ${hSpark("CAST(doc_id AS STRING)", hf)}, doc_id) AS rk
+          ORDER BY ${hSpark("CAST(doc_id AS STRING)")}, doc_id) AS rk
       FROM documents)
     SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
       CAST(sum(CASE WHEN rk <= $q THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
@@ -2916,7 +2886,8 @@ object PipelineOps {
 
   private def p37Run(spark: SparkSession, dir: String): DataFrame = {
     readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    spark.sql(p37Spark(hashFamily(spark), domainQuota(spark)))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    spark.sql(p37Spark(domainQuota(spark)))
   }
 
   private val p37Duck = s"""
@@ -2947,7 +2918,7 @@ object PipelineOps {
   private val IpPat = "\\\\b\\\\d{1,3}(\\\\.\\\\d{1,3}){3}\\\\b"
   private val PhonePat = "\\\\b\\\\d{7,}\\\\b"
 
-  private def p38Spark(hf: String, plant: Boolean = true) = s"""
+  private def p38Spark(plant: Boolean = true) = s"""
     WITH aug AS (
       ${if (plant) s"""SELECT doc_id, concat(text, ' contact user', CAST(doc_id AS STRING),
         '@example.com from 10.0.', CAST(doc_id % 256 AS STRING), '.7 call 55512',
@@ -2962,7 +2933,7 @@ object PipelineOps {
       CAST(size(regexp_extract_all(te, '$IpPat', 0)) AS BIGINT) AS n_ips,
       CAST(size(regexp_extract_all(ti, '$PhonePat', 0)) AS BIGINT) AS n_phones,
       CAST(length(rt) AS BIGINT) AS n_chars_red,
-      ${hStrSpark("rt", hf)} AS red_checksum
+      ${hStrSpark("rt")} AS red_checksum
     FROM ph ORDER BY doc_id"""
 
   private val p38Duck = {
@@ -3017,12 +2988,12 @@ object PipelineOps {
     n
   }
 
-  private def p39Fp(hf: String, n: Int) =
-    hKeySpark(s"concat_ws(' ', slice($wordsSpark, 1, $n))", hf)
+  private def p39Fp(n: Int) =
+    hKeySpark(s"concat_ws(' ', slice($wordsSpark, 1, $n))")
 
-  private def p39Spark(hf: String, n: Int) = s"""
+  private def p39Spark(n: Int) = s"""
     WITH w AS (
-      SELECT doc_id, ${p39Fp(hf, n)} AS fp FROM documents),
+      SELECT doc_id, ${p39Fp(n)} AS fp FROM documents),
     base AS (SELECT DISTINCT fp FROM w WHERE pmod(doc_id, 5) != 4),
     inc AS (
       SELECT doc_id, fp,
@@ -3037,7 +3008,8 @@ object PipelineOps {
 
   private def p39Run(spark: SparkSession, dir: String): DataFrame = {
     readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    spark.sql(p39Spark(hashFamily(spark), ingestFpTokens(spark)))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    spark.sql(p39Spark(ingestFpTokens(spark)))
   }
 
   private val p39Duck = s"""
@@ -3167,13 +3139,13 @@ object PipelineOps {
 
   private val P42LabelsView = "graft_split_labels"
 
-  private[graft] def p42SplitSql(hf: String) = s"""
+  private[graft] def p42SplitSql = s"""
     WITH j AS (
       SELECT d.doc_id, d.lang, l.lbl
       FROM documents d JOIN $P42LabelsView l ON d.doc_id = l.doc_id),
     b AS (
       SELECT doc_id, lang,
-        pmod(${hSpark("CAST(lbl AS STRING)", hf)}, 10) AS bkt
+        pmod(${hSpark("CAST(lbl AS STRING)")}, 10) AS bkt
       FROM j)
     SELECT doc_id, lang,
       CASE WHEN bkt < 8 THEN 'train' WHEN bkt = 8 THEN 'val' ELSE 'test' END AS split
@@ -3183,7 +3155,8 @@ object PipelineOps {
     * probe consumes this directly. */
   private[graft] def p42Frame(spark: SparkSession, dir: String): DataFrame = {
     p16Labels(spark, dir).createOrReplaceTempView(P42LabelsView)
-    spark.sql(p42SplitSql(hashFamily(spark)))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    spark.sql(p42SplitSql)
   }
 
   private def p42Run(spark: SparkSession, dir: String): DataFrame = {
@@ -3228,7 +3201,7 @@ object PipelineOps {
   // map-side, zero shuffle) is unchanged. p01-style exact dedup composes
   // on url_checksum directly.
 
-  private def p45Spark(hf: String, plant: Boolean = true) = s"""
+  private def p45Spark(plant: Boolean = true) = s"""
     WITH u AS (
       ${if (plant) s"""SELECT doc_id, concat('HTTP://WWW.Site', CAST(doc_id % 7 AS STRING),
         '.COM:80/a/', CAST(doc_id AS STRING), '?z=1&y=', CAST(doc_id % 3 AS STRING),
@@ -3248,7 +3221,7 @@ object PipelineOps {
       FROM s1)
     SELECT doc_id,
       split_part(split_part(base, '://', 2), '/', 1) AS host,
-      ${hStrSpark("concat(base, qs)", hf)} AS url_checksum
+      ${hStrSpark("concat(base, qs)")} AS url_checksum
     FROM s2 ORDER BY doc_id"""
 
   private val p45Duck = s"""
@@ -3297,10 +3270,10 @@ object PipelineOps {
     b
   }
 
-  private[graft] def p44Spark(hf: String, b: Long) = s"""
+  private[graft] def p44Spark(b: Long) = s"""
     WITH t AS (
       SELECT doc_id, lang, size($wordsSpark) AS n,
-        ${hSpark("CAST(doc_id AS STRING)", hf)} AS hk
+        ${hSpark("CAST(doc_id AS STRING)")} AS hk
       FROM documents),
     r AS (
       SELECT doc_id, lang, n,
@@ -3317,7 +3290,8 @@ object PipelineOps {
 
   private def p44Run(spark: SparkSession, dir: String): DataFrame = {
     readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    spark.sql(p44Spark(hashFamily(spark), tokenBudget(spark)))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    spark.sql(p44Spark(tokenBudget(spark)))
   }
 
   private val p44Duck = s"""
@@ -3393,8 +3367,7 @@ object PipelineOps {
   // Algorithm: Efraimidis–Spirakis A-ES (Inf. Process. Lett. 97(5), 2006)
   // — draw u ~ U(0,1] per doc, keep the k smallest exponential race keys
   // -ln(u)/w. u is the deterministic hash uniform (p15's rerun-stability
-  // contract: a re-executed job draws the SAME sample), routed through the
-  // hash-family switch.
+  // contract: a re-executed job draws the SAME sample).
   //
   // Scale shape: a single per-lang rank window is the textbook answer and
   // the 100 TB skew trap — one language can be 90% of a web corpus, and
@@ -3431,12 +3404,12 @@ object PipelineOps {
     s
   }
 
-  private[graft] def p46Spark(hf: String, kSel: Int, nSalt: Int) = s"""
+  private[graft] def p46Spark(kSel: Int, nSalt: Int) = s"""
     WITH h AS (
       SELECT lang, doc_id, CAST(n_chars AS BIGINT) AS weight,
-        -ln((${hSpark("CAST(doc_id AS STRING)", hf)} + 1) / 4294967296.0)
+        -ln((${hSpark("CAST(doc_id AS STRING)")} + 1) / 4294967296.0)
           / CAST(n_chars AS DOUBLE) AS aes_key,
-        pmod(${hSpark("concat('s46_', CAST(doc_id AS STRING))", hf)}, $nSalt) AS b
+        pmod(${hSpark("concat('s46_', CAST(doc_id AS STRING))")}, $nSalt) AS b
       FROM documents WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL),
     loc AS (
       SELECT lang, doc_id, weight, aes_key FROM (
@@ -3453,7 +3426,8 @@ object PipelineOps {
 
   private def p46Run(spark: SparkSession, dir: String): DataFrame = {
     readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    spark.sql(p46Spark(hashFamily(spark), weightedK(spark), weightedSaltBuckets(spark)))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    spark.sql(p46Spark(weightedK(spark), weightedSaltBuckets(spark)))
   }
 
   private val p46Duck = s"""
@@ -3502,7 +3476,7 @@ object PipelineOps {
     t
   }
 
-  private[graft] def p47Spark(hf: String, dfMin: Int, plant: Boolean = true) = s"""
+  private[graft] def p47Spark(dfMin: Int, plant: Boolean = true) = s"""
     WITH aug AS (
       ${if (plant) s"""SELECT doc_id, array(
         array_join(slice(${wordsSpark}, 1, 6), ' '),
@@ -3512,7 +3486,7 @@ object PipelineOps {
       FROM documents"""
       else "SELECT doc_id, split(text, '\\n') AS lines FROM documents"}),
     occ AS (
-      SELECT DISTINCT ${hKeySpark("line", hf)} AS lh, doc_id
+      SELECT DISTINCT ${hKeySpark("line")} AS lh, doc_id
       FROM aug LATERAL VIEW explode(lines) x AS line),
     freq AS (
       SELECT lh FROM occ GROUP BY lh HAVING count(*) >= $dfMin),
@@ -3520,19 +3494,20 @@ object PipelineOps {
     out AS (
       SELECT doc_id, lines,
         filter(lines, l -> NOT array_contains(coalesce(farr.arr,
-          CAST(array() AS ARRAY<BIGINT>)), ${hKeySpark("l", hf)})) AS kept
+          CAST(array() AS ARRAY<BIGINT>)), ${hKeySpark("l")})) AS kept
       FROM aug CROSS JOIN farr)
     SELECT doc_id,
       CAST(size(lines) AS BIGINT) AS n_lines,
       CAST(size(lines) - size(kept) AS BIGINT) AS n_removed,
-      ${hStrSpark("array_join(kept, CHR(10))", hf)} AS clean_checksum
+      ${hStrSpark("array_join(kept, CHR(10))")} AS clean_checksum
     FROM out ORDER BY doc_id"""
 
   private def p47Run(spark: SparkSession, dir: String): DataFrame = {
     val plant = plantFixtures(spark)
     if (plant)
       readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    spark.sql(p47Spark(hashFamily(spark), boilerplateDf(spark), plant))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    spark.sql(p47Spark(boilerplateDf(spark), plant))
   }
 
   private val p47Duck = s"""
@@ -3605,16 +3580,16 @@ object PipelineOps {
   private val p48Key =
     "CASE WHEN doc_id % 7 = 0 THEN 'planted shared content block' ELSE lower(trim(text)) END"
 
-  private def p48Spark(hf: String, estItems: Long, numBits: Long,
+  private def p48Spark(estItems: Long, numBits: Long,
                        plant: Boolean = true) = s"""
     WITH base AS (
-      ${if (plant) s"""SELECT ${hStrSpark(p48Key, hf)} AS h
+      ${if (plant) s"""SELECT ${hStrSpark(p48Key)} AS h
       FROM documents WHERE pmod(doc_id, 5) < 4"""
-      else s"SELECT ${hStrSpark("lower(trim(text))", hf)} AS h FROM documents_base"}),
+      else s"SELECT ${hStrSpark("lower(trim(text))")} AS h FROM documents_base"}),
     batch AS (
-      ${if (plant) s"""SELECT doc_id, ${hStrSpark(p48Key, hf)} AS h
+      ${if (plant) s"""SELECT doc_id, ${hStrSpark(p48Key)} AS h
       FROM documents WHERE pmod(doc_id, 5) = 4"""
-      else s"SELECT doc_id, ${hStrSpark("lower(trim(text))", hf)} AS h FROM documents_batch"}),
+      else s"SELECT doc_id, ${hStrSpark("lower(trim(text))")} AS h FROM documents_batch"}),
     bf AS (
       SELECT graft_bloom_agg(xxhash64(h), CAST($estItems AS BIGINT),
         CAST($numBits AS BIGINT)) AS b
@@ -3638,7 +3613,8 @@ object PipelineOps {
       if (plant) "SELECT count(*) FROM documents WHERE pmod(doc_id, 5) < 4"
       else "SELECT count(*) FROM documents_base"
     val n = math.max(1L, spark.sql(baseCount).head.getLong(0))
-    spark.sql(p48Spark(hashFamily(spark), n, bloomBits(n, bloomFpp(spark)), plant))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    spark.sql(p48Spark(n, bloomBits(n, bloomFpp(spark)), plant))
   }
 
   private val p48Duck = s"""
@@ -3935,16 +3911,16 @@ object PipelineOps {
   // gains a suffix on ids ≡ 3 (mod 7) → content_changed; everything else
   // unchanged. At deployment the two planted CTEs are the real snapshot
   // tables and everything downstream is unchanged.
-  private def p52Spark(hf: String, plant: Boolean = true) = s"""
+  private def p52Spark(plant: Boolean = true) = s"""
     WITH v1 AS (
-      ${if (plant) s"""SELECT doc_id, ${hStrSpark("lower(trim(text))", hf)} AS h
+      ${if (plant) s"""SELECT doc_id, ${hStrSpark("lower(trim(text))")} AS h
       FROM documents WHERE pmod(doc_id, 10) != 9"""
-      else s"SELECT doc_id, ${hStrSpark("lower(trim(text))", hf)} AS h FROM documents_v1"}),
+      else s"SELECT doc_id, ${hStrSpark("lower(trim(text))")} AS h FROM documents_v1"}),
     v2 AS (
       ${if (plant) s"""SELECT doc_id, ${hStrSpark(
-        "CASE WHEN doc_id % 7 = 3 THEN lower(trim(text)) || ' v2' ELSE lower(trim(text)) END", hf)} AS h
+        "CASE WHEN doc_id % 7 = 3 THEN lower(trim(text)) || ' v2' ELSE lower(trim(text)) END")} AS h
       FROM documents WHERE pmod(doc_id, 10) != 8"""
-      else s"SELECT doc_id, ${hStrSpark("lower(trim(text))", hf)} AS h FROM documents_v2"}),
+      else s"SELECT doc_id, ${hStrSpark("lower(trim(text))")} AS h FROM documents_v2"}),
     d AS (
       SELECT coalesce(v1.doc_id, v2.doc_id) AS doc_id,
         CASE WHEN v1.doc_id IS NULL THEN 'added'
@@ -4000,12 +3976,12 @@ object PipelineOps {
   private val NegK = 4
   private val NegEnc = 4294967296L
 
-  private def p53Spark(hf: String) = s"""
+  private def p53Spark = s"""
     WITH pool AS (
       SELECT CAST(label AS BIGINT) AS plabel, vec_id FROM (
         SELECT label, vec_id,
           row_number() OVER (PARTITION BY label
-            ORDER BY ${hSpark("CAST(vec_id AS STRING)", hf)}, vec_id) AS rk
+            ORDER BY ${hSpark("CAST(vec_id AS STRING)")}, vec_id) AS rk
         FROM embeddings) WHERE rk <= $NegPool),
     parr AS (
       SELECT array_sort(collect_list(plabel * $NegEnc + vec_id)) AS arr FROM pool),
@@ -4022,7 +3998,7 @@ object PipelineOps {
     sel AS (
       SELECT vec_id, label, slot,
         element_at(cands, CAST(1 + pmod(${hSpark(
-          "concat(CAST(vec_id AS STRING), '_', CAST(slot AS STRING))", hf)},
+          "concat(CAST(vec_id AS STRING), '_', CAST(slot AS STRING))")},
           size(cands)) AS INT)) AS enc
       FROM x)
     SELECT vec_id, CAST(slot AS BIGINT) AS slot,
@@ -4101,13 +4077,13 @@ object PipelineOps {
   private val SyndicatedBlock =
     "breaking news this content is syndicated across partner sites worldwide today reader"
 
-  private[graft] def p54Spark(hf: String, k: Int, plant: Boolean = true): String = {
+  private[graft] def p54Spark(k: Int, plant: Boolean = true): String = {
     // The gram key is an 8-byte BIGINT, not the 32-char hex string: gh is
     // the join/shuffle key of the one UNBOUNDED relation in this operator,
     // so key width is shuffle bytes at 100 TB (see hKeySpark). A collision
     // can only OVER-flag a window as duplicated (the p21 gram-hash
     // precedent). Measured: 2.5 s -> 1.9 s at sf0.1.
-    val gramHash = hKeySpark(s"array_join(slice(words, pos, $k), ' ')", hf)
+    val gramHash = hKeySpark(s"array_join(slice(words, pos, $k), ' ')")
     s"""
     WITH aug AS (
       ${if (plant) s"""SELECT doc_id, CASE WHEN doc_id % 5 = 0
@@ -4142,7 +4118,8 @@ object PipelineOps {
     val plant = plantFixtures(spark)
     if (plant)
       readSpread(spark, s"$dir/documents.parquet", spread = true).createOrReplaceTempView("documents")
-    spark.sql(p54Spark(hashFamily(spark), substrK(spark), plant))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    spark.sql(p54Spark(substrK(spark), plant))
   }
 
   private val p54Duck = s"""
@@ -4212,8 +4189,8 @@ object PipelineOps {
   private val NbEnc = 8589934592L   // 2^33: bucket*NbEnc + (wt + 2^32) stays sortable
   private val NbOff = 4294967296L   // 2^32: offset keeps encoded weights positive
 
-  private def p55Spark(hf: String): String = {
-    val bkt = s"pmod(${hSpark("w", hf)}, $NbBuckets)"
+  private def p55Spark: String = {
+    val bkt = s"pmod(${hSpark("w")}, $NbBuckets)"
     s"""
     WITH t AS (SELECT doc_id, $wordsSpark AS words FROM documents),
     lab AS (
@@ -4351,7 +4328,7 @@ object PipelineOps {
         - CAST(floor(1e6 * CAST(shi AS DOUBLE) / n_docs + 0.5) AS BIGINT)) AS gap_ppm
     FROM agg ORDER BY bin"""
 
-  private def p78Spark(hf: String): String = p78Text(p55Spark(hf), "DIV")
+  private def p78Spark: String = p78Text(p55Spark, "DIV")
   private val p78Duck: String = p78Text(p55Duck, "//")
 
   // ---- p56: BM25 retrieval scoring -----------------------------------------
@@ -4384,8 +4361,8 @@ object PipelineOps {
     "(1, 1, 'window'), (1, 2, 'sort'), (1, 3, 'order'), " +
     "(2, 1, 'stream'), (2, 2, 'batch'), (2, 3, 'data')"
 
-  private def p56Spark(hf: String): String = {
-    val salt = s"pmod(${hSpark("CAST(doc_id AS STRING)", hf)}, $Bm25Salt)"
+  private def p56Spark: String = {
+    val salt = s"pmod(${hSpark("CAST(doc_id AS STRING)")}, $Bm25Salt)"
     s"""
     WITH q AS (SELECT * FROM VALUES $Bm25Values AS q(qid, tidx, term)),
     t AS (SELECT doc_id, words, size(words) AS dl
@@ -4522,7 +4499,7 @@ object PipelineOps {
   // shuffles before the output sort; regexes are shared-syntax between
   // Java and RE2 (non-greedy, character classes — no backrefs or
   // lookarounds, which RE2 lacks).
-  private def p58Spark(hf: String, plant: Boolean = true) = s"""
+  private def p58Spark(plant: Boolean = true) = s"""
     WITH aug AS (
       ${if (plant) s"""SELECT doc_id, concat(
         '<html><head><title>Doc ', CAST(doc_id AS STRING),
@@ -4553,7 +4530,7 @@ object PipelineOps {
       regexp_extract(html, '<title>([^<]*)</title>', 1) AS title,
       CAST(length(clean) AS BIGINT) AS n_chars_clean,
       CAST(CASE WHEN clean RLIKE 'var tracker|color: #333' THEN 1 ELSE 0 END AS BIGINT) AS leaked,
-      ${hStrSpark("clean", hf)} AS clean_checksum
+      ${hStrSpark("clean")} AS clean_checksum
     FROM s3 ORDER BY doc_id"""
 
   private val p58Duck = s"""
@@ -4694,7 +4671,7 @@ object PipelineOps {
     * of relation the LshSigsView precedent materializes: the self-join
     * consumes it on BOTH sides, and inlined, each side re-runs the whole
     * words→hash→32-counter fold (measured 5.2 s vs 2.7 s at sf0.1). */
-  private def p60SigsSql(hf: String, plant: Boolean = true) = s"""
+  private def p60SigsSql(plant: Boolean = true) = s"""
     WITH aug AS (
       ${if (plant) s"""SELECT doc_id, text FROM documents
       UNION ALL
@@ -4702,7 +4679,7 @@ object PipelineOps {
       FROM documents WHERE doc_id % 7 = 0"""
       else "SELECT doc_id, text FROM documents"}),
     t AS (
-      SELECT doc_id, transform($wordsSpark, w -> ${hSpark("w", hf)}) AS hw
+      SELECT doc_id, transform($wordsSpark, w -> ${hSpark("w")}) AS hw
       FROM aug)
     SELECT doc_id,
       aggregate(
@@ -4742,7 +4719,8 @@ object PipelineOps {
     val plant = plantFixtures(spark)
     if (plant)
       readSpread(spark, s"$dir/documents.parquet", spread = true).createOrReplaceTempView("documents")
-    materialized(spark, SimPairSigsView, p60SigsSql(hashFamily(spark), plant))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    materialized(spark, SimPairSigsView, p60SigsSql(plant))
     spark.sql(p60PairsSql(simhashBands(spark)))
   }
 
@@ -4820,8 +4798,8 @@ object PipelineOps {
     spark.conf.getOption("spark.graft.ppxFlagMicro").map(_.toLong)
       .getOrElse(PpxFlagMicroDefault)
 
-  private[graft] def p61Spark(hf: String, thr: Long): String = {
-    def bkt(e: String) = s"pmod(${hSpark(e, hf)}, $PpxVoc)"
+  private[graft] def p61Spark(thr: Long): String = {
+    def bkt(e: String) = s"pmod(${hSpark(e)}, $PpxVoc)"
     val slotAt = s"CAST(${bkt("element_at(words, i - 1)")} * $PpxVoc + ${bkt("element_at(words, i)")} AS INT)"
     s"""
     WITH t AS (SELECT doc_id, $wordsSpark AS words FROM documents),
@@ -4917,7 +4895,7 @@ object PipelineOps {
   // corpus (the paper's 50%), pass-through otherwise.
   //
   // Determinism contract (p15's): "random" cut points and the apply gate
-  // are the session hash family over (doc_id, salt) — rerun-stable,
+  // are the row hash over (doc_id, salt) — rerun-stable,
   // engine-independent, and a different `fimSalt` config redraws the
   // augmentation like a new epoch. Cuts a,b ~ U[0,n] via pmod(h, n+1),
   // (c1, c2) = (min, max) — the paper's uniform two-point split; empty
@@ -4937,8 +4915,8 @@ object PipelineOps {
     s
   }
 
-  private[graft] def p62Spark(hf: String, salt: String): String = {
-    def h(tag: String) = hSpark(s"concat('$salt|$tag|', CAST(doc_id AS STRING))", hf)
+  private[graft] def p62Spark(salt: String): String = {
+    def h(tag: String) = hSpark(s"concat('$salt|$tag|', CAST(doc_id AS STRING))")
     s"""
     WITH t AS (
       SELECT doc_id, text, $wordsSpark AS words FROM documents),
@@ -4970,7 +4948,7 @@ object PipelineOps {
       CAST(n_prefix AS BIGINT) AS n_prefix,
       CAST(n_middle AS BIGINT) AS n_middle,
       CAST(n_suffix AS BIGINT) AS n_suffix,
-      ${hStrSpark("out_text", hf)} AS out_checksum
+      ${hStrSpark("out_text")} AS out_checksum
     FROM o ORDER BY doc_id"""
   }
 
@@ -5040,7 +5018,7 @@ object PipelineOps {
   // width is the document's own paragraphs. Packing contract:
   // doc_id < 2^31 and < 2^32 paragraphs per document (doc_id*2^32+pos
   // stays in int64).
-  private[graft] def p63Spark(hf: String, plant: Boolean = true): String = s"""
+  private[graft] def p63Spark(plant: Boolean = true): String = s"""
     WITH aug AS (
       ${if (plant) s"""SELECT doc_id, CASE WHEN doc_id % 5 = 2 THEN array(
         array_join(slice($wordsSpark, 1, 6), ' '),
@@ -5052,7 +5030,7 @@ object PipelineOps {
       FROM documents"""
       else "SELECT doc_id, split(text, '\\n\\n') AS paras FROM documents"}),
     occ AS (
-      SELECT doc_id, pos, para, ${hKeySpark("para", hf)} AS ph
+      SELECT doc_id, pos, para, ${hKeySpark("para")} AS ph
       FROM aug LATERAL VIEW posexplode(paras) x AS pos, para),
     firsts AS (
       SELECT ph, min(doc_id * 4294967296 + pos) AS first_pk
@@ -5064,7 +5042,7 @@ object PipelineOps {
     SELECT doc_id,
       CAST(count(*) AS BIGINT) AS n_paras,
       CAST(count(*) - sum(keep) AS BIGINT) AS n_removed,
-      ${hStrSpark("array_join(transform(sort_array(collect_list(CASE WHEN keep = 1 THEN struct(pos, para) END)), s -> s.para), CHR(10))", hf)} AS clean_checksum
+      ${hStrSpark("array_join(transform(sort_array(collect_list(CASE WHEN keep = 1 THEN struct(pos, para) END)), s -> s.para), CHR(10))")} AS clean_checksum
     FROM mark GROUP BY doc_id ORDER BY doc_id"""
 
   private val p63Duck = s"""
@@ -5137,8 +5115,8 @@ object PipelineOps {
     spark.conf.getOption("spark.graft.dsirSelectMicro").map(_.toLong)
       .getOrElse(DsirSelectMicroDefault)
 
-  private[graft] def p64Spark(hf: String, thr: Long): String = {
-    def bkt(e: String) = s"pmod(${hSpark(e, hf)}, $PpxVoc)"
+  private[graft] def p64Spark(thr: Long): String = {
+    def bkt(e: String) = s"pmod(${hSpark(e)}, $PpxVoc)"
     val slotAt = s"CAST(${bkt("element_at(words, i - 1)")} * $PpxVoc + ${bkt("element_at(words, i)")} AS INT)"
     s"""
     WITH t AS (SELECT doc_id, $wordsSpark AS words FROM documents),
@@ -5244,8 +5222,8 @@ object PipelineOps {
   private val SpanWin = 20
   private val SpanLenMax = 5
 
-  private[graft] def p65Spark(hf: String, salt: String): String = {
-    def h(tag: String) = hSpark(s"concat('$salt|$tag|', CAST(doc_id AS STRING), '|', CAST(x.w AS STRING))", hf)
+  private[graft] def p65Spark(salt: String): String = {
+    def h(tag: String) = hSpark(s"concat('$salt|$tag|', CAST(doc_id AS STRING), '|', CAST(x.w AS STRING))")
     s"""
     WITH t AS (
       SELECT doc_id, $wordsSpark AS words FROM documents),
@@ -5284,8 +5262,8 @@ object PipelineOps {
       CAST(nwin AS BIGINT) AS n_spans,
       CAST(n_corrupted AS BIGINT) AS n_corrupted,
       CAST(CAST(n_corrupted AS BIGINT) * 1000000 DIV n AS BIGINT) AS corrupt_ratio_micro,
-      ${hStrSpark("input_text", hf)} AS input_checksum,
-      ${hStrSpark("target_text", hf)} AS target_checksum
+      ${hStrSpark("input_text")} AS input_checksum,
+      ${hStrSpark("target_text")} AS target_checksum
     FROM o ORDER BY doc_id"""
   }
 
@@ -5349,10 +5327,10 @@ object PipelineOps {
   // the true duplicate multiplicity (the partition holds one content's
   // copies). p01's hStrSpark key keeps the two operators' groupings
   // identical by construction.
-  private def p66Spark(hf: String) = s"""
+  private def p66Spark = s"""
     SELECT doc_id,
-      CAST(count(*) OVER (PARTITION BY ${hStrSpark("lower(trim(text))", hf)}) AS BIGINT) AS n_copies,
-      CAST(1000000 DIV count(*) OVER (PARTITION BY ${hStrSpark("lower(trim(text))", hf)}) AS BIGINT) AS weight_micro
+      CAST(count(*) OVER (PARTITION BY ${hStrSpark("lower(trim(text))")}) AS BIGINT) AS n_copies,
+      CAST(1000000 DIV count(*) OVER (PARTITION BY ${hStrSpark("lower(trim(text))")}) AS BIGINT) AS weight_micro
     FROM documents ORDER BY doc_id"""
   private val p66Duck = """
     SELECT doc_id,
@@ -5396,7 +5374,7 @@ object PipelineOps {
     * Materialized behind a [[Barrier]] in [[p67Run]] — the pair join's two
     * sides and the final projection all consume it, and CTE inlining would
     * recompute the N·K dot pass three times. */
-  private[graft] def p67RankedSpark(hf: String, mod: Int = OracleIvfMod): String = {
+  private[graft] def p67RankedSpark(mod: Int = OracleIvfMod): String = {
     def cos(ae: String, an: String, be: String, bn: String) =
       s"${dotSpark(ae, be)} / (sqrt($an) * sqrt($bn))"
     s"""
@@ -5404,7 +5382,7 @@ object PipelineOps {
       SELECT vec_id, embedding, ${norm2Spark("embedding")} AS n2 FROM embeddings),
     cents AS (
       SELECT vec_id AS c_id, embedding AS ce, n2 AS cn2 FROM e
-      WHERE pmod(${hSpark("CAST(vec_id AS STRING)", hf)}, $mod) = 0),
+      WHERE pmod(${hSpark("CAST(vec_id AS STRING)")}, $mod) = 0),
     scored AS (
       SELECT v.vec_id, v.embedding, v.n2, c.c_id,
         ${cos("v.embedding", "v.n2", "c.ce", "c.cn2")} AS csim
@@ -5442,8 +5420,9 @@ object PipelineOps {
   private def p67Run(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.registerDot(spark)
     readSpread(spark, s"$dir/embeddings.parquet").createOrReplaceTempView("embeddings")
+    graft.functions.GraftFunctions.registerMd5(spark)
     val ranked = Barrier.materialize(spark.sql(
-      p67RankedSpark(hashFamily(spark), ivfCentroidMod(spark, dir))))
+      p67RankedSpark(ivfCentroidMod(spark, dir))))
     ranked.createOrReplaceTempView("sem_ranked")
     spark.sql(p67TailSpark(semDupThreshold(spark)))
   }
@@ -5562,7 +5541,7 @@ object PipelineOps {
   private[graft] val BoundaryK = 8
   private val BoundaryContOff = 2199023255552L // 2^41 — never aliases real ids
 
-  private def p69Spark(hf: String, plant: Boolean): String = s"""
+  private def p69Spark(plant: Boolean): String = s"""
     WITH aug AS (
       ${if (plant) s"""SELECT doc_id, text FROM documents
       UNION ALL
@@ -5578,9 +5557,9 @@ object PipelineOps {
         array_join(slice(words, -$BoundaryK, $BoundaryK), ' ') AS sfx
       FROM w WHERE size(words) >= $BoundaryK)
     SELECT s.doc_id AS a_id, p.doc_id AS b_id,
-      ${hStrSpark("s.sfx", hf)} AS overlap_sig
+      ${hStrSpark("s.sfx")} AS overlap_sig
     FROM g s JOIN g p
-      ON ${hKeySpark("s.sfx", hf)} = ${hKeySpark("p.pfx", hf)}
+      ON ${hKeySpark("s.sfx")} = ${hKeySpark("p.pfx")}
      AND s.doc_id != p.doc_id
     WHERE s.sfx = p.pfx
     ORDER BY a_id, b_id"""
@@ -5791,8 +5770,8 @@ object PipelineOps {
     JOIN cnt cb ON cb.source = p.src_b
     ORDER BY src_a, src_b"""
 
-  private def p72Spark(hf: String, plant: Boolean): String =
-    p72Sql(e => hKeySpark(e, hf), "DIV", plant)
+  private def p72Spark(plant: Boolean): String =
+    p72Sql(hKeySpark, "DIV", plant)
 
   private val p72Duck: String = p72Sql(hKeyDuck, "//", plant = true)
 
@@ -5819,14 +5798,14 @@ object PipelineOps {
   // rule so streamed chunk signatures agree with p73's batch chunks
   private[graft] val CdcDivisor = 8
 
-  private def p73Spark(hf: String): String = s"""
+  private def p73Spark: String = s"""
     WITH pos AS (
       SELECT doc_id, pos, word FROM documents
       LATERAL VIEW posexplode($wordsSpark) t AS pos, word
       WHERE word != ''),
     cix AS (
       SELECT doc_id, pos, word,
-        coalesce(sum(CASE WHEN ${hKeySpark("word", hf)} % $CdcDivisor = 0 THEN 1 ELSE 0 END)
+        coalesce(sum(CASE WHEN ${hKeySpark("word")} % $CdcDivisor = 0 THEN 1 ELSE 0 END)
           OVER (PARTITION BY doc_id ORDER BY pos
                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk_ix
       FROM pos),
@@ -5835,12 +5814,12 @@ object PipelineOps {
         array_join(transform(array_sort(collect_list(struct(pos, word))), s -> s.word), ' ') AS ct,
         CAST(count(*) AS BIGINT) AS n_words
       FROM cix GROUP BY doc_id, chunk_ix)
-    SELECT min(${hStrSpark("ct", hf)}) AS chunk_sig,
+    SELECT min(${hStrSpark("ct")}) AS chunk_sig,
       min(n_words) AS n_words,
       CAST(count(*) AS BIGINT) AS n_occ,
       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
       min(doc_id) AS rep_doc
-    FROM chunks GROUP BY ${hKeySpark("ct", hf)}
+    FROM chunks GROUP BY ${hKeySpark("ct")}
     HAVING count(*) >= 2
     ORDER BY chunk_sig"""
 
@@ -5921,8 +5900,8 @@ object PipelineOps {
     SELECT doc_id, rep_doc, n_members, rn = 1 AS is_rep, quality_u
     FROM r ORDER BY doc_id"""
 
-  private def p74Spark(hf: String, plant: Boolean): String = p74Sql(
-    e => hKeySpark(e, hf),
+  private def p74Spark(plant: Boolean): String = p74Sql(
+    hKeySpark,
     t => s"trim(regexp_replace(lower($t), '[^a-z0-9]+', ' '))",
     t => s"regexp_replace($t, '[^A-Za-z0-9]+', '')",
     "DIV", plant)
@@ -6059,8 +6038,8 @@ object PipelineOps {
     FROM m ORDER BY a_id, b_id"""
   }
 
-  private def p76Spark(hf: String, plant: Boolean): String = p76Sql(
-    e => hKeySpark(e, hf), e => hStrSpark(e, hf), wordsSpark,
+  private def p76Spark(plant: Boolean): String = p76Sql(
+    hKeySpark, hStrSpark, wordsSpark,
     (a, f, l) => s"slice($a, $f, $l)",
     e => s"array_join($e, ' ')", plant)
 
@@ -6068,8 +6047,8 @@ object PipelineOps {
     * text) view — the streaming stitch-merge consumer's batch degradation
     * ([[graft.streaming.StitchMergeStream]]) renders through the SAME
     * fragments, so stream and batch merges cannot drift. */
-  private[graft] def p76SparkOn(view: String, hf: String): String = p76Sql(
-    e => hKeySpark(e, hf), e => hStrSpark(e, hf), wordsSpark,
+  private[graft] def p76SparkOn(view: String): String = p76Sql(
+    hKeySpark, hStrSpark, wordsSpark,
     (a, f, l) => s"slice($a, $f, $l)",
     e => s"array_join($e, ' ')", plant = false, src = view)
 
@@ -6079,8 +6058,7 @@ object PipelineOps {
     * gate (double row_number, min continuation / min predecessor) applied
     * WITHIN the pair relation, then p76's exact merge arithmetic (prefix
     * drop, checksum-not-text output). */
-  private[graft] def p76MergeOn(pairsView: String, storeView: String,
-                                hf: String): String = {
+  private[graft] def p76MergeOn(pairsView: String, storeView: String): String = {
     val k = BoundaryK
     s"""
     WITH g AS (
@@ -6102,7 +6080,7 @@ object PipelineOps {
       FROM pick k
       JOIN g2 a ON a.doc_id = k.a_id
       JOIN g2 b ON b.doc_id = k.b_id)
-    SELECT a_id, b_id, ${hStrSpark("merged", hf)} AS merged_sig,
+    SELECT a_id, b_id, ${hStrSpark("merged")} AS merged_sig,
       CAST(mw AS BIGINT) AS merged_words, ts_ms
     FROM m"""
   }
@@ -6431,17 +6409,6 @@ object PipelineOps {
       m => s"floor($m * 1e6 + 0.5) / 1e6",
       c => s"CAST($c AS DOUBLE)", grouped = false)}"""
 
-  /** Plant-aware wiring without a hash family (p70): the fixture switch
-    * follows [[onDocsHfP]]'s binding rule — with planting OFF the parquet
-    * view is not force-bound. */
-  private def onDocsP(f: Boolean => String): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      val plant = plantFixtures(spark)
-      if (plant)
-        readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-      spark.sql(f(plant))
-    }
-
   private def onEvents(sql: String): (SparkSession, String) => DataFrame =
     (spark, dir) => {
       graft.Graft.normalizeEventTime(readSpread(spark, s"$dir/events.parquet"))
@@ -6489,7 +6456,7 @@ object PipelineOps {
       CAST(floor(1e6 * (CAST(r2 - n1 * (n1 + 1) AS DOUBLE) / (2 * n1 * (n - n1))) + 0.5) AS BIGINT) AS auc_ppm
     FROM agg WHERE n1 > 0 AND n1 < n ORDER BY lang"""
 
-  private def p80Spark(hf: String): String = p80Text(p55Spark(hf), s"""
+  private def p80Spark: String = p80Text(p55Spark, s"""
       SELECT l.lang, s.weak_label AS y, s.nb_score AS scu
       FROM scored s JOIN documents l ON l.doc_id = s.doc_id""")
   private val p80Duck: String = p80Text(p55Duck, s"""
@@ -6578,53 +6545,48 @@ object PipelineOps {
 
   // `spread` on each wiring = this round's per-operator A/B choice (see
   // [[readSpread]]); the flag is per OPERATOR, so helpers take it per call.
-  private def onDocs(sql: String, spread: Boolean = false): (SparkSession, String) => DataFrame =
-    onDocsHf(_ => sql, spread)
-
-  /** Hash-family-aware wiring: the SQL is rendered at CALL time from the
-    * session's `spark.graft.hashFamily`, so one config flips every
-    * operator's hash (VERDICT r5 #5). */
-  private def onDocsHf(f: String => String, spread: Boolean = false): (SparkSession, String) => DataFrame =
+  // Each helper registers the md5 kernels the operator texts render.
+  private def onDocs(sql: => String, spread: Boolean = false): (SparkSession, String) => DataFrame =
     (spark, dir) => {
+      graft.functions.GraftFunctions.registerMd5(spark)
       readSpread(spark, s"$dir/documents.parquet", spread).createOrReplaceTempView("documents")
-      spark.sql(f(hashFamily(spark)))
+      spark.sql(sql)
     }
 
-  /** Fixture-planting wiring: like [[onDocsHf]] but also threads the
+  /** Fixture-planting wiring: like [[onDocs]] but also threads the
     * session's `spark.graft.plantFixtures` switch into the SQL builder.
     * With planting OFF the parquet view is NOT force-bound: deployment
     * reads whatever relation the user registered under the operator's
     * input names (`documents`, or `documents_base`/`_batch`/`_v1`/`_v2`
     * for the snapshot operators) — the dir argument only drives the gate
     * fixture. */
-  private def onDocsHfP(f: (String, Boolean) => String, spread: Boolean = false): (SparkSession, String) => DataFrame =
+  private def onDocsP(f: Boolean => String, spread: Boolean = false): (SparkSession, String) => DataFrame =
     (spark, dir) => {
+      graft.functions.GraftFunctions.registerMd5(spark)
       val plant = plantFixtures(spark)
       if (plant)
         readSpread(spark, s"$dir/documents.parquet", spread).createOrReplaceTempView("documents")
-      spark.sql(f(hashFamily(spark), plant))
+      spark.sql(f(plant))
     }
 
-  private def onEmb(sql: String, spread: Boolean = false): (SparkSession, String) => DataFrame =
-    onEmbHf(_ => sql, spread)
-
-  private def onEmbHf(f: String => String, spread: Boolean = false): (SparkSession, String) => DataFrame =
+  private def onEmb(sql: => String, spread: Boolean = false): (SparkSession, String) => DataFrame =
     (spark, dir) => {
       graft.functions.GraftFunctions.registerDot(spark)
+      graft.functions.GraftFunctions.registerMd5(spark)
       readSpread(spark, s"$dir/embeddings.parquet", spread).createOrReplaceTempView("embeddings")
-      spark.sql(f(hashFamily(spark)))
+      spark.sql(sql)
     }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p01_dedup_exact" -> onDocsHf(p01Spark),
+    "p01_dedup_exact" -> onDocs(p01Spark),
     "p02_text_stats" -> onDocs(p02Spark),
     "p03_lang_quality" -> onDocs(p03Spark),
     "p04_minhash_lsh" -> ((spark, dir) => p04Run(spark, dir)),
-    "p05_simhash" -> onDocsHf(p05Spark, spread = true),
-    "p06_fingerprint" -> onDocsHf(p06Spark),
+    "p05_simhash" -> onDocs(p05Spark, spread = true),
+    "p06_fingerprint" -> onDocs(p06Spark),
     "p07_cosine_topk" -> onEmb(p07Spark),
     "p08_ann_srp_lsh" -> ((spark, dir) => p08Run(spark, dir)),
-    "p09_media_meta" -> onDocsHf(p09Spark),
+    "p09_media_meta" -> onDocs(p09Spark),
     // typed mapPartitions decode plumbing — deterministic stub "decoder";
     // the rollup is all-integer so p10Duck recomputes it exactly (hash gate)
     "p10_media_decode" -> ((spark, dir) => MediaOps.decodeFeatures(spark, dir)),
@@ -6639,16 +6601,16 @@ object PipelineOps {
       graft.functions.GraftFunctions.registerTopTerms(spark, TopTerms)
       onDocs(p14Spark, spread = true)(spark, dir)
     }),
-    "p15_sample_stratified" -> onDocsHf(p15Spark),
+    "p15_sample_stratified" -> onDocs(p15Spark),
     "p16_dedup_clusters" -> ((spark, dir) => p16Run(spark, dir)),
     "p17_quality_filter" -> onDocs(p17Spark, spread = true),
-    "p18_text_clean" -> onDocsHf(p18Spark, spread = true),
+    "p18_text_clean" -> onDocs(p18Spark, spread = true),
     "p19_ann_ivf" -> (p19Run(_, _)),
     "p20_curation" -> ((spark, dir) => p20Run(spark, dir)),
     "p21_decontam" -> ((spark, dir) => p21Run(spark, dir)),
     "p22_embed_dedup" -> ((spark, dir) => p22Run(spark, dir)),
     "p23_pack_sequences" -> ((spark, dir) => p23Run(spark, dir)),
-    "p24_mixture_sample" -> onDocsHf(p24Spark),
+    "p24_mixture_sample" -> onDocs(p24Spark),
     "p25_embed_quant" -> ((spark, dir) => p25Run(spark, dir)),
     "p26_repetition" -> onDocs(p26Spark, spread = true),
     "p27_shuffle_shard" -> ((spark, dir) => p27Run(spark, dir)),
@@ -6662,65 +6624,69 @@ object PipelineOps {
     "p35_kmv_distinct" -> ((spark, dir) => p35Run(spark, dir)),
     "p36_chunk_sliding" -> ((spark, dir) => p36Run(spark, dir)),
     "p37_domain_quota" -> ((spark, dir) => p37Run(spark, dir)),
-    "p38_pii_redact" -> onDocsHfP(p38Spark, spread = true),
+    "p38_pii_redact" -> onDocsP(p38Spark, spread = true),
     "p39_incremental_dedup" -> ((spark, dir) => p39Run(spark, dir)),
     "p40_rare_token_score" -> ((spark, dir) => p40Run(spark, dir)),
     "p41_audio_decode" -> ((spark, dir) => MediaOps.audioFeatures(spark, dir)),
     "p42_split_assign" -> ((spark, dir) => p42Run(spark, dir)),
     "p43_unicode_nfc" -> ((spark, dir) => p43Run(spark, dir)),
     "p44_token_budget" -> ((spark, dir) => p44Run(spark, dir)),
-    "p45_url_normalize" -> onDocsHfP(p45Spark),
+    "p45_url_normalize" -> onDocsP(p45Spark),
     "p46_weighted_sample" -> ((spark, dir) => p46Run(spark, dir)),
     "p47_boilerplate_lines" -> ((spark, dir) => p47Run(spark, dir)),
     "p48_bloom_dedup" -> ((spark, dir) => p48Run(spark, dir)),
     "p49_embed_outlier" -> ((spark, dir) => p49Run(spark, dir)),
     "p50_bpe_learn" -> ((spark, dir) => p50Run(spark, dir)),
     "p51_bpe_tokenize" -> ((spark, dir) => p51Run(spark, dir)),
-    "p52_snapshot_diff" -> onDocsHfP(p52Spark),
-    "p53_negative_sample" -> onEmbHf(p53Spark),
+    "p52_snapshot_diff" -> onDocsP(p52Spark),
+    "p53_negative_sample" -> onEmb(p53Spark),
     "p54_substring_dedup" -> ((spark, dir) => p54Run(spark, dir)),
-    "p55_nb_quality" -> onDocsHf(p55Spark, spread = true),
-    "p56_bm25" -> onDocsHf(p56Spark, spread = true),
+    "p55_nb_quality" -> onDocs(p55Spark, spread = true),
+    "p56_bm25" -> onDocs(p56Spark, spread = true),
     "p57_jl_project" -> ((spark, dir) => p57Run(spark, dir)),
-    "p58_html_extract" -> onDocsHfP(p58Spark, spread = true),
+    "p58_html_extract" -> onDocsP(p58Spark, spread = true),
     "p59_blocklist" -> onDocs(p59Spark),
     "p60_simhash_pairs" -> ((spark, dir) => p60Run(spark, dir)),
     "p61_bigram_ppx" -> ((spark, dir) => {
       readSpread(spark, s"$dir/documents.parquet", spread = true).createOrReplaceTempView("documents")
-      spark.sql(p61Spark(hashFamily(spark), ppxFlagMicro(spark)))
+      graft.functions.GraftFunctions.registerMd5(spark)
+      spark.sql(p61Spark(ppxFlagMicro(spark)))
     }),
     "p62_fim_transform" -> ((spark, dir) => {
       readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-      spark.sql(p62Spark(hashFamily(spark), fimSalt(spark)))
+      graft.functions.GraftFunctions.registerMd5(spark)
+      spark.sql(p62Spark(fimSalt(spark)))
     }),
-    "p63_paragraph_dedup" -> onDocsHfP(p63Spark),
+    "p63_paragraph_dedup" -> onDocsP(p63Spark),
     "p64_dsir_select" -> ((spark, dir) => {
       readSpread(spark, s"$dir/documents.parquet", spread = true).createOrReplaceTempView("documents")
-      spark.sql(p64Spark(hashFamily(spark), dsirSelectMicro(spark)))
+      graft.functions.GraftFunctions.registerMd5(spark)
+      spark.sql(p64Spark(dsirSelectMicro(spark)))
     }),
     "p65_span_corrupt" -> ((spark, dir) => {
       readSpread(spark, s"$dir/documents.parquet", spread = true).createOrReplaceTempView("documents")
-      spark.sql(p65Spark(hashFamily(spark), fimSalt(spark)))
+      graft.functions.GraftFunctions.registerMd5(spark)
+      spark.sql(p65Spark(fimSalt(spark)))
     }),
-    "p66_softdedup_weights" -> onDocsHf(p66Spark),
+    "p66_softdedup_weights" -> onDocs(p66Spark),
     "p67_semantic_dedup" -> ((spark, dir) => p67Run(spark, dir)),
     "p68_tokenizer_fertility" -> ((spark, dir) => p68Run(spark, dir)),
-    "p69_boundary_overlap" -> onDocsHfP(p69Spark, spread = true),
+    "p69_boundary_overlap" -> onDocsP(p69Spark, spread = true),
     "p70_mojibake_score" -> onDocsP(p70Spark),
     "p71_tfidf_keywords" -> ((spark, dir) => p71Run(spark, dir)),
-    "p72_source_overlap" -> onDocsHfP(p72Spark),
-    "p73_cdc_chunks" -> onDocsHf(p73Spark),
-    "p74_cluster_rep" -> onDocsHfP(p74Spark),
+    "p72_source_overlap" -> onDocsP(p72Spark),
+    "p73_cdc_chunks" -> onDocs(p73Spark),
+    "p74_cluster_rep" -> onDocsP(p74Spark),
     "p75_mixture_weights" -> ((spark, dir) => {
       readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
       spark.sql(p75Spark(mixtureAlphaMicro(spark)))
     }),
-    "p76_stitch_merge" -> onDocsHfP(p76Spark, spread = true),
+    "p76_stitch_merge" -> onDocsP(p76Spark, spread = true),
     "p77_bitext_margin" -> ((spark, dir) =>
       onEmb(p77Spark(bitextKnnK(spark)), spread = true)(spark, dir)),
-    "p78_calibration_bins" -> onDocsHf(p78Spark),
+    "p78_calibration_bins" -> onDocs(p78Spark),
     "p79_bitext_ann" -> ((spark, dir) => p79Run(spark, dir)),
-    "p80_quality_auc" -> onDocsHf(p80Spark),
+    "p80_quality_auc" -> onDocs(p80Spark),
     "p81_dist_drift" -> ((spark, dir) => p81Run(spark, dir)),
   )
 

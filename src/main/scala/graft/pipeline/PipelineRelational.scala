@@ -6,8 +6,7 @@ package graft.pipeline
   * Each entry in [[prql]] is a FULL-fidelity restatement of the operator:
   * compiled through BOTH backends — the DataFrame fold (`Graft.compileDir`)
   * and the SQL-text backend (`spark.sql(Graft.toSparkSql(…))`) — it must
-  * row-equal the operator's own `PipelineOps.queries` output under the
-  * driver's default md5 hash family. The relational skeleton (CTEs, joins,
+  * row-equal the operator's own `PipelineOps.queries` output. The relational skeleton (CTEs, joins,
   * group/aggregate, windows, sort) runs through the PRQL planner; the
   * scalar HOF bodies ride in s-strings, exactly the split a user porting a
   * pipeline onto the query language would write. PipelineRelationalSpec
@@ -34,9 +33,9 @@ object PipelineRelational {
     * (s-strings pass through verbatim, so the SQL fragment is identical). */
   private val W = """split(trim(text), '\\s+')"""
 
-  /** md5-family 32-bit word hash (PipelineOps.hSpark at its md5 default —
-    * these re-expressions pin the driver-gate family). */
-  private def H(e: String) = s"CAST(conv(substr(md5($e),1,8),16,10) AS BIGINT)"
+  // the operators' own hash spellings (native md5 kernels, registered by
+  // [[registerKernels]])
+  import PipelineOps.{hKeySpark, hSpark}
 
   /** p55's full relational chain through the scored relation `sc` — shared
     * verbatim by the p55 entry and p78's calibration tail (the consumes-
@@ -59,7 +58,7 @@ object PipelineRelational {
          |
          |table tok = (
          |  from tok0
-         |  derive b = s"pmod(${H("w")}, 256)"
+         |  derive b = s"pmod(${hSpark("w")}, 256)"
          |)
          |
          |table cnt = (
@@ -122,7 +121,7 @@ object PipelineRelational {
          |  from labk
          |  join warr [k]
          |  join pri [k]
-         |  derive score = s"prior + aggregate(words, CAST(0 AS BIGINT), (acc, w) -> acc + element_at(arr, CAST(pmod(${H("w")}, 256) + 1 AS INT)))"
+         |  derive score = s"prior + aggregate(words, CAST(0 AS BIGINT), (acc, w) -> acc + element_at(arr, CAST(pmod(${hSpark("w")}, 256) + 1 AS INT)))"
          |)""".stripMargin
 
   /** The MinHash-LSH chain (words → 3-shingles → minhash sigs → band
@@ -155,7 +154,7 @@ object PipelineRelational {
        |
        |table hx4 = (
        |  from sh4
-       |  derive hs = s"transform(shingles, s -> pmod(${H("s")}, ${PipelineOps.MinhashP}))"
+       |  derive hs = s"transform(shingles, s -> pmod(${hSpark("s")}, ${PipelineOps.MinhashP}))"
        |)
        |
        |table sig4 = (
@@ -330,7 +329,7 @@ object PipelineRelational {
     "p05_simhash" ->
       s"""table h = (
          |  from documents
-         |  derive hw = s"transform($W, w -> ${H("w")})"
+         |  derive hw = s"transform($W, w -> ${hSpark("w")})"
          |)
          |
          |table sims = (
@@ -348,7 +347,7 @@ object PipelineRelational {
     "p06_fingerprint" ->
       s"""table t = (
          |  from documents
-         |  derive hw = s"transform($W, w -> ${H("w")})"
+         |  derive hw = s"transform($W, w -> ${hSpark("w")})"
          |)
          |
          |from t
@@ -440,7 +439,7 @@ object PipelineRelational {
     "p15_sample_stratified" ->
       s"""table h = (
          |  from documents
-         |  derive bucket = s"pmod(${H("CAST(doc_id AS STRING)")}, 1000)"
+         |  derive bucket = s"pmod(${hSpark("CAST(doc_id AS STRING)")}, 1000)"
          |)
          |
          |from h
@@ -488,7 +487,7 @@ object PipelineRelational {
          |select [
          |  doc_id,
          |  n_removed = s"CAST(size(filter(words, w -> w IN ('a','the'))) AS BIGINT)",
-         |  clean_checksum = s"${H("array_join(filter(words, w -> NOT w IN ('a','the')), ' ')")}",
+         |  clean_checksum = s"${hSpark("array_join(filter(words, w -> NOT w IN ('a','the')), ' ')")}",
          |]
          |sort doc_id""".stripMargin,
 
@@ -587,9 +586,8 @@ object PipelineRelational {
          |]
          |sort doc_id""".stripMargin,
 
-    // p23 pins the default chunking (64 docs), exactly as the md5-pinning
-    // entries pin the hash family: the restatement is of the default-config
-    // operator. The two-level prefix sum maps onto PRQL 1:1 — per-chunk
+    // p23 pins the default chunking (64 docs): the restatement is of the
+    // default-config operator. The two-level prefix sum maps onto PRQL 1:1 — per-chunk
     // expanding windows inside `group`, a global expanding window over the
     // tiny chunk-totals CTE, and a USING join back.
     "p23_pack_sequences" ->
@@ -680,7 +678,7 @@ object PipelineRelational {
          |table kk = (
          |  from documents
          |  join rates [lang]
-         |  select [lang, doc_id, n_g, keep_ppm, kept = s"pmod(${H("CAST(doc_id AS STRING)")}, 1000000) < keep_ppm"]
+         |  select [lang, doc_id, n_g, keep_ppm, kept = s"pmod(${hSpark("CAST(doc_id AS STRING)")}, 1000000) < keep_ppm"]
          |)
          |
          |from kk
@@ -963,12 +961,11 @@ object PipelineRelational {
          |]
          |sort click_id""".stripMargin,
 
-    // p27 pins the default seed (42) and the md5 family, as the other
-    // pinning entries do.
+    // p27 pins the default seed (42), as the other pinning entries do.
     "p27_shuffle_shard" ->
       s"""table h = (
          |  from documents
-         |  derive hv = s"pmod(${H("concat(CAST(doc_id AS STRING), ':', '42')")}, 1000000007)"
+         |  derive hv = s"pmod(${hSpark("concat(CAST(doc_id AS STRING), ':', '42')")}, 1000000007)"
          |)
          |
          |table sh = (
@@ -996,8 +993,7 @@ object PipelineRelational {
          |sort shard_id""".stripMargin,
 
     // p36/p37/p39 pin their knob defaults (32/16 window, quota 10,
-    // 2-token fingerprint) and the md5 family, as the other pinning
-    // entries do.
+    // 2-token fingerprint), as the other pinning entries do.
     "p36_chunk_sliding" ->
       s"""table toks = (
          |  from documents
@@ -1021,7 +1017,7 @@ object PipelineRelational {
     "p37_domain_quota" ->
       s"""table h = (
          |  from documents
-         |  derive hk = s"${H("CAST(doc_id AS STRING)")}"
+         |  derive hk = s"${hSpark("CAST(doc_id AS STRING)")}"
          |)
          |
          |table r = (
@@ -1083,7 +1079,7 @@ object PipelineRelational {
     "p39_incremental_dedup" ->
       s"""table w = (
          |  from documents
-         |  derive fp = s"CAST(conv(substr(md5(concat_ws(' ', slice($W, 1, 2))),1,15),16,10) AS BIGINT)"
+         |  derive fp = s"${hKeySpark(s"concat_ws(' ', slice($W, 1, 2))")}"
          |)
          |
          |table base = (
@@ -1152,11 +1148,11 @@ object PipelineRelational {
          |]
          |sort doc_id""".stripMargin,
 
-    // p44 pins the default budget (3000) and the md5 family.
+    // p44 pins the default budget (3000).
     "p44_token_budget" ->
       s"""table t = (
          |  from documents
-         |  select [doc_id, lang, n = s"size($W)", hk = s"${H("CAST(doc_id AS STRING)")}"]
+         |  select [doc_id, lang, n = s"size($W)", hk = s"${hSpark("CAST(doc_id AS STRING)")}"]
          |)
          |
          |table r = (
@@ -1213,8 +1209,8 @@ object PipelineRelational {
          |  filter s"doc_id IS NOT NULL AND n_chars IS NOT NULL"
          |  derive [
          |    weight = s"CAST(n_chars AS BIGINT)",
-         |    aes_key = s"-ln((${H("CAST(doc_id AS STRING)")} + 1) / 4294967296.0) / CAST(n_chars AS DOUBLE)",
-         |    b = s"pmod(${H("concat('s46_', CAST(doc_id AS STRING))")}, 8)",
+         |    aes_key = s"-ln((${hSpark("CAST(doc_id AS STRING)")} + 1) / 4294967296.0) / CAST(n_chars AS DOUBLE)",
+         |    b = s"pmod(${hSpark("concat('s46_', CAST(doc_id AS STRING))")}, 8)",
          |  ]
          |)
          |
@@ -1253,7 +1249,7 @@ object PipelineRelational {
          |
          |table occ = (
          |  from xp
-         |  derive lh = s"CAST(conv(substr(md5(line),1,15),16,10) AS BIGINT)"
+         |  derive lh = s"${hKeySpark("line")}"
          |  select [lh, doc_id]
          |  group [lh, doc_id] (take 1)
          |)
@@ -1278,7 +1274,7 @@ object PipelineRelational {
          |table out = (
          |  from dk
          |  join farr [k]
-         |  derive kept = s"filter(lines, l -> NOT array_contains(coalesce(arr, CAST(array() AS ARRAY<BIGINT>)), CAST(conv(substr(md5(l),1,15),16,10) AS BIGINT)))"
+         |  derive kept = s"filter(lines, l -> NOT array_contains(coalesce(arr, CAST(array() AS ARRAY<BIGINT>)), ${hKeySpark("l")}))"
          |)
          |
          |from out
@@ -1321,7 +1317,7 @@ object PipelineRelational {
     "p53_negative_sample" ->
       s"""table pool = (
          |  from embeddings
-         |  derive hk = s"${H("CAST(vec_id AS STRING)")}"
+         |  derive hk = s"${hSpark("CAST(vec_id AS STRING)")}"
          |  group [label] (
          |    sort [hk, vec_id]
          |    take 4
@@ -1352,7 +1348,7 @@ object PipelineRelational {
          |
          |table sel = (
          |  from x
-         |  derive enc = s"element_at(cands, CAST(1 + pmod(${H("concat(CAST(vec_id AS STRING), '_', CAST(slot AS STRING))")}, size(cands)) AS INT))"
+         |  derive enc = s"element_at(cands, CAST(1 + pmod(${hSpark("concat(CAST(vec_id AS STRING), '_', CAST(slot AS STRING))")}, size(cands)) AS INT))"
          |)
          |
          |from sel
@@ -1392,7 +1388,7 @@ object PipelineRelational {
          |
          |table g = (
          |  from g0
-         |  derive gh = s"CAST(conv(substr(md5(array_join(slice(words, pos, 8), ' ')),1,15),16,10) AS BIGINT)"
+         |  derive gh = s"${hKeySpark("array_join(slice(words, pos, 8), ' ')")}"
          |)
          |
          |table occ = (
@@ -1532,7 +1528,7 @@ object PipelineRelational {
          |
          |table s1 = (
          |  from sc
-         |  derive salt = s"pmod(${H("CAST(doc_id AS STRING)")}, 8)"
+         |  derive salt = s"pmod(${hSpark("CAST(doc_id AS STRING)")}, 8)"
          |)
          |
          |table loc = (
@@ -1635,7 +1631,7 @@ object PipelineRelational {
          |
          |table sg0 = (
          |  from aug
-         |  derive hw = s"transform($W, w -> ${H("w")})"
+         |  derive hw = s"transform($W, w -> ${hSpark("w")})"
          |)
          |
          |table sg = (
@@ -1710,7 +1706,7 @@ object PipelineRelational {
          |
          |table big = (
          |  from big0
-         |  derive slot = s"CAST(pmod(${H("element_at(words, i - 1)")}, 64) * 64 + pmod(${H("element_at(words, i)")}, 64) AS INT)"
+         |  derive slot = s"CAST(pmod(${hSpark("element_at(words, i - 1)")}, 64) * 64 + pmod(${hSpark("element_at(words, i)")}, 64) AS INT)"
          |  select [slot]
          |)
          |
@@ -1749,7 +1745,7 @@ object PipelineRelational {
          |  derive k = s"1"
          |  join warr [k]
          |  derive n = s"size(words)"
-         |  derive nll_micro_t = s"aggregate(sequence(2, size(words)), CAST(0 AS BIGINT), (acc, i) -> acc + element_at(arr, CAST(pmod(${H("element_at(words, i - 1)")}, 64) * 64 + pmod(${H("element_at(words, i)")}, 64) AS INT) + 1))"
+         |  derive nll_micro_t = s"aggregate(sequence(2, size(words)), CAST(0 AS BIGINT), (acc, i) -> acc + element_at(arr, CAST(pmod(${hSpark("element_at(words, i - 1)")}, 64) * 64 + pmod(${hSpark("element_at(words, i)")}, 64) AS INT) + 1))"
          |)
          |
          |from sc
@@ -1774,9 +1770,9 @@ object PipelineRelational {
          |  from t
          |  derive [
          |    n = s"size(words)",
-         |    gate = s"pmod(${H("concat('fim0|gate|', CAST(doc_id AS STRING))")}, 100)",
-         |    ca = s"pmod(${H("concat('fim0|a|', CAST(doc_id AS STRING))")}, size(words) + 1)",
-         |    cb = s"pmod(${H("concat('fim0|b|', CAST(doc_id AS STRING))")}, size(words) + 1)",
+         |    gate = s"pmod(${hSpark("concat('fim0|gate|', CAST(doc_id AS STRING))")}, 100)",
+         |    ca = s"pmod(${hSpark("concat('fim0|a|', CAST(doc_id AS STRING))")}, size(words) + 1)",
+         |    cb = s"pmod(${hSpark("concat('fim0|b|', CAST(doc_id AS STRING))")}, size(words) + 1)",
          |  ]
          |)
          |
@@ -1873,7 +1869,7 @@ object PipelineRelational {
     "p35_kmv_distinct" ->
       s"""table h = (
          |  from documents
-         |  select [lang, h = s"${H("text")}"]
+         |  select [lang, h = s"${hSpark("text")}"]
          |)
          |
          |from h
@@ -1975,7 +1971,7 @@ object PipelineRelational {
          |table occ = (
          |  from x0
          |  select [doc_id, pos = s"z.`0`", para = s"z.paras"]
-         |  derive ph = s"CAST(conv(substr(md5(para),1,15),16,10) AS BIGINT)"
+         |  derive ph = s"${hKeySpark("para")}"
          |)
          |
          |table firsts = (
@@ -2024,7 +2020,7 @@ object PipelineRelational {
          |
          |table big = (
          |  from big0
-         |  derive slot = s"CAST(pmod(${H("element_at(words, i - 1)")}, 64) * 64 + pmod(${H("element_at(words, i)")}, 64) AS INT)"
+         |  derive slot = s"CAST(pmod(${hSpark("element_at(words, i - 1)")}, 64) * 64 + pmod(${hSpark("element_at(words, i)")}, 64) AS INT)"
          |  select [lbl, slot]
          |)
          |
@@ -2063,7 +2059,7 @@ object PipelineRelational {
          |  derive k = s"1"
          |  join warr [k]
          |  derive n = s"size(words)"
-         |  derive lr = s"aggregate(sequence(2, size(words)), CAST(0 AS BIGINT), (acc, i) -> acc + element_at(arr, CAST(pmod(${H("element_at(words, i - 1)")}, 64) * 64 + pmod(${H("element_at(words, i)")}, 64) AS INT) + 1))"
+         |  derive lr = s"aggregate(sequence(2, size(words)), CAST(0 AS BIGINT), (acc, i) -> acc + element_at(arr, CAST(pmod(${hSpark("element_at(words, i - 1)")}, 64) * 64 + pmod(${hSpark("element_at(words, i)")}, 64) AS INT) + 1))"
          |)
          |
          |from sc
@@ -2081,7 +2077,7 @@ object PipelineRelational {
     // have no let-binding); the 'fim0' salt is the pinned default.
     "p65_span_corrupt" -> {
       def h(tag: String) =
-        H(s"concat('fim0|$tag|', CAST(doc_id AS STRING), '|', CAST(x.w AS STRING))")
+        hSpark(s"concat('fim0|$tag|', CAST(doc_id AS STRING), '|', CAST(x.w AS STRING))")
       s"""table t = (
          |  from documents
          |  derive words = s"$W"
@@ -2182,12 +2178,12 @@ object PipelineRelational {
          |
          |table gs = (
          |  from g
-         |  select [a_id = doc_id, sfx, skey = s"CAST(conv(substr(md5(sfx),1,15),16,10) AS BIGINT)"]
+         |  select [a_id = doc_id, sfx, skey = s"${hKeySpark("sfx")}"]
          |)
          |
          |table gp = (
          |  from g
-         |  select [b_id = doc_id, pfx, pkey = s"CAST(conv(substr(md5(pfx),1,15),16,10) AS BIGINT)"]
+         |  select [b_id = doc_id, pfx, pkey = s"${hKeySpark("pfx")}"]
          |)
          |
          |from gs
@@ -2305,7 +2301,7 @@ object PipelineRelational {
          |
          |table d1 = (
          |  from aug
-         |  derive kk = s"CAST(conv(substr(md5(text),1,15),16,10) AS BIGINT)"
+         |  derive kk = s"${hKeySpark("text")}"
          |  group [source, kk] (take 1)
          |  select [source, kk]
          |)
@@ -2370,7 +2366,7 @@ object PipelineRelational {
          |
          |table cix = (
          |  from pw
-         |  derive cx = s"coalesce(sum(CASE WHEN conv(substr(md5(word),1,15),16,10) % 8 = 0 THEN 1 ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"
+         |  derive cx = s"coalesce(sum(CASE WHEN ${hKeySpark("word")} % 8 = 0 THEN 1 ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"
          |)
          |
          |table chunks = (
@@ -2385,7 +2381,7 @@ object PipelineRelational {
          |
          |table keyed = (
          |  from chunks
-         |  derive kk = s"CAST(conv(substr(md5(ct),1,15),16,10) AS BIGINT)"
+         |  derive kk = s"${hKeySpark("ct")}"
          |)
          |
          |table stats = (
@@ -2422,7 +2418,7 @@ object PipelineRelational {
          |table q = (
          |  from aug
          |  derive [
-         |    ck = s"CAST(conv(substr(md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' '))),1,15),16,10) AS BIGINT)",
+         |    ck = s"${hKeySpark("trim(regexp_replace(lower(text), '[^a-z0-9]+', ' '))")}",
          |    quality_u = s"coalesce(CAST(length(regexp_replace(text, '[^A-Za-z0-9]+', '')) * 1000000 DIV NULLIF(length(text), 0) AS BIGINT), -1)",
          |  ]
          |)
@@ -2506,12 +2502,12 @@ object PipelineRelational {
          |
          |table ga = (
          |  from g
-         |  select [a_id = doc_id, a_text = text, a_nw = nw, sfx, ksfx = s"CAST(conv(substr(md5(sfx),1,15),16,10) AS BIGINT)"]
+         |  select [a_id = doc_id, a_text = text, a_nw = nw, sfx, ksfx = s"${hKeySpark("sfx")}"]
          |)
          |
          |table gb = (
          |  from g
-         |  select [b_id = doc_id, b_wds = wds, b_nw = nw, pfx, kpfx = s"CAST(conv(substr(md5(pfx),1,15),16,10) AS BIGINT)"]
+         |  select [b_id = doc_id, b_wds = wds, b_nw = nw, pfx, kpfx = s"${hKeySpark("pfx")}"]
          |)
          |
          |table pairs = (
@@ -2762,6 +2758,7 @@ object PipelineRelational {
     * from the session registry afterwards). */
   def registerKernels(spark: org.apache.spark.sql.SparkSession): Unit = {
     graft.functions.GraftFunctions.registerDot(spark)
+    graft.functions.GraftFunctions.registerMd5(spark)
     graft.functions.GraftFunctions.registerTopTerms(spark, PipelineOps.TopTerms)
     graft.functions.GraftFunctions.registerNfc(spark)
     graft.functions.GraftFunctions.registerKmv(spark, PipelineOps.KmvK)
@@ -2770,8 +2767,7 @@ object PipelineRelational {
     PipelineOps.registerJlPlanes(spark)
   }
 
-  /** The texts above hardcode the operators' DEFAULT knobs (hash family,
-    * fim salt, ppx threshold, simhash bands, substrK, chunk geometry,
+  /** The texts above hardcode the operators' DEFAULT knobs (fim salt, ppx threshold, simhash bands, substrK, chunk geometry,
     * quotas, budgets, …), while the live operators read them from session
     * config — so a gate comparing the two under a non-default config
     * would report false diffs (ADVICE r8). Every gate consumer
@@ -2779,8 +2775,7 @@ object PipelineRelational {
     * it UNSETS every `spark.graft.*` config present in the session —
     * sweeping the whole namespace rather than an enumerated list, so a
     * future knob cannot silently re-open the gap — pinning the
-    * comparison to defaults, the same contract `hashFamily`'s md5 gate
-    * pin states. Live deployments tune the knobs freely — only the
+    * comparison to defaults. Live deployments tune the knobs freely — only the
     * cross-backend comparison is default-pinned. */
   /** Execution-infrastructure configs that cannot change gate OUTPUTS —
     * unsetting them would silently revert a cluster's reliable-barrier

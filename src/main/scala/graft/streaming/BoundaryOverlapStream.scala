@@ -11,15 +11,14 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   * directed pair (a continued by b) as soon as BOTH sides have arrived
   * within the watermark horizon, without reprocessing the corpus.
   *
-  * Gram arithmetic is IDENTICAL to batch p69 under the session's
-  * `spark.graft.hashFamily`: the same [[graft.pipeline.PipelineOps.BoundaryK]]
+  * Gram arithmetic is IDENTICAL to batch p69: the same [[graft.pipeline.PipelineOps.BoundaryK]]
   * first-/last-K word grams (array slices — no K× explode), the same
   * 60-bit gram shuffle key ([[graft.pipeline.PipelineOps.hKeySpark]]), the
   * same exact-string verify on key-colliding candidates, and the same
   * `overlap_sig` render ([[graft.pipeline.PipelineOps.hStrSpark]]) — the
   * constants and hash fragments are shared from PipelineOps, not copied,
-  * so a streamed pair is byte-identical to its batch self in either
-  * family (the LshPairsStream/CdcChunkStream rule).
+  * so a streamed pair is byte-identical to its batch self (the
+  * LshPairsStream/CdcChunkStream rule).
   *
   * State contract (the LshPairsStream shape): one state entry per gram
   * KEY holding the horizon residents on each side — (side, doc_id,
@@ -94,7 +93,7 @@ object BoundaryOverlapStream {
     requireCol(textCol); requireCol(idCol); requireCol(tsCol)
     val spark = docs.sparkSession
     import spark.implicits._
-    val hf = graft.pipeline.PipelineOps.hashFamily(spark)
+    graft.functions.GraftFunctions.registerMd5(spark)
     val residentCap = spark.conf.getOption("spark.graft.boundaryResidentCap")
       .map(_.toInt).getOrElse(ResidentCapDefault)
     require(residentCap >= 1, s"spark.graft.boundaryResidentCap must be >= 1, got $residentCap")
@@ -108,7 +107,7 @@ object BoundaryOverlapStream {
             named_struct('side', 's', 'gram', array_join(slice(__words, -$BoundaryK, $BoundaryK), ' ')),
             named_struct('side', 'p', 'gram', array_join(slice(__words, 1, $BoundaryK), ' ')))""")))
       .select(
-        F.expr(graft.pipeline.PipelineOps.hKeySpark("__e.gram", hf)).as("gkey"),
+        F.expr(graft.pipeline.PipelineOps.hKeySpark("__e.gram")).as("gkey"),
         F.col("__e.side").as("side"),
         F.col(idCol).cast("long").as("doc_id"),
         F.col(tsCol).cast("timestamp").as("ts"),
@@ -169,12 +168,12 @@ object BoundaryOverlapStream {
            AND s.doc_id != p.doc_id
           WHERE s.gram = p.gram""")
       }
-    // overlap_sig rendered by the SHARED family fragment, downstream of the
+    // overlap_sig rendered by the SHARED hash fragment, downstream of the
     // pairing (state carries the gram text, so the hash arithmetic lives in
     // one place — PipelineOps — for stream and batch alike)
     paired
       .withColumn("overlap_sig",
-        F.expr(graft.pipeline.PipelineOps.hStrSpark("gram", hf)))
+        F.expr(graft.pipeline.PipelineOps.hStrSpark("gram")))
       .select("a_id", "b_id", "ts_ms", "overlap_sig")
   }
 }

@@ -33,30 +33,16 @@ object CdcChunkStream {
 
   /** Array of CDC chunks of `textCol` — ONE sequential fold per document
     * (no explode, no window), chunk-identical to p73's posexplode+window
-    * formulation under the SAME hash family: same tokenization, same
-    * 60-bit boundary rule (md5 prefix or xxhash64 — ADVICE r9: the
-    * boundary must follow `spark.graft.hashFamily`, or a production
-    * xxhash64 deployment gets streamed chunks that silently diverge from
-    * batch p73's), same space-joined chunk text. The batch operator keeps
+    * formulation: same tokenization, same 60-bit boundary rule, same
+    * space-joined chunk text. The batch operator keeps
     * the window form because its corpus-wide rollup wants the positional
     * rows anyway; the stream wants the fold because ingest has no
-    * business shuffling. */
-  /** Family-resolving overload (ADVICE r10): a hardcoded `md5` default let
-    * any direct caller under an xxhash64 deployment silently reproduce the
-    * exact batch-vs-stream divergence the hf threading fixed — so the
-    * no-arg form resolves `spark.graft.hashFamily` from the ACTIVE session
-    * (loud if none), and the explicit-arg form remains for callers that
-    * already hold the resolved family. */
-  def chunks(textCol: String): Column =
-    chunks(textCol, graft.pipeline.PipelineOps.hashFamily(
-      org.apache.spark.sql.SparkSession.active))
-
-  def chunks(textCol: String, hf: String): Column = {
-    // p73's hKeySpark rule per family; xxhash64 can go negative, but
-    // (-k) % D = 0 ⟺ k % D = 0, so the boundary set matches batch
-    val bkey =
-      if (hf == "xxhash64") "xxhash64(zw)"
-      else s"CAST(conv(substr(md5(zw), 1, 15), 16, 10) AS BIGINT)"
+    * business shuffling. The boundary key's kernel is registered on the
+    * ACTIVE session (loud if none), the one a bare Column resolves in. */
+  def chunks(textCol: String): Column = {
+    graft.functions.GraftFunctions.registerMd5(org.apache.spark.sql.SparkSession.active)
+    // p73's hKeySpark rule, so the boundary set matches batch
+    val bkey = graft.pipeline.PipelineOps.hKeySpark("zw")
     // LINEAR formulation (r14, found by StreamingWideRowSpec's 10^6-token
     // monster): the original aggregate() fold array_append-ed each closed
     // chunk onto the accumulator — an immutable-array COPY per boundary,
@@ -104,16 +90,12 @@ object CdcChunkStream {
     requireCol(textCol); requireCol(tsCol)
     require(!docs.columns.contains("chunk") && !docs.columns.contains("chunk_sig"),
       "novelChunks: input already has a 'chunk'/'chunk_sig' column; rename it")
-    // the session's hash family drives BOTH the boundary rule and the
-    // signature (the LshPairsStream rule: streamed chunks must agree with
-    // batch p73 under whichever family the deployment runs)
-    val hf = graft.pipeline.PipelineOps.hashFamily(docs.sparkSession)
-    val sig =
-      if (hf == "xxhash64") F.expr("CAST(xxhash64(chunk) AS STRING)")
-      else F.md5(F.col("chunk"))
+    // boundary rule and signature are p73's (the LshPairsStream rule:
+    // streamed chunks must agree with batch p73)
+    graft.functions.GraftFunctions.registerMd5(docs.sparkSession)
     val chunked = docs
-      .withColumn("chunk", F.explode(chunks(textCol, hf)))
-      .withColumn("chunk_sig", sig)
+      .withColumn("chunk", F.explode(chunks(textCol)))
+      .withColumn("chunk_sig", F.expr(graft.pipeline.PipelineOps.hStrSpark("chunk")))
       .drop(textCol)
     if (docs.isStreaming)
       chunked.withWatermark(tsCol, watermarkDelay)

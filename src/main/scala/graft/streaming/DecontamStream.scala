@@ -45,7 +45,7 @@ object DecontamStream {
     requireCol(docs, textCol, "docs"); requireCol(docs, idCol, "docs")
     requireCol(evalDocs, textCol, "evalDocs")
     val spark = docs.sparkSession
-    val hf = PipelineOps.hashFamily(spark)
+    graft.functions.GraftFunctions.registerMd5(spark)
     val minW = PipelineOps.decontamMinWords
     // one bounded driver-side action over the SMALL side only (the
     // sanctioned class: eval suites are fixed-size; the corpus never
@@ -57,7 +57,7 @@ object DecontamStream {
     // during an unbounded collect
     val GramCap = 1 << 22
     val earr: Array[Long] = evalDocs
-      .select(F.expr(PipelineOps.decontamWordHashExpr(textCol, hf)).as("hw"))
+      .select(F.expr(PipelineOps.decontamWordHashExpr(textCol)).as("hw"))
       .where(s"size(hw) >= $minW")
       .select(F.explode(F.expr(PipelineOps.decontamGramExpr("hw"))).as("g"))
       .distinct()
@@ -69,7 +69,7 @@ object DecontamStream {
         "suite - use batch p21's chunked path (spark.graft.decontamBuckets) " +
         "or a stream-static bucket join instead")
     docs
-      .withColumn("hw", F.expr(PipelineOps.decontamWordHashExpr(textCol, hf)))
+      .withColumn("hw", F.expr(PipelineOps.decontamWordHashExpr(textCol)))
       .where(s"size(hw) >= $minW")
       .withColumn("gs", F.expr(PipelineOps.decontamGramExpr("hw")))
       .withColumn("earr", F.typedLit(earr.toSeq))

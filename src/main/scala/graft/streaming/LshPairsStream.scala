@@ -8,12 +8,11 @@ import org.apache.spark.sql.{DataFrame, Dataset, functions => F}
   * arriving document is checked against the recent corpus WITHOUT
   * reprocessing it.
   *
-  * Signature arithmetic is IDENTICAL to batch p04 under the session's
-  * `spark.graft.hashFamily` (same shingles, same family shingle hash,
-  * same (a·x+b) mod P permutations via the `graft_minhash` kernel, same
-  * 8×2 banding — the constants and hash render are shared from
-  * PipelineOps, not copied), so a streamed document lands in exactly the
-  * band buckets its batch self would, in EITHER family. What CHANGES is the
+  * Signature arithmetic is IDENTICAL to batch p04 (same shingles, same
+  * shingle hash, same (a·x+b) mod P permutations via the `graft_minhash`
+  * kernel, same 8×2 banding — the constants and hash render are shared
+  * from PipelineOps, not copied), so a streamed document lands in exactly
+  * the band buckets its batch self would. What CHANGES is the
   * verify: batch p04 re-joins the shingle sets and computes TRUE Jaccard
   * on candidates; a stream cannot hold shingle sets for every horizon
   * document, so the verify is the standard bounded-state substitute —
@@ -82,10 +81,7 @@ object LshPairsStream {
       s"LshPairsStream.pairs: minAgree must be in [1, $MinhashK], got $minAgree")
     val spark = docs.sparkSession
     import spark.implicits._
-    // the SESSION's hash family, like every batch operator — a deployment
-    // on xxhash64 gets streamed buckets that agree with its batch p04
-    // (hashFamily registers the md5 kernel when that family is active)
-    val hf = graft.pipeline.PipelineOps.hashFamily(spark)
+    graft.functions.GraftFunctions.registerMd5(spark)
     graft.functions.GraftFunctions.registerMinhash(spark,
       hashA.toArray, hashB.toArray, MinhashP)
     // a row without an id or event time cannot enter the band state (the
@@ -93,7 +89,7 @@ object LshPairsStream {
     // before the branch, so batch and stream see identical rows
     val guarded = NullGuard(docs, "lsh_pairs", Seq(idCol, tsCol))
     // p04's sig chain, column-native (no UDF): words -> distinct 3-shingles
-    // -> family hash mod P -> graft_minhash kernel. Docs under 3 words have
+    // -> shingle hash mod P -> graft_minhash kernel. Docs under 3 words have
     // no shingle set and are filtered exactly like batch p04's WHERE.
     val sigged = guarded
       .withColumn("__words", F.expr(s"split(trim($textCol), '\\\\s+')"))
@@ -102,7 +98,7 @@ object LshPairsStream {
         "array_distinct(transform(sequence(1, size(__words) - 2), " +
           "i -> concat(element_at(__words, i), ' ', element_at(__words, i + 1), ' ', element_at(__words, i + 2))))"))
       .withColumn("__hs", F.expr(
-        s"transform(__sh, s -> pmod(${graft.pipeline.PipelineOps.hSpark("s", hf)}, $MinhashP))"))
+        s"transform(__sh, s -> pmod(${graft.pipeline.PipelineOps.hSpark("s")}, $MinhashP))"))
       .withColumn("sig", F.expr("graft_minhash(__hs)"))
       .withColumn("doc_id", F.col(idCol).cast("long"))
       .withColumn("ts", F.col(tsCol).cast("timestamp"))

@@ -30,7 +30,7 @@ import org.apache.spark.sql.{functions => F}
   * The dedup key is `xxhash64(para)` — decisions depend only on paragraph
   * string equality (any collision-negligible hash yields the identical
   * decision set), so the stream needs no session kernel registration and
-  * cross-checks against batch p63 regardless of its hash family.
+  * cross-checks against batch p63.
   *
   * On a static DataFrame the same function degrades to EXACTLY the p63
   * mark phase: keep iff the occurrence's packed doc_id*2^32+pos is the

@@ -36,11 +36,6 @@ import org.apache.spark.sql.{functions => F}
   */
 object SketchStream {
 
-  /** p35's md5-family 32-bit hash of the sketched column (the
-    * engine-portable hash that makes the sketch deterministic). */
-  def sketchHash(col: String): org.apache.spark.sql.Column =
-    F.expr(s"CAST(conv(substr(md5($col), 1, 8), 16, 10) AS BIGINT)")
-
   /** Per-group distinct-count estimate of `textCol` values. Streaming
     * input: update-mode aggregation, one O(k) sketch per group in the
     * state store, estimate refines as batches arrive. Batch input: the
@@ -53,7 +48,11 @@ object SketchStream {
     requireCol(groupCol); requireCol(textCol)
     require(k >= 2, s"kmvDistinctByGroup: k must be >= 2, got $k")
     graft.functions.GraftFunctions.registerKmv(docs.sparkSession, k)
-    docs.select(F.col(groupCol), sketchHash(textCol).as("__kmv_h"))
+    graft.functions.GraftFunctions.registerMd5(docs.sparkSession)
+    // p35's 32-bit hash of the sketched column (the engine-portable hash
+    // that makes the sketch deterministic)
+    docs.select(F.col(groupCol),
+        F.expr(graft.pipeline.PipelineOps.hSpark(textCol)).as("__kmv_h"))
       .groupBy(groupCol)
       .agg(F.expr("graft_kmv(__kmv_h)").as("kmv_est"))
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, Row}
   * pipeline wants repaired on arrival).
   *
   * Shape: the docs stream feeds BoundaryOverlapStream's per-gram-key
-  * pairing state (same horizon, caps, and hash family); each micro-batch
+  * pairing state (same horizon and caps); each micro-batch
   * of completed stitch pairs then joins back to `docStore` — the
   * batch-readable view of the ingested corpus (the sink this same
   * pipeline writes) — and [[graft.pipeline.PipelineOps.p76MergeOn]]
@@ -59,11 +59,11 @@ object StitchMergeStream {
     * as the batch operator, so the two cannot drift. */
   def mergedBatch(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
     val spark = docs.sparkSession
-    val hf = graft.pipeline.PipelineOps.hashFamily(spark)
+    graft.functions.GraftFunctions.registerMd5(spark)
     val storeView = freshStoreView()
     docs.selectExpr(s"$idCol AS doc_id", s"$textCol AS text")
       .createOrReplaceTempView(storeView)
-    spark.sql(graft.pipeline.PipelineOps.p76SparkOn(storeView, hf))
+    spark.sql(graft.pipeline.PipelineOps.p76SparkOn(storeView))
   }
 
   /** Start the streaming consumer. `docs` must be a streaming frame with
@@ -79,7 +79,6 @@ object StitchMergeStream {
       "use mergedBatch for static relations")
     require(claimHorizonMs > 0, s"claimHorizonMs must be positive, got $claimHorizonMs")
     val spark = docs.sparkSession
-    val hf = graft.pipeline.PipelineOps.hashFamily(spark)
     val storeView = freshStoreView()
     // id -> completion ts of the claim; evicted past the claim horizon
     val claimedA = scala.collection.mutable.Map.empty[Long, Long]
@@ -149,7 +148,7 @@ object StitchMergeStream {
             F.struct(F.length(F.col("text")), F.col("text"))).as("text"))
         store.createOrReplaceGlobalTempView(storeView)
         val winners = sess.sql(
-          graft.pipeline.PipelineOps.p76MergeOn(PairsView, s"global_temp.$storeView", hf))
+          graft.pipeline.PipelineOps.p76MergeOn(PairsView, s"global_temp.$storeView"))
           .collect() // the merge output — the driver needs it for claims
         winners.foreach { r =>
           val ts = r.getLong(4)

@@ -32,17 +32,11 @@ import org.apache.spark.sql.{functions => F}
   */
 object WeightedReservoirStream {
 
-  /** p46's A-ES key: -ln((h+1)/2^32)/w over the session hash family's
-    * 32-bit uniform (md5-prefix default; `xxhash64` matches batch p46
-    * under `spark.graft.hashFamily=xxhash64` — the wrapper reads the live
-    * config so the stream NEVER selects a different sample than batch). */
-  def aesKey(idCol: String, weightCol: String,
-             hashFamily: String = "md5"): org.apache.spark.sql.Column = {
-    require(hashFamily == "md5" || hashFamily == "xxhash64",
-      s"aesKey: hashFamily must be md5|xxhash64, got $hashFamily")
-    val h =
-      if (hashFamily == "xxhash64") s"pmod(xxhash64(CAST($idCol AS STRING)), 4294967296)"
-      else s"CAST(conv(substr(md5(CAST($idCol AS STRING)),1,8),16,10) AS BIGINT)"
+  /** p46's A-ES key: -ln((h+1)/2^32)/w over p46's 32-bit uniform
+    * ([[graft.pipeline.PipelineOps.hSpark]]), so the stream NEVER selects
+    * a different sample than batch. */
+  def aesKey(idCol: String, weightCol: String): org.apache.spark.sql.Column = {
+    val h = graft.pipeline.PipelineOps.hSpark(s"CAST($idCol AS STRING)")
     F.expr(s"-ln(($h + 1) / 4294967296.0) / CAST($weightCol AS DOUBLE)")
   }
 
@@ -59,11 +53,11 @@ object WeightedReservoirStream {
     requireCol(groupCol); requireCol(idCol); requireCol(weightCol)
     require(k >= 1, s"weightedSampleByGroup: k must be >= 1, got $k")
     graft.functions.GraftFunctions.registerAesTopK(docs.sparkSession, k)
-    val hf = docs.sparkSession.conf.getOption("spark.graft.hashFamily").getOrElse("md5")
+    graft.functions.GraftFunctions.registerMd5(docs.sparkSession)
     // NULL id/weight rows are excluded — batch p46's explicit rule
     docs.where(F.col(idCol).isNotNull && F.col(weightCol).isNotNull)
       .select(F.col(groupCol),
-        aesKey(idCol, weightCol, hf).as("__aes_key"),
+        aesKey(idCol, weightCol).as("__aes_key"),
         F.col(idCol).cast("long").as("__aes_id"),
         F.col(weightCol).cast("long").as("__aes_w"))
       .groupBy(groupCol)

@@ -7,6 +7,7 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GRO
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.spark.sql.catalyst.expressions.{Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
@@ -72,6 +73,16 @@ object GraftPlanBridge {
     session.sharedState.cacheManager.lookupCachedData(classicDf)
       .map(cd => classic.Dataset.ofRows(session, cd.cachedRepresentation))
   }
+
+  /** Byte sizes of the files a file-source scan reads, from the relation's
+    * own file index — the listing Spark already did on its FileSystem when
+    * the DataFrame was built (so `file:`, `hdfs:`, `s3a:` and bare local
+    * paths alike), with the index's own data-file rule (hidden `_`/`.`
+    * names and empty files skipped). Empty when `df` scans no file source. */
+  def scanFileSizes(df: DataFrame): Seq[Long] =
+    analyzed(df).collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }.toSeq
+      .flatMap(_.listFiles(Nil, Nil)).flatMap(_.files).map(_.getLen)
 
   /** Whether `path` exists on its own Hadoop FileSystem (`file:`, `hdfs:`,
     * `s3a:` URIs and bare local paths alike), under the session's Hadoop

@@ -60,7 +60,7 @@ class BoilerplatePropertySpec extends AnyFunSuite {
       import spark.implicits._
       val Case(docs, dfMin) = caseGen.pureApply(Gen.Parameters.default, Seed(seedVal))
       docs.toDF("doc_id", "text").createOrReplaceTempView("documents")
-      val got = spark.sql(PipelineOps.p47Spark("md5", dfMin)).collect()
+      val got = spark.sql(PipelineOps.p47Spark(dfMin)).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
       val expected = bruteForce(docs, dfMin)
       assert(got == expected, s"seed $seedVal dfMin=$dfMin")

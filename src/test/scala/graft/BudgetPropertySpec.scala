@@ -48,7 +48,7 @@ class BudgetPropertySpec extends AnyFunSuite {
       val Corpus(docs, budget) = gen.pureApply(Gen.Parameters.default, Seed(seedVal))
       docs.map { case (id, lang, t) => (id, lang, Seq.fill(t)("w").mkString(" ")) }
         .toDF("doc_id", "lang", "text").createOrReplaceTempView("documents")
-      val got = spark.sql(PipelineOps.p44Spark("md5", budget)).collect()
+      val got = spark.sql(PipelineOps.p44Spark(budget)).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4), r.getLong(5))).toSeq
       val expected = brute(docs, budget)

@@ -51,7 +51,7 @@ class ChunkPropertySpec extends AnyFunSuite {
       val Case(docs, w, st) = caseGen.pureApply(Gen.Parameters.default, Seed(seedVal))
       docs.map { case (id, toks) => (id, toks.mkString(" ")) }
         .toDF("doc_id", "text").createOrReplaceTempView("documents")
-      val got = spark.sql(PipelineOps.p36Spark("md5", w, st)).collect()
+      val got = spark.sql(PipelineOps.p36Spark(w, st)).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
       val expected = bruteForce(docs, w, st)
       assert(got == expected, s"seed $seedVal w=$w st=$st")

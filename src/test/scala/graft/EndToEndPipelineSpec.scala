@@ -40,7 +40,7 @@ class EndToEndPipelineSpec extends AnyFunSuite {
     // stage 3: chunk ONLY the surviving documents — rebind the documents
     // view to the filtered set, exactly what a composing user writes
     docs.join(kept, "doc_id").createOrReplaceTempView("documents")
-    val chunks = spark.sql(PipelineOps.p36Spark("md5", 32, 16))
+    val chunks = spark.sql(PipelineOps.p36Spark(32, 16))
     val nChunks = chunks.count()
     val chunkDocs = chunks.select("doc_id").distinct().count()
     assert(chunkDocs == nKept, "every surviving doc must chunk, none resurrected")
@@ -90,7 +90,7 @@ class EndToEndPipelineSpec extends AnyFunSuite {
 
     // stage 3: FIM augmentation over exactly the surviving documents
     kept.createOrReplaceTempView("documents")
-    val fim = spark.sql(PipelineOps.p62Spark("md5", "fim0")).cache()
+    val fim = spark.sql(PipelineOps.p62Spark("fim0")).cache()
     assert(fim.count() == nKept, "one augmented row per survivor, none resurrected")
     val applied = fim.where($"fim_applied" === 1).count()
     assert(applied > 0 && applied < nKept, "both augmentation classes populated")
@@ -103,7 +103,7 @@ class EndToEndPipelineSpec extends AnyFunSuite {
 
     // stage 4: token-budget assembly on the same surviving view — the
     // budget must bind (usage <= budget) and count only surviving docs
-    val budget = spark.sql(PipelineOps.p44Spark("md5", 3000L))
+    val budget = spark.sql(PipelineOps.p44Spark(3000L))
     val rows = budget.collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

@@ -38,7 +38,6 @@ class KnobSweepSpec extends AnyFunSuite {
                           noBoundReason: String = "")
 
   private val registry: Map[String, Knob] = Map(
-    "spark.graft.hashFamily" -> Knob("p01_dedup_exact", Seq("sha1")),
     "spark.graft.barrier" -> Knob("p04_minhash_lsh", Seq("cache")),
     "spark.graft.checkpointDir" -> Knob("", Nil,
       "free path string; barrier=checkpoint without it raises a named " +

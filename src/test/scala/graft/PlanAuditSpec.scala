@@ -144,21 +144,25 @@ class PlanAuditSpec extends AnyFunSuite {
   test("scan spread: a single-file table >= 128 KiB round-robins to min(cores, bytes/64 KiB)") {
     val (path, bytes, nFiles) = sizedTable(3000, 1)
     assert(nFiles == 1 && bytes >= 2 * 65536, s"fixture: $nFiles files, $bytes bytes")
-    val plain = spark.read.parquet(path)
-    val spread = Graft.scanSpread(plain, path)
     val width = math.min(cores.toLong, bytes / 65536).toInt
-    assert(spreads(spread) == Seq(width -> Seq("t.parquet")),
-      s"expected one RoundRobinPartitioning($width) above the scan:\n" +
-        spread.queryExecution.sparkPlan)
-    assert(spread.collect().sortBy(_.getLong(0)).toSeq ==
-      plain.collect().sortBy(_.getLong(0)).toSeq, "the spread must not change rows")
+    // a file: URI sizes like the bare path (sizes come from the scan's own
+    // file index, not java.io.File)
+    for (p <- Seq(path, new java.io.File(path).toURI.toString)) {
+      val plain = spark.read.parquet(p)
+      val spread = Graft.scanSpread(plain)
+      assert(spreads(spread) == Seq(width -> Seq("t.parquet")),
+        s"$p: expected one RoundRobinPartitioning($width) above the scan:\n" +
+          spread.queryExecution.sparkPlan)
+      assert(spread.collect().sortBy(_.getLong(0)).toSeq ==
+        plain.collect().sortBy(_.getLong(0)).toSeq, "the spread must not change rows")
+    }
   }
 
   test("scan spread: a table under 32 KiB is left unchanged") {
     val (path, bytes, _) = sizedTable(100, 1)
     assert(bytes < 32768, s"fixture: $bytes bytes")
     val plain = spark.read.parquet(path)
-    assert(Graft.scanSpread(plain, path) eq plain)
+    assert(Graft.scanSpread(plain) eq plain)
   }
 
   test("scan spread: a table whose file count reaches the target is left unchanged") {
@@ -166,7 +170,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val target = math.min(cores.toLong, bytes / 65536)
     assert(target >= 2 && nFiles >= target, s"fixture: $nFiles files, $bytes bytes")
     val plain = spark.read.parquet(path)
-    assert(Graft.scanSpread(plain, path) eq plain)
+    assert(Graft.scanSpread(plain) eq plain)
   }
 
   test("scan spread at sf0.1: spread-on p18 exchanges above the documents scan, spread-off p01 does not") {
@@ -421,7 +425,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // kernel lives in the sig PRODUCER plan (consumers start from the
     // materialization barrier), so audit that plan directly.
     pipeline.PipelineOps.queries("p04_minhash_lsh")(spark, dir) // registers + views
-    val sigs = spark.sql(pipeline.PipelineOps.lshSigsSqlForAudit)
+    val sigs = spark.sql(pipeline.PipelineOps.lshSigsSql)
       .queryExecution.analyzed.toString.toLowerCase
     assert(sigs.contains("graftminhash"),
       s"sig computation should use the native kernel:\n${sigs.take(2000)}")
@@ -855,8 +859,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // a cartesian of two shuffled sides
     graft.functions.GraftFunctions.registerDot(spark)
     spark.read.parquet(s"$dir/embeddings.parquet").createOrReplaceTempView("embeddings")
-    val hf = pipeline.PipelineOps.hashFamily(spark)
-    val ranked = spark.sql(pipeline.PipelineOps.p67RankedSpark(hf))
+    graft.functions.GraftFunctions.registerMd5(spark)
+    val ranked = spark.sql(pipeline.PipelineOps.p67RankedSpark())
       .queryExecution.executedPlan.toString
     assert(ranked.contains("BroadcastExchange") || ranked.contains("BroadcastNestedLoopJoin"),
       s"the codebook must broadcast:\n$ranked")

@@ -8,8 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Streaming boundary-overlap (VERDICT r9 #8): the batch degradation must
   * be row-identical to batch p69 (plant off) on the same relation, the
   * streamed pairs must match in BOTH arrival orders, state must evict past
-  * the watermark on both sides, the exact-text verify must hold, and the
-  * xxhash64 family must flow through (no md5 in the plan). */
+  * the watermark on both sides, and the exact-text verify must hold. */
 class StreamingBoundaryOverlapSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -49,25 +48,6 @@ class StreamingBoundaryOverlapSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
       assert(got == p69, s"stream batch path $got != batch p69 $p69")
     } finally spark.conf.unset("spark.graft.plantFixtures")
-  }
-
-  test("the stream follows the session hash family: xxhash64 equals batch p69, no md5") {
-    spark.conf.set("spark.graft.hashFamily", "xxhash64")
-    try {
-      val df = BoundaryOverlapStream.pairs(batchDocs, "text", "doc_id", "ts")
-      assert(!df.queryExecution.analyzed.toString.toLowerCase.contains("md5("),
-        "xxhash64-family stream still hashes grams with md5 — batch p69 would diverge")
-      val got = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-      batchDocs.select("doc_id", "text").createOrReplaceTempView("documents")
-      spark.conf.set("spark.graft.plantFixtures", "false")
-      try {
-        val p69 = pipeline.PipelineOps.queries("p69_boundary_overlap")(spark, "unused")
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-        assert(got == p69 && got.nonEmpty, s"xxhash64: stream $got != batch $p69")
-        assert(got.forall(_._3.forall(c => c.isDigit || c == '-')),
-          "xxhash64 overlap_sig is a decimal string — hex means an md5 leaked through")
-      } finally spark.conf.unset("spark.graft.plantFixtures")
-    } finally spark.conf.unset("spark.graft.hashFamily")
   }
 
   import StreamingBoundaryOverlapSpec.D

@@ -47,21 +47,6 @@ class StreamingCdcChunkSpec extends AnyFunSuite {
     }
   }
 
-  test("no-arg chunks() resolves the SESSION hash family, not a hardcoded md5 (ADVICE r10)") {
-    val docs = spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
-    def seqs(c: org.apache.spark.sql.Column): Map[Long, Seq[String]] =
-      docs.select(F.col("doc_id"), c.as("cs")).collect()
-        .map(r => r.getLong(0) -> r.getSeq[String](1).toSeq).toMap
-    spark.conf.set("spark.graft.hashFamily", "xxhash64")
-    try {
-      val resolved = seqs(CdcChunkStream.chunks("text"))
-      assert(resolved == seqs(CdcChunkStream.chunks("text", "xxhash64")),
-        "no-arg form must follow the session family")
-      assert(resolved != seqs(CdcChunkStream.chunks("text", "md5")),
-        "xxhash64 boundaries must differ from md5's on this corpus or the check is vacuous")
-    } finally spark.conf.unset("spark.graft.hashFamily")
-  }
-
   test("batch path: kept signature set is the distinct chunk set; p73's dups are inside it") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .withColumn("ts", F.timestamp_micros(F.lit(0L)))
@@ -74,31 +59,6 @@ class StreamingCdcChunkSpec extends AnyFunSuite {
     val p73Sigs = pipeline.PipelineOps.queries("p73_cdc_chunks")(spark, dir)
       .select("chunk_sig").collect().map(_.getString(0)).toSet
     assert(p73Sigs.subsetOf(keptSigs), "p73's dup chunks are a subset of all chunks")
-  }
-
-  test("the stream follows the session hash family: xxhash64 agrees with batch p73, no md5") {
-    // ADVICE r9: the boundary rule and chunk_sig were pinned to md5 while
-    // batch p73 is family-parameterized — under the production knob the
-    // streamed chunks silently diverged from p73's. Under xxhash64 the
-    // stream plan must carry no md5, and batch p73's dup-chunk signatures
-    // (decimal xxhash64 strings) must be a subset of the streamed set —
-    // both fail against a md5-pinned stream (hex sigs, shifted boundaries).
-    spark.conf.set("spark.graft.hashFamily", "xxhash64")
-    try {
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-        .withColumn("ts", F.timestamp_micros(F.lit(0L)))
-      val kept = CdcChunkStream.novelChunks(docs, "text", "ts", "10 seconds")
-      val analyzed = kept.queryExecution.analyzed.toString.toLowerCase
-      assert(!analyzed.contains("md5("),
-        "xxhash64-family stream still chunks/signs with md5 — batch p73 would diverge")
-      val keptSigs = kept.select("chunk_sig").collect().map(_.getString(0)).toSet
-      val p73Sigs = pipeline.PipelineOps.queries("p73_cdc_chunks")(spark, dir)
-        .select("chunk_sig").collect().map(_.getString(0)).toSet
-      assert(p73Sigs.subsetOf(keptSigs),
-        "xxhash64 streamed chunk signatures must contain batch p73's dup chunks")
-      assert(keptSigs.forall(s => s.forall(c => c.isDigit || c == '-')),
-        "xxhash64 signatures are decimal strings — hex means an md5 leaked through")
-    } finally spark.conf.unset("spark.graft.hashFamily")
   }
 
   test("input validation: missing columns and chunk column clash are named errors") {

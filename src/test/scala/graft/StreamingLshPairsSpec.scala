@@ -51,17 +51,6 @@ class StreamingLshPairsSpec extends AnyFunSuite {
       s"stream candidates recall ${recalled}/${p04.size} of p04's true pairs — below 0.8")
   }
 
-  test("the stream follows the session hash family: xxhash64 plans carry no md5") {
-    spark.conf.set("spark.graft.hashFamily", "xxhash64")
-    try {
-      val df = LshPairsStream.pairs(docsWithTs(Int.MaxValue), "text", "doc_id", "ts")
-      val analyzed = df.queryExecution.analyzed.toString.toLowerCase
-      assert(!analyzed.contains("md5("),
-        "xxhash64-family stream still hashes shingles with md5 — batch p04 buckets would diverge")
-      assert(df.count() > 0, "family switch broke the band join")
-    } finally spark.conf.unset("spark.graft.hashFamily")
-  }
-
   test("streamed over shuffled uneven batches == batch replica when nothing evicts") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
