@@ -99,17 +99,25 @@ object Graft {
     * resolving a `from` submits no Spark job. The reference has no source
     * formats at all (it emits SQL text — SURVEY §2.9); the parquet-first
     * convention is the driver's, the rest are the formats a Spark-native
-    * engine reads without extra dependencies. */
-  def parquetCatalog(spark: SparkSession, dir: String): String => DataFrame =
+    * engine reads without extra dependencies.
+    *
+    * The parquet tables named in `spread` are read through [[scanSpread]];
+    * the caller chooses. By default nothing spreads, which is what the
+    * q01–q49 corpus, `compileDir` and the CLI get (r15 A/B: the relational
+    * corpus' per-row work is columnar-cheap, so one round-robin exchange
+    * of the rows costs more than the 1-task scan it fixes; q04/q05/q28/q33
+    * all read worse under the spread). The pipeline operators compiled
+    * from their PRQL text pass the tables their per-row HOF work reads
+    * (`PipelineOps.queries`). */
+  def parquetCatalog(spark: SparkSession, dir: String,
+                     spread: Set[String] = Set.empty): String => DataFrame =
     name => {
       def p(ext: String) = s"$dir/$name.$ext"
       def exists(ext: String) = GraftPlanBridge.pathExists(spark, p(ext))
-      // The PRQL path reads unspread (r15 A/B: the relational corpus'
-      // per-row work is columnar-cheap, so one round-robin exchange of the
-      // rows costs more than the 1-task scan it fixes; q04/q05/q28/q33 all
-      // read worse under the spread).
-      if (exists("parquet"))
-        normalizeEventTime(readParquet(spark, p("parquet")))
+      if (exists("parquet")) {
+        val df = readParquet(spark, p("parquet"))
+        normalizeEventTime(if (spread(name)) scanSpread(df) else df)
+      }
       else if (exists("orc"))
         // ORC ships in Spark's core jars (no extra dependency) and keeps
         // the full typed schema like parquet — same event-time treatment
@@ -187,7 +195,8 @@ object Graft {
     * tuned to local mode.
     *
     * Whether to spread is the caller's choice, fixed per operator in code
-    * (`PipelineOps.readSpread`).
+    * (`PipelineOps.readSpread`, or the `spread` tables of
+    * [[parquetCatalog]] for the operators compiled from PRQL).
     *
     * Results are unaffected: spread only changes row-to-partition
     * assignment. The corpus' own determinism rules (exact/decimal sums,

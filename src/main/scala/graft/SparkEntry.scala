@@ -742,7 +742,12 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
+    oracleSqlFor(pipeline.PipelineOps.OracleEmbeddingsN)
+
+  /** [[oracleSql]] for a corpus of `embeddingsN` embeddings
+    * (`PipelineOps.oracleSqlFor`); `oracleSql` is the gate scale's. */
+  def oracleSqlFor(embeddingsN: Long): Map[String, String] =
     prqlQueries.map { case (name, _, sql) => name -> sql }.toMap ++
-      pipeline.PipelineOps.oracleSql +
+      pipeline.PipelineOps.oracleSqlFor(embeddingsN) +
       ("q49_asof_transform" -> asofOracle)
 }

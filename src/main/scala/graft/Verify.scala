@@ -2,7 +2,8 @@ package graft
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json (at the data dir's embeddings count), for the
+  * DuckDB hash compare (`tools/compare.py`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -15,7 +16,11 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
+    // the oracle texts at the geometries the Spark side derives from this
+    // corpus' embeddings count (p08/p19/p22/p67/p79), so the compare holds
+    // at every scale, not only at the gate's
+    val embeddingsN = Graft.readParquet(spark, s"$sfDir/embeddings.parquet").count()
+    val json = SparkEntry.oracleSqlFor(embeddingsN)
       .map { case (k, v) => s"${util.Json.quote(k)}: ${util.Json.quote(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -78,10 +78,10 @@ object PipelineOps {
     * of |bucket|². The cap is far above any bucket size at test SF (whole
     * corpus < cap), so it never binds here — documented, not silent. */
   /** Embeddings row count at the driver's correctness-gate SF (sf0.01) —
-    * the static oracle SQL is generated at this operating point; the Spark
-    * side recomputes r from the live count and lands on the same value at
-    * the gate SF. */
-  private val OracleEmbeddingsN = 500L
+    * [[oracleSql]] is generated at this operating point; the Spark side
+    * recomputes r from the live count and lands on the same value at the
+    * gate SF. Other scales take [[oracleSqlFor]] of their own count. */
+  private[graft] val OracleEmbeddingsN = 500L
   private val SrpBands = 8
   private val SrpTargetBucket = 32
   private val SrpBitsMin = 4
@@ -239,10 +239,6 @@ object PipelineOps {
   // ---- p01: exact dedup ---------------------------------------------------
   // One hash shuffle; partial count map-side. Representative = min doc_id.
 
-  private def p01Spark = s"""
-    SELECT min(doc_id) AS doc_id, CAST(count(*) AS BIGINT) AS n_copies
-    FROM documents GROUP BY ${hStrSpark("lower(trim(text))")}
-    ORDER BY doc_id"""
   private val p01Duck = """
     SELECT min(doc_id) AS doc_id, CAST(count(*) AS BIGINT) AS n_copies
     FROM documents GROUP BY md5(lower(trim(text)))
@@ -251,16 +247,6 @@ object PipelineOps {
   // ---- p02: per-document text stats (tokens, quality signals) -------------
   // Pure map-side HOFs; ratios of exact ints.
 
-  private val p02Spark = s"""
-    WITH t AS (SELECT doc_id, text, $wordsSpark AS words FROM documents)
-    SELECT doc_id,
-      CAST(size(words) AS BIGINT) AS n_tokens,
-      CAST(size(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\\\s]', 0)) AS BIGINT) AS n_subtokens,
-      CAST(length(text) AS BIGINT) AS n_chars_m,
-      CAST(floor((CAST(length(regexp_replace(text, '\\\\s', '')) AS DOUBLE) / size(words)) * 1e4 + 0.5) AS DOUBLE) / 1e4 AS avg_tok_len,
-      CAST(floor((CAST(size(filter(words, w -> w IN ('the','a','of','and'))) AS DOUBLE) / size(words)) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS stop_ratio,
-      CAST(floor((CAST(size(filter(words, w -> length(w) <= 2)) AS DOUBLE) / size(words)) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS short_tok_ratio
-    FROM t ORDER BY doc_id"""
   private val p02Duck = s"""
     WITH t AS (SELECT doc_id, text, $wordsDuck AS words FROM documents)
     SELECT doc_id,
@@ -276,20 +262,6 @@ object PipelineOps {
   // groupBy(lang, source): exact int sums; double sums of ints < 2^53 are
   // exact, so avg is order-independent.
 
-  private val p03Spark = s"""
-    WITH w AS (SELECT lang, source, n_chars, $wordsSpark AS words FROM documents),
-    s AS (
-      SELECT lang, source, n_chars, size(words) AS n_tokens,
-        CAST(size(filter(words, w -> w IN ('the','a','of','and'))) AS DOUBLE)
-          / size(words) AS stop_ratio
-      FROM w)
-    SELECT lang, source,
-      CAST(count(*) AS BIGINT) AS n_docs,
-      CAST(floor((avg(CAST(n_chars AS DOUBLE))) * 1e4 + 0.5) AS DOUBLE) / 1e4 AS avg_chars,
-      CAST(floor((avg(CAST(n_tokens AS DOUBLE))) * 1e4 + 0.5) AS DOUBLE) / 1e4 AS avg_tokens,
-      CAST(floor((CAST(sum(CASE WHEN n_chars < 250 THEN 1 ELSE 0 END) AS DOUBLE) / count(*)) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS pct_short,
-      CAST(floor((CAST(sum(CASE WHEN stop_ratio >= 0.05 AND n_tokens >= 20 THEN 1 ELSE 0 END) AS DOUBLE) / count(*)) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS pct_quality
-    FROM s GROUP BY lang, source ORDER BY lang, source"""
   private val p03Duck = s"""
     WITH w AS (SELECT lang, source, n_chars, $wordsDuck AS words FROM documents),
     s AS (
@@ -515,27 +487,6 @@ object PipelineOps {
   // 32-bit simhash from word hashes; map-side HOFs only; n_same shows the
   // dedup-bucket usage. Exact integer arithmetic end to end.
 
-  private def p05Spark = s"""
-    WITH t AS (
-      SELECT doc_id, transform($wordsSpark, w -> ${hSpark("w")}) AS hw
-      FROM documents),
-    s AS (
-      -- single pass over the word hashes with a 32-counter array accumulator:
-      -- the md5 word hash is evaluated once per word (a per-bit fold would
-      -- re-inline the hash expression 32x after CollapseProject — 7x slower)
-      SELECT doc_id,
-        aggregate(
-          zip_with(
-            aggregate(hw, array_repeat(0, 32),
-              (acc, h) -> zip_with(acc, sequence(0, 31),
-                (a, j) -> a + IF((shiftright(h, j) & 1) = 1, 1, -1))),
-            sequence(0, 31),
-            (cnt, j) -> IF(cnt > 0, shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT))),
-          CAST(0 AS BIGINT), (a, x) -> a + x) AS simhash
-      FROM t)
-    SELECT doc_id, simhash,
-      CAST(count(*) OVER (PARTITION BY simhash) AS BIGINT) AS n_same
-    FROM s ORDER BY doc_id"""
   private val p05Duck = s"""
     WITH t AS (
       SELECT doc_id, list_transform($wordsDuck, w -> ${hDuck("w")}) AS hw
@@ -555,13 +506,6 @@ object PipelineOps {
   // Order-sensitive (complements the set-based simhash): left fold
   // acc = (acc*31 + h(word)) mod 1e9+7; acc*31 + h < 2^63.
 
-  private def p06Spark = s"""
-    WITH t AS (
-      SELECT doc_id, transform($wordsSpark, w -> ${hSpark("w")}) AS hw
-      FROM documents)
-    SELECT doc_id,
-      aggregate(hw, CAST(7 AS BIGINT), (acc, h) -> pmod(acc * 31 + h, 1000000007)) AS fingerprint
-    FROM t ORDER BY doc_id"""
   private val p06Duck = s"""
     WITH t AS (
       SELECT doc_id, list_transform($wordsDuck, w -> ${hDuck("w")}) AS hw
@@ -914,15 +858,6 @@ object PipelineOps {
   // Opaque binary payloads (here: utf-8 of text, standing in for image/audio
   // bytes) + typed metadata extraction, all SQL-expressible and map-side.
 
-  private def p09Spark = s"""
-    WITH m AS (SELECT doc_id, text, encode(text, 'UTF-8') AS bin FROM documents)
-    SELECT doc_id,
-      CAST(length(bin) AS BIGINT) AS n_bytes,
-      lower(substr(hex(bin), 1, 16)) AS header_hex,
-      ${hStrSpark("text")} AS checksum,
-      CAST(length(bin) % 640 AS BIGINT) AS fake_width,
-      CAST((length(bin) div 1000) + 1 AS BIGINT) AS fake_frames
-    FROM m ORDER BY doc_id"""
   private val p09Duck = """
     WITH m AS (SELECT doc_id, text, encode(text) AS bin FROM documents)
     SELECT doc_id,
@@ -1011,15 +946,6 @@ object PipelineOps {
   // (same binary sort order, count clamp, rank-key bytes, ascending top-k),
   // which paid an interpreted lambda + a ≤6-key array sort per distinct
   // term; VectorExpressionsSpec asserts equality against the HOF text
-  private val p14Spark = s"""
-    WITH w AS (SELECT doc_id, $wordsSpark AS words FROM documents),
-    k AS (
-      SELECT doc_id, graft_top_terms(words) AS keys
-      FROM w WHERE size(words) > 0)
-    SELECT doc_id,
-      concat_ws(',', transform(keys,
-        kk -> concat(substr(kk, 6), ':', CAST(99999 - CAST(substr(kk, 1, 5) AS INT) AS STRING)))) AS top_terms
-    FROM k ORDER BY doc_id"""
   private val p14Duck = s"""
     WITH w AS (SELECT doc_id, $wordsDuck AS words FROM documents),
     k AS (
@@ -1102,9 +1028,9 @@ object PipelineOps {
   private[graft] def chooseIvfMod(n: Long): Int =
     math.max(2L, math.round(math.sqrt(math.max(n, 1L).toDouble))).toInt
 
-  /** The static-oracle operating point — the DuckDB texts are generated at
-    * the gate corpus size (the [[OracleEmbeddingsN]] rule): the Spark side
-    * recomputes from the live count and lands on the same value there. */
+  /** The gate-scale operating point (the [[OracleEmbeddingsN]] rule): the
+    * Spark side recomputes from the live count and lands on the same value
+    * there. */
   private[graft] val OracleIvfMod: Int = chooseIvfMod(OracleEmbeddingsN)
 
   /** Live sampling rate for a session: `spark.graft.ivfCentroidMod`
@@ -1325,7 +1251,7 @@ object PipelineOps {
     else ivfIterative(spark, r, mod, np)._1
   }
 
-  private def ivfDuck(lloyd: Boolean = true, mod: Int = OracleIvfMod): String = {
+  private def ivfDuck(lloyd: Boolean = true, mod: Int): String = {
     def cos(ae: String, an: String, be: String, bn: String) =
       s"${dotDuck(ae, be)} / (sqrt($an) * sqrt($bn))"
     val centsFinal =
@@ -1395,7 +1321,7 @@ object PipelineOps {
 
   private def p19Spark(mod: Int, nprobe: Int) =
     ivfSpark(mod = mod, nprobe = nprobe)
-  private val p19Duck = ivfDuck()
+  private def p19Duck(mod: Int) = ivfDuck(mod = mod)
 
   /** The seed-codebook variant (no Lloyd round), for the refinement test:
     * recall with the refined codebook must hold or improve on this. */
@@ -1416,16 +1342,6 @@ object PipelineOps {
 
   private val SampleRatePerMille = 100 // 10%
 
-  private def p15Spark = s"""
-    WITH h AS (
-      SELECT lang, doc_id,
-        pmod(${hSpark("CAST(doc_id AS STRING)")}, 1000) AS bucket
-      FROM documents)
-    SELECT lang,
-      CAST(count(*) AS BIGINT) AS n_docs,
-      CAST(sum(CASE WHEN bucket < $SampleRatePerMille THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
-      CAST(sum(CASE WHEN bucket < $SampleRatePerMille THEN doc_id ELSE 0 END) AS BIGINT) AS sampled_id_sum
-    FROM h GROUP BY lang ORDER BY lang"""
   private val p15Duck = s"""
     WITH h AS (
       SELECT lang, doc_id,
@@ -1687,12 +1603,6 @@ object PipelineOps {
   // checksum of the cleaned text — the idempotent "canonical form" step that
   // feeds exact dedup. Map-side HOFs only.
 
-  private def p18Spark = s"""
-    WITH t AS (SELECT doc_id, $wordsSpark AS words FROM documents)
-    SELECT doc_id,
-      CAST(size(filter(words, w -> w IN ('a','the'))) AS BIGINT) AS n_removed,
-      ${hSpark("array_join(filter(words, w -> NOT w IN ('a','the')), ' ')")} AS clean_checksum
-    FROM t ORDER BY doc_id"""
   private val p18Duck = s"""
     WITH t AS (SELECT doc_id, $wordsDuck AS words FROM documents)
     SELECT doc_id,
@@ -2165,24 +2075,6 @@ object PipelineOps {
 
   private val MixtureBudgetPpm = 400000L // 40% of the corpus
 
-  private def p24Spark = s"""
-    WITH c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_g FROM documents GROUP BY lang),
-    tot AS (SELECT CAST(sum(n_g) AS BIGINT) AS n_total, CAST(count(*) AS BIGINT) AS n_grp FROM c),
-    rates AS (
-      SELECT c.lang, c.n_g,
-        least(CAST(1000000 AS BIGINT),
-          (t.n_total * $MixtureBudgetPpm) div (t.n_grp * c.n_g)) AS keep_ppm
-      FROM c CROSS JOIN tot t),
-    k AS (
-      SELECT d.lang, d.doc_id, r.n_g, r.keep_ppm,
-        (pmod(${hSpark("CAST(d.doc_id AS STRING)")}, 1000000) < r.keep_ppm) AS kept
-      FROM documents d JOIN rates r ON r.lang = d.lang)
-    SELECT lang,
-      CAST(max(n_g) AS BIGINT) AS n_docs,
-      CAST(max(keep_ppm) AS BIGINT) AS keep_ppm,
-      CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-      CAST(sum(CASE WHEN kept THEN doc_id ELSE 0 END) AS BIGINT) AS kept_id_sum
-    FROM k GROUP BY lang ORDER BY lang"""
 
   private val p24Duck = s"""
     WITH c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_g FROM documents GROUP BY lang),
@@ -2362,26 +2254,6 @@ object PipelineOps {
 
   private val Dup2gramFlagThresh = 0.04
 
-  private val p26Spark = s"""
-    WITH t AS (SELECT doc_id, $wordsSpark AS words FROM documents),
-    g AS (
-      SELECT doc_id, size(words) AS n1, size(array_distinct(words)) AS d1,
-        transform(sequence(1, size(words) - 1),
-          i -> concat(element_at(words, i), ' ', element_at(words, i + 1))) AS g2,
-        transform(sequence(1, size(words) - 2),
-          i -> concat(element_at(words, i), ' ', element_at(words, i + 1), ' ', element_at(words, i + 2))) AS g3
-      FROM t WHERE size(words) >= 3),
-    m AS (
-      SELECT doc_id, n1, d1,
-        size(g2) AS n2, size(array_distinct(g2)) AS d2,
-        size(g3) AS n3, size(array_distinct(g3)) AS d3
-      FROM g)
-    SELECT doc_id,
-      CAST(floor((CAST(n1 - d1 AS DOUBLE) / n1) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS dup_word_frac,
-      CAST(floor((CAST(n2 - d2 AS DOUBLE) / n2) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS dup_2gram_frac,
-      CAST(floor((CAST(n3 - d3 AS DOUBLE) / n3) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS dup_3gram_frac,
-      (CAST(floor((CAST(n2 - d2 AS DOUBLE) / n2) * 1e6 + 0.5) AS DOUBLE) / 1e6 > $Dup2gramFlagThresh) AS flagged
-    FROM m ORDER BY doc_id"""
 
   private val p26Duck = s"""
     WITH t AS (SELECT doc_id, $wordsDuck AS words FROM documents),
@@ -2585,16 +2457,6 @@ object PipelineOps {
   // dominates, which is why it must stay inside whole-stage codegen — no
   // UDF, no per-row driver work.
 
-  private val p31Spark = s"""
-    WITH e AS (
-      SELECT event_type, from_json(props, 'k INT').k AS k FROM events)
-    SELECT event_type,
-      CAST(count(*) AS BIGINT) AS n_events,
-      CAST(count(k) AS BIGINT) AS n_k,
-      CAST(sum(k) AS BIGINT) AS k_sum,
-      CAST(min(k) AS BIGINT) AS k_min,
-      CAST(max(k) AS BIGINT) AS k_max
-    FROM e GROUP BY event_type ORDER BY event_type"""
 
   private val p31Duck = s"""
     WITH e AS (
@@ -2618,12 +2480,6 @@ object PipelineOps {
   // documented engine-specific trade with no cross-engine oracle, which
   // is why the GATED operator is the exact one.
 
-  private val p32Spark = s"""
-    SELECT event_type,
-      CAST(count(*) AS BIGINT) AS n_events,
-      CAST(floor(percentile(value, 0.5D) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS p50,
-      CAST(floor(percentile(value, 0.95D) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS p95
-    FROM events GROUP BY event_type ORDER BY event_type"""
 
   private val p32Duck = s"""
     SELECT event_type,
@@ -2646,22 +2502,6 @@ object PipelineOps {
 
   private val TermDfMin = 2
 
-  private val p33Spark = s"""
-    WITH w AS (SELECT doc_id, $wordsSpark AS words FROM documents),
-    tf AS (
-      SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-      FROM (SELECT doc_id, explode(words) AS term FROM w)
-      GROUP BY doc_id, term),
-    s AS (
-      SELECT term,
-        CAST(count(*) AS BIGINT) AS df,
-        CAST(sum(tf) AS BIGINT) AS cf,
-        CAST(max(tf) AS BIGINT) AS max_tf
-      FROM tf GROUP BY term),
-    n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents)
-    SELECT s.term, s.df, s.cf, s.max_tf, n.n_docs
-    FROM s CROSS JOIN n
-    WHERE s.df >= $TermDfMin ORDER BY s.term"""
 
   private val p33Duck = s"""
     WITH w AS (SELECT doc_id, $wordsDuck AS words FROM documents),
@@ -2756,20 +2596,6 @@ object PipelineOps {
 
   private[graft] val KmvK = 64
 
-  private def p35Spark = s"""
-    WITH h AS (
-      SELECT lang, ${hSpark("text")} AS h FROM documents)
-    SELECT lang,
-      CAST(count(DISTINCT h) AS BIGINT) AS n_exact,
-      graft_kmv(h) AS kmv_est
-    FROM h GROUP BY lang ORDER BY lang"""
-
-  private def p35Run(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerKmv(spark, KmvK)
-    readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    graft.functions.GraftFunctions.registerMd5(spark)
-    spark.sql(p35Spark)
-  }
 
   private val p35Duck = s"""
     WITH h AS (
@@ -2797,8 +2623,8 @@ object PipelineOps {
   // Each chunk carries its token count and a content checksum, so
   // downstream exact dedup (p01) composes directly on chunks.
 
-  private val ChunkTokens = 32
-  private val ChunkStride = 16
+  private[graft] val ChunkTokens = 32
+  private[graft] val ChunkStride = 16
 
   /** Live window/stride knobs (`spark.graft.chunkTokens` /
     * `spark.graft.chunkStride`, defaults = the oracle operating point).
@@ -2817,24 +2643,6 @@ object PipelineOps {
     s
   }
 
-  private[graft] def p36Spark(w: Int, st: Int) = s"""
-    WITH toks AS (
-      SELECT doc_id, $wordsSpark AS t FROM documents),
-    st AS (
-      SELECT doc_id, t, st
-      FROM toks LATERAL VIEW explode(sequence(0, greatest(size(t) - 1, 0), $st)) s AS st)
-    SELECT doc_id, CAST(st div $st AS BIGINT) AS chunk_idx,
-      CAST(size(slice(t, st + 1, $w)) AS BIGINT) AS n_tok,
-      ${hStrSpark(s"concat_ws(' ', slice(t, st + 1, $w))")} AS chunk_hash
-    FROM st ORDER BY doc_id, chunk_idx"""
-
-  private def p36Run(spark: SparkSession, dir: String): DataFrame = {
-    val (w, st) = (chunkTokens(spark), chunkStride(spark))
-    require(st <= w, s"chunkStride $st must be <= chunkTokens $w (windows must tile)")
-    readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    graft.functions.GraftFunctions.registerMd5(spark)
-    spark.sql(p36Spark(w, st))
-  }
 
   private val p36Duck = s"""
     WITH toks AS (
@@ -3258,7 +3066,7 @@ object PipelineOps {
   // (p24's rates express proportions; this expresses absolute token
   // targets).
 
-  private val TokenBudget = 3000L
+  private[graft] val TokenBudget = 3000L
 
   /** Live budget knob (`spark.graft.tokenBudget`, default = the oracle
     * operating point; every gate language overflows it, so kept < total
@@ -3270,29 +3078,6 @@ object PipelineOps {
     b
   }
 
-  private[graft] def p44Spark(b: Long) = s"""
-    WITH t AS (
-      SELECT doc_id, lang, size($wordsSpark) AS n,
-        ${hSpark("CAST(doc_id AS STRING)")} AS hk
-      FROM documents),
-    r AS (
-      SELECT doc_id, lang, n,
-        sum(n) OVER (PARTITION BY lang ORDER BY hk, doc_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-      FROM t)
-    SELECT lang,
-      CAST(count(*) AS BIGINT) AS n_docs,
-      CAST(sum(n) AS BIGINT) AS tok_total,
-      CAST(sum(CASE WHEN cum <= $b THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-      CAST(sum(CASE WHEN cum <= $b THEN n ELSE 0 END) AS BIGINT) AS tok_kept,
-      CAST(sum(CASE WHEN cum <= $b THEN doc_id ELSE 0 END) AS BIGINT) AS kept_id_sum
-    FROM r GROUP BY lang ORDER BY lang"""
-
-  private def p44Run(spark: SparkSession, dir: String): DataFrame = {
-    readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    graft.functions.GraftFunctions.registerMd5(spark)
-    spark.sql(p44Spark(tokenBudget(spark)))
-  }
 
   private val p44Duck = s"""
     WITH t AS (
@@ -4580,16 +4365,6 @@ object PipelineOps {
   // before the output sort.
   private val BlockSoftMax = 4
 
-  private val p59Spark = s"""
-    WITH t AS (SELECT doc_id, $wordsSpark AS words FROM documents),
-    h AS (
-      SELECT doc_id,
-        CAST(CASE WHEN arrays_overlap(words, array('dup')) THEN 1 ELSE 0 END AS BIGINT) AS hard_hit,
-        CAST(size(filter(words, w -> w IN ('slow', 'big'))) AS BIGINT) AS soft_hits
-      FROM t)
-    SELECT doc_id, hard_hit, soft_hits,
-      CAST(CASE WHEN hard_hit = 0 AND soft_hits <= $BlockSoftMax THEN 1 ELSE 0 END AS BIGINT) AS keep
-    FROM h ORDER BY doc_id"""
 
   private val p59Duck = s"""
     WITH t AS (SELECT doc_id, $wordsDuck AS words FROM documents),
@@ -5428,8 +5203,9 @@ object PipelineOps {
   }
 
   /** Oracle: the identical algebra end-to-end in one statement (DuckDB has
-    * no barrier to respect); knobs pinned to defaults, as every oracle. */
-  private val p67Duck: String = {
+    * no barrier to respect) at codebook rate `mod`; knobs pinned to
+    * defaults, as every oracle. */
+  private def p67Duck(mod: Int): String = {
     def cos(ae: String, an: String, be: String, bn: String) =
       s"${dotDuck(ae, be)} / (sqrt($an) * sqrt($bn))"
     s"""
@@ -5437,7 +5213,7 @@ object PipelineOps {
       SELECT vec_id, embedding, ${norm2Duck("embedding")} AS n2 FROM embeddings),
     cents AS (
       SELECT vec_id AS c_id, embedding AS ce, n2 AS cn2 FROM e
-      WHERE CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % $OracleIvfMod = 0),
+      WHERE CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % $mod = 0),
     scored AS (
       SELECT v.vec_id, v.embedding, v.n2, c.c_id,
         ${cos("v.embedding", "v.n2", "c.ce", "c.cn2")} AS csim
@@ -5933,7 +5709,7 @@ object PipelineOps {
   /** Mixture temperature α in micro-units (`spark.graft.mixtureAlpha`,
     * default 0.3 — mT5's value). Spliced into the SQL as an exact decimal
     * literal so both backends see the identical constant. */
-  private val MixtureAlphaMicroDefault = 300000L
+  private[graft] val MixtureAlphaMicroDefault = 300000L
   private[graft] def mixtureAlphaMicro(spark: SparkSession): Long = {
     val a = spark.conf.getOption("spark.graft.mixtureAlpha")
       .map(v => math.round(v.toDouble * 1e6)).getOrElse(MixtureAlphaMicroDefault)
@@ -5941,11 +5717,10 @@ object PipelineOps {
       s"spark.graft.mixtureAlpha must be in (0, 1], got ${a / 1e6}")
     a
   }
-  private def alphaLit(alphaMicro: Long): String =
+  /** α as the exact SQL literal — the DuckDB text and the
+    * [[PipelineRelational.p75]] template both interpolate it. */
+  private[graft] def alphaLit(alphaMicro: Long): String =
     (BigDecimal(alphaMicro) / 1000000).bigDecimal.toPlainString
-  /** Default α as the exact SQL literal — PipelineRelational interpolates
-    * it into its covered text (the TfidfTopK one-source-of-truth rule). */
-  private[graft] def mixtureAlphaLitDefault: String = alphaLit(MixtureAlphaMicroDefault)
 
   // The totals come from EMPTY-frame windows over the G-row counts
   // relation, not a re-referenced CTE: Spark inlines CTEs, so a totals
@@ -5967,7 +5742,6 @@ object PipelineOps {
       CAST(floor(1e6 * (qs / qsum) * n_total / n_g + 0.5) AS BIGINT) AS boost_u
     FROM w ORDER BY lang"""
 
-  private def p75Spark(alphaMicro: Long) = p75Sql(alphaMicro)
   private val p75Duck = p75Sql(MixtureAlphaMicroDefault)
 
   // ---- p76: boundary-stitch merge transform -----------------------------------
@@ -6577,16 +6351,36 @@ object PipelineOps {
       spark.sql(sql)
     }
 
+  /** PRQL wiring: the operator IS its [[PipelineRelational]] text, compiled
+    * by the engine's own front end over the `dir` parquet catalog, which
+    * reads the `spread` tables through the scan spread (the same
+    * per-operator choice as `spread = true` on the SQL wirings). `text`
+    * reads the session once per build, so the knob-reading templates see
+    * the live values. */
+  private def onPrql(text: SparkSession => String,
+                     spread: Set[String] = Set.empty): (SparkSession, String) => DataFrame =
+    (spark, dir) => {
+      PipelineRelational.registerKernels(spark)
+      graft.Graft.compile(text(spark), spark, graft.Graft.parquetCatalog(spark, dir, spread))
+    }
+
+  /** The default-knob text of `name` — the operator for every text that
+    * reads no knob. */
+  private def prql(name: String): SparkSession => String =
+    _ => PipelineRelational.prql(name)
+
+  private val Docs = Set("documents")
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p01_dedup_exact" -> onDocs(p01Spark),
-    "p02_text_stats" -> onDocs(p02Spark),
-    "p03_lang_quality" -> onDocs(p03Spark),
+    "p01_dedup_exact" -> onPrql(prql("p01_dedup_exact")),
+    "p02_text_stats" -> onPrql(prql("p02_text_stats")),
+    "p03_lang_quality" -> onPrql(prql("p03_lang_quality")),
     "p04_minhash_lsh" -> ((spark, dir) => p04Run(spark, dir)),
-    "p05_simhash" -> onDocs(p05Spark, spread = true),
-    "p06_fingerprint" -> onDocs(p06Spark),
+    "p05_simhash" -> onPrql(prql("p05_simhash"), Docs),
+    "p06_fingerprint" -> onPrql(prql("p06_fingerprint")),
     "p07_cosine_topk" -> onEmb(p07Spark),
     "p08_ann_srp_lsh" -> ((spark, dir) => p08Run(spark, dir)),
-    "p09_media_meta" -> onDocs(p09Spark),
+    "p09_media_meta" -> onPrql(prql("p09_media_meta")),
     // typed mapPartitions decode plumbing — deterministic stub "decoder";
     // the rollup is all-integer so p10Duck recomputes it exactly (hash gate)
     "p10_media_decode" -> ((spark, dir) => MediaOps.decodeFeatures(spark, dir)),
@@ -6597,32 +6391,33 @@ object PipelineOps {
         .createOrReplaceTempView("events")
       spark.sql(p13Spark)
     }),
-    "p14_top_terms" -> ((spark, dir) => {
-      graft.functions.GraftFunctions.registerTopTerms(spark, TopTerms)
-      onDocs(p14Spark, spread = true)(spark, dir)
-    }),
-    "p15_sample_stratified" -> onDocs(p15Spark),
+    "p14_top_terms" -> onPrql(prql("p14_top_terms"), Docs),
+    "p15_sample_stratified" -> onPrql(prql("p15_sample_stratified")),
     "p16_dedup_clusters" -> ((spark, dir) => p16Run(spark, dir)),
     "p17_quality_filter" -> onDocs(p17Spark, spread = true),
-    "p18_text_clean" -> onDocs(p18Spark, spread = true),
+    "p18_text_clean" -> onPrql(prql("p18_text_clean"), Docs),
     "p19_ann_ivf" -> (p19Run(_, _)),
     "p20_curation" -> ((spark, dir) => p20Run(spark, dir)),
     "p21_decontam" -> ((spark, dir) => p21Run(spark, dir)),
     "p22_embed_dedup" -> ((spark, dir) => p22Run(spark, dir)),
     "p23_pack_sequences" -> ((spark, dir) => p23Run(spark, dir)),
-    "p24_mixture_sample" -> onDocs(p24Spark),
+    "p24_mixture_sample" -> onPrql(prql("p24_mixture_sample")),
     "p25_embed_quant" -> ((spark, dir) => p25Run(spark, dir)),
-    "p26_repetition" -> onDocs(p26Spark, spread = true),
+    "p26_repetition" -> onPrql(prql("p26_repetition"), Docs),
     "p27_shuffle_shard" -> ((spark, dir) => p27Run(spark, dir)),
     "p28_contamination_matrix" -> ((spark, dir) => p28Run(spark, dir)),
     "p29_media_resize" -> ((spark, dir) => MediaOps.resizeFeatures(spark, dir)),
     "p30_frame_sample" -> ((spark, dir) => MediaOps.frameSampleFeatures(spark, dir)),
-    "p31_event_props" -> onEvents(p31Spark),
-    "p32_event_percentiles" -> onEvents(p32Spark),
-    "p33_term_stats" -> onDocs(p33Spark),
+    "p31_event_props" -> onPrql(prql("p31_event_props")),
+    "p32_event_percentiles" -> onPrql(prql("p32_event_percentiles")),
+    "p33_term_stats" -> onPrql(prql("p33_term_stats")),
     "p34_asof_join" -> onEvents(p34Spark),
-    "p35_kmv_distinct" -> ((spark, dir) => p35Run(spark, dir)),
-    "p36_chunk_sliding" -> ((spark, dir) => p36Run(spark, dir)),
+    "p35_kmv_distinct" -> onPrql(prql("p35_kmv_distinct")),
+    "p36_chunk_sliding" -> onPrql { spark =>
+      val (w, st) = (chunkTokens(spark), chunkStride(spark))
+      require(st <= w, s"chunkStride $st must be <= chunkTokens $w (windows must tile)")
+      PipelineRelational.p36(w, st)
+    },
     "p37_domain_quota" -> ((spark, dir) => p37Run(spark, dir)),
     "p38_pii_redact" -> onDocsP(p38Spark, spread = true),
     "p39_incremental_dedup" -> ((spark, dir) => p39Run(spark, dir)),
@@ -6630,7 +6425,7 @@ object PipelineOps {
     "p41_audio_decode" -> ((spark, dir) => MediaOps.audioFeatures(spark, dir)),
     "p42_split_assign" -> ((spark, dir) => p42Run(spark, dir)),
     "p43_unicode_nfc" -> ((spark, dir) => p43Run(spark, dir)),
-    "p44_token_budget" -> ((spark, dir) => p44Run(spark, dir)),
+    "p44_token_budget" -> onPrql(spark => PipelineRelational.p44(tokenBudget(spark))),
     "p45_url_normalize" -> onDocsP(p45Spark),
     "p46_weighted_sample" -> ((spark, dir) => p46Run(spark, dir)),
     "p47_boilerplate_lines" -> ((spark, dir) => p47Run(spark, dir)),
@@ -6645,7 +6440,7 @@ object PipelineOps {
     "p56_bm25" -> onDocs(p56Spark, spread = true),
     "p57_jl_project" -> ((spark, dir) => p57Run(spark, dir)),
     "p58_html_extract" -> onDocsP(p58Spark, spread = true),
-    "p59_blocklist" -> onDocs(p59Spark),
+    "p59_blocklist" -> onPrql(prql("p59_blocklist")),
     "p60_simhash_pairs" -> ((spark, dir) => p60Run(spark, dir)),
     "p61_bigram_ppx" -> ((spark, dir) => {
       readSpread(spark, s"$dir/documents.parquet", spread = true).createOrReplaceTempView("documents")
@@ -6677,10 +6472,7 @@ object PipelineOps {
     "p72_source_overlap" -> onDocsP(p72Spark),
     "p73_cdc_chunks" -> onDocs(p73Spark),
     "p74_cluster_rep" -> onDocsP(p74Spark),
-    "p75_mixture_weights" -> ((spark, dir) => {
-      readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-      spark.sql(p75Spark(mixtureAlphaMicro(spark)))
-    }),
+    "p75_mixture_weights" -> onPrql(spark => PipelineRelational.p75(mixtureAlphaMicro(spark))),
     "p76_stitch_merge" -> onDocsP(p76Spark, spread = true),
     "p77_bitext_margin" -> ((spark, dir) =>
       onEmb(p77Spark(bitextKnnK(spark)), spread = true)(spark, dir)),
@@ -6690,95 +6482,103 @@ object PipelineOps {
     "p81_dist_drift" -> ((spark, dir) => p81Run(spark, dir)),
   )
 
-  def oracleSql: Map[String, String] = Map(
-    "p01_dedup_exact" -> p01Duck,
-    "p02_text_stats" -> p02Duck,
-    "p03_lang_quality" -> p03Duck,
-    "p04_minhash_lsh" -> p04Duck,
-    "p05_simhash" -> p05Duck,
-    "p06_fingerprint" -> p06Duck,
-    "p07_cosine_topk" -> p07Duck,
-    // the driver's DuckDB gate runs at sf0.01, whose embeddings corpus is
-    // [[OracleEmbeddingsN]] rows; the Spark side derives the identical
-    // (r, b) from the actual count, so the two sides agree by construction
-    // at the gate SF (chooseSrpGeometry(500) = (4, 8), the same operating
-    // point as every prior round; the CTE text was reformulated in r8 —
-    // hash-verified value-identical — see the srpCtesDuck note)
-    "p08_ann_srp_lsh" -> (p08Duck _).tupled(chooseSrpGeometry(OracleEmbeddingsN)),
-    "p09_media_meta" -> p09Duck,
-    "p10_media_decode" -> p10Duck,
-    "p11_ngram_jaccard" -> p11Duck,
-    "p12_lang_id" -> p12Duck,
-    "p13_sessionize" -> p13Duck,
-    "p14_top_terms" -> p14Duck,
-    "p15_sample_stratified" -> p15Duck,
-    "p16_dedup_clusters" -> p16Duck,
-    "p17_quality_filter" -> p17Duck,
-    "p18_text_clean" -> p18Duck,
-    "p19_ann_ivf" -> p19Duck,
-    "p20_curation" -> p20Duck,
-    "p21_decontam" -> p21Duck,
-    // geometry derivation mirrors the p08 oracle note above
-    "p22_embed_dedup" -> (p22Duck _).tupled(chooseSrpGeometry(OracleEmbeddingsN)),
-    "p23_pack_sequences" -> p23Duck,
-    "p24_mixture_sample" -> p24Duck,
-    "p25_embed_quant" -> p25Duck,
-    "p26_repetition" -> p26Duck,
-    "p27_shuffle_shard" -> p27Duck,
-    "p28_contamination_matrix" -> p28Duck,
-    "p29_media_resize" -> p29Duck,
-    "p30_frame_sample" -> p30Duck,
-    "p31_event_props" -> p31Duck,
-    "p32_event_percentiles" -> p32Duck,
-    "p33_term_stats" -> p33Duck,
-    "p34_asof_join" -> p34Duck,
-    "p35_kmv_distinct" -> p35Duck,
-    "p36_chunk_sliding" -> p36Duck,
-    "p37_domain_quota" -> p37Duck,
-    "p38_pii_redact" -> p38Duck,
-    "p39_incremental_dedup" -> p39Duck,
-    "p40_rare_token_score" -> p40Duck,
-    "p41_audio_decode" -> p41Duck,
-    "p42_split_assign" -> p42Duck,
-    "p43_unicode_nfc" -> p43Duck,
-    "p44_token_budget" -> p44Duck,
-    "p45_url_normalize" -> p45Duck,
-    "p46_weighted_sample" -> p46Duck,
-    "p47_boilerplate_lines" -> p47Duck,
-    "p48_bloom_dedup" -> p48Duck,
-    "p49_embed_outlier" -> p49Duck,
-    "p50_bpe_learn" -> p50Duck,
-    "p51_bpe_tokenize" -> p51Duck,
-    "p52_snapshot_diff" -> p52Duck,
-    "p53_negative_sample" -> p53Duck,
-    "p54_substring_dedup" -> p54Duck,
-    "p55_nb_quality" -> p55Duck,
-    "p56_bm25" -> p56Duck,
-    "p57_jl_project" -> p57Duck,
-    "p58_html_extract" -> p58Duck,
-    "p59_blocklist" -> p59Duck,
-    "p60_simhash_pairs" -> p60Duck,
-    "p61_bigram_ppx" -> p61Duck,
-    "p62_fim_transform" -> p62Duck,
-    "p63_paragraph_dedup" -> p63Duck,
-    "p64_dsir_select" -> p64Duck,
-    "p65_span_corrupt" -> p65Duck,
-    "p66_softdedup_weights" -> p66Duck,
-    "p67_semantic_dedup" -> p67Duck,
-    "p68_tokenizer_fertility" -> p68Duck,
-    "p69_boundary_overlap" -> p69Duck,
-    "p70_mojibake_score" -> p70Duck,
-    "p71_tfidf_keywords" -> p71Duck,
-    "p72_source_overlap" -> p72Duck,
-    "p73_cdc_chunks" -> p73Duck,
-    "p74_cluster_rep" -> p74Duck,
-    "p75_mixture_weights" -> p75Duck,
-    "p76_stitch_merge" -> p76Duck,
-    "p77_bitext_margin" -> p77Duck,
-    "p78_calibration_bins" -> p78Duck,
-    // geometry derivation mirrors the p08 oracle note above
-    "p79_bitext_ann" -> (p79Duck _).tupled(chooseSrpGeometry(OracleEmbeddingsN)),
-    "p80_quality_auc" -> p80Duck,
-    "p81_dist_drift" -> p81Duck,
-  )
+  /** The DuckDB oracle texts at the correctness gate's scale
+    * ([[OracleEmbeddingsN]] embeddings). */
+  def oracleSql: Map[String, String] = oracleSqlFor(OracleEmbeddingsN)
+
+  /** The DuckDB oracle texts for a corpus of `embeddingsN` embeddings: the
+    * count-derived geometries (SRP (r, b) for p08/p22/p79, the IVF
+    * codebook rate for p19/p67) are the ones the Spark side derives from
+    * the same count, so the oracle holds at every scale, not only at the
+    * gate's. */
+  def oracleSqlFor(embeddingsN: Long): Map[String, String] = {
+    val srp = chooseSrpGeometry(embeddingsN)
+    val ivfMod = chooseIvfMod(embeddingsN)
+    Map(
+      "p01_dedup_exact" -> p01Duck,
+      "p02_text_stats" -> p02Duck,
+      "p03_lang_quality" -> p03Duck,
+      "p04_minhash_lsh" -> p04Duck,
+      "p05_simhash" -> p05Duck,
+      "p06_fingerprint" -> p06Duck,
+      "p07_cosine_topk" -> p07Duck,
+      // at the gate SF chooseSrpGeometry(500) = (4, 8), the same operating
+      // point as every prior round (the CTE text was reformulated in r8 —
+      // hash-verified value-identical — see the srpCtesDuck note)
+      "p08_ann_srp_lsh" -> (p08Duck _).tupled(srp),
+      "p09_media_meta" -> p09Duck,
+      "p10_media_decode" -> p10Duck,
+      "p11_ngram_jaccard" -> p11Duck,
+      "p12_lang_id" -> p12Duck,
+      "p13_sessionize" -> p13Duck,
+      "p14_top_terms" -> p14Duck,
+      "p15_sample_stratified" -> p15Duck,
+      "p16_dedup_clusters" -> p16Duck,
+      "p17_quality_filter" -> p17Duck,
+      "p18_text_clean" -> p18Duck,
+      "p19_ann_ivf" -> p19Duck(ivfMod),
+      "p20_curation" -> p20Duck,
+      "p21_decontam" -> p21Duck,
+      "p22_embed_dedup" -> (p22Duck _).tupled(srp),
+      "p23_pack_sequences" -> p23Duck,
+      "p24_mixture_sample" -> p24Duck,
+      "p25_embed_quant" -> p25Duck,
+      "p26_repetition" -> p26Duck,
+      "p27_shuffle_shard" -> p27Duck,
+      "p28_contamination_matrix" -> p28Duck,
+      "p29_media_resize" -> p29Duck,
+      "p30_frame_sample" -> p30Duck,
+      "p31_event_props" -> p31Duck,
+      "p32_event_percentiles" -> p32Duck,
+      "p33_term_stats" -> p33Duck,
+      "p34_asof_join" -> p34Duck,
+      "p35_kmv_distinct" -> p35Duck,
+      "p36_chunk_sliding" -> p36Duck,
+      "p37_domain_quota" -> p37Duck,
+      "p38_pii_redact" -> p38Duck,
+      "p39_incremental_dedup" -> p39Duck,
+      "p40_rare_token_score" -> p40Duck,
+      "p41_audio_decode" -> p41Duck,
+      "p42_split_assign" -> p42Duck,
+      "p43_unicode_nfc" -> p43Duck,
+      "p44_token_budget" -> p44Duck,
+      "p45_url_normalize" -> p45Duck,
+      "p46_weighted_sample" -> p46Duck,
+      "p47_boilerplate_lines" -> p47Duck,
+      "p48_bloom_dedup" -> p48Duck,
+      "p49_embed_outlier" -> p49Duck,
+      "p50_bpe_learn" -> p50Duck,
+      "p51_bpe_tokenize" -> p51Duck,
+      "p52_snapshot_diff" -> p52Duck,
+      "p53_negative_sample" -> p53Duck,
+      "p54_substring_dedup" -> p54Duck,
+      "p55_nb_quality" -> p55Duck,
+      "p56_bm25" -> p56Duck,
+      "p57_jl_project" -> p57Duck,
+      "p58_html_extract" -> p58Duck,
+      "p59_blocklist" -> p59Duck,
+      "p60_simhash_pairs" -> p60Duck,
+      "p61_bigram_ppx" -> p61Duck,
+      "p62_fim_transform" -> p62Duck,
+      "p63_paragraph_dedup" -> p63Duck,
+      "p64_dsir_select" -> p64Duck,
+      "p65_span_corrupt" -> p65Duck,
+      "p66_softdedup_weights" -> p66Duck,
+      "p67_semantic_dedup" -> p67Duck(ivfMod),
+      "p68_tokenizer_fertility" -> p68Duck,
+      "p69_boundary_overlap" -> p69Duck,
+      "p70_mojibake_score" -> p70Duck,
+      "p71_tfidf_keywords" -> p71Duck,
+      "p72_source_overlap" -> p72Duck,
+      "p73_cdc_chunks" -> p73Duck,
+      "p74_cluster_rep" -> p74Duck,
+      "p75_mixture_weights" -> p75Duck,
+      "p76_stitch_merge" -> p76Duck,
+      "p77_bitext_margin" -> p77Duck,
+      "p78_calibration_bins" -> p78Duck,
+      "p79_bitext_ann" -> (p79Duck _).tupled(srp),
+      "p80_quality_auc" -> p80Duck,
+      "p81_dist_drift" -> p81Duck,
+    )
+  }
 }

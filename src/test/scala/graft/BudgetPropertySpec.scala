@@ -1,14 +1,15 @@
 package graft
 
-import graft.pipeline.PipelineOps
+import graft.pipeline.PipelineRelational
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property test for p44: over random corpora (random languages, token
-  * counts, doc ids) and random budgets, the SQL running-sum funnel equals
-  * a Scala brute-force greedy prefix in the same md5-hash order. Fixed
-  * seeds, same offline pattern as the other property specs. */
+  * counts, doc ids) and random budgets, the running-sum funnel (p44's
+  * PRQL template, compiled by the front end) equals a Scala brute-force
+  * greedy prefix in the same md5-hash order. Fixed seeds, same offline
+  * pattern as the other property specs. */
 class BudgetPropertySpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -48,7 +49,7 @@ class BudgetPropertySpec extends AnyFunSuite {
       val Corpus(docs, budget) = gen.pureApply(Gen.Parameters.default, Seed(seedVal))
       docs.map { case (id, lang, t) => (id, lang, Seq.fill(t)("w").mkString(" ")) }
         .toDF("doc_id", "lang", "text").createOrReplaceTempView("documents")
-      val got = spark.sql(PipelineOps.p44Spark(budget)).collect()
+      val got = Graft.compileSession(PipelineRelational.p44(budget), spark).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4), r.getLong(5))).toSeq
       val expected = brute(docs, budget)

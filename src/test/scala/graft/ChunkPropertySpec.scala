@@ -1,15 +1,16 @@
 package graft
 
-import graft.pipeline.PipelineOps
+import graft.pipeline.PipelineRelational
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property test for p36: over random corpora and random (window, stride)
-  * geometries with stride <= window, the SQL chunker equals a Scala
-  * brute-force sliding-window reference — chunk count, indices, token
-  * counts, and content hashes. Fixed seeds, like PackingPropertySpec
-  * (no scalatestplus bridge offline). */
+  * geometries with stride <= window, the chunker (p36's PRQL template,
+  * compiled by the front end) equals a Scala brute-force sliding-window
+  * reference — chunk count, indices, token counts, and content hashes.
+  * Fixed seeds, like PackingPropertySpec (no scalatestplus bridge
+  * offline). */
 class ChunkPropertySpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -51,7 +52,7 @@ class ChunkPropertySpec extends AnyFunSuite {
       val Case(docs, w, st) = caseGen.pureApply(Gen.Parameters.default, Seed(seedVal))
       docs.map { case (id, toks) => (id, toks.mkString(" ")) }
         .toDF("doc_id", "text").createOrReplaceTempView("documents")
-      val got = spark.sql(PipelineOps.p36Spark(w, st)).collect()
+      val got = Graft.compileSession(PipelineRelational.p36(w, st), spark).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
       val expected = bruteForce(docs, w, st)
       assert(got == expected, s"seed $seedVal w=$w st=$st")

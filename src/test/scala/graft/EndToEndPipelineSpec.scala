@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{PipelineOps, Sinks}
+import graft.pipeline.{PipelineOps, PipelineRelational, Sinks}
 import org.apache.spark.sql.{functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -40,7 +40,7 @@ class EndToEndPipelineSpec extends AnyFunSuite {
     // stage 3: chunk ONLY the surviving documents — rebind the documents
     // view to the filtered set, exactly what a composing user writes
     docs.join(kept, "doc_id").createOrReplaceTempView("documents")
-    val chunks = spark.sql(PipelineOps.p36Spark(32, 16))
+    val chunks = Graft.compileSession(PipelineRelational.p36(32, 16), spark)
     val nChunks = chunks.count()
     val chunkDocs = chunks.select("doc_id").distinct().count()
     assert(chunkDocs == nKept, "every surviving doc must chunk, none resurrected")
@@ -103,7 +103,7 @@ class EndToEndPipelineSpec extends AnyFunSuite {
 
     // stage 4: token-budget assembly on the same surviving view — the
     // budget must bind (usage <= budget) and count only surviving docs
-    val budget = spark.sql(PipelineOps.p44Spark(3000L))
+    val budget = Graft.compileSession(PipelineRelational.p44(3000L), spark)
     val rows = budget.collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

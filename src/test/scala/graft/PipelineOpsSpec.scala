@@ -2835,4 +2835,20 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
     assert(SparkEntry.entry(spark).count() > 0)
   }
+
+  test("oracle texts follow the embeddings count: only the five count-derived oracles move") {
+    assert(SparkEntry.oracleSqlFor(500L) == SparkEntry.oracleSql)
+    val gate = PipelineOps.oracleSql
+    val sf01 = PipelineOps.oracleSqlFor(2000L) // the sf0.1 embeddings count
+    assert(sf01.keySet == gate.keySet)
+    assert(gate.keySet.filter(k => gate(k) != sf01(k)) == Set("p08_ann_srp_lsh",
+      "p19_ann_ivf", "p22_embed_dedup", "p67_semantic_dedup", "p79_bitext_ann"))
+    // the IVF codebook rate the Spark side derives from the same count
+    val (gateMod, sf01Mod) = (PipelineOps.chooseIvfMod(500L), PipelineOps.chooseIvfMod(2000L))
+    assert((gateMod, sf01Mod) == ((22, 45)))
+    for (k <- Seq("p19_ann_ivf", "p67_semantic_dedup")) {
+      assert(gate(k).contains(s"% $gateMod = 0") && !gate(k).contains(s"% $sf01Mod = 0"), k)
+      assert(sf01(k).contains(s"% $sf01Mod = 0") && !sf01(k).contains(s"% $gateMod = 0"), k)
+    }
+  }
 }

@@ -177,14 +177,16 @@ class PlanAuditSpec extends AnyFunSuite {
     val sf = s"${new java.io.File(dir).getParent}/sf0.1" // next to the gate-scale data
     val width = math.min(cores.toLong,
       new java.io.File(s"$sf/documents.parquet").length / 65536).toInt
-    try {
-      val p18 = spreads(pipeline.PipelineOps.queries("p18_text_clean")(spark, sf))
-      assert(p18 == Seq(width -> Seq("documents.parquet")),
-        s"p18: expected one RoundRobinPartitioning($width) above the documents scan, got $p18")
-      val p01 = spreads(pipeline.PipelineOps.queries("p01_dedup_exact")(spark, sf))
-      assert(p01.isEmpty, s"p01 reads unspread, got $p01")
-    } finally
-      spark.read.parquet(s"$dir/documents.parquet").createOrReplaceTempView("documents")
+    // both operators compile their PRQL text; the catalog read spreads
+    // the tables the operator names and no others
+    val p18 = spreads(pipeline.PipelineOps.queries("p18_text_clean")(spark, sf))
+    assert(p18 == Seq(width -> Seq("documents.parquet")),
+      s"p18: expected one RoundRobinPartitioning($width) above the documents scan, got $p18")
+    val p01 = spreads(pipeline.PipelineOps.queries("p01_dedup_exact")(spark, sf))
+    assert(p01.isEmpty, s"p01 reads unspread, got $p01")
+    // the default catalog (q01-q49, compileDir, the CLI) reads unspread
+    val plain = spreads(Graft.compileDir("from documents\nselect [doc_id, text]", spark, sf))
+    assert(plain.isEmpty, s"compileDir reads unspread, got $plain")
   }
 
   test("the barrier property holds under every spark.graft.barrier mode") {

@@ -63,7 +63,10 @@ class WideRowSpec extends AnyFunSuite {
     out
   }
 
+  /** Planting off, p47/p54/p63 read the session's `documents` relation
+    * (the deployment contract), so bind it to the monster corpus. */
   private def withRealStructure[T](body: => T): T = {
+    spark.read.parquet(s"$dir/documents.parquet").createOrReplaceTempView("documents")
     spark.conf.set("spark.graft.plantFixtures", "false")
     try body finally spark.conf.unset("spark.graft.plantFixtures")
   }
