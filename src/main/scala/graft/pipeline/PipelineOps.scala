@@ -522,21 +522,6 @@ object PipelineOps {
   private val TopK = 5
   private val NQueries = 20
 
-  private val p07Spark = s"""
-    WITH e AS (
-      SELECT vec_id, embedding, ${norm2Spark("embedding")} AS n2 FROM embeddings),
-    q AS (
-      SELECT vec_id AS q_id, embedding AS qe, n2 AS qn2 FROM e WHERE vec_id < $NQueries),
-    scored AS (
-      SELECT q.q_id, e.vec_id AS nn_id,
-        ${dotSpark("q.qe", "e.embedding")} / (sqrt(q.qn2) * sqrt(e.n2)) AS cos
-      FROM q JOIN e ON e.vec_id != q.q_id),
-    ranked AS (
-      SELECT q_id, nn_id, cos,
-        row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, nn_id) AS rn
-      FROM scored)
-    SELECT q_id, nn_id, CAST(rn AS BIGINT) AS rank, CAST(floor((cos) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS sim
-    FROM ranked WHERE rn <= $TopK ORDER BY q_id, rank"""
   private val p07Duck = s"""
     WITH e AS (
       SELECT vec_id, embedding, ${norm2Duck("embedding")} AS n2 FROM embeddings),
@@ -765,19 +750,6 @@ object PipelineOps {
   // within each source) — the verification primitive of p04 exposed as its
   // own operator. Pairing by key join, never all-pairs.
 
-  private val p11Spark = s"""
-    WITH w AS (SELECT doc_id, source, $wordsSpark AS words FROM documents),
-    sh AS (
-      SELECT doc_id, source,
-        row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn,
-        array_distinct(transform(sequence(1, size(words) - 2),
-          i -> concat(element_at(words, i), ' ', element_at(words, i + 1), ' ', element_at(words, i + 2)))) AS s
-      FROM w WHERE size(words) >= 3)
-    SELECT a.doc_id AS ida, b.doc_id AS idb,
-      CAST(floor((CAST(size(array_intersect(a.s, b.s)) AS DOUBLE)
-        / (size(a.s) + size(b.s) - size(array_intersect(a.s, b.s)))) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS jaccard
-    FROM sh a JOIN sh b ON b.rn = a.rn + 1 AND a.source = b.source
-    ORDER BY ida"""
   private val p11Duck = s"""
     WITH w AS (SELECT doc_id, source, $wordsDuck AS words FROM documents),
     sh AS (
@@ -968,24 +940,6 @@ object PipelineOps {
 
   private val SessionGapUs = 4L * 3600 * 1000000
 
-  private val p13Spark = s"""
-    WITH e AS (
-      SELECT user_id, event_id, unix_micros(ts) AS tus FROM events),
-    flagged AS (
-      SELECT user_id, event_id, tus,
-        CASE WHEN lag(tus) OVER w IS NULL
-                  OR tus - lag(tus) OVER w > $SessionGapUs THEN 1 ELSE 0 END AS new_s
-      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
-    sess AS (
-      SELECT user_id, tus,
-        SUM(new_s) OVER (PARTITION BY user_id ORDER BY tus, event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      FROM flagged)
-    SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-      CAST(count(*) AS BIGINT) AS n_events,
-      CAST(max(tus) - min(tus) AS BIGINT) AS span_us
-    FROM sess GROUP BY user_id, session_id
-    ORDER BY user_id, session_id"""
   private val p13Duck = s"""
     WITH e AS (
       SELECT user_id, event_id, epoch_us(ts) AS tus FROM events),
@@ -1560,24 +1514,6 @@ object PipelineOps {
   // (natural-language signal), distinct-token ratio (repetition detector).
   // Map-side only; reasons are first-match so the output is deterministic.
 
-  private val p17Spark = s"""
-    WITH t AS (SELECT doc_id, $wordsSpark AS words FROM documents),
-    s AS (
-      SELECT doc_id, size(words) AS n_tokens,
-        CAST(size(filter(words, w -> w IN ('the','a','of','and'))) AS DOUBLE)
-          / size(words) AS stop_ratio,
-        CAST(size(array_distinct(words)) AS DOUBLE) / size(words) AS distinct_ratio
-      FROM t WHERE size(words) > 0)
-    SELECT doc_id,
-      CASE WHEN n_tokens < 30 OR n_tokens > 300 THEN 'length'
-           WHEN stop_ratio < 0.02 THEN 'stopword'
-           WHEN distinct_ratio < 0.3 THEN 'repetition'
-           ELSE 'ok' END AS reason,
-      (CASE WHEN n_tokens < 30 OR n_tokens > 300 THEN 'length'
-            WHEN stop_ratio < 0.02 THEN 'stopword'
-            WHEN distinct_ratio < 0.3 THEN 'repetition'
-            ELSE 'ok' END = 'ok') AS keep
-    FROM s ORDER BY doc_id"""
   private val p17Duck = s"""
     WITH t AS (SELECT doc_id, $wordsDuck AS words FROM documents),
     s AS (
@@ -1957,7 +1893,7 @@ object PipelineOps {
   // bookkeeping).
 
   private val PackWindowTokens = 256
-  private val PackChunkDocsDefault = 64L
+  private[graft] val PackChunkDocsDefault = 64L
   /** Upper bound on the chunk COUNT when the divisor is derived from the
     * id span ([[derivePackChunkDocs]]): the chunk-totals relation is at
     * most this many rows whatever the id distribution. 4096 rows × 16
@@ -1985,52 +1921,15 @@ object PipelineOps {
     * are divisor-invariant by the chunk-decomposition property
     * (PackingPropertySpec), so the derivation never changes the answer,
     * only the plan's balance. */
-  private[graft] def derivePackChunkDocs(spark: SparkSession): Long = {
-    val row = spark.sql(
-      "SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM documents").collect()(0)
+  private[graft] def derivePackChunkDocs(spark: SparkSession, documents: DataFrame): Long = {
+    import org.apache.spark.sql.functions.{max, min}
+    val row = documents.agg(min("doc_id"), max("doc_id")).collect()(0)
     val floor = packChunkDocs(spark)
     if (row.isNullAt(0)) floor // empty corpus: any divisor works
     else {
       val span = row.getLong(1) - row.getLong(0) + 1
       math.max(floor, (span + PackMaxChunks - 1) / PackMaxChunks)
     }
-  }
-
-  private[graft] def p23Spark(chunkDocs: Long) = s"""
-    WITH t AS (
-      SELECT doc_id, CAST(doc_id AS BIGINT) div $chunkDocs AS chunk,
-        CAST(size($wordsSpark) AS BIGINT) AS tok
-      FROM documents),
-    intra AS (
-      SELECT doc_id, chunk, tok,
-        sum(tok) OVER (PARTITION BY chunk ORDER BY doc_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_in
-      FROM t),
-    ctot AS (SELECT chunk, sum(tok) AS ct FROM t GROUP BY chunk),
-    coff AS (
-      SELECT chunk, sum(ct) OVER (ORDER BY chunk
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ct AS chunk_off
-      FROM ctot),
-    o AS (
-      SELECT i.doc_id, i.tok,
-        CAST(c.chunk_off + i.cum_in - i.tok AS BIGINT) AS offs
-      FROM intra i JOIN coff c ON c.chunk = i.chunk),
-    bins AS (
-      SELECT doc_id, tok,
-        offs div $PackWindowTokens AS bin_first,
-        (offs + tok - 1) div $PackWindowTokens AS bin_last
-      FROM o WHERE tok > 0)
-    SELECT bin_first AS bin_id,
-      CAST(count(*) AS BIGINT) AS n_docs,
-      CAST(sum(tok) AS BIGINT) AS n_tokens,
-      CAST(sum(CASE WHEN bin_last != bin_first THEN 1 ELSE 0 END) AS BIGINT) AS n_straddle,
-      CAST(min(doc_id) AS BIGINT) AS first_doc,
-      CAST(max(doc_id) AS BIGINT) AS last_doc
-    FROM bins GROUP BY bin_first ORDER BY bin_id"""
-
-  private def p23Run(spark: SparkSession, dir: String): DataFrame = {
-    readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    spark.sql(p23Spark(derivePackChunkDocs(spark)))
   }
 
   /** Oracle: the naive global-cumsum specification the distributed form
@@ -2291,8 +2190,8 @@ object PipelineOps {
   /** Default shard count — the oracle operating point. Deployment knob
     * (`spark.graft.shuffleShards`): pick output-file-count / shard-size
     * policy, e.g. total_bytes / desired_shard_bytes. */
-  private val ShuffleShards = 8
-  private val ShuffleSeedDefault = 42L
+  private[graft] val ShuffleShards = 8
+  private[graft] val ShuffleSeedDefault = 42L
 
   private[graft] def shuffleSeed(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.shuffleSeed")
@@ -2303,28 +2202,6 @@ object PipelineOps {
       .map(_.toInt).getOrElse(ShuffleShards)
     require(s >= 1, s"spark.graft.shuffleShards must be >= 1, got $s")
     s
-  }
-
-  private def p27Spark(seed: Long, shards: Int = ShuffleShards) = s"""
-    WITH h AS (
-      SELECT doc_id,
-        pmod(${hSpark(s"concat(CAST(doc_id AS STRING), ':', '$seed')")}, 1000000007) AS hv
-      FROM documents),
-    s AS (SELECT doc_id, hv, pmod(hv, $shards) AS shard FROM h),
-    p AS (
-      SELECT shard, doc_id,
-        row_number() OVER (PARTITION BY shard ORDER BY hv, doc_id) AS pos
-      FROM s)
-    SELECT shard AS shard_id,
-      CAST(count(*) AS BIGINT) AS n_docs,
-      CAST(sum(doc_id) AS BIGINT) AS id_sum,
-      CAST(sum(pos * doc_id) AS BIGINT) AS order_checksum
-    FROM p GROUP BY shard ORDER BY shard_id"""
-
-  private def p27Run(spark: SparkSession, dir: String): DataFrame = {
-    readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    graft.functions.GraftFunctions.registerMd5(spark)
-    spark.sql(p27Spark(shuffleSeed(spark), shuffleShards(spark)))
   }
 
   private val p27Duck = s"""
@@ -2670,7 +2547,7 @@ object PipelineOps {
   // (same trick as p15), documented here rather than defaulted because the
   // exact rank is the reproducibility contract.
 
-  private val DomainQuota = 10
+  private[graft] val DomainQuota = 10
 
   /** Live quota knob (`spark.graft.domainQuota`, default = the oracle
     * operating point). */
@@ -2679,23 +2556,6 @@ object PipelineOps {
       .map(_.toInt).getOrElse(DomainQuota)
     require(q >= 1, s"spark.graft.domainQuota must be >= 1, got $q")
     q
-  }
-
-  private def p37Spark(q: Int) = s"""
-    WITH r AS (
-      SELECT source, doc_id,
-        row_number() OVER (PARTITION BY source
-          ORDER BY ${hSpark("CAST(doc_id AS STRING)")}, doc_id) AS rk
-      FROM documents)
-    SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-      CAST(sum(CASE WHEN rk <= $q THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-      CAST(sum(CASE WHEN rk <= $q THEN doc_id ELSE 0 END) AS BIGINT) AS kept_id_sum
-    FROM r GROUP BY source ORDER BY source"""
-
-  private def p37Run(spark: SparkSession, dir: String): DataFrame = {
-    readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    graft.functions.GraftFunctions.registerMd5(spark)
-    spark.sql(p37Spark(domainQuota(spark)))
   }
 
   private val p37Duck = s"""
@@ -2783,7 +2643,7 @@ object PipelineOps {
   // end to end (AQE broadcasts the base side only when it is genuinely
   // small), no global stage, no row amplification.
 
-  private val IngestFpTokens = 2
+  private[graft] val IngestFpTokens = 2
 
   /** Live fingerprint-width knob (`spark.graft.ingestFpTokens`, default =
     * the oracle operating point — the coarse 2-token prefix; production
@@ -2794,30 +2654,6 @@ object PipelineOps {
       .map(_.toInt).getOrElse(IngestFpTokens)
     require(n >= 1, s"spark.graft.ingestFpTokens must be >= 1, got $n")
     n
-  }
-
-  private def p39Fp(n: Int) =
-    hKeySpark(s"concat_ws(' ', slice($wordsSpark, 1, $n))")
-
-  private def p39Spark(n: Int) = s"""
-    WITH w AS (
-      SELECT doc_id, ${p39Fp(n)} AS fp FROM documents),
-    base AS (SELECT DISTINCT fp FROM w WHERE pmod(doc_id, 5) != 4),
-    inc AS (
-      SELECT doc_id, fp,
-        row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rk
-      FROM w WHERE pmod(doc_id, 5) = 4)
-    SELECT i.doc_id,
-      CASE WHEN b.fp IS NOT NULL THEN 'dup_of_base'
-           WHEN i.rk > 1 THEN 'dup_in_batch'
-           ELSE 'new_unique' END AS status
-    FROM inc i LEFT JOIN base b ON i.fp = b.fp
-    ORDER BY doc_id"""
-
-  private def p39Run(spark: SparkSession, dir: String): DataFrame = {
-    readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    graft.functions.GraftFunctions.registerMd5(spark)
-    spark.sql(p39Spark(ingestFpTokens(spark)))
   }
 
   private val p39Duck = s"""
@@ -2851,7 +2687,7 @@ object PipelineOps {
   // filter. Shuffles: the term rollup + the sanctioned one-row
   // collect_list; zero join shuffles.
 
-  private val CommonCfMin = 200L
+  private[graft] val CommonCfMin = 200L
 
   /** Live threshold knob (`spark.graft.commonCfMin`, default = the oracle
     * operating point; size it as total_tokens / desired_broadcast_terms). */
@@ -2860,27 +2696,6 @@ object PipelineOps {
       .map(_.toLong).getOrElse(CommonCfMin)
     require(t >= 1, s"spark.graft.commonCfMin must be >= 1, got $t")
     t
-  }
-
-  private def p40Spark(t: Long) = s"""
-    WITH w AS (SELECT doc_id, $wordsSpark AS words FROM documents),
-    cf AS (
-      SELECT term, CAST(count(*) AS BIGINT) AS cf
-      FROM (SELECT doc_id, explode(words) AS term FROM w)
-      GROUP BY term),
-    common AS (SELECT collect_list(term) AS carr FROM cf WHERE cf >= $t)
-    SELECT doc_id,
-      CAST(size(words) AS BIGINT) AS n_tokens,
-      CAST(size(filter(words, x -> NOT array_contains(c.carr, x))) AS BIGINT) AS n_rare,
-      CAST(floor((CAST(size(filter(words, x -> NOT array_contains(c.carr, x))) AS DOUBLE)
-        / size(words)) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS rare_ratio,
-      (size(filter(words, x -> NOT array_contains(c.carr, x))) > 0) AS flagged
-    FROM w CROSS JOIN common c
-    ORDER BY doc_id"""
-
-  private def p40Run(spark: SparkSession, dir: String): DataFrame = {
-    readSpread(spark, s"$dir/documents.parquet", spread = true).createOrReplaceTempView("documents")
-    spark.sql(p40Spark(commonCfMin(spark)))
   }
 
   private val p40Duck = s"""
@@ -3169,8 +2984,8 @@ object PipelineOps {
   // excluded up front: a NULL key would rank NULLS-FIRST in a Spark
   // window, NULLS-LAST in DuckDB, and be skipped by the aggregate
   // reservoir — the explicit filter is the only rule all three agree on.
-  private val WeightedK = 8
-  private val WeightedSaltBuckets = 8
+  private[graft] val WeightedK = 8
+  private[graft] val WeightedSaltBuckets = 8
 
   /** Live knobs: `spark.graft.weightedK` (docs kept per stratum) and
     * `spark.graft.weightedSaltBuckets` (stage-1 fanout S; any S ≥ 1 yields
@@ -3187,32 +3002,6 @@ object PipelineOps {
       .map(_.toInt).getOrElse(WeightedSaltBuckets)
     require(s >= 1, s"spark.graft.weightedSaltBuckets must be >= 1, got $s")
     s
-  }
-
-  private[graft] def p46Spark(kSel: Int, nSalt: Int) = s"""
-    WITH h AS (
-      SELECT lang, doc_id, CAST(n_chars AS BIGINT) AS weight,
-        -ln((${hSpark("CAST(doc_id AS STRING)")} + 1) / 4294967296.0)
-          / CAST(n_chars AS DOUBLE) AS aes_key,
-        pmod(${hSpark("concat('s46_', CAST(doc_id AS STRING))")}, $nSalt) AS b
-      FROM documents WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL),
-    loc AS (
-      SELECT lang, doc_id, weight, aes_key FROM (
-        SELECT *, row_number() OVER (PARTITION BY lang, b
-          ORDER BY aes_key, doc_id) AS lrk
-        FROM h) WHERE lrk <= $kSel),
-    g AS (
-      SELECT lang, doc_id, weight, aes_key,
-        row_number() OVER (PARTITION BY lang ORDER BY aes_key, doc_id) AS rk
-      FROM loc)
-    SELECT lang, CAST(rk AS BIGINT) AS rk, doc_id, weight,
-      CAST(floor(aes_key * 1e6 + 0.5) AS BIGINT) AS key_u
-    FROM g WHERE rk <= $kSel ORDER BY lang, rk"""
-
-  private def p46Run(spark: SparkSession, dir: String): DataFrame = {
-    readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    graft.functions.GraftFunctions.registerMd5(spark)
-    spark.sql(p46Spark(weightedK(spark), weightedSaltBuckets(spark)))
   }
 
   private val p46Duck = s"""
@@ -3761,36 +3550,6 @@ object PipelineOps {
   private val NegK = 4
   private val NegEnc = 4294967296L
 
-  private def p53Spark = s"""
-    WITH pool AS (
-      SELECT CAST(label AS BIGINT) AS plabel, vec_id FROM (
-        SELECT label, vec_id,
-          row_number() OVER (PARTITION BY label
-            ORDER BY ${hSpark("CAST(vec_id AS STRING)")}, vec_id) AS rk
-        FROM embeddings) WHERE rk <= $NegPool),
-    parr AS (
-      SELECT array_sort(collect_list(plabel * $NegEnc + vec_id)) AS arr FROM pool),
-    cand AS (
-      SELECT a.vec_id, CAST(a.label AS BIGINT) AS label,
-        filter(parr.arr, e -> e DIV $NegEnc != CAST(a.label AS BIGINT)) AS cands
-      FROM embeddings a CROSS JOIN parr),
-    x AS (
-      -- an anchor whose cluster is the whole pool (degenerate single-label
-      -- corpus) has no legal negatives: emit nothing rather than mod-by-0
-      SELECT vec_id, label, slot, cands
-      FROM cand LATERAL VIEW explode(sequence(1, $NegK)) s AS slot
-      WHERE size(cands) > 0),
-    sel AS (
-      SELECT vec_id, label, slot,
-        element_at(cands, CAST(1 + pmod(${hSpark(
-          "concat(CAST(vec_id AS STRING), '_', CAST(slot AS STRING))")},
-          size(cands)) AS INT)) AS enc
-      FROM x)
-    SELECT vec_id, CAST(slot AS BIGINT) AS slot,
-      CAST(enc % $NegEnc AS BIGINT) AS neg_id,
-      CAST(enc DIV $NegEnc AS BIGINT) AS neg_label
-    FROM sel ORDER BY vec_id, slot"""
-
   private val p53Duck = s"""
     WITH pool AS (
       SELECT CAST(label AS BIGINT) AS plabel, vec_id FROM (
@@ -4234,25 +3993,15 @@ object PipelineOps {
   private val JlDims = 16
 
   /** Bind the deterministic 16-row JL plane table as `jl_planes` —
-    * idempotent; shared with PipelineRelational.registerKernels so the
-    * p57 relational re-expression joins the IDENTICAL plane rows. */
+    * idempotent; the p57 operator and PipelineRelational.registerKernels
+    * call it, so the p57 text joins the plane rows from the session
+    * catalog. */
   private[graft] def registerJlPlanes(spark: SparkSession): Unit = {
     val rows = planes.take(JlDims).zipWithIndex.map { case (p, i) =>
       (i + 1, p.map(_.toFloat))
     }
     import spark.implicits._
     rows.toDF("idx", "pv").createOrReplaceTempView("jl_planes")
-  }
-
-  private def p57Run(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerDot(spark)
-    registerJlPlanes(spark)
-    readSpread(spark, s"$dir/embeddings.parquet").createOrReplaceTempView("embeddings")
-    spark.sql(s"""
-      SELECT e.vec_id, CAST(p.idx AS BIGINT) AS dim,
-        CAST(floor(${dotSpark("e.embedding", "p.pv")} * 1e6 + 0.5) AS BIGINT) AS proj_u
-      FROM embeddings e CROSS JOIN jl_planes p
-      ORDER BY vec_id, dim""")
   }
 
   private val p57Duck = s"""
@@ -4678,7 +4427,7 @@ object PipelineOps {
   // zero Generates before the output sort (plan-audited); at 100 TB this
   // is a free pass over the corpus like p18.
   private val FimRatePct = 50
-  private val FimSaltDefault = "fim0"
+  private[graft] val FimSaltDefault = "fim0"
   /** Live salt (`spark.graft.fimSalt`): redraws gate + cut points —
     * augmentation epochs without touching the data. Charset-restricted
     * because the salt interpolates into a SQL string literal: a quote
@@ -4688,43 +4437,6 @@ object PipelineOps {
     require(s.nonEmpty && s.forall(c => c.isLetterOrDigit || c == '_' || c == '-' || c == '.'),
       s"spark.graft.fimSalt must be non-empty [A-Za-z0-9_.-], got '$s'")
     s
-  }
-
-  private[graft] def p62Spark(salt: String): String = {
-    def h(tag: String) = hSpark(s"concat('$salt|$tag|', CAST(doc_id AS STRING))")
-    s"""
-    WITH t AS (
-      SELECT doc_id, text, $wordsSpark AS words FROM documents),
-    s AS (
-      SELECT doc_id, text, words, size(words) AS n,
-        pmod(${h("gate")}, 100) AS gate,
-        pmod(${h("a")}, size(words) + 1) AS ca,
-        pmod(${h("b")}, size(words) + 1) AS cb
-      FROM t),
-    c AS (
-      SELECT doc_id, text, words, n,
-        CASE WHEN gate < $FimRatePct THEN 1 ELSE 0 END AS fim_applied,
-        least(ca, cb) AS c1, greatest(ca, cb) AS c2
-      FROM s),
-    o AS (
-      SELECT doc_id, fim_applied, n,
-        CASE WHEN fim_applied = 1 THEN c1 ELSE n END AS n_prefix,
-        CASE WHEN fim_applied = 1 THEN c2 - c1 ELSE 0 END AS n_middle,
-        CASE WHEN fim_applied = 1 THEN n - c2 ELSE 0 END AS n_suffix,
-        -- pass-through means PASS THROUGH: the un-applied half keeps its
-        -- original bytes (the FIM branch is token-joined by construction)
-        CASE WHEN fim_applied = 1 THEN
-          concat('<PRE> ', array_join(slice(words, 1, c1), ' '),
-                 ' <SUF> ', array_join(slice(words, c2 + 1, n - c2), ' '),
-                 ' <MID> ', array_join(slice(words, c1 + 1, c2 - c1), ' '))
-        ELSE text END AS out_text
-      FROM c)
-    SELECT doc_id, CAST(fim_applied AS BIGINT) AS fim_applied,
-      CAST(n_prefix AS BIGINT) AS n_prefix,
-      CAST(n_middle AS BIGINT) AS n_middle,
-      CAST(n_suffix AS BIGINT) AS n_suffix,
-      ${hStrSpark("out_text")} AS out_checksum
-    FROM o ORDER BY doc_id"""
   }
 
   private val p62Duck = {
@@ -5100,13 +4812,8 @@ object PipelineOps {
   // Scale shape: m via one window count over the canonical content hash —
   // a single hash shuffle, no join, no one-row stage; skew is bounded by
   // the true duplicate multiplicity (the partition holds one content's
-  // copies). p01's hStrSpark key keeps the two operators' groupings
-  // identical by construction.
-  private def p66Spark = s"""
-    SELECT doc_id,
-      CAST(count(*) OVER (PARTITION BY ${hStrSpark("lower(trim(text))")}) AS BIGINT) AS n_copies,
-      CAST(1000000 DIV count(*) OVER (PARTITION BY ${hStrSpark("lower(trim(text))")}) AS BIGINT) AS weight_micro
-    FROM documents ORDER BY doc_id"""
+  // copies). p01's md5(lower(trim(text))) key keeps the two operators'
+  // groupings identical by construction.
   private val p66Duck = """
     SELECT doc_id,
       CAST(count(*) OVER (PARTITION BY md5(lower(trim(text)))) AS BIGINT) AS n_copies,
@@ -6360,7 +6067,7 @@ object PipelineOps {
   private def onPrql(text: SparkSession => String,
                      spread: Set[String] = Set.empty): (SparkSession, String) => DataFrame =
     (spark, dir) => {
-      PipelineRelational.registerKernels(spark)
+      PipelineRelational.registerFunctions(spark)
       graft.Graft.compile(text(spark), spark, graft.Graft.parquetCatalog(spark, dir, spread))
     }
 
@@ -6378,33 +6085,33 @@ object PipelineOps {
     "p04_minhash_lsh" -> ((spark, dir) => p04Run(spark, dir)),
     "p05_simhash" -> onPrql(prql("p05_simhash"), Docs),
     "p06_fingerprint" -> onPrql(prql("p06_fingerprint")),
-    "p07_cosine_topk" -> onEmb(p07Spark),
+    "p07_cosine_topk" -> onPrql(prql("p07_cosine_topk")),
     "p08_ann_srp_lsh" -> ((spark, dir) => p08Run(spark, dir)),
     "p09_media_meta" -> onPrql(prql("p09_media_meta")),
     // typed mapPartitions decode plumbing — deterministic stub "decoder";
     // the rollup is all-integer so p10Duck recomputes it exactly (hash gate)
     "p10_media_decode" -> ((spark, dir) => MediaOps.decodeFeatures(spark, dir)),
-    "p11_ngram_jaccard" -> onDocs(p11Spark),
+    "p11_ngram_jaccard" -> onPrql(prql("p11_ngram_jaccard")),
     "p12_lang_id" -> ((spark, dir) => p12Run(spark, dir)),
-    "p13_sessionize" -> ((spark, dir) => {
-      graft.Graft.normalizeEventTime(readSpread(spark, s"$dir/events.parquet"))
-        .createOrReplaceTempView("events")
-      spark.sql(p13Spark)
-    }),
+    "p13_sessionize" -> onPrql(prql("p13_sessionize")),
     "p14_top_terms" -> onPrql(prql("p14_top_terms"), Docs),
     "p15_sample_stratified" -> onPrql(prql("p15_sample_stratified")),
     "p16_dedup_clusters" -> ((spark, dir) => p16Run(spark, dir)),
-    "p17_quality_filter" -> onDocs(p17Spark, spread = true),
+    "p17_quality_filter" -> onPrql(prql("p17_quality_filter"), Docs),
     "p18_text_clean" -> onPrql(prql("p18_text_clean"), Docs),
     "p19_ann_ivf" -> (p19Run(_, _)),
     "p20_curation" -> ((spark, dir) => p20Run(spark, dir)),
     "p21_decontam" -> ((spark, dir) => p21Run(spark, dir)),
     "p22_embed_dedup" -> ((spark, dir) => p22Run(spark, dir)),
-    "p23_pack_sequences" -> ((spark, dir) => p23Run(spark, dir)),
+    "p23_pack_sequences" -> ((spark, dir) => {
+      val catalog = graft.Graft.parquetCatalog(spark, dir)
+      val chunkDocs = derivePackChunkDocs(spark, catalog("documents"))
+      graft.Graft.compile(PipelineRelational.p23(chunkDocs), spark, catalog)
+    }),
     "p24_mixture_sample" -> onPrql(prql("p24_mixture_sample")),
     "p25_embed_quant" -> ((spark, dir) => p25Run(spark, dir)),
     "p26_repetition" -> onPrql(prql("p26_repetition"), Docs),
-    "p27_shuffle_shard" -> ((spark, dir) => p27Run(spark, dir)),
+    "p27_shuffle_shard" -> onPrql(spark => PipelineRelational.p27(shuffleSeed(spark), shuffleShards(spark))),
     "p28_contamination_matrix" -> ((spark, dir) => p28Run(spark, dir)),
     "p29_media_resize" -> ((spark, dir) => MediaOps.resizeFeatures(spark, dir)),
     "p30_frame_sample" -> ((spark, dir) => MediaOps.frameSampleFeatures(spark, dir)),
@@ -6418,27 +6125,31 @@ object PipelineOps {
       require(st <= w, s"chunkStride $st must be <= chunkTokens $w (windows must tile)")
       PipelineRelational.p36(w, st)
     },
-    "p37_domain_quota" -> ((spark, dir) => p37Run(spark, dir)),
+    "p37_domain_quota" -> onPrql(spark => PipelineRelational.p37(domainQuota(spark))),
     "p38_pii_redact" -> onDocsP(p38Spark, spread = true),
-    "p39_incremental_dedup" -> ((spark, dir) => p39Run(spark, dir)),
-    "p40_rare_token_score" -> ((spark, dir) => p40Run(spark, dir)),
+    "p39_incremental_dedup" -> onPrql(spark => PipelineRelational.p39(ingestFpTokens(spark))),
+    "p40_rare_token_score" -> onPrql(spark => PipelineRelational.p40(commonCfMin(spark)), Docs),
     "p41_audio_decode" -> ((spark, dir) => MediaOps.audioFeatures(spark, dir)),
     "p42_split_assign" -> ((spark, dir) => p42Run(spark, dir)),
     "p43_unicode_nfc" -> ((spark, dir) => p43Run(spark, dir)),
     "p44_token_budget" -> onPrql(spark => PipelineRelational.p44(tokenBudget(spark))),
     "p45_url_normalize" -> onDocsP(p45Spark),
-    "p46_weighted_sample" -> ((spark, dir) => p46Run(spark, dir)),
+    "p46_weighted_sample" ->
+      onPrql(spark => PipelineRelational.p46(weightedK(spark), weightedSaltBuckets(spark))),
     "p47_boilerplate_lines" -> ((spark, dir) => p47Run(spark, dir)),
     "p48_bloom_dedup" -> ((spark, dir) => p48Run(spark, dir)),
     "p49_embed_outlier" -> ((spark, dir) => p49Run(spark, dir)),
     "p50_bpe_learn" -> ((spark, dir) => p50Run(spark, dir)),
     "p51_bpe_tokenize" -> ((spark, dir) => p51Run(spark, dir)),
     "p52_snapshot_diff" -> onDocsP(p52Spark),
-    "p53_negative_sample" -> onEmb(p53Spark),
+    "p53_negative_sample" -> onPrql(prql("p53_negative_sample")),
     "p54_substring_dedup" -> ((spark, dir) => p54Run(spark, dir)),
     "p55_nb_quality" -> onDocs(p55Spark, spread = true),
     "p56_bm25" -> onDocs(p56Spark, spread = true),
-    "p57_jl_project" -> ((spark, dir) => p57Run(spark, dir)),
+    "p57_jl_project" -> ((spark, dir) => {
+      registerJlPlanes(spark)
+      onPrql(prql("p57_jl_project"))(spark, dir)
+    }),
     "p58_html_extract" -> onDocsP(p58Spark, spread = true),
     "p59_blocklist" -> onPrql(prql("p59_blocklist")),
     "p60_simhash_pairs" -> ((spark, dir) => p60Run(spark, dir)),
@@ -6447,11 +6158,7 @@ object PipelineOps {
       graft.functions.GraftFunctions.registerMd5(spark)
       spark.sql(p61Spark(ppxFlagMicro(spark)))
     }),
-    "p62_fim_transform" -> ((spark, dir) => {
-      readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-      graft.functions.GraftFunctions.registerMd5(spark)
-      spark.sql(p62Spark(fimSalt(spark)))
-    }),
+    "p62_fim_transform" -> onPrql(spark => PipelineRelational.p62(fimSalt(spark))),
     "p63_paragraph_dedup" -> onDocsP(p63Spark),
     "p64_dsir_select" -> ((spark, dir) => {
       readSpread(spark, s"$dir/documents.parquet", spread = true).createOrReplaceTempView("documents")
@@ -6463,7 +6170,7 @@ object PipelineOps {
       graft.functions.GraftFunctions.registerMd5(spark)
       spark.sql(p65Spark(fimSalt(spark)))
     }),
-    "p66_softdedup_weights" -> onDocs(p66Spark),
+    "p66_softdedup_weights" -> onPrql(prql("p66_softdedup_weights")),
     "p67_semantic_dedup" -> ((spark, dir) => p67Run(spark, dir)),
     "p68_tokenizer_fertility" -> ((spark, dir) => p68Run(spark, dir)),
     "p69_boundary_overlap" -> onDocsP(p69Spark, spread = true),

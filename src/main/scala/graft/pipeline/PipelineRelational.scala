@@ -3,13 +3,15 @@ package graft.pipeline
 /** PRQL texts of the pipeline operators' relational shapes
   * (VERDICT r6 #3 / r5 stretch #8).
   *
-  * For 19 operators the text IS the operator: `PipelineOps.queries`
+  * For 33 operators the text IS the operator: `PipelineOps.queries`
   * compiles it through the engine's own front end (`Graft.compile` over
   * the parquet catalog, spreading the tables the operator names) and
-  * there is no Spark SQL copy — p01 p02 p03 p05 p06 p09 p14 p15 p18 p24
-  * p26 p31 p32 p33 p35 p36 p44 p59 p75. The three that read knobs are
-  * Scala templates over the same reads ([[p36]], [[p44]], [[p75]]); their
-  * [[prql]] entries are the templates at the default knobs.
+  * there is no Spark SQL copy — p01 p02 p03 p05 p06 p07 p09 p11 p13 p14
+  * p15 p17 p18 p23 p24 p26 p27 p31 p32 p33 p35 p36 p37 p39 p40 p44 p46
+  * p53 p57 p59 p62 p66 p75. The ten that read knobs are Scala templates
+  * over the same reads ([[p23]], [[p27]], [[p36]], [[p37]], [[p39]],
+  * [[p40]], [[p44]], [[p46]], [[p62]], [[p75]]); their [[prql]] entries
+  * are the templates at the default knobs.
   *
   * Every other entry is a FULL-fidelity restatement of an operator that
   * still runs its own Spark SQL. Each entry, compiled through BOTH
@@ -308,6 +310,287 @@ object PipelineRelational {
        |  boost_u = s"CAST(floor(1e6 * (qs / qsum) * n_total / n_g + 0.5) AS BIGINT)",
        |]
        |sort lang""".stripMargin
+
+  /** p23 at chunk divisor `chunkDocs`: the operator derives it from the
+    * id span (`PipelineOps.derivePackChunkDocs`); any divisor yields the
+    * same bins (PackingPropertySpec). The two-level prefix sum maps onto
+    * PRQL 1:1 — per-chunk expanding windows inside `group`, a global
+    * expanding window over the tiny chunk-totals CTE, and a USING join
+    * back. The global window sits in an empty-key `group` so its `sort`
+    * orders only the window, not the relation (no range sort). */
+  def p23(chunkDocs: Long): String =
+    s"""table t = (
+       |  from documents
+       |  derive [
+       |    chunk = s"CAST(doc_id AS BIGINT) div $chunkDocs",
+       |    tok = s"CAST(size($W) AS BIGINT)",
+       |  ]
+       |)
+       |
+       |table intra = (
+       |  from t
+       |  group [chunk] (
+       |    sort doc_id
+       |    window expanding:true (derive [cum_in = sum tok])
+       |  )
+       |)
+       |
+       |table ctot = (
+       |  from t
+       |  group [chunk] (aggregate [ct = s"sum(tok)"])
+       |)
+       |
+       |table coff0 = (
+       |  from ctot
+       |  group [] (
+       |    sort chunk
+       |    window expanding:true (derive [run = sum ct])
+       |  )
+       |)
+       |
+       |table coff = (
+       |  from coff0
+       |  select [chunk, chunk_off = s"run - ct"]
+       |)
+       |
+       |table o = (
+       |  from intra
+       |  join coff [chunk]
+       |  select [doc_id, tok, offs = s"CAST(chunk_off + cum_in - tok AS BIGINT)"]
+       |)
+       |
+       |table bins = (
+       |  from o
+       |  filter s"tok > 0"
+       |  derive [
+       |    bin_first = s"offs div 256",
+       |    bin_last = s"(offs + tok - 1) div 256",
+       |  ]
+       |)
+       |
+       |from bins
+       |group [bin_first] (
+       |  aggregate [
+       |    n_docs = s"CAST(count(*) AS BIGINT)",
+       |    n_tokens = s"CAST(sum(tok) AS BIGINT)",
+       |    n_straddle = s"CAST(sum(CASE WHEN bin_last != bin_first THEN 1 ELSE 0 END) AS BIGINT)",
+       |    first_doc = s"CAST(min(doc_id) AS BIGINT)",
+       |    last_doc = s"CAST(max(doc_id) AS BIGINT)",
+       |  ]
+       |)
+       |select [bin_id = bin_first, n_docs, n_tokens, n_straddle, first_doc, last_doc]
+       |sort bin_id""".stripMargin
+
+  /** p27 at `seed` over `shards` output shards
+    * (`PipelineOps.shuffleSeed`/`shuffleShards`). */
+  def p27(seed: Long, shards: Int): String =
+    s"""table h = (
+       |  from documents
+       |  derive hv = s"pmod(${hSpark(s"concat(CAST(doc_id AS STRING), ':', '$seed')")}, 1000000007)"
+       |)
+       |
+       |table sh = (
+       |  from h
+       |  derive shard = s"pmod(hv, $shards)"
+       |)
+       |
+       |table p = (
+       |  from sh
+       |  group [shard] (
+       |    sort [hv, doc_id]
+       |    derive [pos = (row_number | as bigint)]
+       |  )
+       |)
+       |
+       |from p
+       |group [shard] (
+       |  aggregate [
+       |    n_docs = s"CAST(count(*) AS BIGINT)",
+       |    id_sum = s"CAST(sum(doc_id) AS BIGINT)",
+       |    order_checksum = s"CAST(sum(pos * doc_id) AS BIGINT)",
+       |  ]
+       |)
+       |select [shard_id = shard, n_docs, id_sum, order_checksum]
+       |sort shard_id""".stripMargin
+
+  /** p37 at `quota` documents per source (`PipelineOps.domainQuota`). */
+  def p37(quota: Int): String =
+    s"""table h = (
+       |  from documents
+       |  derive hk = s"${hSpark("CAST(doc_id AS STRING)")}"
+       |)
+       |
+       |table r = (
+       |  from h
+       |  group [source] (
+       |    sort [hk, doc_id]
+       |    derive [rk = (row_number | as bigint)]
+       |  )
+       |)
+       |
+       |from r
+       |group [source] (
+       |  aggregate [
+       |    n_docs = s"CAST(count(*) AS BIGINT)",
+       |    n_kept = s"CAST(sum(CASE WHEN rk <= $quota THEN 1 ELSE 0 END) AS BIGINT)",
+       |    kept_id_sum = s"CAST(sum(CASE WHEN rk <= $quota THEN doc_id ELSE 0 END) AS BIGINT)",
+       |  ]
+       |)
+       |sort source""".stripMargin
+
+  /** p39 at a `fpTokens`-token prefix fingerprint
+    * (`PipelineOps.ingestFpTokens`). */
+  def p39(fpTokens: Int): String =
+    s"""table w = (
+       |  from documents
+       |  derive fp = s"${hKeySpark(s"concat_ws(' ', slice($W, 1, $fpTokens))")}"
+       |)
+       |
+       |table base = (
+       |  from w
+       |  filter s"pmod(doc_id, 5) != 4"
+       |  select [fp]
+       |  group [fp] (take 1)
+       |  select [bfp = fp]
+       |)
+       |
+       |table inc = (
+       |  from w
+       |  filter s"pmod(doc_id, 5) = 4"
+       |  group [fp] (
+       |    sort doc_id
+       |    derive [rk = (row_number | as bigint)]
+       |  )
+       |)
+       |
+       |from inc
+       |join side:left base [fp == bfp]
+       |select [
+       |  doc_id,
+       |  status = s"CASE WHEN bfp IS NOT NULL THEN 'dup_of_base' WHEN rk > 1 THEN 'dup_in_batch' ELSE 'new_unique' END",
+       |]
+       |sort doc_id""".stripMargin
+
+  /** p40 at common-term threshold `cfMin` (`PipelineOps.commonCfMin`);
+    * the one-row common set joins back on the k = 1 equi-join idiom (p33's
+    * `n` join), which plans as the operator's broadcast nested-loop join. */
+  def p40(cfMin: Long): String =
+    s"""table w = (
+       |  from documents
+       |  derive words = s"$W"
+       |)
+       |
+       |table posts = (
+       |  from w
+       |  select [doc_id, term = s"explode(words)"]
+       |)
+       |
+       |table cf = (
+       |  from posts
+       |  group [term] (aggregate [cf = s"CAST(count(*) AS BIGINT)"])
+       |)
+       |
+       |table common = (
+       |  from cf
+       |  filter cf >= $cfMin
+       |  aggregate [carr = s"collect_list(term)"]
+       |  derive k = s"1"
+       |)
+       |
+       |table wk = (
+       |  from w
+       |  derive k = s"1"
+       |)
+       |
+       |from wk
+       |join common [k]
+       |select [
+       |  doc_id,
+       |  n_tokens = s"CAST(size(words) AS BIGINT)",
+       |  n_rare = s"CAST(size(filter(words, x -> NOT array_contains(carr, x))) AS BIGINT)",
+       |  rare_ratio = s"CAST(floor((CAST(size(filter(words, x -> NOT array_contains(carr, x))) AS DOUBLE) / size(words)) * 1e6 + 0.5) AS DOUBLE) / 1e6",
+       |  flagged = s"(size(filter(words, x -> NOT array_contains(carr, x))) > 0)",
+       |]
+       |sort doc_id""".stripMargin
+
+  /** p46 keeping `k` documents per language through `saltBuckets`
+    * stage-1 buckets (`PipelineOps.weightedK`/`weightedSaltBuckets`). */
+  def p46(k: Int, saltBuckets: Int): String =
+    s"""table h = (
+       |  from documents
+       |  filter s"doc_id IS NOT NULL AND n_chars IS NOT NULL"
+       |  derive [
+       |    weight = s"CAST(n_chars AS BIGINT)",
+       |    aes_key = s"-ln((${hSpark("CAST(doc_id AS STRING)")} + 1) / 4294967296.0) / CAST(n_chars AS DOUBLE)",
+       |    b = s"pmod(${hSpark("concat('s46_', CAST(doc_id AS STRING))")}, $saltBuckets)",
+       |  ]
+       |)
+       |
+       |table loc = (
+       |  from h
+       |  group [lang, b] (
+       |    sort [aes_key, doc_id]
+       |    take $k
+       |  )
+       |)
+       |
+       |table g = (
+       |  from loc
+       |  group [lang] (
+       |    sort [aes_key, doc_id]
+       |    derive [rk = (row_number | as bigint)]
+       |  )
+       |)
+       |
+       |from g
+       |filter rk <= $k
+       |select [lang, rk, doc_id, weight,
+       |  key_u = s"CAST(floor(aes_key * 1e6 + 0.5) AS BIGINT)"]
+       |sort [lang, rk]""".stripMargin
+
+  /** p62 at augmentation salt `salt` (`PipelineOps.fimSalt`, which
+    * restricts it to characters safe inside the SQL string literal). */
+  def p62(salt: String): String =
+    s"""table t = (
+       |  from documents
+       |  select [doc_id, text]
+       |  derive words = s"$W"
+       |)
+       |
+       |table s = (
+       |  from t
+       |  derive [
+       |    n = s"size(words)",
+       |    gate = s"pmod(${hSpark(s"concat('$salt|gate|', CAST(doc_id AS STRING))")}, 100)",
+       |    ca = s"pmod(${hSpark(s"concat('$salt|a|', CAST(doc_id AS STRING))")}, size(words) + 1)",
+       |    cb = s"pmod(${hSpark(s"concat('$salt|b|', CAST(doc_id AS STRING))")}, size(words) + 1)",
+       |  ]
+       |)
+       |
+       |table c = (
+       |  from s
+       |  derive [
+       |    fim_applied = s"CASE WHEN gate < 50 THEN 1 ELSE 0 END",
+       |    c1 = s"least(ca, cb)",
+       |    c2 = s"greatest(ca, cb)",
+       |  ]
+       |)
+       |
+       |table o = (
+       |  from c
+       |  derive out_text = s"CASE WHEN fim_applied = 1 THEN concat('<PRE> ', array_join(slice(words, 1, c1), ' '), ' <SUF> ', array_join(slice(words, c2 + 1, n - c2), ' '), ' <MID> ', array_join(slice(words, c1 + 1, c2 - c1), ' ')) ELSE text END"
+       |)
+       |
+       |from o
+       |select [
+       |  doc_id,
+       |  fim_applied = s"CAST(fim_applied AS BIGINT)",
+       |  n_prefix = s"CAST(CASE WHEN fim_applied = 1 THEN c1 ELSE n END AS BIGINT)",
+       |  n_middle = s"CAST(CASE WHEN fim_applied = 1 THEN c2 - c1 ELSE 0 END AS BIGINT)",
+       |  n_suffix = s"CAST(CASE WHEN fim_applied = 1 THEN n - c2 ELSE 0 END AS BIGINT)",
+       |  out_checksum = s"md5(out_text)",
+       |]
+       |sort doc_id""".stripMargin
 
   val prql: Map[String, String] = Map(
     "p04_minhash_lsh" ->
@@ -682,70 +965,7 @@ object PipelineRelational {
          |]
          |sort doc_id""".stripMargin,
 
-    // p23 pins the default chunking (64 docs): the restatement is of the
-    // default-config operator. The two-level prefix sum maps onto PRQL 1:1 — per-chunk
-    // expanding windows inside `group`, a global expanding window over the
-    // tiny chunk-totals CTE, and a USING join back.
-    "p23_pack_sequences" ->
-      s"""table t = (
-         |  from documents
-         |  derive [
-         |    chunk = s"CAST(doc_id AS BIGINT) div 64",
-         |    tok = s"CAST(size($W) AS BIGINT)",
-         |  ]
-         |)
-         |
-         |table intra = (
-         |  from t
-         |  group [chunk] (
-         |    sort doc_id
-         |    window expanding:true (derive [cum_in = sum tok])
-         |  )
-         |)
-         |
-         |table ctot = (
-         |  from t
-         |  group [chunk] (aggregate [ct = s"sum(tok)"])
-         |)
-         |
-         |table coff0 = (
-         |  from ctot
-         |  sort chunk
-         |  window expanding:true (derive [run = sum ct])
-         |)
-         |
-         |table coff = (
-         |  from coff0
-         |  select [chunk, chunk_off = s"run - ct"]
-         |)
-         |
-         |table o = (
-         |  from intra
-         |  join coff [chunk]
-         |  select [doc_id, tok, offs = s"CAST(chunk_off + cum_in - tok AS BIGINT)"]
-         |)
-         |
-         |table bins = (
-         |  from o
-         |  filter s"tok > 0"
-         |  derive [
-         |    bin_first = s"offs div 256",
-         |    bin_last = s"(offs + tok - 1) div 256",
-         |  ]
-         |)
-         |
-         |from bins
-         |group [bin_first] (
-         |  aggregate [
-         |    n_docs = s"CAST(count(*) AS BIGINT)",
-         |    n_tokens = s"CAST(sum(tok) AS BIGINT)",
-         |    n_straddle = s"CAST(sum(CASE WHEN bin_last != bin_first THEN 1 ELSE 0 END) AS BIGINT)",
-         |    first_doc = s"CAST(min(doc_id) AS BIGINT)",
-         |    last_doc = s"CAST(max(doc_id) AS BIGINT)",
-         |  ]
-         |)
-         |select [bin_id = bin_first, n_docs, n_tokens, n_straddle, first_doc, last_doc]
-         |sort bin_id""".stripMargin,
+    "p23_pack_sequences" -> p23(PipelineOps.PackChunkDocsDefault),
 
     // the cross join onto the one-row totals relation rides a constant
     // USING key (k = 1 on both sides) — the portable relational spelling.
@@ -1057,65 +1277,11 @@ object PipelineRelational {
          |]
          |sort click_id""".stripMargin,
 
-    // p27 pins the default seed (42), as the other pinning entries do.
-    "p27_shuffle_shard" ->
-      s"""table h = (
-         |  from documents
-         |  derive hv = s"pmod(${hSpark("concat(CAST(doc_id AS STRING), ':', '42')")}, 1000000007)"
-         |)
-         |
-         |table sh = (
-         |  from h
-         |  derive shard = s"pmod(hv, 8)"
-         |)
-         |
-         |table p = (
-         |  from sh
-         |  group [shard] (
-         |    sort [hv, doc_id]
-         |    derive [pos = (row_number | as bigint)]
-         |  )
-         |)
-         |
-         |from p
-         |group [shard] (
-         |  aggregate [
-         |    n_docs = s"CAST(count(*) AS BIGINT)",
-         |    id_sum = s"CAST(sum(doc_id) AS BIGINT)",
-         |    order_checksum = s"CAST(sum(pos * doc_id) AS BIGINT)",
-         |  ]
-         |)
-         |select [shard_id = shard, n_docs, id_sum, order_checksum]
-         |sort shard_id""".stripMargin,
+    "p27_shuffle_shard" -> p27(PipelineOps.ShuffleSeedDefault, PipelineOps.ShuffleShards),
 
-    // p36 is the operator's template at the default window; p37/p39 pin
-    // their knob defaults (quota 10, 2-token fingerprint), as the other
-    // pinning entries do.
     "p36_chunk_sliding" -> p36(PipelineOps.ChunkTokens, PipelineOps.ChunkStride),
 
-    "p37_domain_quota" ->
-      s"""table h = (
-         |  from documents
-         |  derive hk = s"${hSpark("CAST(doc_id AS STRING)")}"
-         |)
-         |
-         |table r = (
-         |  from h
-         |  group [source] (
-         |    sort [hk, doc_id]
-         |    derive [rk = (row_number | as bigint)]
-         |  )
-         |)
-         |
-         |from r
-         |group [source] (
-         |  aggregate [
-         |    n_docs = s"CAST(count(*) AS BIGINT)",
-         |    n_kept = s"CAST(sum(CASE WHEN rk <= 10 THEN 1 ELSE 0 END) AS BIGINT)",
-         |    kept_id_sum = s"CAST(sum(CASE WHEN rk <= 10 THEN doc_id ELSE 0 END) AS BIGINT)",
-         |  ]
-         |)
-         |sort source""".stripMargin,
+    "p37_domain_quota" -> p37(PipelineOps.DomainQuota),
 
     // brace-free REFORMULATION of the operator's regexes: s-string bodies
     // reserve `{…}` for interpolation (prql.pest:139-141) with no escape
@@ -1155,77 +1321,9 @@ object PipelineRelational {
          |]
          |sort doc_id""".stripMargin,
 
-    "p39_incremental_dedup" ->
-      s"""table w = (
-         |  from documents
-         |  derive fp = s"${hKeySpark(s"concat_ws(' ', slice($W, 1, 2))")}"
-         |)
-         |
-         |table base = (
-         |  from w
-         |  filter s"pmod(doc_id, 5) != 4"
-         |  select [fp]
-         |  group [fp] (take 1)
-         |  select [bfp = fp]
-         |)
-         |
-         |table inc = (
-         |  from w
-         |  filter s"pmod(doc_id, 5) = 4"
-         |  group [fp] (
-         |    sort doc_id
-         |    derive [rk = (row_number | as bigint)]
-         |  )
-         |)
-         |
-         |from inc
-         |join side:left base [fp == bfp]
-         |select [
-         |  doc_id,
-         |  status = s"CASE WHEN bfp IS NOT NULL THEN 'dup_of_base' WHEN rk > 1 THEN 'dup_in_batch' ELSE 'new_unique' END",
-         |]
-         |sort doc_id""".stripMargin,
+    "p39_incremental_dedup" -> p39(PipelineOps.IngestFpTokens),
 
-    // p40 pins the default threshold (200); the operator's one-row CROSS
-    // JOIN rides the k=1 equi-join idiom here (p33's n join).
-    "p40_rare_token_score" ->
-      s"""table w = (
-         |  from documents
-         |  derive words = s"$W"
-         |)
-         |
-         |table posts = (
-         |  from w
-         |  select [doc_id, term = s"explode(words)"]
-         |)
-         |
-         |table cf = (
-         |  from posts
-         |  group [term] (aggregate [cf = s"CAST(count(*) AS BIGINT)"])
-         |)
-         |
-         |table common = (
-         |  from cf
-         |  filter cf >= 200
-         |  aggregate [carr = s"collect_list(term)"]
-         |  derive k = s"1"
-         |)
-         |
-         |table wk = (
-         |  from w
-         |  derive k = s"1"
-         |)
-         |
-         |from wk
-         |join common [k]
-         |select [
-         |  doc_id,
-         |  n_tokens = s"CAST(size(words) AS BIGINT)",
-         |  n_rare = s"CAST(size(filter(words, x -> NOT array_contains(carr, x))) AS BIGINT)",
-         |  rare_ratio = s"CAST(floor((CAST(size(filter(words, x -> NOT array_contains(carr, x))) AS DOUBLE) / size(words)) * 1e6 + 0.5) AS DOUBLE) / 1e6",
-         |  flagged = s"(size(filter(words, x -> NOT array_contains(carr, x))) > 0)",
-         |]
-         |sort doc_id""".stripMargin,
+    "p40_rare_token_score" -> p40(PipelineOps.CommonCfMin),
 
     "p44_token_budget" -> p44(PipelineOps.TokenBudget),
 
@@ -1257,38 +1355,7 @@ object PipelineRelational {
          |]
          |sort doc_id""".stripMargin,
 
-    "p46_weighted_sample" ->
-      s"""table h = (
-         |  from documents
-         |  filter s"doc_id IS NOT NULL AND n_chars IS NOT NULL"
-         |  derive [
-         |    weight = s"CAST(n_chars AS BIGINT)",
-         |    aes_key = s"-ln((${hSpark("CAST(doc_id AS STRING)")} + 1) / 4294967296.0) / CAST(n_chars AS DOUBLE)",
-         |    b = s"pmod(${hSpark("concat('s46_', CAST(doc_id AS STRING))")}, 8)",
-         |  ]
-         |)
-         |
-         |table loc = (
-         |  from h
-         |  group [lang, b] (
-         |    sort [aes_key, doc_id]
-         |    take 8
-         |  )
-         |)
-         |
-         |table g = (
-         |  from loc
-         |  group [lang] (
-         |    sort [aes_key, doc_id]
-         |    derive [rk = (row_number | as bigint)]
-         |  )
-         |)
-         |
-         |from g
-         |filter rk <= 8
-         |select [lang, rk, doc_id, weight,
-         |  key_u = s"CAST(floor(aes_key * 1e6 + 0.5) AS BIGINT)"]
-         |sort [lang, rk]""".stripMargin,
+    "p46_weighted_sample" -> p46(PipelineOps.WeightedK, PipelineOps.WeightedSaltBuckets),
 
     "p47_boilerplate_lines" ->
       s"""table aug = (
@@ -1368,6 +1435,9 @@ object PipelineRelational {
          |)
          |sort status""".stripMargin,
 
+    // an anchor whose cluster is the whole pool (a single-label corpus) has
+    // no legal negatives: `size(cands) > 0` emits nothing for it rather
+    // than a mod-by-0
     "p53_negative_sample" ->
       s"""table pool = (
          |  from embeddings
@@ -1397,6 +1467,7 @@ object PipelineRelational {
          |
          |table x = (
          |  from cand
+         |  filter s"size(cands) > 0"
          |  select [vec_id, cands, slot = s"explode(sequence(1, 4))"]
          |)
          |
@@ -1813,47 +1884,7 @@ object PipelineRelational {
          |]
          |sort doc_id""".stripMargin,
 
-    "p62_fim_transform" ->
-      s"""table t = (
-         |  from documents
-         |  select [doc_id, text]
-         |  derive words = s"$W"
-         |)
-         |
-         |table s = (
-         |  from t
-         |  derive [
-         |    n = s"size(words)",
-         |    gate = s"pmod(${hSpark("concat('fim0|gate|', CAST(doc_id AS STRING))")}, 100)",
-         |    ca = s"pmod(${hSpark("concat('fim0|a|', CAST(doc_id AS STRING))")}, size(words) + 1)",
-         |    cb = s"pmod(${hSpark("concat('fim0|b|', CAST(doc_id AS STRING))")}, size(words) + 1)",
-         |  ]
-         |)
-         |
-         |table c = (
-         |  from s
-         |  derive [
-         |    fim_applied = s"CASE WHEN gate < 50 THEN 1 ELSE 0 END",
-         |    c1 = s"least(ca, cb)",
-         |    c2 = s"greatest(ca, cb)",
-         |  ]
-         |)
-         |
-         |table o = (
-         |  from c
-         |  derive out_text = s"CASE WHEN fim_applied = 1 THEN concat('<PRE> ', array_join(slice(words, 1, c1), ' '), ' <SUF> ', array_join(slice(words, c2 + 1, n - c2), ' '), ' <MID> ', array_join(slice(words, c1 + 1, c2 - c1), ' ')) ELSE text END"
-         |)
-         |
-         |from o
-         |select [
-         |  doc_id,
-         |  fim_applied = s"CAST(fim_applied AS BIGINT)",
-         |  n_prefix = s"CAST(CASE WHEN fim_applied = 1 THEN c1 ELSE n END AS BIGINT)",
-         |  n_middle = s"CAST(CASE WHEN fim_applied = 1 THEN c2 - c1 ELSE 0 END AS BIGINT)",
-         |  n_suffix = s"CAST(CASE WHEN fim_applied = 1 THEN n - c2 ELSE 0 END AS BIGINT)",
-         |  out_checksum = s"md5(out_text)",
-         |]
-         |sort doc_id""".stripMargin,
+    "p62_fim_transform" -> p62(PipelineOps.FimSaltDefault),
 
     // posexplode's two-column generator has no single-alias form, so the
     // position rides an arrays_zip struct through a one-alias explode
@@ -2775,10 +2806,19 @@ object PipelineRelational {
          |sort [src_a, src_b]""".stripMargin,
   )
 
-  /** Session-level kernel registrations the covered texts rely on (the
-    * operators register the same functions; both backends resolve them
-    * from the session registry afterwards). */
+  /** Session-level registrations the covered texts rely on: the native
+    * functions plus p57's `jl_planes` view (both backends resolve them
+    * from the session afterwards). */
   def registerKernels(spark: org.apache.spark.sql.SparkSession): Unit = {
+    registerFunctions(spark)
+    PipelineOps.registerJlPlanes(spark)
+  }
+
+  /** The native functions alone — what each PRQL operator build registers.
+    * Re-registering a function costs nothing; re-binding `jl_planes` builds
+    * a DataFrame and a view each call (50-90 ms on a 4-core host), so only
+    * p57 binds it. */
+  def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {
     graft.functions.GraftFunctions.registerDot(spark)
     graft.functions.GraftFunctions.registerMd5(spark)
     graft.functions.GraftFunctions.registerTopTerms(spark, PipelineOps.TopTerms)
@@ -2786,7 +2826,6 @@ object PipelineRelational {
     graft.functions.GraftFunctions.registerKmv(spark, PipelineOps.KmvK)
     graft.functions.GraftFunctions.registerMinhash(spark,
       PipelineOps.hashA.toArray, PipelineOps.hashB.toArray, PipelineOps.MinhashP)
-    PipelineOps.registerJlPlanes(spark)
   }
 
   /** The texts above hardcode the operators' DEFAULT knobs (fim salt, ppx threshold, simhash bands, substrK, chunk geometry,

@@ -90,7 +90,7 @@ class EndToEndPipelineSpec extends AnyFunSuite {
 
     // stage 3: FIM augmentation over exactly the surviving documents
     kept.createOrReplaceTempView("documents")
-    val fim = spark.sql(PipelineOps.p62Spark("fim0")).cache()
+    val fim = Graft.compileSession(PipelineRelational.p62("fim0"), spark).cache()
     assert(fim.count() == nKept, "one augmented row per survivor, none resurrected")
     val applied = fim.where($"fim_applied" === 1).count()
     assert(applied > 0 && applied < nKept, "both augmentation classes populated")

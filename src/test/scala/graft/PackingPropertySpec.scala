@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.PipelineOps
+import graft.pipeline.PipelineRelational
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -51,7 +51,7 @@ class PackingPropertySpec extends AnyFunSuite {
       val expected = bruteForce(docs, 256L)
       docs.map { case (id, tok) => (id, Seq.fill(tok)("w").mkString(" ")) }
         .toDF("doc_id", "text").createOrReplaceTempView("documents")
-      val got = spark.sql(PipelineOps.p23Spark(chunk)).collect().map(r =>
+      val got = Graft.compileSession(PipelineRelational.p23(chunk), spark).collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
       assert(got == expected,
         s"seed $seedVal chunkDocs=$chunk:\n got   $got\n expect $expected")

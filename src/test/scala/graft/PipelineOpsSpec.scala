@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{MediaOps, PipelineOps}
+import graft.pipeline.{MediaOps, PipelineOps, PipelineRelational}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pipeline-operator behavior on the real sf0.001 testdata: structural
@@ -744,20 +744,21 @@ class PipelineOpsSpec extends AnyFunSuite {
   test("p23 chunk divisor derives from the id span: sparse id spaces stay bounded") {
     import spark.implicits._
     // dense ids at the gate scale: the config floor (64) wins
-    spark.read.parquet(s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    assert(PipelineOps.derivePackChunkDocs(spark) == 64L)
+    assert(PipelineOps.derivePackChunkDocs(spark,
+      spark.read.parquet(s"$dir/documents.parquet")) == 64L)
     // a snowflake-style sparse id space: span >> count. A fixed divisor
     // would make one chunk per doc (the chunk-totals relation becomes
     // corpus-sized); the derived divisor bounds chunks at 4096
-    val sparse = Seq.tabulate(100)(i => (i.toLong * 1000000007L, "w w w"))
-    sparse.toDF("doc_id", "text").createOrReplaceTempView("documents")
-    val d = PipelineOps.derivePackChunkDocs(spark)
+    val sparse = Seq.tabulate(100)(i => (i.toLong * 1000000007L, "w w w")).toDF("doc_id", "text")
+    sparse.createOrReplaceTempView("documents")
+    val d = PipelineOps.derivePackChunkDocs(spark, sparse)
     val span = 99L * 1000000007L + 1
     assert(d >= span / 4096, s"divisor $d leaves more than 4096 chunks")
     // and the packing still equals the global-cumsum spec at that divisor
-    val got = spark.sql(PipelineOps.p23Spark(d)).collect().map(_.toSeq).toSeq
-    val expect = spark.sql(PipelineOps.p23Spark(1000000000000L)) // one chunk: trivially the global cumsum
-      .collect().map(_.toSeq).toSeq
+    def pack(chunkDocs: Long) =
+      Graft.compileSession(PipelineRelational.p23(chunkDocs), spark).collect().map(_.toSeq).toSeq
+    val got = pack(d)
+    val expect = pack(1000000000000L) // one chunk: trivially the global cumsum
     assert(got == expect, "derived-divisor packing diverged from the global cumsum")
   }
 

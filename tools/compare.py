@@ -4,7 +4,7 @@ read the Verify parquet output and compare rows/schema/hash against the
 DuckDB oracle SQL run over the same sf dir. Usage:
   python3 tools/compare.py /root/testdata/sf0.001 /tmp/graft_vout
 """
-import sys, json, glob, hashlib
+import sys, json, glob, hashlib, os
 import duckdb
 
 
@@ -30,7 +30,9 @@ def main(sfdir, outdir):
     con = duckdb.connect()
     for t in glob.glob(f"{sfdir}/*.parquet"):
         name = t.split("/")[-1].replace(".parquet", "")
-        con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{t}'")
+        # graft.GenScale writes each table as a directory of part files
+        src = f"{t}/*.parquet" if os.path.isdir(t) else t
+        con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{src}'")
     ok = bad = 0
     for name in sorted(oracle):
         try:
@@ -56,7 +58,6 @@ def main(sfdir, outdir):
     # (VERDICT r6 #3): Verify writes relback/<op>__df (DataFrame fold) and
     # relback/<op>__sql (SQL-text backend); both must hash-equal each other
     # AND the operator's own output dumped above.
-    import os
     for dfdir in sorted(glob.glob(f"{outdir}/relback/*__df")):
         name = os.path.basename(dfdir)[: -len("__df")]
         try:
