@@ -7,19 +7,23 @@ import org.apache.spark.sql.functions._
   * the O(log n)-round algorithm of Kiveris et al., "Connected Components in
   * MapReduce and Beyond" (SoCC 2014), re-expressed as DataFrame rounds.
   *
-  * [[PipelineOps.labelPropagate]] (min-label flooding) stays the DEFAULT
-  * for p16/p20: its per-round cost is one join + one groupBy and real
-  * near-dup graphs have tiny diameters. Its weakness is adversarial
-  * topology — a diameter-d component needs d rounds. Star contraction
-  * replaces the round count with O(log n): each round rewires every node
-  * toward its neighborhood minimum (large-star connects larger neighbors
-  * to the min, small-star collapses the rest), and the edge set provably
-  * contracts to disjoint stars centered at component minima. This is the
-  * escape hatch when [[PipelineOps.LabelMaxRounds]]'s under-merge warning
-  * fires on real data. StarContractionSpec property-tests label-for-label
-  * equivalence against labelPropagate and union-find ground truth on
-  * random graphs, and asserts the logarithmic round count on a chain whose
-  * diameter would exhaust min-label flooding.
+  * It is the label loop's ESCALATION, not a default path of
+  * p16/p20/p22/p42: [[PipelineOps.labelPropagate]] labels a dup graph below
+  * [[PipelineOps.driverEdgeBound]] with an exact union-find on the driver
+  * (no rounds at all); above the bound it runs min-label flooding, whose
+  * per-round cost is one join + one groupBy and which real near-dup graphs
+  * (tiny diameters) finish in a few rounds. Flooding's weakness is
+  * adversarial topology — a diameter-d component needs d rounds. Star
+  * contraction replaces the round count with O(log n): each round rewires
+  * every node toward its neighborhood minimum (large-star connects larger
+  * neighbors to the min, small-star collapses the rest), and the edge set
+  * provably contracts to disjoint stars centered at component minima. This
+  * is the escape hatch when [[PipelineOps.LabelMaxRounds]]'s under-merge
+  * warning fires on real data, and the loop escalates to it automatically.
+  * StarContractionSpec property-tests label-for-label equivalence against
+  * both labelPropagate paths and union-find ground truth on random graphs,
+  * and asserts the logarithmic round count on a chain whose diameter would
+  * exhaust min-label flooding.
   *
   * All per-round shuffles key on the node id; every round's output passes
   * through [[Barrier.materialize]] (same pluggable strategy/lineage story

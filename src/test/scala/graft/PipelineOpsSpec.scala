@@ -481,12 +481,12 @@ class PipelineOpsSpec extends AnyFunSuite {
     // fixed-3-round unroll would leave labels {0,0,0,0,1,2,…} — the loop
     // must iterate to the fixpoint where every node carries label 0 (the
     // union-find ground truth for a single component)
+    // broadcast off pins the loop: the driver path would label any chain
+    // in one union-find pass
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val n = 13L
-    val init = (0L until n).toDF("doc_id").withColumn("lbl", col("doc_id"))
     val edges = (0L until n - 1).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("a", "b")
-    val out = PipelineOps.labelPropagate(init, edges).collect()
+    val out = TestSpark.onLabelLoop(PipelineOps.labelPropagate(edges).collect())
     assert(out.length == n)
     assert(out.forall(_.getLong(1) == 0L),
       s"chain not fully merged: ${out.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).mkString(",")}")
@@ -497,14 +497,69 @@ class PipelineOpsSpec extends AnyFunSuite {
     // 2 rounds, so this exercises the VERDICT r5 #2 escalation path — the
     // residual labeling hands off to StarContraction.labels and the result
     // must still be the exact union-find ground truth (all labels 0)
+    // (on the loop path: broadcast off; the driver path ignores the cap)
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val init = (0L until 10L).toDF("doc_id").withColumn("lbl", col("doc_id"))
     val edges = (0L until 9L).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("a", "b")
-    val out = PipelineOps.labelPropagate(init, edges, maxRounds = 2).collect()
+    val out = TestSpark.onLabelLoop(PipelineOps.labelPropagate(edges, maxRounds = 2).collect())
     assert(out.length == 10)
     assert(out.forall(_.getLong(1) == 0L),
       s"escalation failed to close the chain: ${out.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).mkString(",")}")
+  }
+
+  test("below the driver bound labelPropagate submits exactly one Spark job") {
+    // a materialized multi-partition pair relation, like p16's and p22's
+    // pair barrier: chains 0-1-2-3-4, 5-…-9, …; component min = 5 * (id / 5)
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val pairs = graft.pipeline.Barrier.materialize(spark.range(0L, 50L, 1L, 4)
+      .where(col("id") % 5 =!= 4).select(col("id").as("ida"), (col("id") + 1).as("idb")))
+    val edges = pairs.select(col("ida").as("a"), col("idb").as("b"))
+      .union(pairs.select(col("idb").as("a"), col("ida").as("b")))
+    val tagKey = "graft.test.labels"
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tagKey))).foreach(tags.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val labels = try {
+      sc.setLocalProperty(tagKey, "labels")
+      val out = PipelineOps.labelPropagate(edges)
+      // listener events arrive in order: once the sentinel job is seen,
+      // every job labelPropagate submitted has been seen too
+      sc.setLocalProperty(tagKey, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!tags.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(tags.contains("sentinel"))
+      out
+    } finally {
+      sc.setLocalProperty(tagKey, null)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    assert(tags.asScala.count(_ == "labels") == 1)
+    assert(labels.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (0L until 50L).map(i => i -> 5L * (i / 5)).toMap)
+    graft.pipeline.Barrier.release(pairs)
+  }
+
+  test("p16 joins its labels as a local relation; broadcast off joins the loop's barrier") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, LogicalPlan}
+    import org.apache.spark.sql.execution.LogicalRDD
+    def labelSides(p: LogicalPlan) = p.collect { case j: Join => j.right }
+    val driver = run("p16_dedup_clusters").queryExecution.analyzed
+    assert(labelSides(driver).exists(_.collectFirst { case l: LocalRelation => l }.nonEmpty),
+      s"p16 labels are not a local relation:\n$driver")
+    assert(driver.collectFirst { case r: LogicalRDD => r }.isEmpty,
+      s"p16 still reads a materialized barrier:\n$driver")
+    val loop = TestSpark.onLabelLoop(run("p16_dedup_clusters").queryExecution.analyzed)
+    assert(labelSides(loop).exists(_.collectFirst { case r: LogicalRDD => r }.nonEmpty),
+      s"broadcast off did not take the label loop:\n$loop")
+    assert(loop.collectFirst { case l: LocalRelation => l }.isEmpty)
   }
 
   test("p22 embed dedup: keep-list matches union-find over the SRP pairs at the dup threshold") {
@@ -550,11 +605,12 @@ class PipelineOpsSpec extends AnyFunSuite {
     // mirror of the p16 cap-invariance property: capping the flooding
     // rounds at 1 must yield EXACTLY the same keep-list — either flooding
     // converges in one round (all components are single edges) or the
-    // star-contraction escalation closes the rest
+    // star-contraction escalation closes the rest. The capped run takes
+    // the loop path (broadcast off), the default run the driver path.
     val expected = run("p22_embed_dedup").collect().map(_.toSeq).toSeq
     spark.conf.set("spark.graft.labelMaxRounds", "1")
     try {
-      val capped = run("p22_embed_dedup").collect().map(_.toSeq).toSeq
+      val capped = TestSpark.onLabelLoop(run("p22_embed_dedup").collect().map(_.toSeq).toSeq)
       assert(capped == expected, "cap=1 p22 keep-list differs from default-cap keep-list")
     } finally spark.conf.unset("spark.graft.labelMaxRounds")
   }
@@ -563,11 +619,12 @@ class PipelineOpsSpec extends AnyFunSuite {
     // with spark.graft.labelMaxRounds=1 the dup-graph cannot converge by
     // flooding (any component of diameter >1 needs more rounds), so p16Run
     // must route through star contraction — and produce EXACTLY the same
-    // clusters as the default-cap run
+    // clusters as the default-cap run. The capped run takes the loop path
+    // (broadcast off), the default run the driver path.
     val expected = run("p16_dedup_clusters").collect().map(_.toSeq).toSeq
     spark.conf.set("spark.graft.labelMaxRounds", "1")
     try {
-      val capped = run("p16_dedup_clusters").collect().map(_.toSeq).toSeq
+      val capped = TestSpark.onLabelLoop(run("p16_dedup_clusters").collect().map(_.toSeq).toSeq)
       assert(capped == expected, "cap=1 (escalated) clusters differ from default-cap clusters")
     } finally spark.conf.unset("spark.graft.labelMaxRounds")
   }

@@ -4,8 +4,9 @@ import graft.pipeline.{PipelineOps, StarContraction}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** VERDICT r4 #8 (stretch): star contraction must agree label-for-label
-  * with min-label propagation AND union-find ground truth on random
-  * graphs, and must converge logarithmically where flooding is linear. */
+  * with both labelPropagate paths (driver union-find and the min-label
+  * loop) AND union-find ground truth on random graphs, and must converge
+  * logarithmically where flooding is linear. */
 class StarContractionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import org.apache.spark.sql.functions._
@@ -46,12 +47,20 @@ class StarContractionSpec extends AnyFunSuite {
       val star = StarContraction.labels(init, e).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       // labelPropagate's contract takes a SYMMETRIZED edge set (see
-      // p16Labels); star contraction symmetrizes internally
+      // p16Labels); star contraction symmetrizes internally. It labels
+      // edge-incident nodes only: isolated nodes rejoin as their own label
+      // through the left join + coalesce p16/p22 use.
       val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
-      val flood = PipelineOps.labelPropagate(init, sym, maxRounds = n).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      def flood(): Map[Long, Long] = {
+        val sub = PipelineOps.labelPropagate(sym, maxRounds = n)
+        init.select("doc_id").join(sub, Seq("doc_id"), "left")
+          .select(col("doc_id"), coalesce(col("lbl"), col("doc_id"))).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       assert(star == truth, s"trial $trial: star contraction != union-find")
-      assert(flood == truth, s"trial $trial: labelPropagate != union-find")
+      assert(flood() == truth, s"trial $trial: labelPropagate (driver path) != union-find")
+      val viaLoop = TestSpark.onLabelLoop(flood())
+      assert(viaLoop == truth, s"trial $trial: labelPropagate (loop path) != union-find")
     }
   }
 

@@ -29,6 +29,17 @@ object TestSpark {
     s
   }
 
+  /** Broadcast off gives `PipelineOps.labelPropagate` a driver bound of 0,
+    * so `body` runs the label loop (and its star-contraction escalation)
+    * whatever the dup graph's size. */
+  def onLabelLoop[T](body: => T): T = {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      assert(graft.pipeline.PipelineOps.driverEdgeBound(spark) == 0)
+      body
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
   private def d(s: String) = java.sql.Date.valueOf(s)
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
