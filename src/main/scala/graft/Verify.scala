@@ -24,25 +24,28 @@ object Verify {
       .map { case (k, v) => s"${util.Json.quote(k)}: ${util.Json.quote(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Two-backend dump of the pipeline operators' relational re-expressions
-    // (VERDICT r6 #3): for each PipelineRelational.prql entry, write the
-    // DataFrame-fold result and the SQL-text-backend result side by side;
-    // tools/compare.py diffs them against each other AND the operator's own
-    // output above. The catalog views are re-registered first — the
-    // pipeline runs in the main loop rebound them to raw parquet.
-    for (t <- Seq("documents", "events", "embeddings"))
-      try Graft.parquetCatalog(spark, sfDir)(t).createOrReplaceTempView(t)
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] relback view $t failed: ${e.getMessage}")
-      }
+    // Two-backend dump of the pipeline operators' relational texts: for
+    // each PipelineRelational.prql entry, the SQL-text backend's result
+    // (`__sql`) and, where the text is not itself the operator, the
+    // DataFrame fold's (`__df`; for PipelineRelational.operators the fold
+    // IS the operator output dumped above). tools/compare.py checks each
+    // against that output. Each entry reads the corpus views of sfDir with
+    // its gate fixture's planted relations bound over them — the relations
+    // the operator read above.
     pipeline.PipelineRelational.registerKernels(spark)
     // the relational texts hardcode default knobs; pin the session to
     // defaults so the dump is comparable to the operators' (ADVICE r8)
     pipeline.PipelineRelational.pinDefaults(spark)
+    val catalog = Graft.parquetCatalog(spark, sfDir)
     pipeline.PipelineRelational.prql.foreach { case (name, prql) =>
       try {
-        Graft.compileDir(prql, spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/relback/${name}__df")
+        for (t <- Seq("documents", "events", "embeddings"))
+          catalog(t).createOrReplaceTempView(t)
+        pipeline.PipelineOps.gateRelations(spark, sfDir, name)
+          .foreach { case (t, df) => df.createOrReplaceTempView(t) }
+        if (!pipeline.PipelineRelational.operators(name))
+          Graft.compileSession(prql, spark).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/relback/${name}__df")
         spark.sql(Graft.toSparkSql(prql)).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/relback/${name}__sql")
       } catch { case e: Throwable =>

@@ -164,35 +164,6 @@ object PipelineOps {
   private val wordsSpark = """split(trim(text), '\\s+')"""
   private val wordsDuck = """regexp_split_to_array(trim(text), '\s+')"""
 
-  /** Gate-fixture planting switch (`spark.graft.plantFixtures`, VERDICT r8
-    * #2). The oracle gate plants deterministic fixtures INSIDE some
-    * operators' SQL (an `aug`-style CTE mutating the corpus) so every
-    * outcome class is populated at tiny SF — the gate corpus has no
-    * natural PII, URLs, HTML, syndicated blocks, or snapshot pairs.
-    * Default true (the driver gate's contract; every DuckDB oracle
-    * computes the same planted relation). Set false at deployment and
-    * each affected operator reads its REAL input instead — the shipped
-    * SQL is then copy-paste clean:
-    *  - p38/p43/p54: text verbatim (no planted PII / NFC suffix /
-    *    syndicated block);
-    *  - p45: the `url` column of documents (a URL is metadata the text
-    *    can't stand in for — the table must carry one);
-    *  - p47: `split(text, '\n')` (real line structure);
-    *  - p48: views `documents_base` + `documents_batch` (the real
-    *    corpus/ingest pair), content key un-mutated;
-    *  - p52: views `documents_v1` + `documents_v2` (the real snapshots);
-    *  - p58: the text column AS the raw page (crawl pipelines keep raw
-    *    HTML there);
-    *  - p60: no planted twins.
-    * PlantFixturesSpec proves the fixture content vanishes with the
-    * switch off while the operator shape still runs. */
-  private[graft] def plantFixtures(spark: SparkSession): Boolean = {
-    val v = spark.conf.getOption("spark.graft.plantFixtures").getOrElse("true")
-    require(v == "true" || v == "false",
-      s"spark.graft.plantFixtures: true|false, got $v")
-    v.toBoolean
-  }
-
   /** 64-bit hash of a string, < 2^32 (the folds' overflow-safety contract:
     * acc*b + h stays < 2^37): the native [[graft.functions.GraftMd5H32]]
     * kernel — value-identical to `conv(substr(md5(e),1,8),16,10)` (what the
@@ -2639,32 +2610,15 @@ object PipelineOps {
   // subset is chosen to mean the same thing in Java regex (Spark) and RE2
   // (DuckDB): character classes, bounded counts, ASCII \\b — no
   // backreferences or lookarounds. The gate corpus carries no natural PII,
-  // so the operator plants one deterministic email/IP/phone per document
-  // (derived from doc_id, identically on both engines) — every row
+  // so its gate fixture ([[gateFixture]]) appends one deterministic
+  // email/IP/phone per document (derived from doc_id, identically on both
+  // engines) — every row
   // exercises every redaction stage and the checksum proves the rewritten
   // TEXT (not just the counts) matches bit-for-bit.
 
   private val EmailPat = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\\\.[A-Za-z]{2,}"
   private val IpPat = "\\\\b\\\\d{1,3}(\\\\.\\\\d{1,3}){3}\\\\b"
   private val PhonePat = "\\\\b\\\\d{7,}\\\\b"
-
-  private def p38Spark(plant: Boolean = true) = s"""
-    WITH aug AS (
-      ${if (plant) s"""SELECT doc_id, concat(text, ' contact user', CAST(doc_id AS STRING),
-        '@example.com from 10.0.', CAST(doc_id % 256 AS STRING), '.7 call 55512',
-        CAST(30000 + doc_id AS STRING)) AS t
-      FROM documents"""
-      else "SELECT doc_id, text AS t FROM documents"}),
-    e AS (SELECT doc_id, t, regexp_replace(t, '$EmailPat', '<EMAIL>') AS te FROM aug),
-    i AS (SELECT doc_id, t, te, regexp_replace(te, '$IpPat', '<IP>') AS ti FROM e),
-    ph AS (SELECT doc_id, t, te, ti, regexp_replace(ti, '$PhonePat', '<PHONE>') AS rt FROM i)
-    SELECT doc_id,
-      CAST(size(regexp_extract_all(t, '$EmailPat', 0)) AS BIGINT) AS n_emails,
-      CAST(size(regexp_extract_all(te, '$IpPat', 0)) AS BIGINT) AS n_ips,
-      CAST(size(regexp_extract_all(ti, '$PhonePat', 0)) AS BIGINT) AS n_phones,
-      CAST(length(rt) AS BIGINT) AS n_chars_red,
-      ${hStrSpark("rt")} AS red_checksum
-    FROM ph ORDER BY doc_id"""
 
   private val p38Duck = {
     val email = EmailPat.replace("\\\\", "\\")
@@ -2879,35 +2833,12 @@ object PipelineOps {
   // engine-common primitives (lower / replace / regexp fragment-strip /
   // split_part / sorted-array rejoin) — no backreference replacements,
   // whose $1-vs-\\1 syntax diverges across engines. The testdata has no
-  // URL column, so each doc plants a deterministic raw URL exercising
-  // every rule (upper case, www, :80, unsorted params, fragment); at
-  // deployment the planted CTE is replaced by the real column and
+  // URL column, so the gate fixture gives each doc a deterministic raw URL
+  // exercising every rule (upper case, www, :80, unsorted params,
+  // fragment); at deployment the operator reads the real column and
   // everything downstream (normalize → host extraction → checksum, all
   // map-side, zero shuffle) is unchanged. p01-style exact dedup composes
   // on url_checksum directly.
-
-  private def p45Spark(plant: Boolean = true) = s"""
-    WITH u AS (
-      ${if (plant) s"""SELECT doc_id, concat('HTTP://WWW.Site', CAST(doc_id % 7 AS STRING),
-        '.COM:80/a/', CAST(doc_id AS STRING), '?z=1&y=', CAST(doc_id % 3 AS STRING),
-        '&a=9#s') AS raw
-      FROM documents"""
-      else "SELECT doc_id, url AS raw FROM documents"}),
-    s1 AS (
-      SELECT doc_id,
-        replace(replace(regexp_replace(lower(raw), '#.*$$', ''), '://www.', '://'), ':80/', '/') AS u
-      FROM u),
-    s2 AS (
-      SELECT doc_id,
-        split_part(u, '?', 1) AS base,
-        CASE WHEN contains(u, '?')
-          THEN concat('?', array_join(array_sort(split(split_part(u, '?', 2), '&')), '&'))
-          ELSE '' END AS qs
-      FROM s1)
-    SELECT doc_id,
-      split_part(split_part(base, '://', 2), '/', 1) AS host,
-      ${hStrSpark("concat(base, qs)")} AS url_checksum
-    FROM s2 ORDER BY doc_id"""
 
   private val p45Duck = s"""
     WITH u AS (
@@ -2986,27 +2917,6 @@ object PipelineOps {
   // deterministic composed-or-decomposed suffix by parity — both
   // parities must converge to the SAME normalized suffix, which the
   // checksum proves. Pure map-side.
-
-  private def p43Spark(plant: Boolean = true) = s"""
-    WITH aug AS (
-      ${if (plant) s"""SELECT doc_id,
-        concat(text, CASE WHEN doc_id % 2 = 0
-          THEN ' caf\\u0065\\u0301' ELSE ' caf\\u00e9' END) AS t
-      FROM documents"""
-      else "SELECT doc_id, text AS t FROM documents"})
-    SELECT doc_id,
-      CAST(length(t) AS BIGINT) AS len_raw,
-      CAST(length(graft_nfc(t)) AS BIGINT) AS len_nfc,
-      md5(graft_nfc(t)) AS nfc_checksum
-    FROM aug ORDER BY doc_id"""
-
-  private def p43Run(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerNfc(spark)
-    val plant = plantFixtures(spark)
-    if (plant)
-      readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    spark.sql(p43Spark(plant))
-  }
 
   private val p43Duck = s"""
     WITH aug AS (
@@ -3087,8 +2997,8 @@ object PipelineOps {
   // document itself. Distinct from p01 (whole-doc dedup), p26 (intra-doc
   // repetition) and p33 (term-level stats): the unit here is the LINE and
   // the evidence is cross-document frequency. The gate corpus has no
-  // newlines, so each document is recast as four planted lines (the
-  // p38/p43/p45 planted-fixture pattern): its own leading words (unique
+  // newlines, so the gate fixture recasts each document as four lines
+  // joined by '\n': its own leading words (unique
   // up to exact-dup docs → kept), a universal footer (df = N → removed),
   // a 1-in-7 promo line (df ≈ N/7 → removed: the common-but-not-universal
   // case), and a per-doc ref line (df = 1 → kept).
@@ -3112,15 +3022,8 @@ object PipelineOps {
     t
   }
 
-  private[graft] def p47Spark(dfMin: Int, plant: Boolean = true) = s"""
-    WITH aug AS (
-      ${if (plant) s"""SELECT doc_id, array(
-        array_join(slice(${wordsSpark}, 1, 6), ' '),
-        'copyright acme corp all rights reserved',
-        concat('promo code ', CAST(doc_id % 7 AS STRING)),
-        concat('ref ', CAST(doc_id AS STRING))) AS lines
-      FROM documents"""
-      else "SELECT doc_id, split(text, '\\n') AS lines FROM documents"}),
+  private[graft] def p47Spark(dfMin: Int) = s"""
+    WITH aug AS (SELECT doc_id, split(text, '\\n') AS lines FROM documents),
     occ AS (
       SELECT DISTINCT ${hKeySpark("line")} AS lh, doc_id
       FROM aug LATERAL VIEW explode(lines) x AS line),
@@ -3137,14 +3040,6 @@ object PipelineOps {
       CAST(size(lines) - size(kept) AS BIGINT) AS n_removed,
       ${hStrSpark("array_join(kept, CHR(10))")} AS clean_checksum
     FROM out ORDER BY doc_id"""
-
-  private def p47Run(spark: SparkSession, dir: String): DataFrame = {
-    val plant = plantFixtures(spark)
-    if (plant)
-      readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    graft.functions.GraftFunctions.registerMd5(spark)
-    spark.sql(p47Spark(boilerplateDf(spark), plant))
-  }
 
   private val p47Duck = s"""
     WITH aug AS (
@@ -3208,24 +3103,18 @@ object PipelineOps {
     math.min(math.max(bits, 64L), 1L << 26)
   }
 
-  // The gate corpus has no exact duplicates, so content is planted (the
-  // p38/p45/p47 fixture pattern): every 7th document shares one content
-  // block — batch docs with doc_id ≡ 14 (mod 35) are true duplicates of
+  // The gate corpus has no exact duplicates, so the gate fixture plants
+  // content and splits the corpus into base and batch (pmod(doc_id, 5) = 4
+  // is the batch): every 7th document shares one content block — batch docs with doc_id ≡ 14 (mod 35) are true duplicates of
   // base docs, exercising the bloom-positive → verified path; everything
   // else exercises the bloom-negative fast path.
   private val p48Key =
     "CASE WHEN doc_id % 7 = 0 THEN 'planted shared content block' ELSE lower(trim(text)) END"
 
-  private def p48Spark(estItems: Long, numBits: Long,
-                       plant: Boolean = true) = s"""
-    WITH base AS (
-      ${if (plant) s"""SELECT ${hStrSpark(p48Key)} AS h
-      FROM documents WHERE pmod(doc_id, 5) < 4"""
-      else s"SELECT ${hStrSpark("lower(trim(text))")} AS h FROM documents_base"}),
+  private def p48Spark(estItems: Long, numBits: Long) = s"""
+    WITH base AS (SELECT ${hStrSpark("lower(trim(text))")} AS h FROM documents_base),
     batch AS (
-      ${if (plant) s"""SELECT doc_id, ${hStrSpark(p48Key)} AS h
-      FROM documents WHERE pmod(doc_id, 5) = 4"""
-      else s"SELECT doc_id, ${hStrSpark("lower(trim(text))")} AS h FROM documents_batch"}),
+      SELECT doc_id, ${hStrSpark("lower(trim(text))")} AS h FROM documents_batch),
     bf AS (
       SELECT graft_bloom_agg(xxhash64(h), CAST($estItems AS BIGINT),
         CAST($numBits AS BIGINT)) AS b
@@ -3240,17 +3129,10 @@ object PipelineOps {
     FROM batch b LEFT JOIN verified v ON b.doc_id = v.doc_id
     ORDER BY b.doc_id"""
 
-  private def p48Run(spark: SparkSession, dir: String): DataFrame = {
+  private def p48Run(spark: SparkSession): DataFrame = {
     graft.functions.GraftFunctions.registerBloom(spark)
-    val plant = plantFixtures(spark)
-    if (plant)
-      readSpread(spark, s"$dir/documents.parquet").createOrReplaceTempView("documents")
-    val baseCount =
-      if (plant) "SELECT count(*) FROM documents WHERE pmod(doc_id, 5) < 4"
-      else "SELECT count(*) FROM documents_base"
-    val n = math.max(1L, spark.sql(baseCount).head.getLong(0))
-    graft.functions.GraftFunctions.registerMd5(spark)
-    spark.sql(p48Spark(n, bloomBits(n, bloomFpp(spark)), plant))
+    val n = math.max(1L, spark.sql("SELECT count(*) FROM documents_base").head.getLong(0))
+    spark.sql(p48Spark(n, bloomBits(n, bloomFpp(spark))))
   }
 
   private val p48Duck = s"""
@@ -3541,33 +3423,11 @@ object PipelineOps {
   // equi-join on doc_id comparing content hashes — at 100 TB both sides
   // shuffle on the id once (or zero times when snapshots are
   // Sinks-bucketed by doc_id, the write-once/diff-many layout), and the
-  // hash comparison is map-side after it. Snapshots are planted from the
-  // gate corpus (the p48 fixture pattern): v1 = ids ≢ 9 (mod 10), v2 =
+  // hash comparison is map-side after it. At the gate the snapshots are
+  // planted from the corpus ([[gateFixture]]): v1 = ids ≢ 9 (mod 10), v2 =
   // ids ≢ 8 (mod 10) — so ids ≡ 8 are removed, ≡ 9 added — and v2 text
   // gains a suffix on ids ≡ 3 (mod 7) → content_changed; everything else
-  // unchanged. At deployment the two planted CTEs are the real snapshot
-  // tables and everything downstream is unchanged.
-  private def p52Spark(plant: Boolean = true) = s"""
-    WITH v1 AS (
-      ${if (plant) s"""SELECT doc_id, ${hStrSpark("lower(trim(text))")} AS h
-      FROM documents WHERE pmod(doc_id, 10) != 9"""
-      else s"SELECT doc_id, ${hStrSpark("lower(trim(text))")} AS h FROM documents_v1"}),
-    v2 AS (
-      ${if (plant) s"""SELECT doc_id, ${hStrSpark(
-        "CASE WHEN doc_id % 7 = 3 THEN lower(trim(text)) || ' v2' ELSE lower(trim(text)) END")} AS h
-      FROM documents WHERE pmod(doc_id, 10) != 8"""
-      else s"SELECT doc_id, ${hStrSpark("lower(trim(text))")} AS h FROM documents_v2"}),
-    d AS (
-      SELECT coalesce(v1.doc_id, v2.doc_id) AS doc_id,
-        CASE WHEN v1.doc_id IS NULL THEN 'added'
-             WHEN v2.doc_id IS NULL THEN 'removed'
-             WHEN v1.h != v2.h THEN 'content_changed'
-             ELSE 'unchanged' END AS status
-      FROM v1 FULL JOIN v2 ON v1.doc_id = v2.doc_id)
-    SELECT status, CAST(count(*) AS BIGINT) AS n_docs,
-      CAST(sum(doc_id) AS BIGINT) AS id_sum
-    FROM d GROUP BY status ORDER BY status"""
-
+  // unchanged. At deployment they are the real snapshot tables.
   private val p52Duck = s"""
     WITH v1 AS (
       SELECT doc_id, md5(lower(trim(text))) AS h
@@ -3664,8 +3524,8 @@ object PipelineOps {
   // DUPLICATED windows only, then one per-doc rollup.
   //
   // The gate corpus has no natural cross-doc K-gram repeats at K=8, so a
-  // 12-word syndication block is planted on every 5th document (the
-  // p38/p45/p47/p48 fixture pattern): its 5 fully-in-block windows recur
+  // 12-word syndication block is planted on every 5th document (its gate
+  // fixture, [[gateFixture]]): its 5 fully-in-block windows recur
   // across ~N/5 docs (cov = 12 positions); block/original boundary
   // windows stay doc-unique. Unplanted docs prove the zero path.
   private val SubstrK = 8
@@ -3683,7 +3543,7 @@ object PipelineOps {
   private val SyndicatedBlock =
     "breaking news this content is syndicated across partner sites worldwide today reader"
 
-  private[graft] def p54Spark(k: Int, plant: Boolean = true): String = {
+  private[graft] def p54Spark(k: Int): String = {
     // The gram key is an 8-byte BIGINT, not the 32-char hex string: gh is
     // the join/shuffle key of the one UNBOUNDED relation in this operator,
     // so key width is shuffle bytes at 100 TB (see hKeySpark). A collision
@@ -3691,12 +3551,7 @@ object PipelineOps {
     // precedent). Measured: 2.5 s -> 1.9 s at sf0.1.
     val gramHash = hKeySpark(s"array_join(slice(words, pos, $k), ' ')")
     s"""
-    WITH aug AS (
-      ${if (plant) s"""SELECT doc_id, CASE WHEN doc_id % 5 = 0
-        THEN concat('$SyndicatedBlock ', text) ELSE text END AS text2
-      FROM documents"""
-      else "SELECT doc_id, text AS text2 FROM documents"}),
-    t AS (SELECT doc_id, split(trim(text2), '\\\\s+') AS words FROM aug),
+    WITH t AS (SELECT doc_id, $wordsSpark AS words FROM documents),
     w AS (SELECT doc_id, CAST(size(words) AS BIGINT) AS n, words FROM t),
     we AS (SELECT doc_id, n, words FROM w WHERE n >= $k),
     g AS (
@@ -3718,14 +3573,6 @@ object PipelineOps {
       CAST(floor((CAST(coalesce(cov.n_dup, 0) AS DOUBLE) / w.n) * 1e6 + 0.5) AS DOUBLE) / 1e6 AS dup_ratio
     FROM w LEFT JOIN cov ON w.doc_id = cov.doc_id
     ORDER BY w.doc_id"""
-  }
-
-  private def p54Run(spark: SparkSession, dir: String): DataFrame = {
-    val plant = plantFixtures(spark)
-    if (plant)
-      readSpread(spark, s"$dir/documents.parquet", spread = true).createOrReplaceTempView("documents")
-    graft.functions.GraftFunctions.registerMd5(spark)
-    spark.sql(p54Spark(substrK(spark), plant))
   }
 
   private val p54Duck = s"""
@@ -4083,9 +3930,9 @@ object PipelineOps {
   // ---- p58: HTML text extraction -------------------------------------------
   // The extraction step itself — the very first stage of a crawl pipeline
   // (C4's WET cleanup, FineWeb's trafilatura pass): raw HTML → visible
-  // text. The gate corpus is plain text, so each document is wrapped in a
-  // deterministic page template (title, style, script, nav, footer with
-  // entities — the p38/p47 planted-fixture pattern) and the operator must
+  // text. The gate corpus is plain text, so its gate fixture wraps each
+  // document in a deterministic page template (title, style, script, nav,
+  // footer with entities) and the operator must
   // recover the body: script/style subtrees dropped WHOLE (tag-stripping
   // alone would leak JS/CSS payloads — the classic extraction bug), tags
   // → whitespace, the 5 predefined XML/HTML entities decoded, whitespace
@@ -4095,40 +3942,6 @@ object PipelineOps {
   // shuffles before the output sort; regexes are shared-syntax between
   // Java and RE2 (non-greedy, character classes — no backrefs or
   // lookarounds, which RE2 lacks).
-  private def p58Spark(plant: Boolean = true) = s"""
-    WITH aug AS (
-      ${if (plant) s"""SELECT doc_id, concat(
-        '<html><head><title>Doc ', CAST(doc_id AS STRING),
-        '</title><style>body { color: #333; }</style>',
-        '<script>var tracker = "t" + ', CAST(doc_id % 7 AS STRING),
-        ';</script></head><body><nav>home | about | contact</nav><p>',
-        text,
-        '</p><div class="footer">&quot;Acme &amp; Co&quot; &lt;legal&gt; &#39;2026&#39;</div></body></html>'
-      ) AS html FROM documents"""
-      else "SELECT doc_id, text AS html FROM documents"}),
-    s1 AS (
-      SELECT doc_id, html,
-        regexp_replace(regexp_replace(html,
-          '<script[^>]*>.*?</script>', ' '),
-          '<style[^>]*>.*?</style>', ' ') AS noscript
-      FROM aug),
-    s2 AS (
-      SELECT doc_id, html,
-        regexp_replace(noscript, '<[^>]*>', ' ') AS untagged
-      FROM s1),
-    s3 AS (
-      SELECT doc_id, html,
-        trim(regexp_replace(replace(replace(replace(replace(replace(untagged,
-          '&quot;', '"'), '&lt;', '<'), '&gt;', '>'), '&#39;', CHR(39)),
-          '&amp;', '&'), '\\\\s+', ' ')) AS clean
-      FROM s2)
-    SELECT doc_id,
-      regexp_extract(html, '<title>([^<]*)</title>', 1) AS title,
-      CAST(length(clean) AS BIGINT) AS n_chars_clean,
-      CAST(CASE WHEN clean RLIKE 'var tracker|color: #333' THEN 1 ELSE 0 END AS BIGINT) AS leaked,
-      ${hStrSpark("clean")} AS clean_checksum
-    FROM s3 ORDER BY doc_id"""
-
   private val p58Duck = s"""
     WITH aug AS (
       SELECT doc_id,
@@ -4212,8 +4025,8 @@ object PipelineOps {
   //
   // The synthetic corpus's organic near-dups sit at Jaccard ~0.5 — far in
   // Hamming space (E[dist] ~ 8/32 bits) — so they populate the REJECT
-  // class, and the KEEP class is planted (the p38/p54 fixture pattern):
-  // every 7th doc gets a twin (id offset 2^40) with ONE appended token.
+  // class, and the KEEP class is planted by its gate fixture: every 7th
+  // doc gets a twin (id offset 2^40) with ONE appended token.
   // Appending one word shifts each bit counter by ±1, so the twin's
   // fingerprint differs only where a counter sat at zero — Hamming 0-2
   // in practice, comfortably inside d=3. Both engines compute the same
@@ -4257,16 +4070,10 @@ object PipelineOps {
     * of relation the LshSigsView precedent materializes: the self-join
     * consumes it on BOTH sides, and inlined, each side re-runs the whole
     * words→hash→32-counter fold (measured 5.2 s vs 2.7 s at sf0.1). */
-  private def p60SigsSql(plant: Boolean = true) = s"""
-    WITH aug AS (
-      ${if (plant) s"""SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + $SimPairTwinOff AS doc_id, concat(text, ' mirrortoken') AS text
-      FROM documents WHERE doc_id % 7 = 0"""
-      else "SELECT doc_id, text FROM documents"}),
-    t AS (
+  private val p60SigsSql = s"""
+    WITH t AS (
       SELECT doc_id, transform($wordsSpark, w -> ${hSpark("w")}) AS hw
-      FROM aug)
+      FROM documents)
     SELECT doc_id,
       aggregate(
         zip_with(
@@ -4301,12 +4108,8 @@ object PipelineOps {
     ORDER BY ida, idb"""
   }
 
-  private def p60Run(spark: SparkSession, dir: String): DataFrame = {
-    val plant = plantFixtures(spark)
-    if (plant)
-      readSpread(spark, s"$dir/documents.parquet", spread = true).createOrReplaceTempView("documents")
-    graft.functions.GraftFunctions.registerMd5(spark)
-    materialized(spark, SimPairSigsView, p60SigsSql(plant))
+  private def p60Run(spark: SparkSession): DataFrame = {
+    materialized(spark, SimPairSigsView, p60SigsSql)
     spark.sql(p60PairsSql(simhashBands(spark)))
   }
 
@@ -4547,8 +4350,8 @@ object PipelineOps {
   // lines from EVERY doc — a df-threshold broadcast set) and p54
   // (window-gram statistics, no rewrite): here the unit is the paragraph,
   // the rule is keep-first/drop-rest, and the output is the rewritten
-  // corpus. The gate corpus has no paragraph breaks, so each document is
-  // recast as planted paragraphs (the p38/p45/p47 fixture pattern): its
+  // corpus. The gate corpus has no paragraph breaks, so the gate fixture
+  // recasts each document as paragraphs joined by a blank line: its
   // own leading words (shared only by exact-dup docs → dropped from the
   // later copy), a syndicated wire block on every 5th doc (kept once,
   // dropped from ~N/5 docs), and a per-doc ref paragraph (always kept).
@@ -4567,33 +4370,6 @@ object PipelineOps {
   // width is the document's own paragraphs. Packing contract:
   // doc_id < 2^31 and < 2^32 paragraphs per document (doc_id*2^32+pos
   // stays in int64).
-  private[graft] def p63Spark(plant: Boolean = true): String = s"""
-    WITH aug AS (
-      ${if (plant) s"""SELECT doc_id, CASE WHEN doc_id % 5 = 2 THEN array(
-        array_join(slice($wordsSpark, 1, 6), ' '),
-        'syndicated wire block shared across partner outlets',
-        concat('ref ', CAST(doc_id AS STRING)))
-      ELSE array(
-        array_join(slice($wordsSpark, 1, 6), ' '),
-        concat('ref ', CAST(doc_id AS STRING))) END AS paras
-      FROM documents"""
-      else "SELECT doc_id, split(text, '\\n\\n') AS paras FROM documents"}),
-    occ AS (
-      SELECT doc_id, pos, para, ${hKeySpark("para")} AS ph
-      FROM aug LATERAL VIEW posexplode(paras) x AS pos, para),
-    firsts AS (
-      SELECT ph, min(doc_id * 4294967296 + pos) AS first_pk
-      FROM occ GROUP BY ph),
-    mark AS (
-      SELECT o.doc_id, o.pos, o.para,
-        CASE WHEN o.doc_id * 4294967296 + o.pos = f.first_pk THEN 1 ELSE 0 END AS keep
-      FROM occ o JOIN firsts f ON o.ph = f.ph)
-    SELECT doc_id,
-      CAST(count(*) AS BIGINT) AS n_paras,
-      CAST(count(*) - sum(keep) AS BIGINT) AS n_removed,
-      ${hStrSpark("array_join(transform(sort_array(collect_list(CASE WHEN keep = 1 THEN struct(pos, para) END)), s -> s.para), CHR(10))")} AS clean_checksum
-    FROM mark GROUP BY doc_id ORDER BY doc_id"""
-
   private val p63Duck = s"""
     WITH aug AS (
       SELECT doc_id, CASE WHEN doc_id % 5 = 2 THEN [
@@ -5076,7 +4852,7 @@ object PipelineOps {
   // are corpus-sized, so it is an honest shuffle equi-join (broadcast
   // would be the bug — the p54 argument).
   //
-  // Gate fixture (the p60 twin pattern, plant-gated): every 9th doc gets a
+  // Gate fixture ([[gateFixture]], the p60 twin pattern): every 9th doc gets a
   // synthetic continuation (id offset 2^41) whose text starts with the
   // source's last K words — the KEEP class; organic suffix=prefix ties are
   // the reject-path noise both engines see identically.
@@ -5085,29 +4861,6 @@ object PipelineOps {
   // width so streamed stitch pairs agree with p69's batch pairs
   private[graft] val BoundaryK = 8
   private val BoundaryContOff = 2199023255552L // 2^41 — never aliases real ids
-
-  private def p69Spark(plant: Boolean): String = s"""
-    WITH aug AS (
-      ${if (plant) s"""SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + $BoundaryContOff AS doc_id,
-        concat(array_join(slice($wordsSpark, -$BoundaryK, $BoundaryK), ' '),
-               ' stitched continuation segment') AS text
-      FROM documents WHERE doc_id % 9 = 4 AND size($wordsSpark) >= $BoundaryK"""
-      else "SELECT doc_id, text FROM documents"}),
-    w AS (SELECT doc_id, $wordsSpark AS words FROM aug),
-    g AS (
-      SELECT doc_id,
-        array_join(slice(words, 1, $BoundaryK), ' ') AS pfx,
-        array_join(slice(words, -$BoundaryK, $BoundaryK), ' ') AS sfx
-      FROM w WHERE size(words) >= $BoundaryK)
-    SELECT s.doc_id AS a_id, p.doc_id AS b_id,
-      ${hStrSpark("s.sfx")} AS overlap_sig
-    FROM g s JOIN g p
-      ON ${hKeySpark("s.sfx")} = ${hKeySpark("p.pfx")}
-     AND s.doc_id != p.doc_id
-    WHERE s.sfx = p.pfx
-    ORDER BY a_id, b_id"""
 
   private val p69Duck = s"""
     WITH aug AS (
@@ -5141,7 +4894,7 @@ object PipelineOps {
   // regex whose pattern is BUILT from chr() calls so no string-escape
   // dialect can skew the two engines.
   //
-  // Gate fixture (plant-gated): every 13th doc gets one replacement char,
+  // Gate fixture ([[gateFixture]]): every 13th doc gets one replacement char,
   // one BEL control, and one digraph of each class appended — populating
   // every counter's nonzero class; organic corpus text is clean ASCII, the
   // is_clean class.
@@ -5159,39 +4912,32 @@ object PipelineOps {
   private[graft] val MojiPlantTail =                     // one of each class + BEL ()
     s" ${MojiDigraph1} ${MojiDigraph2}™ ${MojiRepl}"
 
-  /** Shared builder: the two dialects differ only in integer division,
-    * regexp-count call shape, and the plant switch (oracle always plants). */
-  private def p70Sql(idiv: String, rexCount: String => String, plant: Boolean): String = {
+  /** The DuckDB oracle over the planted corpus ([[gateFixture]]'s p70
+    * relation, computed inline); the operator is its PRQL text. */
+  private val p70Duck: String = {
     // control-char class [--], built
     // from chr() (all < 256, where the engines agree) to keep raw control
     // chars out of the regex literal
     val ctrlClass = "concat('[', chr(1), '-', chr(8), chr(11), chr(12), chr(14), '-', chr(31), ']')"
     def cnt1(c: String) = s"length(text) - length(replace(text, '$c', ''))"
-    def cnt2(c: String) = s"(length(text) - length(replace(text, '$c', ''))) $idiv 2"
+    def cnt2(c: String) = s"(length(text) - length(replace(text, '$c', ''))) // 2"
     s"""
     WITH aug AS (
-      ${if (plant) s"""SELECT doc_id,
+      SELECT doc_id,
         CASE WHEN doc_id % 13 = 5 THEN concat(text, '$MojiPlantTail')
-        ELSE text END AS text FROM documents"""
-      else "SELECT doc_id, text FROM documents"}),
+        ELSE text END AS text FROM documents),
     c AS (
       SELECT doc_id,
         CAST(${cnt1(MojiRepl)} AS BIGINT) AS n_repl,
-        CAST(${rexCount(ctrlClass)} AS BIGINT) AS n_ctrl,
+        CAST(len(regexp_extract_all(text, $ctrlClass)) AS BIGINT) AS n_ctrl,
         CAST(${cnt2(MojiDigraph1)} + ${cnt2(MojiDigraph2)} AS BIGINT) AS n_moji,
         CAST(length(text) AS BIGINT) AS n_chars
       FROM aug)
     SELECT doc_id, n_repl, n_ctrl, n_moji,
-      CAST((n_repl * $MojiWeightRepl + n_ctrl * $MojiWeightCtrl + n_moji) * 1000000 $idiv n_chars AS BIGINT) AS moji_score_micro,
+      CAST((n_repl * $MojiWeightRepl + n_ctrl * $MojiWeightCtrl + n_moji) * 1000000 // n_chars AS BIGINT) AS moji_score_micro,
       (n_repl = 0 AND n_ctrl = 0 AND n_moji = 0) AS is_clean
     FROM c ORDER BY doc_id"""
   }
-
-  private def p70Spark(plant: Boolean): String =
-    p70Sql("DIV", cls => s"size(regexp_extract_all(text, $cls, 0))", plant)
-
-  private val p70Duck: String =
-    p70Sql("//", cls => s"len(regexp_extract_all(text, $cls))", plant = true)
 
   // ---- p71: per-document tf-idf keyword extraction --------------------------
   // The curation primitive behind topic bucketing, cluster naming and
@@ -5286,7 +5032,7 @@ object PipelineOps {
   // #sources, never corpus-sized); the per-source totals are a
   // #sources-row relation the final joins broadcast.
   //
-  // Gate fixture (plant-gated): every 11th doc gains a twin under a
+  // Gate fixture ([[gateFixture]]): every 11th doc gains a twin under a
   // synthetic mirror of its source ('mir_' || source, id offset 2^42) —
   // the syndicated-mirror class every real multi-source merge contains.
   // The gate corpus has zero organic cross-source duplicates, so with
@@ -5295,30 +5041,24 @@ object PipelineOps {
 
   private val SrcMirrorOff = 4398046511104L // 2^42 — never aliases real ids
 
-  private def p72Sql(key: String => String, idiv: String, plant: Boolean): String = s"""
+  private val p72Duck: String = s"""
     WITH aug AS (
-      ${if (plant) s"""SELECT doc_id, source, text FROM documents
+      SELECT doc_id, source, text FROM documents
       UNION ALL
       SELECT doc_id + $SrcMirrorOff AS doc_id, concat('mir_', source) AS source, text
-      FROM documents WHERE doc_id % 11 = 3"""
-      else "SELECT doc_id, source, text FROM documents"}),
-    d AS (SELECT DISTINCT source, ${key("text")} AS k FROM aug),
+      FROM documents WHERE doc_id % 11 = 3),
+    d AS (SELECT DISTINCT source, ${hKeyDuck("text")} AS k FROM aug),
     cnt AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY source),
     pairs AS (
       SELECT a.source AS src_a, b.source AS src_b, CAST(count(*) AS BIGINT) AS n_shared
       FROM d a JOIN d b ON a.k = b.k AND a.source < b.source
       GROUP BY a.source, b.source)
     SELECT p.src_a, p.src_b, p.n_shared, ca.n AS n_a, cb.n AS n_b,
-      CAST(p.n_shared * 1000000 $idiv (ca.n + cb.n - p.n_shared) AS BIGINT) AS jaccard_micro
+      CAST(p.n_shared * 1000000 // (ca.n + cb.n - p.n_shared) AS BIGINT) AS jaccard_micro
     FROM pairs p
     JOIN cnt ca ON ca.source = p.src_a
     JOIN cnt cb ON cb.source = p.src_b
     ORDER BY src_a, src_b"""
-
-  private def p72Spark(plant: Boolean): String =
-    p72Sql(hKeySpark, "DIV", plant)
-
-  private val p72Duck: String = p72Sql(hKeyDuck, "//", plant = true)
 
   // ---- p73: content-defined chunking (CDC) dedup -----------------------------
   // The storage-dedup primitive (Gear/Rabin CDC) at word granularity: a
@@ -5416,25 +5156,23 @@ object PipelineOps {
   // the aggregate+broadcast-join rewrite is the escape hatch if that ever
   // dominates; at every measured SF the window is the cheaper single pass.
   //
-  // Gate fixture (plant-gated): every 6th doc gains a reformatted twin
+  // Gate fixture ([[gateFixture]]): every 6th doc gains a reformatted twin
   // (upper-cased + trailing punctuation, id offset 2^43) — normalizes
   // identically, scores strictly lower, so the ORIGINAL must win its
   // cluster; with planting off every cluster is a singleton at gate SF.
 
   private val ClusterRepOff = 8796093022208L // 2^43 — never aliases real ids
 
-  private def p74Sql(key: String => String, norm: String => String,
-                     alnum: String => String, idiv: String, plant: Boolean): String = s"""
+  private val p74Duck: String = s"""
     WITH aug AS (
-      ${if (plant) s"""SELECT doc_id, text FROM documents
+      SELECT doc_id, text FROM documents
       UNION ALL
       SELECT doc_id + $ClusterRepOff AS doc_id, concat(upper(text), ' !! ?? ..') AS text
-      FROM documents WHERE doc_id % 6 = 1"""
-      else "SELECT doc_id, text FROM documents"}),
+      FROM documents WHERE doc_id % 6 = 1),
     q AS (
-      SELECT doc_id, ${key(norm("text"))} AS ck,
-        coalesce(CAST(length(${alnum("text")}) * 1000000
-          $idiv NULLIF(length(text), 0) AS BIGINT), -1) AS quality_u
+      SELECT doc_id, ${hKeyDuck("trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))")} AS ck,
+        coalesce(CAST(length(regexp_replace(text, '[^A-Za-z0-9]+', '', 'g')) * 1000000
+          // NULLIF(length(text), 0) AS BIGINT), -1) AS quality_u
       FROM aug),
     r AS (
       SELECT doc_id, ck, quality_u,
@@ -5444,18 +5182,6 @@ object PipelineOps {
       FROM q)
     SELECT doc_id, rep_doc, n_members, rn = 1 AS is_rep, quality_u
     FROM r ORDER BY doc_id"""
-
-  private def p74Spark(plant: Boolean): String = p74Sql(
-    hKeySpark,
-    t => s"trim(regexp_replace(lower($t), '[^a-z0-9]+', ' '))",
-    t => s"regexp_replace($t, '[^A-Za-z0-9]+', '')",
-    "DIV", plant)
-
-  private val p74Duck: String = p74Sql(
-    hKeyDuck,
-    t => s"trim(regexp_replace(lower($t), '[^a-z0-9]+', ' ', 'g'))",
-    t => s"regexp_replace($t, '[^A-Za-z0-9]+', '', 'g')",
-    "//", plant = true)
 
   // ---- p75: temperature-smoothed mixture weights ------------------------------
   // The multilingual sampling law (Arivazhagan et al. 2019 §4; mT5/XLM-R):
@@ -5581,15 +5307,12 @@ object PipelineOps {
     FROM m ORDER BY a_id, b_id"""
   }
 
-  private def p76Spark(plant: Boolean): String = p76Sql(
-    hKeySpark, hStrSpark, wordsSpark,
-    (a, f, l) => s"slice($a, $f, $l)",
-    e => s"array_join($e, ' ')", plant)
-
-  /** p76's plant-free Spark text over an arbitrary registered (doc_id,
-    * text) view — the streaming stitch-merge consumer's batch degradation
+  /** p76's Spark text over an arbitrary registered (doc_id, text) view —
+    * the streaming stitch-merge consumer's batch degradation
     * ([[graft.streaming.StitchMergeStream]]) renders through the SAME
-    * fragments, so stream and batch merges cannot drift. */
+    * fragments as the DuckDB oracle, so stream and oracle merges cannot
+    * drift (the operator itself is its PRQL text). `plant` is the
+    * oracle's: its text computes the gate fixture inline. */
   private[graft] def p76SparkOn(view: String): String = p76Sql(
     hKeySpark, hStrSpark, wordsSpark,
     (a, f, l) => s"slice($a, $f, $l)",
@@ -6084,6 +5807,141 @@ object PipelineOps {
       s"WITH sv AS (${p81SvSql(wordsDuck, a => s"len($a)")}), srcs AS")
   }
 
+  // ---- the gate fixture -----------------------------------------------------
+
+  /** Gate-fixture planting switch (`spark.graft.plantFixtures`, default
+    * true: the correctness gate's contract). The fixture is input data,
+    * not a query branch: each planted operator has ONE query, over the
+    * relations its [[gateFixture]] entry names. With planting on they are
+    * the planted copies of the `dir` corpus; with it off they are whatever
+    * the session binds under those names, so a deployment reads its real
+    * text, its real `url` column, newline and blank-line structure, and
+    * its real snapshot pairs (`documents_base`/`documents_batch` for p48,
+    * `documents_v1`/`documents_v2` for p52). PlantFixturesSpec proves the
+    * fixture content vanishes with the switch off. */
+  private[graft] def plantFixtures(spark: SparkSession): Boolean = {
+    val v = spark.conf.getOption("spark.graft.plantFixtures").getOrElse("true")
+    require(v == "true" || v == "false",
+      s"spark.graft.plantFixtures: true|false, got $v")
+    v.toBoolean
+  }
+
+  /** The gate fixture: per planted operator, the corpus `documents` → the
+    * relations the operator reads at the gate. The gate corpus has no
+    * natural PII, URLs, HTML, line or paragraph structure, syndicated
+    * blocks, snapshot pairs or near-duplicate twins, so each planted
+    * relation populates the operator's outcome classes; its DuckDB oracle
+    * computes the same relation inline. Rewritten columns keep the corpus
+    * schema; appended twins carry an id offset (2^40..2^43) that never
+    * aliases a real id. */
+  private[graft] val gateFixture: Map[String, DataFrame => Map[String, DataFrame]] = {
+    import org.apache.spark.sql.functions.expr
+    def cols(d: DataFrame, es: Seq[(String, String)]) =
+      d.withColumns(es.map { case (c, e) => c -> expr(e) }.toMap)
+    // the corpus with columns rewritten (or added)
+    def rewrite(es: (String, String)*): DataFrame => Map[String, DataFrame] =
+      d => Map("documents" -> cols(d, es))
+    // the corpus plus one rewritten twin of each `where` row
+    def twins(where: String, es: (String, String)*): DataFrame => Map[String, DataFrame] =
+      d => Map("documents" -> d.union(cols(d.where(where), es)))
+    def text(e: String) = rewrite("text" -> e)
+    val continuations = twins(s"doc_id % 9 = 4 AND size($wordsSpark) >= $BoundaryK",
+      "doc_id" -> s"doc_id + $BoundaryContOff",
+      "text" -> s"""concat(array_join(slice($wordsSpark, -$BoundaryK, $BoundaryK), ' '),
+               ' stitched continuation segment')""")
+    Map(
+      "p38_pii_redact" -> text(s"""concat(text, ' contact user', CAST(doc_id AS STRING),
+        '@example.com from 10.0.', CAST(doc_id % 256 AS STRING), '.7 call 55512',
+        CAST(30000 + doc_id AS STRING))"""),
+      "p43_unicode_nfc" -> text(s"""concat(text, CASE WHEN doc_id % 2 = 0
+          THEN ' caf\\u0065\\u0301' ELSE ' caf\\u00e9' END)"""),
+      "p45_url_normalize" -> rewrite("url" -> s"""concat('HTTP://WWW.Site', CAST(doc_id % 7 AS STRING),
+        '.COM:80/a/', CAST(doc_id AS STRING), '?z=1&y=', CAST(doc_id % 3 AS STRING),
+        '&a=9#s')"""),
+      // four lines: the doc's leading words (kept), a universal footer and
+      // a 1-in-7 promo line (both above the df threshold), a per-doc ref
+      "p47_boilerplate_lines" -> text(s"""array_join(array(
+        array_join(slice($wordsSpark, 1, 6), ' '),
+        'copyright acme corp all rights reserved',
+        concat('promo code ', CAST(doc_id % 7 AS STRING)),
+        concat('ref ', CAST(doc_id AS STRING))), '\\n')"""),
+      // every 7th doc shares one content block, so batch docs with
+      // doc_id ≡ 14 (mod 35) duplicate base docs
+      "p48_bloom_dedup" -> { d =>
+        val shared = cols(d, Seq("text" ->
+          "CASE WHEN doc_id % 7 = 0 THEN 'planted shared content block' ELSE text END"))
+        Map("documents_base" -> shared.where("pmod(doc_id, 5) < 4"),
+          "documents_batch" -> shared.where("pmod(doc_id, 5) = 4"))
+      },
+      // v1 drops ids ≡ 9 (mod 10), v2 drops ids ≡ 8 and edits ids ≡ 3 (mod 7)
+      "p52_snapshot_diff" -> { d =>
+        Map("documents_v1" -> d.where("pmod(doc_id, 10) != 9"),
+          "documents_v2" -> cols(d.where("pmod(doc_id, 10) != 8"), Seq("text" ->
+            "CASE WHEN doc_id % 7 = 3 THEN concat(text, ' v2') ELSE text END")))
+      },
+      "p54_substring_dedup" -> text(
+        s"CASE WHEN doc_id % 5 = 0 THEN concat('$SyndicatedBlock ', text) ELSE text END"),
+      "p58_html_extract" -> text(s"""concat(
+        '<html><head><title>Doc ', CAST(doc_id AS STRING),
+        '</title><style>body { color: #333; }</style>',
+        '<script>var tracker = "t" + ', CAST(doc_id % 7 AS STRING),
+        ';</script></head><body><nav>home | about | contact</nav><p>',
+        text,
+        '</p><div class="footer">&quot;Acme &amp; Co&quot; &lt;legal&gt; &#39;2026&#39;</div></body></html>')"""),
+      "p60_simhash_pairs" -> twins("doc_id % 7 = 0",
+        "doc_id" -> s"doc_id + $SimPairTwinOff", "text" -> "concat(text, ' mirrortoken')"),
+      // paragraphs: the doc's leading words, a wire block on every 5th doc,
+      // a per-doc ref
+      "p63_paragraph_dedup" -> text(s"""array_join(CASE WHEN doc_id % 5 = 2 THEN array(
+        array_join(slice($wordsSpark, 1, 6), ' '),
+        'syndicated wire block shared across partner outlets',
+        concat('ref ', CAST(doc_id AS STRING)))
+      ELSE array(
+        array_join(slice($wordsSpark, 1, 6), ' '),
+        concat('ref ', CAST(doc_id AS STRING))) END, '\\n\\n')"""),
+      "p69_boundary_overlap" -> continuations,
+      "p70_mojibake_score" -> text(
+        s"CASE WHEN doc_id % 13 = 5 THEN concat(text, '$MojiPlantTail') ELSE text END"),
+      "p72_source_overlap" -> twins("doc_id % 11 = 3",
+        "doc_id" -> s"doc_id + $SrcMirrorOff", "source" -> "concat('mir_', source)"),
+      "p74_cluster_rep" -> twins("doc_id % 6 = 1",
+        "doc_id" -> s"doc_id + $ClusterRepOff", "text" -> "concat(upper(text), ' !! ?? ..')"),
+      "p76_stitch_merge" -> continuations,
+    )
+  }
+
+  /** The relations `op` reads at the gate, planted from the `dir` corpus
+    * (read like the operator's own scan: spread when `spread`); empty for
+    * an operator without a gate fixture. */
+  private[graft] def gateRelations(spark: SparkSession, dir: String, op: String,
+                                   spread: Boolean = false): Map[String, DataFrame] =
+    gateFixture.get(op).fold(Map.empty[String, DataFrame])(
+      _(readSpread(spark, s"$dir/documents.parquet", spread)))
+
+  /** `op`'s gate catalog: the `dir` parquet catalog overlaid with the
+    * relations [[gateRelations]] plants for it. */
+  private[graft] def gateCatalog(spark: SparkSession, dir: String, op: String,
+                                 spread: Boolean = false): String => DataFrame = {
+    val planted = gateRelations(spark, dir, op, spread)
+    val base = graft.Graft.parquetCatalog(spark, dir)
+    name => planted.getOrElse(name, base(name))
+  }
+
+  /** Runs `body` with `views` bound as temp views, then puts back what the
+    * session had bound under those names. A SQL text reads its inputs by
+    * name and the DataFrame it returns keeps the relations it resolved, so
+    * the build leaves the session's own bindings as it found them. */
+  private def withViews[A](spark: SparkSession, views: Map[String, DataFrame])(body: => A): A = {
+    val catalog = spark.sessionState.catalog
+    val saved = views.keys.map(n => n -> catalog.getRawTempView(n))
+    views.foreach { case (n, df) => df.createOrReplaceTempView(n) }
+    try body
+    finally saved.foreach {
+      case (n, Some(view)) => catalog.createTempView(n, view, overrideIfExists = true)
+      case (n, None) => catalog.dropTempView(n)
+    }
+  }
+
   // ---- wiring --------------------------------------------------------------
 
   // `spread` on each wiring = this round's per-operator A/B choice (see
@@ -6096,20 +5954,15 @@ object PipelineOps {
       spark.sql(sql)
     }
 
-  /** Fixture-planting wiring: like [[onDocs]] but also threads the
-    * session's `spark.graft.plantFixtures` switch into the SQL builder.
-    * With planting OFF the parquet view is NOT force-bound: deployment
-    * reads whatever relation the user registered under the operator's
-    * input names (`documents`, or `documents_base`/`_batch`/`_v1`/`_v2`
-    * for the snapshot operators) — the dir argument only drives the gate
-    * fixture. */
-  private def onDocsP(f: Boolean => String, spread: Boolean = false): (SparkSession, String) => DataFrame =
+  /** Planted-fixture wiring of a Spark SQL operator: `run` reads the
+    * relations [[gateFixture]] plants from the `dir` corpus when planting
+    * is on, and the session's own when it is off. */
+  private def onPlanted(op: String, spread: Boolean = false)(
+      run: SparkSession => DataFrame): (SparkSession, String) => DataFrame =
     (spark, dir) => {
       graft.functions.GraftFunctions.registerMd5(spark)
-      val plant = plantFixtures(spark)
-      if (plant)
-        readSpread(spark, s"$dir/documents.parquet", spread).createOrReplaceTempView("documents")
-      spark.sql(f(plant))
+      val planted = if (plantFixtures(spark)) gateRelations(spark, dir, op, spread) else Map.empty[String, DataFrame]
+      withViews(spark, planted)(run(spark))
     }
 
   private def onEmb(sql: => String, spread: Boolean = false): (SparkSession, String) => DataFrame =
@@ -6131,6 +5984,18 @@ object PipelineOps {
     (spark, dir) => {
       PipelineRelational.registerFunctions(spark)
       graft.Graft.compile(text(spark), spark, graft.Graft.parquetCatalog(spark, dir, spread))
+    }
+
+  /** PRQL wiring of a planted-fixture operator: its text compiles over
+    * [[gateCatalog]] when planting is on (the planted relations read
+    * through the scan spread when `spread`), and over the session catalog
+    * when it is off. */
+  private def onPlantedPrql(op: String, spread: Boolean = false): (SparkSession, String) => DataFrame =
+    (spark, dir) => {
+      val catalog: String => DataFrame =
+        if (plantFixtures(spark)) gateCatalog(spark, dir, op, spread) else spark.table
+      PipelineRelational.registerFunctions(spark)
+      graft.Graft.compile(PipelineRelational.prql(op), spark, catalog)
     }
 
   /** The default-knob text of `name` — the operator for every text that
@@ -6188,40 +6053,42 @@ object PipelineOps {
       PipelineRelational.p36(w, st)
     },
     "p37_domain_quota" -> onPrql(spark => PipelineRelational.p37(domainQuota(spark))),
-    "p38_pii_redact" -> onDocsP(p38Spark, spread = true),
+    "p38_pii_redact" -> onPlantedPrql("p38_pii_redact", spread = true),
     "p39_incremental_dedup" -> onPrql(spark => PipelineRelational.p39(ingestFpTokens(spark))),
     "p40_rare_token_score" -> onPrql(spark => PipelineRelational.p40(commonCfMin(spark)), Docs),
     "p41_audio_decode" -> ((spark, dir) => MediaOps.audioFeatures(spark, dir)),
     "p42_split_assign" -> ((spark, dir) => p42Run(spark, dir)),
-    "p43_unicode_nfc" -> ((spark, dir) => p43Run(spark, dir)),
+    "p43_unicode_nfc" -> onPlantedPrql("p43_unicode_nfc"),
     "p44_token_budget" -> onPrql(spark => PipelineRelational.p44(tokenBudget(spark))),
-    "p45_url_normalize" -> onDocsP(p45Spark),
+    "p45_url_normalize" -> onPlantedPrql("p45_url_normalize"),
     "p46_weighted_sample" ->
       onPrql(spark => PipelineRelational.p46(weightedK(spark), weightedSaltBuckets(spark))),
-    "p47_boilerplate_lines" -> ((spark, dir) => p47Run(spark, dir)),
-    "p48_bloom_dedup" -> ((spark, dir) => p48Run(spark, dir)),
+    "p47_boilerplate_lines" ->
+      onPlanted("p47_boilerplate_lines")(spark => spark.sql(p47Spark(boilerplateDf(spark)))),
+    "p48_bloom_dedup" -> onPlanted("p48_bloom_dedup")(p48Run),
     "p49_embed_outlier" -> ((spark, dir) => p49Run(spark, dir)),
     "p50_bpe_learn" -> ((spark, dir) => p50Run(spark, dir)),
     "p51_bpe_tokenize" -> ((spark, dir) => p51Run(spark, dir)),
-    "p52_snapshot_diff" -> onDocsP(p52Spark),
+    "p52_snapshot_diff" -> onPlantedPrql("p52_snapshot_diff"),
     "p53_negative_sample" -> onPrql(prql("p53_negative_sample")),
-    "p54_substring_dedup" -> ((spark, dir) => p54Run(spark, dir)),
+    "p54_substring_dedup" ->
+      onPlanted("p54_substring_dedup", spread = true)(spark => spark.sql(p54Spark(substrK(spark)))),
     "p55_nb_quality" -> onDocs(p55Spark, spread = true),
     "p56_bm25" -> onDocs(p56Spark, spread = true),
     "p57_jl_project" -> ((spark, dir) => {
       registerJlPlanes(spark)
       onPrql(prql("p57_jl_project"))(spark, dir)
     }),
-    "p58_html_extract" -> onDocsP(p58Spark, spread = true),
+    "p58_html_extract" -> onPlantedPrql("p58_html_extract", spread = true),
     "p59_blocklist" -> onPrql(prql("p59_blocklist")),
-    "p60_simhash_pairs" -> ((spark, dir) => p60Run(spark, dir)),
+    "p60_simhash_pairs" -> onPlanted("p60_simhash_pairs", spread = true)(p60Run),
     "p61_bigram_ppx" -> ((spark, dir) => {
       readSpread(spark, s"$dir/documents.parquet", spread = true).createOrReplaceTempView("documents")
       graft.functions.GraftFunctions.registerMd5(spark)
       spark.sql(p61Spark(ppxFlagMicro(spark)))
     }),
     "p62_fim_transform" -> onPrql(spark => PipelineRelational.p62(fimSalt(spark))),
-    "p63_paragraph_dedup" -> onDocsP(p63Spark),
+    "p63_paragraph_dedup" -> onPlantedPrql("p63_paragraph_dedup"),
     "p64_dsir_select" -> ((spark, dir) => {
       readSpread(spark, s"$dir/documents.parquet", spread = true).createOrReplaceTempView("documents")
       graft.functions.GraftFunctions.registerMd5(spark)
@@ -6235,14 +6102,14 @@ object PipelineOps {
     "p66_softdedup_weights" -> onPrql(prql("p66_softdedup_weights")),
     "p67_semantic_dedup" -> ((spark, dir) => p67Run(spark, dir)),
     "p68_tokenizer_fertility" -> ((spark, dir) => p68Run(spark, dir)),
-    "p69_boundary_overlap" -> onDocsP(p69Spark, spread = true),
-    "p70_mojibake_score" -> onDocsP(p70Spark),
+    "p69_boundary_overlap" -> onPlantedPrql("p69_boundary_overlap", spread = true),
+    "p70_mojibake_score" -> onPlantedPrql("p70_mojibake_score"),
     "p71_tfidf_keywords" -> ((spark, dir) => p71Run(spark, dir)),
-    "p72_source_overlap" -> onDocsP(p72Spark),
+    "p72_source_overlap" -> onPlantedPrql("p72_source_overlap"),
     "p73_cdc_chunks" -> onDocs(p73Spark),
-    "p74_cluster_rep" -> onDocsP(p74Spark),
+    "p74_cluster_rep" -> onPlantedPrql("p74_cluster_rep"),
     "p75_mixture_weights" -> onPrql(spark => PipelineRelational.p75(mixtureAlphaMicro(spark))),
-    "p76_stitch_merge" -> onDocsP(p76Spark, spread = true),
+    "p76_stitch_merge" -> onPlantedPrql("p76_stitch_merge", spread = true),
     "p77_bitext_margin" -> ((spark, dir) =>
       onEmb(p77Spark(bitextKnnK(spark)), spread = true)(spark, dir)),
     "p78_calibration_bins" -> onDocs(p78Spark),

@@ -3,27 +3,32 @@ package graft.pipeline
 /** PRQL texts of the pipeline operators' relational shapes
   * (VERDICT r6 #3 / r5 stretch #8).
   *
-  * For 33 operators the text IS the operator: `PipelineOps.queries`
+  * For the [[operators]] the text IS the operator: `PipelineOps.queries`
   * compiles it through the engine's own front end (`Graft.compile` over
   * the parquet catalog, spreading the tables the operator names) and
-  * there is no Spark SQL copy — p01 p02 p03 p05 p06 p07 p09 p11 p13 p14
-  * p15 p17 p18 p23 p24 p26 p27 p31 p32 p33 p35 p36 p37 p39 p40 p44 p46
-  * p53 p57 p59 p62 p66 p75. The ten that read knobs are Scala templates
+  * there is no Spark SQL copy. The ten that read knobs are Scala templates
   * over the same reads ([[p23]], [[p27]], [[p36]], [[p37]], [[p39]],
   * [[p40]], [[p44]], [[p46]], [[p62]], [[p75]]); their [[prql]] entries
   * are the templates at the default knobs.
   *
+  * No text carries the gate fixture: the fifteen planted operators' texts
+  * (p38 p43 p45 p47 p48 p52 p54 p58 p60 p63 p69 p70 p72 p74 p76) read the
+  * relations `PipelineOps.gateFixture` plants, which the gate catalog
+  * (`PipelineOps.gateCatalog`) supplies and a deployment binds itself.
+  *
   * Every other entry is a FULL-fidelity restatement of an operator that
   * still runs its own Spark SQL. Each entry, compiled through BOTH
-  * backends — the DataFrame fold (`Graft.compileDir`) and the SQL-text
-  * backend (`spark.sql(Graft.toSparkSql(…))`) — must row-equal the
-  * operator's own `PipelineOps.queries` output. The relational skeleton (CTEs, joins,
-  * group/aggregate, windows, sort) runs through the PRQL planner; the
-  * scalar HOF bodies ride in s-strings, exactly the split a user porting a
-  * pipeline onto the query language would write. PipelineRelationalSpec
-  * asserts the three-way equality per operator; `graft.Verify` dumps both
-  * backend outputs under `relback/` and `tools/compare.py` re-checks the
-  * diff engine-independently — the driver-visible artifact.
+  * backends — the DataFrame fold (`Graft.compile` over the gate catalog)
+  * and the SQL-text backend (`spark.sql(Graft.toSparkSql(…))`) — must
+  * row-equal the operator's own `PipelineOps.queries` output; for the
+  * [[operators]] the fold IS that output, so the SQL-text backend alone is
+  * checked. The relational skeleton (CTEs, joins, group/aggregate,
+  * windows, sort) runs through the PRQL planner; the scalar HOF bodies
+  * ride in s-strings, exactly the split a user porting a pipeline onto
+  * the query language would write. PipelineRelationalSpec asserts the
+  * equalities per operator; `graft.Verify` dumps the backend outputs
+  * under `relback/` and `tools/compare.py` re-checks them
+  * engine-independently — the driver-visible artifact.
   *
   * Structure rule these texts obey: an s-string may only reference columns
   * of an upstream RELATION (a base table or a `table` CTE), never an alias
@@ -591,6 +596,26 @@ object PipelineRelational {
        |  out_checksum = s"md5(out_text)",
        |]
        |sort doc_id""".stripMargin
+
+  /** The entries that ARE their operator: `PipelineOps.queries` compiles
+    * them, so their DataFrame fold is the operator's own output and only
+    * the SQL-text backend is checked against it. PipelineRelationalSpec
+    * pins this set to the `queries` wiring (same optimized plan). */
+  val operators: Set[String] = Set(
+    "p01_dedup_exact", "p02_text_stats", "p03_lang_quality", "p05_simhash",
+    "p06_fingerprint", "p07_cosine_topk", "p09_media_meta", "p11_ngram_jaccard",
+    "p13_sessionize", "p14_top_terms", "p15_sample_stratified",
+    "p17_quality_filter", "p18_text_clean", "p23_pack_sequences",
+    "p24_mixture_sample", "p26_repetition", "p27_shuffle_shard",
+    "p31_event_props", "p32_event_percentiles", "p33_term_stats",
+    "p35_kmv_distinct", "p36_chunk_sliding", "p37_domain_quota",
+    "p38_pii_redact", "p39_incremental_dedup", "p40_rare_token_score",
+    "p43_unicode_nfc", "p44_token_budget", "p45_url_normalize",
+    "p46_weighted_sample", "p52_snapshot_diff", "p53_negative_sample",
+    "p57_jl_project", "p58_html_extract", "p59_blocklist",
+    "p62_fim_transform", "p63_paragraph_dedup", "p66_softdedup_weights",
+    "p69_boundary_overlap", "p70_mojibake_score", "p72_source_overlap",
+    "p74_cluster_rep", "p75_mixture_weights", "p76_stitch_merge")
 
   val prql: Map[String, String] = Map(
     "p04_minhash_lsh" ->
@@ -1290,14 +1315,9 @@ object PipelineRelational {
     // 7×X then X*, the (…){3} group unrolled — same regex language,
     // row-equality with the operator proves it.
     "p38_pii_redact" ->
-      s"""table aug = (
+      s"""table e = (
          |  from documents
-         |  select [doc_id, t = s"concat(text, ' contact user', CAST(doc_id AS STRING), '@example.com from 10.0.', CAST(doc_id % 256 AS STRING), '.7 call 55512', CAST(30000 + doc_id AS STRING))"]
-         |)
-         |
-         |table e = (
-         |  from aug
-         |  derive te = s"regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\\\.[A-Za-z][A-Za-z]+', '<EMAIL>')"
+         |  derive te = s"regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\\\.[A-Za-z][A-Za-z]+', '<EMAIL>')"
          |)
          |
          |table i = (
@@ -1313,7 +1333,7 @@ object PipelineRelational {
          |from ph
          |select [
          |  doc_id,
-         |  n_emails = s"CAST(size(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\\\.[A-Za-z][A-Za-z]+', 0)) AS BIGINT)",
+         |  n_emails = s"CAST(size(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\\\.[A-Za-z][A-Za-z]+', 0)) AS BIGINT)",
          |  n_ips = s"CAST(size(regexp_extract_all(te, '\\\\b\\\\d\\\\d?\\\\d?\\\\.\\\\d\\\\d?\\\\d?\\\\.\\\\d\\\\d?\\\\d?\\\\.\\\\d\\\\d?\\\\d?\\\\b', 0)) AS BIGINT)",
          |  n_phones = s"CAST(size(regexp_extract_all(ti, '\\\\b\\\\d\\\\d\\\\d\\\\d\\\\d\\\\d\\\\d\\\\d*\\\\b', 0)) AS BIGINT)",
          |  n_chars_red = s"CAST(length(rt) AS BIGINT)",
@@ -1328,14 +1348,9 @@ object PipelineRelational {
     "p44_token_budget" -> p44(PipelineOps.TokenBudget),
 
     "p45_url_normalize" ->
-      s"""table u = (
+      s"""table s1 = (
          |  from documents
-         |  select [doc_id, raw = s"concat('HTTP://WWW.Site', CAST(doc_id % 7 AS STRING), '.COM:80/a/', CAST(doc_id AS STRING), '?z=1&y=', CAST(doc_id % 3 AS STRING), '&a=9#s')"]
-         |)
-         |
-         |table s1 = (
-         |  from u
-         |  derive nu = s"replace(replace(regexp_replace(lower(raw), '#.*$$', ''), '://www.', '://'), ':80/', '/')"
+         |  derive nu = s"replace(replace(regexp_replace(lower(url), '#.*$$', ''), '://www.', '://'), ':80/', '/')"
          |)
          |
          |table s2 = (
@@ -1360,7 +1375,7 @@ object PipelineRelational {
     "p47_boilerplate_lines" ->
       s"""table aug = (
          |  from documents
-         |  derive lines = s"array(array_join(slice($W, 1, 6), ' '), 'copyright acme corp all rights reserved', concat('promo code ', CAST(doc_id % 7 AS STRING)), concat('ref ', CAST(doc_id AS STRING)))"
+         |  derive lines = s"split(text, '\\n')"
          |)
          |
          |table xp = (
@@ -1409,15 +1424,13 @@ object PipelineRelational {
 
     "p52_snapshot_diff" ->
       s"""table v1 = (
-         |  from documents
-         |  filter s"pmod(doc_id, 10) != 9"
+         |  from documents_v1
          |  select [doc_id, h1 = s"md5(lower(trim(text)))"]
          |)
          |
          |table v2 = (
-         |  from documents
-         |  filter s"pmod(doc_id, 10) != 8"
-         |  select [doc_id, h2 = s"md5(CASE WHEN doc_id % 7 = 3 THEN concat(lower(trim(text)), ' v2') ELSE lower(trim(text)) END)"]
+         |  from documents_v2
+         |  select [doc_id, h2 = s"md5(lower(trim(text)))"]
          |)
          |
          |table d = (
@@ -1486,14 +1499,9 @@ object PipelineRelational {
          |sort [vec_id, slot]""".stripMargin,
 
     "p54_substring_dedup" ->
-      s"""table aug = (
+      s"""table t = (
          |  from documents
-         |  derive text2 = s"CASE WHEN doc_id % 5 = 0 THEN concat('breaking news this content is syndicated across partner sites worldwide today reader ', text) ELSE text END"
-         |)
-         |
-         |table t = (
-         |  from aug
-         |  derive words = s"split(trim(text2), '\\\\s+')"
+         |  derive words = s"$W"
          |)
          |
          |table w = (
@@ -1687,14 +1695,9 @@ object PipelineRelational {
     // CHR(123)/CHR(125) because s-strings parse {…} as nested
     // interpolation — value-identical to the main SQL either way
     "p58_html_extract" ->
-      s"""table aug = (
+      s"""table s1 = (
          |  from documents
-         |  derive html = s"concat('<html><head><title>Doc ', CAST(doc_id AS STRING), '</title><style>body ', CHR(123), ' color: #333; ', CHR(125), '</style>', '<script>var tracker = ', CHR(34), 't', CHR(34), ' + ', CAST(doc_id % 7 AS STRING), ';</script></head><body><nav>home | about | contact</nav><p>', text, '</p><div class=', CHR(34), 'footer', CHR(34), '>&quot;Acme &amp; Co&quot; &lt;legal&gt; &#39;2026&#39;</div></body></html>')"
-         |)
-         |
-         |table s1 = (
-         |  from aug
-         |  derive noscript = s"regexp_replace(regexp_replace(html, '<script[^>]*>.*?</script>', ' '), '<style[^>]*>.*?</style>', ' ')"
+         |  derive noscript = s"regexp_replace(regexp_replace(text, '<script[^>]*>.*?</script>', ' '), '<style[^>]*>.*?</style>', ' ')"
          |)
          |
          |table s2 = (
@@ -1710,7 +1713,7 @@ object PipelineRelational {
          |from s3
          |select [
          |  doc_id,
-         |  title = s"regexp_extract(html, '<title>([^<]*)</title>', 1)",
+         |  title = s"regexp_extract(text, '<title>([^<]*)</title>', 1)",
          |  n_chars_clean = s"CAST(length(clean) AS BIGINT)",
          |  leaked = s"CAST(CASE WHEN clean RLIKE 'var tracker|color: #333' THEN 1 ELSE 0 END AS BIGINT)",
          |  clean_checksum = s"md5(clean)",
@@ -1740,22 +1743,11 @@ object PipelineRelational {
          |]
          |sort doc_id""".stripMargin,
 
-    // the dialect has no set ops (SURVEY §2.10 absent-by-design), so the
-    // twin-fixture UNION ALL rides the p56 named_struct-explode idiom: one
-    // or two struct copies per doc, exploded back into rows
+    // p60: the sig fold and the band self-join in one query (the operator
+    // materializes the sigs behind its barrier)
     "p60_simhash_pairs" ->
-      s"""table aug0 = (
+      s"""table sg0 = (
          |  from documents
-         |  select [e = s"explode(CASE WHEN doc_id % 7 = 0 THEN array(named_struct('doc_id', doc_id, 'text', text), named_struct('doc_id', doc_id + 1099511627776, 'text', concat(text, ' mirrortoken'))) ELSE array(named_struct('doc_id', doc_id, 'text', text)) END)"]
-         |)
-         |
-         |table aug = (
-         |  from aug0
-         |  select [doc_id = s"e.doc_id", text = s"e.text"]
-         |)
-         |
-         |table sg0 = (
-         |  from aug
          |  derive hw = s"transform($W, w -> ${hSpark("w")})"
          |)
          |
@@ -1993,18 +1985,15 @@ object PipelineRelational {
     // that cannot change the output (candidates are verified by the same
     // equi-join rendered here), so the restatement omits it; the
     // derived-geometry count action belongs to that physical layer only.
-    // The planted key/split mirror the operator's gate default.
     "p48_bloom_dedup" ->
       s"""table base = (
-         |  from documents
-         |  filter s"pmod(doc_id, 5) < 4"
-         |  select [h = s"md5(CASE WHEN doc_id % 7 = 0 THEN 'planted shared content block' ELSE lower(trim(text)) END)"]
+         |  from documents_base
+         |  select [h = s"md5(lower(trim(text)))"]
          |)
          |
          |table batch = (
-         |  from documents
-         |  filter s"pmod(doc_id, 5) = 4"
-         |  select [doc_id, h = s"md5(CASE WHEN doc_id % 7 = 0 THEN 'planted shared content block' ELSE lower(trim(text)) END)"]
+         |  from documents_batch
+         |  select [doc_id, h = s"md5(lower(trim(text)))"]
          |)
          |
          |table hits = (
@@ -2026,17 +2015,12 @@ object PipelineRelational {
     // p43's graft_nfc kernel comes from registerKernels, like graft_dot
     // and graft_top_terms for the entries above.
     "p43_unicode_nfc" ->
-      s"""table aug = (
-         |  from documents
-         |  select [doc_id, t = s"concat(text, CASE WHEN doc_id % 2 = 0 THEN ' caf\\u0065\\u0301' ELSE ' caf\\u00e9' END)"]
-         |)
-         |
-         |from aug
+      s"""from documents
          |select [
          |  doc_id,
-         |  len_raw = s"CAST(length(t) AS BIGINT)",
-         |  len_nfc = s"CAST(length(graft_nfc(t)) AS BIGINT)",
-         |  nfc_checksum = s"md5(graft_nfc(t))",
+         |  len_raw = s"CAST(length(text) AS BIGINT)",
+         |  len_nfc = s"CAST(length(graft_nfc(text)) AS BIGINT)",
+         |  nfc_checksum = s"md5(graft_nfc(text))",
          |]
          |sort doc_id""".stripMargin,
 
@@ -2045,7 +2029,7 @@ object PipelineRelational {
     "p63_paragraph_dedup" ->
       s"""table aug = (
          |  from documents
-         |  derive paras = s"CASE WHEN doc_id % 5 = 2 THEN array(array_join(slice($W, 1, 6), ' '), 'syndicated wire block shared across partner outlets', concat('ref ', CAST(doc_id AS STRING))) ELSE array(array_join(slice($W, 1, 6), ' '), concat('ref ', CAST(doc_id AS STRING))) END"
+         |  derive paras = s"split(text, '\\n\\n')"
          |)
          |
          |table x0 = (
@@ -2232,23 +2216,12 @@ object PipelineRelational {
          |]
          |sort doc_id""".stripMargin,
 
-    // p69: the continuation-fixture UNION ALL rides the p60 struct-explode
-    // idiom; the suffix and prefix sides are two projections of one gram
+    // p69: the suffix and prefix sides are two projections of one gram
     // table, self-joined on the 60-bit key with the exact string verify
     "p69_boundary_overlap" -> {
       val sfx = s"array_join(slice($W, -8, 8), ' ')"
-      s"""table aug0 = (
+      s"""table g0 = (
          |  from documents
-         |  select [e = s"explode(CASE WHEN doc_id % 9 = 4 AND size($W) >= 8 THEN array(named_struct('doc_id', doc_id, 'text', text), named_struct('doc_id', doc_id + 2199023255552, 'text', concat($sfx, ' stitched continuation segment'))) ELSE array(named_struct('doc_id', doc_id, 'text', text)) END)"]
-         |)
-         |
-         |table aug = (
-         |  from aug0
-         |  select [doc_id = s"e.doc_id", text = s"e.text"]
-         |)
-         |
-         |table g0 = (
-         |  from aug
          |  derive nw = s"CAST(size($W) AS BIGINT)"
          |  filter nw >= 8
          |)
@@ -2279,25 +2252,20 @@ object PipelineRelational {
          |sort [a_id, b_id]""".stripMargin
     },
 
-    // p70: pure map-side; the plant is a CASE concat, no union needed. The
-    // probe characters splice as literals (Spark chr() is mod-256, so the
-    // non-Latin-1 code points cannot be built portably in SQL)
+    // p70: pure map-side. The probe characters splice as literals (Spark
+    // chr() is mod-256, so the non-Latin-1 code points cannot be built
+    // portably in SQL)
     "p70_mojibake_score" -> {
       val ctrl = "concat('[', chr(1), '-', chr(8), chr(11), chr(12), chr(14), '-', chr(31), ']')"
       val d1 = PipelineOps.MojiDigraph1; val d2 = PipelineOps.MojiDigraph2
-      val repl = PipelineOps.MojiRepl; val tail = PipelineOps.MojiPlantTail
-      s"""table aug = (
+      val repl = PipelineOps.MojiRepl
+      s"""table c = (
          |  from documents
-         |  derive t2 = s"CASE WHEN doc_id % 13 = 5 THEN concat(text, '$tail') ELSE text END"
-         |)
-         |
-         |table c = (
-         |  from aug
          |  derive [
-         |    n_repl = s"CAST(length(t2) - length(replace(t2, '$repl', '')) AS BIGINT)",
-         |    n_ctrl = s"CAST(size(regexp_extract_all(t2, $ctrl, 0)) AS BIGINT)",
-         |    n_moji = s"CAST((length(t2) - length(replace(t2, '$d1', ''))) DIV 2 + (length(t2) - length(replace(t2, '$d2', ''))) DIV 2 AS BIGINT)",
-         |    nch = s"CAST(length(t2) AS BIGINT)",
+         |    n_repl = s"CAST(length(text) - length(replace(text, '$repl', '')) AS BIGINT)",
+         |    n_ctrl = s"CAST(size(regexp_extract_all(text, $ctrl, 0)) AS BIGINT)",
+         |    n_moji = s"CAST((length(text) - length(replace(text, '$d1', ''))) DIV 2 + (length(text) - length(replace(text, '$d2', ''))) DIV 2 AS BIGINT)",
+         |    nch = s"CAST(length(text) AS BIGINT)",
          |  ]
          |)
          |
@@ -2370,24 +2338,14 @@ object PipelineRelational {
          |select [doc_id, rk = s"CAST(rk0 AS BIGINT)", term, tf = f, df = df0, score_u]
          |sort [doc_id, rk]""".stripMargin,
 
-    // p72: the mirror-fixture UNION ALL rides the p60/p69 struct-explode
-    // idiom; distinct (source, key) is the group(take 1) DISTINCT idiom;
-    // the pair join is two projections of one relation on the 60-bit key
+    // p72: distinct (source, key) is a grouping aggregate (`take 1` per
+    // group would plan a row_number window); the pair join is two
+    // projections of one relation on the 60-bit key
     "p72_source_overlap" ->
-      s"""table aug0 = (
+      s"""table d1 = (
          |  from documents
-         |  select [e = s"explode(CASE WHEN doc_id % 11 = 3 THEN array(named_struct('doc_id', doc_id, 'source', source, 'text', text), named_struct('doc_id', doc_id + 4398046511104, 'source', concat('mir_', source), 'text', text)) ELSE array(named_struct('doc_id', doc_id, 'source', source, 'text', text)) END)"]
-         |)
-         |
-         |table aug = (
-         |  from aug0
-         |  select [source = s"e.source", text = s"e.text"]
-         |)
-         |
-         |table d1 = (
-         |  from aug
          |  derive kk = s"${hKeySpark("text")}"
-         |  group [source, kk] (take 1)
+         |  group [source, kk] (aggregate [nk = count])
          |  select [source, kk]
          |)
          |
@@ -2487,21 +2445,11 @@ object PipelineRelational {
          |select [chunk_sig, n_words, n_occ, n_docs, rep_doc]
          |sort chunk_sig""".stripMargin,
 
-    // p74: the twin-fixture UNION ALL rides the struct-explode idiom; the
-    // rank / first_value / count share one explicit cluster-key OVER
+    // p74: the rank / first_value / count share one explicit cluster-key
+    // OVER
     "p74_cluster_rep" ->
-      s"""table aug0 = (
+      s"""table q = (
          |  from documents
-         |  select [e = s"explode(CASE WHEN doc_id % 6 = 1 THEN array(named_struct('doc_id', doc_id, 'text', text), named_struct('doc_id', doc_id + 8796093022208, 'text', concat(upper(text), ' !! ?? ..'))) ELSE array(named_struct('doc_id', doc_id, 'text', text)) END)"]
-         |)
-         |
-         |table aug = (
-         |  from aug0
-         |  select [doc_id = s"e.doc_id", text = s"e.text"]
-         |)
-         |
-         |table q = (
-         |  from aug
          |  derive [
          |    ck = s"${hKeySpark("trim(regexp_replace(lower(text), '[^a-z0-9]+', ' '))")}",
          |    quality_u = s"coalesce(CAST(length(regexp_replace(text, '[^A-Za-z0-9]+', '')) * 1000000 DIV NULLIF(length(text), 0) AS BIGINT), -1)",
@@ -2523,23 +2471,12 @@ object PipelineRelational {
 
     "p75_mixture_weights" -> p75(PipelineOps.MixtureAlphaMicroDefault),
 
-    // p76: p69's continuation fixture via the struct-explode idiom; the
-    // stitch join is two projections of one gram relation on the 60-bit
-    // key; the tie rule is the double row_number gate; the merged text
-    // never leaves the stage — only its md5 signature and word count
+    // p76: the stitch join is two projections of one gram relation on the
+    // 60-bit key; the tie rule is the double row_number gate; the merged
+    // text never leaves the stage — only its md5 signature and word count
     "p76_stitch_merge" ->
-      s"""table aug0 = (
+      s"""table g0 = (
          |  from documents
-         |  select [e = s"explode(CASE WHEN doc_id % 9 = 4 AND size($W) >= 8 THEN array(named_struct('doc_id', doc_id, 'text', text), named_struct('doc_id', doc_id + 2199023255552, 'text', concat(array_join(slice($W, -8, 8), ' '), ' stitched continuation segment'))) ELSE array(named_struct('doc_id', doc_id, 'text', text)) END)"]
-         |)
-         |
-         |table aug = (
-         |  from aug0
-         |  select [doc_id = s"e.doc_id", text = s"e.text"]
-         |)
-         |
-         |table g0 = (
-         |  from aug
          |  derive wds = s"$W"
          |)
          |

@@ -59,7 +59,8 @@ class BoilerplatePropertySpec extends AnyFunSuite {
     test(s"SQL boilerplate stripper == brute-force df reference (seed $seedVal)") {
       import spark.implicits._
       val Case(docs, dfMin) = caseGen.pureApply(Gen.Parameters.default, Seed(seedVal))
-      docs.toDF("doc_id", "text").createOrReplaceTempView("documents")
+      PipelineOps.gateFixture("p47_boilerplate_lines")(docs.toDF("doc_id", "text"))("documents")
+        .createOrReplaceTempView("documents")
       val got = spark.sql(PipelineOps.p47Spark(dfMin)).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
       val expected = bruteForce(docs, dfMin)

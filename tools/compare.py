@@ -25,6 +25,44 @@ def canon(df):
     return hashlib.md5("\n".join(rows).encode()).hexdigest(), len(rows)
 
 
+def read_dir(con, d):
+    fs = glob.glob(f"{d}/*.parquet")
+    return con.sql("SELECT * FROM read_parquet(" + repr(fs) + ")").df()
+
+
+def relback_names(outdir):
+    """The operators with a relback dump: graft.Verify writes
+    relback/<op>__sql (the SQL-text backend) for every PipelineRelational
+    entry, and relback/<op>__df (the DataFrame fold) where the text is not
+    itself the operator."""
+    dirs = glob.glob(f"{outdir}/relback/*__df") + glob.glob(f"{outdir}/relback/*__sql")
+    return sorted({os.path.basename(d).rsplit("__", 1)[0] for d in dirs})
+
+
+def check_relback(con, outdir, name):
+    """(passed, message) for one relback entry: its __sql dump must exist
+    and hash-equal the operator's own output, and so must its __df dump
+    where one exists."""
+    sqldir = f"{outdir}/relback/{name}__sql"
+    if not os.path.isdir(sqldir):
+        return False, f"FAIL relback/{name}: no __sql dump"
+    odf = read_dir(con, f"{outdir}/{name}")
+    oh, on = canon(odf)
+    ocols = sorted(odf.columns)
+    parts = {"sql": read_dir(con, sqldir)}
+    dfdir = f"{outdir}/relback/{name}__df"
+    if os.path.isdir(dfdir):
+        parts["df"] = read_dir(con, dfdir)
+    diffs = []
+    for k, d in parts.items():
+        h, n = canon(d)
+        if h != oh or sorted(d.columns) != ocols:
+            diffs.append(f"{k}-vs-op MISMATCH ({k}={n} op={on} rows)")
+    if diffs:
+        return False, f"FAIL relback/{name} " + ", ".join(diffs)
+    return True, f"PASS relback/{name} rows={on} ({'+'.join(sorted(parts))})"
+
+
 def main(sfdir, outdir):
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     con = duckdb.connect()
@@ -36,9 +74,7 @@ def main(sfdir, outdir):
     ok = bad = 0
     for name in sorted(oracle):
         try:
-            files = glob.glob(f"{outdir}/{name}/*.parquet")
-            sdf = con.sql(
-                "SELECT * FROM read_parquet(" + repr(files) + ")").df()
+            sdf = read_dir(con, f"{outdir}/{name}")
             odf = con.sql(oracle[name]).df()
             sh, sn = canon(sdf)
             oh, on = canon(odf)
@@ -54,33 +90,13 @@ def main(sfdir, outdir):
         except Exception as e:
             bad += 1
             print(f"  ERR  {name}: {e}")
-    # two-backend diff on the pipeline operators' relational re-expressions
-    # (VERDICT r6 #3): Verify writes relback/<op>__df (DataFrame fold) and
-    # relback/<op>__sql (SQL-text backend); both must hash-equal each other
-    # AND the operator's own output dumped above.
-    for dfdir in sorted(glob.glob(f"{outdir}/relback/*__df")):
-        name = os.path.basename(dfdir)[: -len("__df")]
+    for name in relback_names(outdir):
         try:
-            def rd(d):
-                fs = glob.glob(f"{d}/*.parquet")
-                return con.sql(
-                    "SELECT * FROM read_parquet(" + repr(fs) + ")").df()
-            ddf, sdf, odf = rd(dfdir), rd(f"{outdir}/relback/{name}__sql"), rd(f"{outdir}/{name}")
-            dh, dn = canon(ddf)
-            sh, sn = canon(sdf)
-            oh, on = canon(odf)
-            cols_ok = sorted(ddf.columns) == sorted(sdf.columns) == sorted(odf.columns)
-            if dh == sh == oh and cols_ok:
-                ok += 1
-                print(f"  PASS relback/{name} rows={dn}")
-            else:
-                bad += 1
-                print(f"  FAIL relback/{name} rows df={dn} sql={sn} op={on} "
-                      f"df-vs-sql {'match' if dh == sh else 'MISMATCH'} "
-                      f"df-vs-op {'match' if dh == oh else 'MISMATCH'}")
+            passed, msg = check_relback(con, outdir, name)
         except Exception as e:
-            bad += 1
-            print(f"  ERR  relback/{name}: {e}")
+            passed, msg = False, f"ERR  relback/{name}: {e}"
+        ok, bad = ok + passed, bad + (not passed)
+        print(f"  {msg}")
     print(f"passed {ok}, failed {bad}")
     return bad
 

@@ -1,8 +1,9 @@
-"""Tests for tools/compare.py's `canon`: run as `python3 -m unittest tools/test_compare.py`.
+"""Tests for tools/compare.py: run as `python3 -m unittest tools/test_compare.py`.
 
 `canon` is the row-set hash both the local gate replica (compare.py) and
 perfbench's output check use, so these pin the properties a comparison
-relies on: what must not change the hash, and what must.
+relies on: what must not change the hash, and what must. The relback
+tests pin the walk over graft.Verify's `relback/` dumps.
 """
 import hashlib
 import os
@@ -15,7 +16,7 @@ import duckdb
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from compare import canon  # noqa: E402
+from compare import canon, check_relback, relback_names  # noqa: E402
 
 
 def md5_rows(rows):
@@ -73,6 +74,55 @@ class CanonTest(unittest.TestCase):
             "SELECT * FROM (VALUES (1::BIGINT, 'a', 0.5::DOUBLE)) t(id, s, d)",
         ]:
             self.assertNotEqual(canon(self.q(other)), h, other)
+
+
+class RelbackTest(unittest.TestCase):
+
+    OP = "SELECT * FROM (VALUES (1::BIGINT, 'a'), (2, 'b')) t(doc_id, s)"
+
+    def setUp(self):
+        self.con = duckdb.connect()
+        self.out = tempfile.mkdtemp()
+
+    def tearDown(self):
+        self.con.close()
+        shutil.rmtree(self.out)
+
+    def dump(self, rel, sql):
+        d = os.path.join(self.out, rel)
+        os.makedirs(d)
+        self.con.sql(f"COPY ({sql}) TO '{d}/part-0.parquet' (FORMAT parquet)")
+
+    def check(self):
+        self.assertEqual(relback_names(self.out), ["p99_op"])
+        return check_relback(self.con, self.out, "p99_op")
+
+    def test_sql_only_entry_equal_to_the_operator_passes(self):
+        self.dump("p99_op", self.OP)
+        self.dump("relback/p99_op__sql", self.OP + " ORDER BY doc_id DESC")
+        passed, msg = self.check()
+        self.assertTrue(passed, msg)
+
+    def test_sql_only_entry_that_differs_from_the_operator_fails(self):
+        self.dump("p99_op", self.OP)
+        self.dump("relback/p99_op__sql",
+                  "SELECT * FROM (VALUES (1::BIGINT, 'a'), (2, 'c')) t(doc_id, s)")
+        passed, msg = self.check()
+        self.assertFalse(passed, msg)
+
+    def test_df_without_sql_fails(self):
+        self.dump("p99_op", self.OP)
+        self.dump("relback/p99_op__df", self.OP)
+        passed, msg = self.check()
+        self.assertFalse(passed, msg)
+        self.assertIn("no __sql", msg)
+
+    def test_df_is_checked_where_it_exists(self):
+        self.dump("p99_op", self.OP)
+        self.dump("relback/p99_op__sql", self.OP)
+        self.dump("relback/p99_op__df", "SELECT 1::BIGINT AS doc_id, 'a' AS s")
+        passed, msg = self.check()
+        self.assertFalse(passed, msg)
 
 
 if __name__ == "__main__":
