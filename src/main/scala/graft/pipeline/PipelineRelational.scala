@@ -600,7 +600,7 @@ object PipelineRelational {
   /** The entries that ARE their operator: `PipelineOps.queries` compiles
     * them, so their DataFrame fold is the operator's own output and only
     * the SQL-text backend is checked against it. PipelineRelationalSpec
-    * pins this set to the `queries` wiring (same optimized plan). */
+    * pins this set to the `queries` wiring (same analyzed plan). */
   val operators: Set[String] = Set(
     "p01_dedup_exact", "p02_text_stats", "p03_lang_quality", "p05_simhash",
     "p06_fingerprint", "p07_cosine_topk", "p09_media_meta", "p11_ngram_jaccard",
