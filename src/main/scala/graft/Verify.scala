@@ -31,7 +31,11 @@ object Verify {
     // IS the operator output dumped above). tools/compare.py checks each
     // against that output. Each entry reads the corpus views of sfDir with
     // its gate fixture's planted relations bound over them — the relations
-    // the operator read above.
+    // the operator read above. `relback_names.json` lists every entry, so
+    // the compare fails an entry whose dump is missing, not just a wrong one.
+    Files.writeString(Paths.get(s"$outDir/relback_names.json"),
+      pipeline.PipelineRelational.prql.keys.toSeq.sorted.map(util.Json.quote)
+        .mkString("[", ",", "]"))
     pipeline.PipelineRelational.registerKernels(spark)
     // the relational texts hardcode default knobs; pin the session to
     // defaults so the dump is comparable to the operators' (ADVICE r8)

@@ -80,6 +80,27 @@ class NullFieldCorpusSpec extends AnyFunSuite {
     }
   }
 
+  // The gate fixture plants p47's lines and p63's paragraphs as ONE text
+  // that the operator splits again, and a text cannot hold a NULL line:
+  // for a NULL-text row the leading-words line (NULL in the DuckDB oracle's
+  // in-query array) is simply absent. The rows read (lines/paras, removed,
+  // checksum); the oracles' rows are noted beside each.
+  test("gate fixture on a NULL-text row: p47 plants 3 lines where its oracle has 4; p63 equals its oracle") {
+    def nullRow(key: String) = PipelineOps.queries(key)(spark, dir)
+      .where("doc_id = 900000").collect().toSeq
+      .map(r => (r.getLong(1), r.getLong(2), r.getString(3)))
+    // the oracle reads (4, 1, same checksum): its NULL line counts as a
+    // line, and its NULL hash drops it from `kept` as if removed
+    assert(nullRow("p47_boilerplate_lines") === Seq((3L, 0L,
+      md5("copyright acme corp all rights reserved\npromo code 3\nref 900000"))))
+    // the oracle's NULL paragraph hash joins nothing, so it too counts
+    // only the ref paragraph (900000 % 5 = 0: no wire block)
+    assert(nullRow("p63_paragraph_dedup") === Seq((1L, 0L, md5("ref 900000"))))
+  }
+
+  private def md5(s: String): String = java.security.MessageDigest.getInstance("MD5")
+    .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)).map(b => f"${b & 0xff}%02x").mkString
+
   for (key <- PipelineOps.queries.keys.toSeq.sorted) {
     test(s"$key on a null-payload row: well-formed result or a named require") {
       try {

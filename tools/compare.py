@@ -31,12 +31,14 @@ def read_dir(con, d):
 
 
 def relback_names(outdir):
-    """The operators with a relback dump: graft.Verify writes
-    relback/<op>__sql (the SQL-text backend) for every PipelineRelational
-    entry, and relback/<op>__df (the DataFrame fold) where the text is not
-    itself the operator."""
-    dirs = glob.glob(f"{outdir}/relback/*__df") + glob.glob(f"{outdir}/relback/*__sql")
-    return sorted({os.path.basename(d).rsplit("__", 1)[0] for d in dirs})
+    """The PipelineRelational entries the relback dumps must cover:
+    graft.Verify lists them in relback_names.json before it dumps any,
+    and writes relback/<op>__sql (the SQL-text backend) for each, plus
+    relback/<op>__df (the DataFrame fold) where the text is not itself the
+    operator. Raises when that listing is missing: without it an entry whose
+    dump failed would go unseen."""
+    with open(f"{outdir}/relback_names.json") as f:
+        return sorted(json.load(f))
 
 
 def check_relback(con, outdir, name):
@@ -90,7 +92,13 @@ def main(sfdir, outdir):
         except Exception as e:
             bad += 1
             print(f"  ERR  {name}: {e}")
-    for name in relback_names(outdir):
+    try:
+        names = relback_names(outdir)
+    except Exception as e:
+        names = []
+        bad += 1
+        print(f"  ERR  relback: {e}")
+    for name in names:
         try:
             passed, msg = check_relback(con, outdir, name)
         except Exception as e:

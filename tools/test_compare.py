@@ -5,7 +5,10 @@ perfbench's output check use, so these pin the properties a comparison
 relies on: what must not change the hash, and what must. The relback
 tests pin the walk over graft.Verify's `relback/` dumps.
 """
+import contextlib
 import hashlib
+import io
+import json
 import os
 import shutil
 import sys
@@ -16,7 +19,7 @@ import duckdb
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from compare import canon, check_relback, relback_names  # noqa: E402
+from compare import canon, check_relback, main, relback_names  # noqa: E402
 
 
 def md5_rows(rows):
@@ -93,9 +96,25 @@ class RelbackTest(unittest.TestCase):
         os.makedirs(d)
         self.con.sql(f"COPY ({sql}) TO '{d}/part-0.parquet' (FORMAT parquet)")
 
+    def listing(self, names):
+        with open(os.path.join(self.out, "relback_names.json"), "w") as f:
+            json.dump(names, f)
+
     def check(self):
+        self.listing(["p99_op"])
         self.assertEqual(relback_names(self.out), ["p99_op"])
         return check_relback(self.con, self.out, "p99_op")
+
+    def run_main(self):
+        """compare.main over this dump with no oracle queries: the failed
+        count of the relback walk alone."""
+        with open(os.path.join(self.out, "oracle_sql.json"), "w") as f:
+            json.dump({}, f)
+        sfdir = os.path.join(self.out, "sf")
+        os.makedirs(sfdir)
+        with contextlib.redirect_stdout(io.StringIO()) as log:
+            bad = main(sfdir, self.out)
+        return bad, log.getvalue()
 
     def test_sql_only_entry_equal_to_the_operator_passes(self):
         self.dump("p99_op", self.OP)
@@ -123,6 +142,26 @@ class RelbackTest(unittest.TestCase):
         self.dump("relback/p99_op__df", "SELECT 1::BIGINT AS doc_id, 'a' AS s")
         passed, msg = self.check()
         self.assertFalse(passed, msg)
+
+    def test_listed_entry_with_no_dump_at_all_fails(self):
+        # a relback build that threw leaves no directory: the listing is
+        # what still counts it
+        self.dump("p99_op", self.OP)
+        self.dump("p98_op", self.OP)
+        self.dump("relback/p98_op__sql", self.OP)
+        self.listing(["p98_op", "p99_op"])
+        self.assertEqual(relback_names(self.out), ["p98_op", "p99_op"])
+        bad, log = self.run_main()
+        self.assertEqual(bad, 1, log)
+        self.assertIn("FAIL relback/p99_op: no __sql dump", log)
+        self.assertIn("PASS relback/p98_op", log)
+
+    def test_missing_listing_fails(self):
+        self.dump("p99_op", self.OP)
+        self.dump("relback/p99_op__sql", self.OP)
+        bad, log = self.run_main()
+        self.assertEqual(bad, 1, log)
+        self.assertIn("relback_names.json", log)
 
 
 if __name__ == "__main__":
