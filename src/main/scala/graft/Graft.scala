@@ -144,6 +144,14 @@ object Graft {
       case None         => spark.read.parquet(path)
     }
 
+  /** Row count of the parquet input at `path`, summed from its footers on
+    * the driver ([[GraftPlanBridge.parquetRowCount]]) with no Spark job;
+    * `count()` when the read is not a plain parquet relation. */
+  def parquetRowCount(spark: SparkSession, path: String): Long = {
+    val df = readParquet(spark, path)
+    GraftPlanBridge.parquetRowCount(df).getOrElse(df.count())
+  }
+
   /** Canonicalize the `events.ts` event-time column to a microsecond
     * TIMESTAMP (session-TZ = UTC), whichever physical schema the driver's
     * parquet carries:

@@ -19,7 +19,7 @@ object Verify {
     // the oracle texts at the geometries the Spark side derives from this
     // corpus' embeddings count (p08/p19/p22/p67/p79), so the compare holds
     // at every scale, not only at the gate's
-    val embeddingsN = Graft.readParquet(spark, s"$sfDir/embeddings.parquet").count()
+    val embeddingsN = Graft.parquetRowCount(spark, s"$sfDir/embeddings.parquet")
     val json = SparkEntry.oracleSqlFor(embeddingsN)
       .map { case (k, v) => s"${util.Json.quote(k)}: ${util.Json.quote(v)}" }
       .mkString("{", ",", "}")

@@ -149,9 +149,12 @@ object PipelineOps {
     * `spread` is PER-OPERATOR, fixed in code from the r15 A/B measurements
     * (alternating-arm medians/mins): operators whose cost is one heavy map
     * pass win 1.5-2x; operators dominated by an iterative loop over tiny
-    * relations (p50/p51 BPE merges, p22/p16 label rounds) LOSE — more
-    * partitions multiply per-round task-scheduling and checkpoint
-    * overhead — and stay unspread. */
+    * relations (p50/p51 BPE merges) LOSE — more partitions multiply
+    * per-round task-scheduling and checkpoint overhead — and stay
+    * unspread. p16/p22 were measured in that class while every build ran
+    * label rounds; their graphs are now labelled on the driver below
+    * [[driverEdgeBound]], and they keep the unspread read that measurement
+    * chose. */
   private def readSpread(spark: SparkSession, path: String,
                          spread: Boolean = false): DataFrame = {
     val df = graft.Graft.readParquet(spark, path)
@@ -561,15 +564,14 @@ object PipelineOps {
     p08RunWithBands(spark, dir, -1)
 
   /** Shared SRP setup (p08 + p22): derive (r, b) from the ACTUAL corpus
-    * count (parquet metadata count — no data scan, so the bucket space
-    * tracks the corpus at any SF), register the kernels, and materialize
+    * count (summed from the parquet footers on the driver — no data scan,
+    * no Spark job, so the bucket space tracks the corpus at any SF),
+    * register the kernels, and materialize
     * [[SrpEView]] once. `bandsArg` -1 → derived b (the default path);
     * `planes` is generated to r_max*b(r_max) rows, which bounds any
     * derivable r*b. */
   private def srpSetup(spark: SparkSession, dir: String, bandsArg: Int): Boolean = {
-    // count from the RAW scan (zero-column parquet count — no spread
-    // exchange in the way); the registered view gets the spread
-    val n = graft.Graft.readParquet(spark, s"$dir/embeddings.parquet").count()
+    val n = graft.Graft.parquetRowCount(spark, s"$dir/embeddings.parquet")
     val emb = readSpread(spark, s"$dir/embeddings.parquet")
     val (srpBits, derivedBands) = chooseSrpGeometry(n)
     val bands = if (bandsArg > 0) bandsArg else derivedBands
@@ -685,14 +687,10 @@ object PipelineOps {
   private def p22Run(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     srpSetup(spark, dir, -1)
-    // barrier: the pair relation feeds both edge directions and every label
-    // round — without it each reference re-plans the band join + verify
-    val pairs = Barrier.materialize(spark.sql(s"""
+    val pairs = spark.sql(s"""
       WITH $srpPairCtesSpark
-      SELECT ida, idb FROM pairs WHERE cos >= ${embDupThreshold(spark)}"""))
-    val edges = pairs.select(col("ida").as("a"), col("idb").as("b"))
-      .union(pairs.select(col("idb").as("a"), col("ida").as("b")))
-    val sub = labelPropagate(edges, labelMaxRounds(spark))
+      SELECT ida, idb FROM pairs WHERE cos >= ${embDupThreshold(spark)}""")
+    val sub = labelPropagate(pairs, labelMaxRounds(spark))
     // singletons (no near-dup edge) reattach as their own rep, exactly as
     // flooding would have labeled them — see the p16 design note
     spark.sql("SELECT vec_id FROM embeddings")
@@ -958,11 +956,11 @@ object PipelineOps {
 
   /** Live sampling rate for a session: `spark.graft.ivfCentroidMod`
     * overrides (recall/cost tuning at a known operating point); default is
-    * [[chooseIvfMod]] of the parquet metadata count — no data scan, the
-    * srpSetup precedent. */
+    * [[chooseIvfMod]] of the row count summed from the parquet footers —
+    * no data scan and no Spark job, the srpSetup precedent. */
   private[graft] def ivfCentroidMod(spark: SparkSession, dir: String): Int = {
     val m = spark.conf.getOption("spark.graft.ivfCentroidMod").map(_.toInt).getOrElse(
-      chooseIvfMod(graft.Graft.readParquet(spark, s"$dir/embeddings.parquet").count()))
+      chooseIvfMod(graft.Graft.parquetRowCount(spark, s"$dir/embeddings.parquet")))
     require(m >= 1, s"spark.graft.ivfCentroidMod must be >= 1, got $m")
     m
   }
@@ -1277,38 +1275,45 @@ object PipelineOps {
     FROM h GROUP BY lang ORDER BY lang"""
 
   // ---- p16: near-dup cluster assignment (dedup representatives) ------------
-  // Completes the dedup story: p04's verified pairs → connected components
-  // via min-label propagation TO CONVERGENCE (each round: one edges-join +
-  // groupBy-min = one shuffle; loop until the label sum stops changing).
-  // LSH near-dup groups are quasi-cliques (every member shares a band with
-  // most others), so the label diameter is 1-2 and 2-3 rounds converge in
-  // practice — but chain topologies (doc i near-dups only doc i±1) need
-  // diameter-many rounds, so the loop is convergence-driven, capped at
-  // [[LabelMaxRounds]] with a loud warning if the cap binds. Labels only
-  // ever decrease (min-propagation), so an unchanged per-round label sum ⟺
-  // no label changed ⟺ fixpoint. Cluster representative = min doc_id of
-  // the component — the row a dedup keep-list would retain.
+  // Completes the dedup story: p04's verified pairs → connected components.
+  // Cluster representative = min doc_id of the component — the row a dedup
+  // keep-list would retain. p20, p22 and p42 label their graphs the same way.
   //
-  // A dup graph small enough to broadcast (the normal case: near-dup pairs
-  // are o(N) of the corpus) never reaches the loop: [[labelPropagate]]
-  // collects the edge list once, labels it with an exact union-find on the
-  // driver and hands the labels back as a local relation that Catalyst
-  // broadcasts into the operator's final join — one Spark job instead of a
-  // round per label hop. Above that bound, the Spark side is an ITERATIVE
-  // driver function, not one SQL text: each
-  // round self-joins the previous labels, and naive CTE nesting doubles the
-  // referenced subtree per round (measured: the unrolled-SQL form planned
-  // 64 parquet scans and ran 7s at sf0.001 — an exponential-lineage
-  // scale-killer). An eager [[Barrier]] after the pair generation and
-  // after every round breaks the lineage so each round computes exactly
-  // once — the standard Spark pattern for iterative graph algorithms (the
-  // barrier strategy is the `spark.graft.barrier` config: cluster
-  // deployments use a reliable checkpoint dir or DISK_ONLY persist so
-  // blocks survive executor loss). The convergence probe is one cheap aggregation
-  // action per round over the already-materialized labels. The DuckDB
-  // oracle computes EXACT components via a recursive transitive closure —
-  // deliberately independent of the round count, so it verifies the loop
-  // actually reached the fixpoint rather than unrolling the same rounds.
+  // [[labelPropagate]] takes the one-direction pair relation un-materialized
+  // and runs ONE Spark job, the pair plan's last stage plus a
+  // `mapPartitions` union-find: each partition reduces its own pairs to a
+  // spanning forest — (node, partition-local root) for every non-root node,
+  // exact (same components) and never more rows than the partition has
+  // nodes. The job persists the forest and returns it to the driver while
+  // the running total stays within [[driverEdgeBound]]; the driver merges
+  // the partitions' forests with the same union-find and hands the labels
+  // back as a local relation that Catalyst broadcasts into the operator's
+  // final join — no pair barrier, no count job, no round per label hop.
+  // Near-dup pairs are o(N) of the corpus and their components are
+  // quasi-cliques, so the forest is far smaller than the pair list (p16 at
+  // ×10: 163,991 forest rows).
+  //
+  // Above the bound, the persisted forest goes behind a [[Barrier]] and
+  // feeds [[labelLoop]], so the pair plan still runs once: min-label
+  // propagation TO CONVERGENCE (each round: one edges-join + groupBy-min =
+  // one shuffle; loop until no label changes). Chain topologies need
+  // diameter-many rounds, so the loop is convergence-driven, capped at
+  // [[LabelMaxRounds]] with a loud escalation to star contraction if the
+  // cap binds. Labels only ever decrease (min-propagation), so "no label
+  // changed" ⟺ fixpoint. The loop is an ITERATIVE driver function, not one
+  // SQL text: each round self-joins the previous labels, and naive CTE
+  // nesting doubles the referenced subtree per round (measured: the
+  // unrolled-SQL form planned 64 parquet scans and ran 7s at sf0.001 — an
+  // exponential-lineage scale-killer). An eager [[Barrier]] after every
+  // round breaks the lineage so each round computes exactly once — the
+  // standard Spark pattern for iterative graph algorithms (the barrier
+  // strategy is the `spark.graft.barrier` config: cluster deployments use a
+  // reliable checkpoint dir or DISK_ONLY persist so blocks survive executor
+  // loss). The convergence probe rides each round's materializing job.
+  //
+  // The DuckDB oracle computes EXACT components via a recursive transitive
+  // closure — deliberately independent of the label path, so it verifies
+  // that the forest merge (or the loop) reached the true components.
 
   private val LabelMaxRounds = 20
 
@@ -1334,83 +1339,121 @@ object PipelineOps {
     math.min(session, math.max(1L, rows / 65536L)).toString
   }
 
-  /** Largest edge list [[labelPropagate]] labels on the driver, derived from
-    * settings the session already has (no key of its own):
-    * min(`spark.sql.autoBroadcastJoinThreshold` / 32 B, driver max heap /
-    * 1 KiB). Nodes never outnumber the symmetrized edges, and Catalyst
-    * estimates a (BIGINT, BIGINT) local relation at 24 B a row, so labels
-    * for up to this many edges always estimate under the broadcast
-    * threshold; 1 KiB of heap per edge keeps the collected rows and the
-    * union-find (~100 B an edge) a small share of the driver heap. A
-    * threshold of -1 (broadcast off) gives 0: every graph takes the loop. */
+  /** Largest spanning forest (in rows) [[labelPropagate]] labels on the
+    * driver, derived from settings the session already has (no key of its
+    * own): min(`spark.sql.autoBroadcastJoinThreshold` / 48 B, driver max
+    * heap / 1 KiB). A forest of f rows spans at most 2f nodes, and Catalyst
+    * estimates a (BIGINT, BIGINT) local relation at 24 B a row, so the
+    * labels of a forest within this bound always estimate under the
+    * broadcast threshold; 1 KiB of heap per row keeps the collected forest
+    * and the union-find (~100 B a node) a small share of the driver heap.
+    * A threshold of -1 (broadcast off) gives 0: every non-empty graph takes
+    * the loop. */
   private[graft] def driverEdgeBound(spark: SparkSession): Int = {
     val bcast = spark.sessionState.conf.autoBroadcastJoinThreshold
     if (bcast <= 0) 0
-    else math.min(math.min(bcast / 32L, Runtime.getRuntime.maxMemory / 1024L),
+    else math.min(math.min(bcast / 48L, Runtime.getRuntime.maxMemory / 1024L),
       Int.MaxValue - 1L).toInt
   }
 
-  /** Exact connected components of a collected (a, b) edge list: union-find
-    * that always hangs the larger root under the smaller, so each root is
-    * its component's minimum id. Returns (node, component min) per node. */
-  private def componentMins(edges: Array[Row]): Iterable[(Long, Long)] = {
+  /** Exact connected components of an (a, b) edge list: union-find that
+    * always hangs the larger root under the smaller, so each root is its
+    * component's minimum id. Returns (node, component min) per node. */
+  private def componentMins(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x
       while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    edges.foreach { e =>
-      val (a, b) = (e.getLong(0), e.getLong(1))
+    edges.foreach { case (a, b) =>
       parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    parent.keys.map(n => n -> find(n))
+    parent.keysIterator.map(n => n -> find(n))
   }
 
-  /** Connected components of an undirected BIGINT edge list `edges` (a, b),
-    * both directions present: (doc_id, lbl) for every edge-incident node,
-    * lbl = the component's minimum doc_id — the min-label flooding
-    * fixpoint. Nodes without an edge are the caller's to rejoin as their
-    * own label. Exposed for direct topology tests (PipelineOpsSpec drives
-    * it with an adversarial chain graph).
+  /** Connected components of a BIGINT pair relation `pairs` (ida, idb), one
+    * direction per pair: (doc_id, lbl) for every pair-incident node, lbl =
+    * the component's minimum id — the min-label flooding fixpoint. Nodes
+    * without a pair are the caller's to rejoin as their own label.
     *
-    * DRIVER PATH. The first action is one bounded collect,
-    * `limit(driverEdgeBound + 1)` over a single partition, so it is one
-    * Spark job with one task that stops reading past the bound. If the edge
-    * list fits, an exact union-find labels it on the driver and the labels
-    * come back as a local relation, which Catalyst broadcasts into the
-    * caller's join. The round cap does not apply: union-find reaches the
-    * fixpoint flooding would, whatever the diameter.
+    * One Spark job runs the pair plan's last stage and, in each partition,
+    * [[componentMins]] over the partition's pairs, keeping (node, root) for
+    * the non-root nodes: an exact spanning forest of that partition's
+    * pairs. The job persists the forest and returns it to the driver while
+    * the running row total is within [[driverEdgeBound]].
     *
-    * LOOP PATH (edges above the bound, or broadcast off, which is how the
-    * tests pin it): synchronous min-label rounds behind a [[Barrier]] until
-    * no label changes. If the round cap fires first (diameter > maxRounds
-    * — adversarial topology for flooding), the residual labeling
-    * AUTO-ESCALATES to [[StarContraction.labels]] (VERDICT r5 #2): the
-    * O(log n)-round algorithm finishes what flooding started. Passing the
+    * DRIVER PATH (forest within the bound): the driver merges the
+    * partitions' forests with [[componentMins]] and the labels come back as
+    * a local relation, which Catalyst broadcasts into the caller's join.
+    * The round cap does not apply: union-find reaches the fixpoint flooding
+    * would, whatever the diameter.
+    *
+    * LOOP PATH (forest above the bound, or broadcast off, which is how the
+    * tests pin it): the persisted forest goes behind a [[Barrier]], both
+    * directions, into [[labelLoop]] — the pair plan never runs twice. */
+  private[graft] def labelPropagate(pairs: DataFrame,
+                                    maxRounds: Int = LabelMaxRounds): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val spark = pairs.sparkSession
+    val bound = driverEdgeBound(spark)
+    val (forest, rows, held) = org.apache.spark.sql.GraftPlanBridge.withExecutedRows(
+        pairs.select("ida", "idb"), "labelForest") { pairRows =>
+      val forest = pairRows
+        .mapPartitions(it => componentMins(it.map(r => (r.getLong(0), r.getLong(1))))
+          .filter { case (n, root) => n != root })
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // each task ships its forest only if it alone fits the bound; the
+      // driver keeps them while the running total does
+      var rows = 0L
+      val held = scala.collection.mutable.ArrayBuffer.empty[Array[(Long, Long)]]
+      spark.sparkContext.runJob(forest, (it: Iterator[(Long, Long)]) => {
+        val part = it.toArray
+        (part.length.toLong, if (part.length <= bound) part else null)
+      }, (_: Int, res: (Long, Array[(Long, Long)])) => {
+        rows += res._1
+        if (rows <= bound) held += res._2 else held.clear()
+      })
+      (forest, rows, held)
+    }
+    val schema = (a: String, b: String) =>
+      StructType(Seq(StructField(a, LongType), StructField(b, LongType)))
+    if (rows <= bound) {
+      forest.unpersist(blocking = false)
+      val labels = componentMins(held.iterator.flatMap(_.iterator)).map { case (n, l) => Row(n, l) }
+      return spark.createDataFrame(java.util.Arrays.asList(labels.toSeq: _*),
+        schema("doc_id", "lbl"))
+    }
+    val f = Barrier.materialize(spark.createDataFrame(
+      forest.map { case (n, root) => Row(n, root) }, schema("node", "root")))
+    forest.unpersist(blocking = false)
+    val edges = f.select(col("node").as("a"), col("root").as("b"))
+      .union(f.select(col("root").as("a"), col("node").as("b")))
+    labelLoop(edges, 2 * rows, maxRounds)
+  }
+
+  /** Min-label flooding over an undirected BIGINT edge list `edges` (a, b),
+    * both directions present, `edgeRows` rows: (doc_id, lbl) for every
+    * edge-incident node, lbl = the component's minimum doc_id.
+    * Synchronous rounds behind a [[Barrier]] until no label changes. If
+    * the round cap fires first (diameter > maxRounds — adversarial
+    * topology for flooding), the residual labeling AUTO-ESCALATES to
+    * [[StarContraction.labels]] (VERDICT r5 #2): the O(log n)-round
+    * algorithm finishes what flooding started. Passing the
     * partially-propagated labels is equivalent to passing the originals —
     * star contraction assigns every node the minimum INITIAL label over its
     * component, and min over a component of partially-min'd labels equals
     * min over the original labels. The escalation is loud (stderr) so a
-    * production run knows flooding's diameter assumption was violated. */
-  private[graft] def labelPropagate(edges: DataFrame,
-                                    maxRounds: Int = LabelMaxRounds): DataFrame = {
+    * production run knows flooding's diameter assumption was violated.
+    * Exposed for direct topology tests (PipelineOpsSpec drives it with an
+    * adversarial chain graph). */
+  private[graft] def labelLoop(edges: DataFrame, edgeRows: Long,
+                               maxRounds: Int = LabelMaxRounds): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val spark = edges.sparkSession
-    val bound = driverEdgeBound(spark)
-    if (bound > 0) {
-      // coalesce(1): CollectLimit scans partitions in growing batches, one
-      // job per batch; a single partition makes it exactly one job
-      val few = edges.select("a", "b").coalesce(1).limit(bound + 1).collect()
-      if (few.length <= bound) {
-        val rows = componentMins(few).map { case (n, l) => Row(n, l) }
-        return spark.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*),
-          StructType(Seq(StructField("doc_id", LongType), StructField("lbl", LongType))))
-      }
-    }
     val init = edges.select(col("a").as("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("lbl"))
     var labels = Barrier.materialize(init)
@@ -1422,16 +1465,16 @@ object PipelineOps {
     // coalescing keeps ~defaultParallelism partitions, so every round paid
     // ~cores tasks × ~3 stages of pure scheduling):
     //  1. the loop runs at a shuffle-partition count DERIVED from the
-    //     materialized edge relation's actual size (rows / ~64k per task,
-    //     clamped to [1, session setting]) — scale-adaptive, identity at
-    //     deployment sizes, and restored in a finally;
+    //     edge relation's size (rows / ~64k per task, clamped to
+    //     [1, session setting]) — scale-adaptive, identity at deployment
+    //     sizes, and restored in a finally;
     //  2. the convergence probe rides the SAME job that materializes the
     //     round (observe + CollectMetrics counts changed labels at zero
     //     plan cost) instead of a second per-round aggregate job. Min-label
     //     flooding only ever lowers labels, so "no label changed" is
     //     exactly the old "label sum unchanged" fixpoint, round for round.
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val loopParts = loopPartsFor(spark, edges.count())
+    val loopParts = loopPartsFor(spark, edgeRows)
     // The fused probe reads CollectMetrics ACCUMULATORS off the round plan
     // the barrier executed — valid only for the two checkpoint modes, which
     // execute exactly that plan. persistDisk materializes through a
@@ -1474,7 +1517,7 @@ object PipelineOps {
       }
     } finally spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
     if (!converged) {
-      System.err.println(s"[graft] labelPropagate: label sum still changing after " +
+      System.err.println(s"[graft] labelLoop: labels still changing after " +
         s"$maxRounds rounds — escalating to star contraction (O(log n) rounds)")
       val escalated = Barrier.materialize(StarContraction.labels(labels, edges))
       Barrier.release(labels)
@@ -1492,17 +1535,15 @@ object PipelineOps {
       hashA.toArray, hashB.toArray, MinhashP)
     graft.functions.GraftFunctions.registerMd5(spark)
     materialized(spark, LshSigsView, lshSigsSql)
-    val pairs = Barrier.materialize(spark.sql(
-      s"WITH $lshPairCtes SELECT ida, idb FROM verified WHERE jac >= $LshJaccardCut"))
-    val edges = pairs.select(col("ida").as("a"), col("idb").as("b"))
-      .union(pairs.select(col("idb").as("a"), col("ida").as("b")))
+    val pairs = spark.sql(
+      s"WITH $lshPairCtes SELECT ida, idb FROM verified WHERE jac >= $LshJaccardCut")
     // Labels cover EDGE-INCIDENT nodes only: a doc with no near-dup edge is
     // its own singleton cluster and can never change label, so labeling it
     // is pure waste — near-dup pairs are o(N) of the corpus, and at 100 TB
     // the dup graph is far smaller than N docs. Singletons rejoin via one
     // left join + coalesce at the end (label = own doc_id, exactly what
     // flooding would have assigned them).
-    val sub = labelPropagate(edges, labelMaxRounds(spark))
+    val sub = labelPropagate(pairs, labelMaxRounds(spark))
     spark.sql("SELECT doc_id FROM documents")
       .join(sub, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))

@@ -8,9 +8,11 @@ import org.apache.spark.sql.functions._
   * MapReduce and Beyond" (SoCC 2014), re-expressed as DataFrame rounds.
   *
   * It is the label loop's ESCALATION, not a default path of
-  * p16/p20/p22/p42: [[PipelineOps.labelPropagate]] labels a dup graph below
+  * p16/p20/p22/p42: [[PipelineOps.labelPropagate]] labels a dup graph
+  * whose per-partition spanning forest is within
   * [[PipelineOps.driverEdgeBound]] with an exact union-find on the driver
-  * (no rounds at all); above the bound it runs min-label flooding, whose
+  * (no rounds at all); above the bound [[PipelineOps.labelLoop]] runs
+  * min-label flooding over that forest, whose
   * per-round cost is one join + one groupBy and which real near-dup graphs
   * (tiny diameters) finish in a few rounds. Flooding's weakness is
   * adversarial topology — a diameter-d component needs d rounds. Star
@@ -21,7 +23,8 @@ import org.apache.spark.sql.functions._
   * is the escape hatch when [[PipelineOps.LabelMaxRounds]]'s under-merge
   * warning fires on real data, and the loop escalates to it automatically.
   * StarContractionSpec property-tests label-for-label equivalence against
-  * both labelPropagate paths and union-find ground truth on random graphs,
+  * both labelPropagate paths, the bare loop and union-find ground truth on
+  * random graphs,
   * and asserts the logarithmic round count on a chain whose diameter would
   * exhaust min-label flooding.
   *
@@ -83,7 +86,7 @@ object StarContraction {
     (cur, round)
   }
 
-  /** Drop-in alternative to [[PipelineOps.labelPropagate]]: (doc_id, lbl)
+  /** Drop-in alternative to [[PipelineOps.labelLoop]]: (doc_id, lbl)
     * where lbl is the minimum INITIAL label over the node's component
     * (identical contract — with init lbl = doc_id both compute the
     * component-minimum id). */
@@ -94,7 +97,7 @@ object StarContraction {
     // the center itself appears only on the right side. groupBy-min keeps
     // one row per node even if the round cap was hit before a true
     // fixpoint (then the result is under-merged, like a capped
-    // labelPropagate — never duplicated).
+    // labelLoop — never duplicated).
     val rep = stars.groupBy(col("a")).agg(min(col("b")).as("rep"))
       .withColumnRenamed("a", "doc_id")
     val withRep = init.join(rep, Seq("doc_id"), "left")

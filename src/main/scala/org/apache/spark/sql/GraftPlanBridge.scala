@@ -3,14 +3,19 @@ package org.apache.spark.sql
 import java.io.FileNotFoundException
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.format.converter.ParquetMetadataConverter.{NO_FILTER, SKIP_ROW_GROUPS}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
+
+import scala.jdk.CollectionConverters._
 
 /** Bridge into Spark's `private[sql]` classic API, used by graft's planner
   * to assemble ONE unresolved LogicalPlan per query and analyze it exactly
@@ -83,6 +88,38 @@ object GraftPlanBridge {
     analyzed(df).collectFirst { case l: LogicalRelation => l.relation }
       .collect { case r: HadoopFsRelation => r.location }.toSeq
       .flatMap(_.listFiles(Nil, Nil)).flatMap(_.files).map(_.getLen)
+
+  /** Row count of a plain parquet scan summed from its files' footers on
+    * the driver, with no Spark job: the files are the relation's own file
+    * index listing ([[scanFileSizes]]'), so the count is the one `count()`
+    * would return. None when `df` is anything but a bare parquet
+    * `HadoopFsRelation` (a filter, a projection, another format, a
+    * non-file source); the caller then counts with Spark. */
+  def parquetRowCount(df: DataFrame): Option[Long] =
+    analyzed(df) match {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation if r.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          val hconf = hadoopConf(df.sparkSession)
+          Some(r.location.listFiles(Nil, Nil).flatMap(_.files).map { f =>
+            ParquetFileReader.readFooter(hconf, f.fileStatus, NO_FILTER)
+              .getBlocks.iterator().asScala.map(_.getRowCount).sum
+          }.sum)
+        case _ => None
+      }
+      case _ => None
+    }
+
+  /** Run `body` on the physical rows of `df` under one SQL execution, as a
+    * Dataset action does: the jobs `body` submits (and the adaptive
+    * query stages the plan runs first) carry the query's execution id, so
+    * SQL listeners and the UI see them as one query. */
+  def withExecutedRows[T](df: DataFrame, name: String)(body: RDD[InternalRow] => T): T = {
+    val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      qe.executedPlan.resetMetrics()
+      body(qe.executedPlan.execute())
+    }
+  }
 
   /** Whether `path` exists on its own Hadoop FileSystem (`file:`, `hdfs:`,
     * `s3a:` URIs and bare local paths alike), under the session's Hadoop

@@ -2,18 +2,14 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftPlanBridge}
 import org.scalatest.funsuite.AnyFunSuite
-
-import scala.jdk.CollectionConverters._
 
 /** `Graft.readParquet` takes the schema from the file footer on the driver:
   * it must read exactly what `spark.read.parquet` reads (schema and rows),
   * fall back to Spark's own inference where the layout needs it, and keep
-  * `compileDir` free of Spark jobs. */
+  * `compileDir` free of Spark jobs. `Graft.parquetRowCount` sums the
+  * footers' row counts the same way: `count()`'s value, no job. */
 class ParquetFooterSchemaSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -122,28 +118,38 @@ class ParquetFooterSchemaSpec extends AnyFunSuite {
 
   test("compileDir of q10_join_inner (2 tables) submits no Spark job") {
     val prql = SparkEntry.prqlTexts.find(_._1 == "q10_join_inner").get._2
-    val tagKey = "graft.test.footer"
-    val tags = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tagKey))).foreach(tags.add)
+    val (_, jobs) = TestSpark.jobsOf(Graft.compileDir(prql, spark, sfDir))
+    assert(jobs == 0)
+  }
+
+  test("footer row counts equal count(), with no Spark job; other relations fall back") {
+    def same(path: String): Unit = {
+      val (n, jobs) = TestSpark.jobsOf(Graft.parquetRowCount(spark, path))
+      assert(jobs == 0, path)
+      assert(n == spark.read.parquet(path).count(), path)
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tagKey, "compile")
-      Graft.compileDir(prql, spark, sfDir)
-      // listener events arrive in order: once the sentinel job is seen,
-      // every job the compile submitted has been seen too
-      sc.setLocalProperty(tagKey, "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!tags.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(tags.contains("sentinel"))
-      assert(tags.asScala.count(_ == "compile") == 0)
-    } finally {
-      sc.setLocalProperty(tagKey, null)
-      sc.removeSparkListener(listener)
+    val sf001 = "/root/testdata/sf0.01"
+    val tables = new File(sf001).listFiles.map(_.getName).filter(_.endsWith(".parquet")).sorted
+    assert(tables.length == 10)
+    tables.foreach(t => same(s"$sf001/$t"))
+    withTempDir { dir =>
+      val out = Bench.buildScaledDir(spark, sf001, 2, dir.getPath)
+      Seq("documents.parquet", "embeddings.parquet").foreach(t => same(s"$out/$t"))
+      // the x2 tables come out one file each; split the documents into 3
+      val multi = s"$out/documents_3.parquet"
+      spark.read.parquet(s"$out/documents.parquet").repartition(3).write.parquet(multi)
+      assert(new File(multi).listFiles.count(_.getName.startsWith("part-")) == 3)
+      same(multi)
+    }
+    val docs = Graft.readParquet(spark, s"$sfDir/documents.parquet")
+    assert(GraftPlanBridge.parquetRowCount(docs).contains(docs.count()))
+    assert(GraftPlanBridge.parquetRowCount(docs.where("doc_id > 3")).isEmpty)
+    assert(GraftPlanBridge.parquetRowCount(docs.select("doc_id")).isEmpty)
+    assert(GraftPlanBridge.parquetRowCount(spark.range(5).toDF()).isEmpty)
+    withTempDir { dir =>
+      val json = new File(dir, "t.json").getPath
+      sample.write.json(json)
+      assert(GraftPlanBridge.parquetRowCount(spark.read.json(json)).isEmpty)
     }
   }
 }

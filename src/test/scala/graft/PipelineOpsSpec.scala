@@ -480,13 +480,13 @@ class PipelineOpsSpec extends AnyFunSuite {
     // path graph 0-1-2-…-12: min-label 0 travels ONE hop per round, so a
     // fixed-3-round unroll would leave labels {0,0,0,0,1,2,…} — the loop
     // must iterate to the fixpoint where every node carries label 0 (the
-    // union-find ground truth for a single component)
-    // broadcast off pins the loop: the driver path would label any chain
-    // in one union-find pass
+    // union-find ground truth for a single component). The loop runs on
+    // the raw chain: labelPropagate would hand it a spanning forest, which
+    // for a single-partition chain is already a star.
     import spark.implicits._
     val n = 13L
     val edges = (0L until n - 1).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("a", "b")
-    val out = TestSpark.onLabelLoop(PipelineOps.labelPropagate(edges).collect())
+    val out = PipelineOps.labelLoop(edges, 2 * (n - 1)).collect()
     assert(out.length == n)
     assert(out.forall(_.getLong(1) == 0L),
       s"chain not fully merged: ${out.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).mkString(",")}")
@@ -497,54 +497,57 @@ class PipelineOpsSpec extends AnyFunSuite {
     // 2 rounds, so this exercises the VERDICT r5 #2 escalation path — the
     // residual labeling hands off to StarContraction.labels and the result
     // must still be the exact union-find ground truth (all labels 0)
-    // (on the loop path: broadcast off; the driver path ignores the cap)
     import spark.implicits._
     val edges = (0L until 9L).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("a", "b")
-    val out = TestSpark.onLabelLoop(PipelineOps.labelPropagate(edges, maxRounds = 2).collect())
+    val out = PipelineOps.labelLoop(edges, 18L, maxRounds = 2).collect()
     assert(out.length == 10)
     assert(out.forall(_.getLong(1) == 0L),
       s"escalation failed to close the chain: ${out.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).mkString(",")}")
   }
 
-  test("below the driver bound labelPropagate submits exactly one Spark job") {
-    // a materialized multi-partition pair relation, like p16's and p22's
-    // pair barrier: chains 0-1-2-3-4, 5-…-9, …; component min = 5 * (id / 5)
+  /** Chains 5k-…-5k+4 for k < 8 as a one-direction (ida, idb) pair plan
+    * over `ids` = 0 until 32, row i → pair (5(i/4) + i%4, +1); component
+    * min = 5 * (id / 5). */
+  private def chainPairs(ids: org.apache.spark.sql.Dataset[_]) = {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val pairs = graft.pipeline.Barrier.materialize(spark.range(0L, 50L, 1L, 4)
-      .where(col("id") % 5 =!= 4).select(col("id").as("ida"), (col("id") + 1).as("idb")))
-    val edges = pairs.select(col("ida").as("a"), col("idb").as("b"))
-      .union(pairs.select(col("idb").as("a"), col("ida").as("b")))
-    val tagKey = "graft.test.labels"
-    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tagKey))).foreach(tags.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val labels = try {
-      sc.setLocalProperty(tagKey, "labels")
-      val out = PipelineOps.labelPropagate(edges)
-      // listener events arrive in order: once the sentinel job is seen,
-      // every job labelPropagate submitted has been seen too
-      sc.setLocalProperty(tagKey, "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!tags.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(tags.contains("sentinel"))
-      out
-    } finally {
-      sc.setLocalProperty(tagKey, null)
-      sc.removeSparkListener(listener)
-    }
-    import scala.jdk.CollectionConverters._
-    assert(tags.asScala.count(_ == "labels") == 1)
-    assert(labels.queryExecution.analyzed.isInstanceOf[
-      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val ida = (col("id") / 4).cast("long") * 5 + col("id") % 4
+    ids.select(ida.as("ida"), (ida + 1).as("idb"))
+  }
+  private val chainLabels = (0L until 40L).map(i => i -> 5L * (i / 5)).toMap
+
+  test("below the driver bound labelPropagate submits exactly one Spark job") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.functions.col
+    // no exchange: the pair plan is one stage, so labelling is one job
+    val flat = chainPairs(spark.range(0L, 32L, 1L, 4))
+    val (labels, jobs) = TestSpark.jobsOf(PipelineOps.labelPropagate(flat))
+    assert(jobs == 1)
+    assert(labels.queryExecution.analyzed.isInstanceOf[LocalRelation])
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == (0L until 50L).map(i => i -> 5L * (i / 5)).toMap)
-    graft.pipeline.Barrier.release(pairs)
+    assert(got == chainLabels)
+    // an exchange: the pair plan's own jobs (its shuffle stage, its last
+    // stage), with the forest computed in the last stage's job
+    val shuffled = chainPairs(spark.range(0L, 32L, 1L, 4).repartition(3, col("id")))
+    val (_, planJobs) = TestSpark.jobsOf(shuffled.collect())
+    val (labels2, jobs2) = TestSpark.jobsOf(PipelineOps.labelPropagate(shuffled))
+    assert(jobs2 == planJobs)
+    assert(labels2.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    assert(labels2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == chainLabels)
+  }
+
+  test("above the driver bound the pair plan executes once and the loop labels its forest") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.functions.{col, udf}
+    val seen = spark.sparkContext.longAccumulator("graft.test.pairRows")
+    val tick = udf { (_: Long) => seen.add(1L); true }
+    val pairs = chainPairs(spark.range(0L, 32L, 1L, 4).where(tick(col("id"))))
+    val got = TestSpark.onLabelLoop {
+      val labels = PipelineOps.labelPropagate(pairs)
+      assert(!labels.queryExecution.analyzed.isInstanceOf[LocalRelation])
+      labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(seen.value == 32L, s"the pair plan ran ${seen.value / 32.0} times")
+    assert(got == chainLabels)
   }
 
   test("p16 joins its labels as a local relation; broadcast off joins the loop's barrier") {

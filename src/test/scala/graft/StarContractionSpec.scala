@@ -4,9 +4,10 @@ import graft.pipeline.{PipelineOps, StarContraction}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** VERDICT r4 #8 (stretch): star contraction must agree label-for-label
-  * with both labelPropagate paths (driver union-find and the min-label
-  * loop) AND union-find ground truth on random graphs, and must converge
-  * logarithmically where flooding is linear. */
+  * with both labelPropagate paths (the driver's union-find over the
+  * per-partition forest, and the min-label loop over that forest), the
+  * bare loop AND union-find ground truth on random graphs, and must
+  * converge logarithmically where flooding is linear. */
 class StarContractionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import org.apache.spark.sql.functions._
@@ -46,21 +47,28 @@ class StarContractionSpec extends AnyFunSuite {
       val truth = unionFind(nodes, edges)
       val star = StarContraction.labels(init, e).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // labelPropagate's contract takes a SYMMETRIZED edge set (see
-      // p16Labels); star contraction symmetrizes internally. It labels
+      // labelPropagate takes the one-direction pair relation, split over
+      // 1, 4 and 7 partitions (each partition's forest differs); labelLoop
+      // and star contraction take the edges as given. Labels cover
       // edge-incident nodes only: isolated nodes rejoin as their own label
       // through the left join + coalesce p16/p22 use.
-      val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
-      def flood(): Map[Long, Long] = {
-        val sub = PipelineOps.labelPropagate(sym, maxRounds = n)
+      def withSingletons(sub: org.apache.spark.sql.DataFrame): Map[Long, Long] =
         init.select("doc_id").join(sub, Seq("doc_id"), "left")
           .select(col("doc_id"), coalesce(col("lbl"), col("doc_id"))).collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      }
       assert(star == truth, s"trial $trial: star contraction != union-find")
-      assert(flood() == truth, s"trial $trial: labelPropagate (driver path) != union-find")
-      val viaLoop = TestSpark.onLabelLoop(flood())
-      assert(viaLoop == truth, s"trial $trial: labelPropagate (loop path) != union-find")
+      for (parts <- Seq(1, 4, 7)) {
+        import spark.implicits._
+        val pairs = spark.sparkContext.parallelize(edges, parts).toDF("ida", "idb")
+        assert(withSingletons(PipelineOps.labelPropagate(pairs, maxRounds = n)) == truth,
+          s"trial $trial, $parts partitions: labelPropagate (driver path) != union-find")
+        assert(TestSpark.onLabelLoop(
+            withSingletons(PipelineOps.labelPropagate(pairs, maxRounds = n))) == truth,
+          s"trial $trial, $parts partitions: labelPropagate (loop path) != union-find")
+      }
+      val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
+      assert(withSingletons(PipelineOps.labelLoop(sym, 2L * edges.size, maxRounds = n)) == truth,
+        s"trial $trial: labelLoop != union-find")
     }
   }
 

@@ -31,13 +31,43 @@ object TestSpark {
 
   /** Broadcast off gives `PipelineOps.labelPropagate` a driver bound of 0,
     * so `body` runs the label loop (and its star-contraction escalation)
-    * whatever the dup graph's size. */
+    * on any non-empty dup graph, whatever its size. */
   def onLabelLoop[T](body: => T): T = {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       assert(graft.pipeline.PipelineOps.driverEdgeBound(spark) == 0)
       body
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  /** `body`'s result and the number of Spark jobs it submitted from this
+    * thread, counted by a listener on a local-property tag. Listener events
+    * arrive in order: once a sentinel job is seen, every job `body`
+    * submitted has been seen too. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tagKey = "graft.test.jobs"
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tagKey))).foreach(tags.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tagKey, "body")
+      val out = body
+      sc.setLocalProperty(tagKey, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!tags.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(tags.contains("sentinel"))
+      import scala.jdk.CollectionConverters._
+      (out, tags.asScala.count(_ == "body"))
+    } finally {
+      sc.setLocalProperty(tagKey, null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   private def d(s: String) = java.sql.Date.valueOf(s)
